@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query seconds at the scale factor
   * in SPARK_GRAFT_SF_DIR.
@@ -262,7 +261,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.envCores
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val idleLoad = sys.env.getOrElse("SPARK_GRAFT_BENCH_IDLE_LOAD", "4.0").toDouble
     val idleWaitSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_IDLE_WAIT", "240").toInt
@@ -297,32 +296,10 @@ object Bench {
     val calibBwMtStart = (1 to 3).map(_ =>
       calibrateBwMt(bwArr, Runtime.getRuntime.availableProcessors)).min
 
-    // no forked chmod per local file create (graft.hadoop scaladoc): the
-    // sandbox has no libhadoop, so the stock local FS forks /bin/chmod on
-    // EVERY file create/mkdir — measured as driver-gap time on every
-    // commit-bearing query. Same syscall via java.nio instead. The
-    // FileSystem-based checkpoint manager keeps streaming checkpoint IO
-    // on that patched FS (the default FileContext manager instantiates
-    // the stock RawLocalFileSystem directly and forks `readlink` per
-    // rename on top). SPARK_GRAFT_FS_PATCH=0 is the A/B kill-switch.
+    // SPARK_GRAFT_FS_PATCH=0 is the A/B kill-switch for the fork-free local
+    // FS (see GraftSession)
     val fsPatch = sys.env.getOrElse("SPARK_GRAFT_FS_PATCH", "1") != "0"
-    def withFsPatch(b: SparkSession.Builder): SparkSession.Builder =
-      if (!fsPatch) b
-      else b.config("spark.hadoop.fs.file.impl", classOf[graft.hadoop.FastLocalFileSystem].getName)
-        .config("spark.sql.streaming.checkpointFileManagerClass",
-          "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-    val spark = withFsPatch(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Same guard as Verify: sibling-alias capture is an analysis error,
-      // not a silent wrong answer (round-6 q75 class).
-      .config("spark.sql.lateralColumnAlias.enableImplicitResolution", "false")
-      // same session shape as Verify: catalog rules active
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus, fsPatch).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JVM/codegen/parquet-footer startup otherwise lands on
     // whichever query happens to iterate first and skews its number.
@@ -477,15 +454,7 @@ object Bench {
       else {
         // calibration gate: measure the re-run window's own quietness
         val gateBw = (1 to 2).map(_ => calibrateBw(bwArr, 4)).min / calibBwRef
-        val spark2 = withFsPatch(SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.sql.lateralColumnAlias.enableImplicitResolution", "false")
-          .config("spark.sql.extensions", "graft.GraftExtensions")
-          .config("spark.ui.enabled", "false"))
-          .getOrCreate()
+        val spark2 = GraftSession.builder(cpus, fsPatch).getOrCreate()
         spark2.sparkContext.setLogLevel("WARN")
         try spark2.range(1000000).selectExpr("sum(id)").collect()
         catch { case _: Throwable => () }

@@ -1,32 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // A reference to a column that's re-aliased later in the SAME select
-      // must resolve to the child's column, never the sibling alias — with
-      // implicit lateral-alias resolution on, that mistake is a silent wrong
-      // answer (round-6 q75); with it off, an analysis error.
-      .config("spark.sql.lateralColumnAlias.enableImplicitResolution", "false")
-      // the production session shape: catalog rules (MOR reads, manifest
-      // pruning, stat-served aggregates) active exactly as in specs
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // no forked chmod per local file create + checkpoint IO on the same
-      // patched FS — identical session shape to Bench (see Bench.scala)
-      .config("spark.hadoop.fs.file.impl", classOf[graft.hadoop.FastLocalFileSystem].getName)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev aid: SPARK_GRAFT_ONLY=q25,q40 restricts the dump (driver never sets it).

@@ -611,12 +611,6 @@ private[catalog] class GraftTable(displayName: String, val table: String, val ro
       case None    => warehouse.manifestPruned(table, Some(pinnedVersion), keep)
     }
 
-  /** Same table with the scan restricted to `files` (file skipping); any
-    * pending MOR deletes ride along so [[MorReadRule]] still applies them.
-    */
-  def withFiles(files: Seq[graft.sink.DataFile]): GraftTable =
-    withManifest(manifest.copy(files = files))
-
   /** Same table pinned to an explicit pruned manifest (files AND deletes
     * already resolved — used by [[ManifestPruneRule]] so the swap never
     * forces a full manifest load of the original).

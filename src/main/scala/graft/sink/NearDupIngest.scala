@@ -33,17 +33,12 @@ import graft.functions.TextFns
   *
   * Replay safety: re-ingesting a batch finds each doc's existing copy at
   * signature similarity 1.0 and appends 0 rows (the near-dup analog of the
-  * exact-dedup retry guard). All three appends (sigs, bands, then corpus —
-  * index FIRST) are O(batch) manifest commits. Index-first means a crash
-  * before the corpus commit leaves orphan index rows rather than
-  * index-invisible corpus docs (corpus-first's UNBOUNDED recall hole where
-  * every future near-dup of an unindexed doc sails in silently) — and
-  * orphans are HEALED, not just tolerated: a full-signature (1.0) match
-  * whose pk is missing from the corpus is recognized as a crash orphan at
-  * probe time, the doc is admitted, and the idempotent-by-pk index appends
-  * fill in exactly the rows the crash lost. Replaying a crashed batch
-  * therefore converges to the fully-committed state, whichever commit the
-  * crash interrupted.
+  * exact-dedup retry guard). The three O(batch) appends — sigs, bands,
+  * corpus — land as ONE [[Warehouse.transact]] unit, so no reader sees an
+  * admitted doc its index cannot find (the silent recall hole where every
+  * future near-dup of an unindexed doc sails in) nor index rows whose doc
+  * never landed; a crashed ingest commits nothing and its replay lands the
+  * batch exactly once.
   */
 final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
                           shingleW: Int = 3, k: Int = 16, bands: Int = 4,
@@ -69,77 +64,46 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
   // salted md5 → 8-hex substrings of chunk-salted md5): old and new sigs
   // never compare equal and never share band keys, so an index mixing eras
   // SILENTLY finds no cross-era pairs and re-admits near-dups of pre-change
-  // content. Every entry point therefore checks a format stamp on the sigs
-  // table (ridden on the batch-id ledger — one atomic pointer file) and
-  // refuses loudly on mismatch instead of degrading. The stamp encodes the
-  // format generation AND the signing parameters (shingleW, k, bands):
+  // content. The stamp (on the sigs table, see [[IndexFamily]]) encodes
+  // the format generation AND the signing parameters (shingleW, k, bands):
   // a parameter change has the identical silent-mixing failure mode.
-  private val SigFmtSid = "sigformat"
   /** Format generation 2 = the flat chunk-salted-md5 shape of [[signed]]. */
   private[sink] val formatStamp: Long =
     (2L << 48) | (shingleW.toLong << 32) | (k.toLong << 16) | bands.toLong
 
-  private def formatGuard(name: String): Unit = {
-    if (!wh.exists(sigsTable(name))) return
-    val got = wh.lastCommittedBatchId(sigsTable(name), SigFmtSid)
-    if (got == formatStamp) return
-    if (got < 0) {
-      // a stampless sigs table with ZERO committed rows is a freshly-created
-      // index (possibly a crash between create and stamp) — no signatures
-      // exist, so no cross-era mixing is possible; the entry points stamp
-      // before committing any rows
-      val man = wh.currentManifest(sigsTable(name))
-      if (man.files.isEmpty && man.deletes.isEmpty) return
-    }
-    if (got < 0) throw new IllegalStateException(
+  private def refusal(name: String, got: Long): String =
+    if (got < 0)
       s"near-dup index for '$name' carries no signature-format stamp — it was " +
         "built before format stamping (possibly with the old per-position-salted " +
         "signature shape, which never matches current signatures). Rebuild the " +
         "index (drop the __sigs/__bands tables and followChanges/ingest afresh), " +
         "or, if it was provably built with the CURRENT format and parameters, " +
-        "adopt it explicitly with adoptFormat(name).")
+        "adopt it explicitly with adoptFormat(name)."
     else {
       val g = got >> 48; val w = (got >> 32) & 0xffff
       val gk = (got >> 16) & 0xffff; val gb = got & 0xffff
-      throw new IllegalStateException(
-        s"near-dup index for '$name' was built with an incompatible signature " +
-          s"format (generation $g, shingleW=$w, k=$gk, bands=$gb; this instance: " +
-          s"generation 2, shingleW=$shingleW, k=$k, bands=$bands). Cross-era " +
-          "signatures never match and band keys never collide, so pairs would be " +
-          "silently lost. Rebuild the index, or construct NearDupIngest with the " +
-          "index's parameters.")
+      s"near-dup index for '$name' was built with an incompatible signature " +
+        s"format (generation $g, shingleW=$w, k=$gk, bands=$gb; this instance: " +
+        s"generation 2, shingleW=$shingleW, k=$k, bands=$bands). Cross-era " +
+        "signatures never match and band keys never collide, so pairs would be " +
+        "silently lost. Rebuild the index, or construct NearDupIngest with the " +
+        "index's parameters."
     }
-  }
 
-  /** Stamp a fresh (or explicitly adopted) index with this instance's
-    * format. Idempotent; no-op while the sigs table does not exist yet.
-    */
-  private def stampFormat(name: String): Unit =
-    if (wh.exists(sigsTable(name)) &&
-        wh.lastCommittedBatchId(sigsTable(name), SigFmtSid) != formatStamp)
-      wh.recordBatchId(sigsTable(name), SigFmtSid, formatStamp)
-
-  /** Create-then-stamp, BEFORE any signature rows commit: a crash at any
-    * later point leaves a stamped index, never a committed-but-stampless
-    * one that [[formatGuard]] would permanently refuse (the round-17
-    * after-commit stamping left exactly that window). A crash between
-    * create and stamp leaves an EMPTY stampless table, which the guard
-    * recognizes as fresh.
-    */
-  private def ensureStamped(name: String, sigSchema: org.apache.spark.sql.types.StructType): Unit = {
-    if (!wh.exists(sigsTable(name))) wh.create(sigsTable(name), sigSchema)
-    stampFormat(name)
-  }
+  // sigs before bands everywhere: a band row without its signature is a
+  // probe hit that cannot verify; the reverse is inert (probes key on bands)
+  private val family = new IndexFamily(wh, pkCol,
+    stampOn = "__sigs", stampSid = "sigformat", stampValue = formatStamp, refusal,
+    ledgerOn = "__bands", retractOn = Seq("__bands", "__sigs"),
+    compactOn = Seq("__bands" -> Seq("band_key"), "__sigs" -> Seq(pkCol)))
 
   /** Operator override for a pre-stamp index KNOWN to be in this instance's
     * exact format and parameters: records the stamp so the guard passes.
     * Misuse reintroduces the silent cross-era mixing the guard exists to
     * prevent — only adopt an index whose build provenance is certain.
     */
-  def adoptFormat(name: String): Unit = {
-    require(wh.exists(sigsTable(name)), s"no near-dup index for table: $name")
-    stampFormat(name)
-  }
+  def adoptFormat(name: String): Unit =
+    family.adopt(name, s"no near-dup index for table: $name")
 
   /** (pk, sig, bands) for a batch — q57's FLAT salted-md5 minhash shape:
     * explode the distinct shingles, compute `salts` md5 columns per row as
@@ -177,196 +141,18 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
   private def sigMatches(a: Column, b: Column): Column =
     size(filter(zip_with(a, b, (x, y) => x === y), m => m))
 
+  /** The NEW pks' (sig, band) rows of signed rows `s` — idempotent by pk. */
+  private def derive(name: String, s: DataFrame): (DataFrame, DataFrame) =
+    (family.newByPk(sigsTable(name), s.select(col(pkCol), col("sig"))),
+      family.newByPk(bandsTable(name), s.select(col(pkCol),
+        posexplode(col("bands")).as(Seq("band_idx", "band_key"))), manyPerPk = true))
+
+  /** Ingest one batch: in-batch near-dup collapse, corpus probe, then sigs,
+    * bands and the surviving corpus rows as ONE transaction (create-then-
+    * stamp before it), then the follower ledger advance.
+    */
   def ingest(name: String, df: DataFrame): Report = {
-    formatGuard(name)
-    val preV = if (wh.exists(name)) wh.currentVersion(name) else -1L
-    val st = stage(name, df)
-    try {
-      ensureStamped(name, st.newSigs.schema)
-      wh.append(sigsTable(name), st.newSigs, statsCols = Seq(pkCol))
-      wh.append(bandsTable(name), st.newBands, statsCols = Seq("band_key"))
-      val version = wh.append(name, st.outRows, statsCols = Seq(pkCol))
-      advanceFollowerLedger(name, preV)
-      Report(version, st.appended, st.total - st.kept, st.kept - st.appended)
-    } finally st.sigs.unpersist()
-  }
-
-  /** [[IndexFollower.advance]] on the bands table — the shared ledger
-    * discipline (head == preAppendVersion + 1, judged on the head).
-    */
-  private[graft] def advanceFollowerLedger(name: String, preAppendVersion: Long): Unit =
-    IndexFollower.advance(wh, name, bandsTable(name), preAppendVersion)
-
-  /** Sign `df` and append its NEW pks' signature + band rows — idempotent
-    * by pk (anti-join against the stored pks through the MOR overlay, so a
-    * pk whose rows [[followChanges]] just retracted re-signs cleanly).
-    * The index-maintenance middle shared by the follower. Returns docs
-    * signed.
-    */
-  private def indexRows(name: String, df: DataFrame): Long = {
-    val s = signed(df).persist() // consumers: sig rows + band rows
-    try {
-      val sigRows = s.select(col(pkCol), col("sig"))
-      // localCheckpoint: counted after the commit, and the anti-join must
-      // not re-plan against the table AFTER its own append lands
-      val newSigs = (
-        if (!wh.exists(sigsTable(name))) sigRows
-        else sigRows.join(wh.load(sigsTable(name)).select(col(pkCol)),
-          Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      val bandRows = s.select(col(pkCol),
-        posexplode(col("bands")).as(Seq("band_idx", "band_key")))
-      val newBands = (
-        if (!wh.exists(bandsTable(name))) bandRows
-        else bandRows.join(wh.load(bandsTable(name)).select(col(pkCol)).distinct(),
-          Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      // sigs before bands: a band row without its signature is a probe hit
-      // that cannot verify; the reverse order is inert (ingest's discipline)
-      ensureStamped(name, newSigs.schema)
-      wh.append(sigsTable(name), newSigs, statsCols = Seq(pkCol))
-      wh.append(bandsTable(name), newBands, statsCols = Seq("band_key"))
-      newSigs.count()
-    } finally s.unpersist()
-  }
-
-  final case class FollowReport(corpusVersion: Long, deletedDocs: Long, indexedDocs: Long)
-
-  /** INCREMENTAL INDEX MAINTENANCE from the corpus change feed — the
-    * near-dup member of the follower family ([[SearchIndexIngest]] BM25,
-    * [[VectorIndexIngest]] ANN): corpus deletes/update-retractions become
-    * ONE equality-delete commit per index table keyed by pk (O(changed pks)
-    * metadata, zero band/signature rewrites), and inserted/updated rows
-    * re-sign through the idempotent index path — an updated doc's stale
-    * signature can no longer emit phantom candidate pairs, and a deleted
-    * doc stops suppressing future near-dups of its content at the ingest
-    * probe. The consumed corpus window rides the `idxfollow:<name>` batch
-    * ledger on the bands table (recorded by [[ingest]] too), so
-    * crashed/replayed calls converge.
-    *
-    * Bootstrap: a corpus that was never ingested through this class (plain
-    * appends/merges) indexes WHOLESALE on the first call — the ledger is
-    * unset and the whole current snapshot is treated as insertions. As with
-    * the sibling followers, rows deleted BEFORE that first call were never
-    * indexed, so there is nothing to retract.
-    */
-  def followChanges(name: String): FollowReport = {
-    require(wh.exists(name), s"no corpus table: $name")
-    formatGuard(name)
-    IndexFollower.window(wh, name, bandsTable(name), pkCol) match {
-      case None => FollowReport(wh.currentVersion(name), 0L, 0L)
-      case Some(w) =>
-        if (w.nDel > 0) {
-          // retract BEFORE re-signing: an updated pk's fresh rows (seq > the
-          // delete's) are shielded by the strict-< rule and the re-sign
-          // anti-join sees the pk as absent
-          wh.equalityDelete(bandsTable(name), w.delPks)
-          wh.equalityDelete(sigsTable(name), w.delPks)
-        }
-        val nIns = w.ins.select(col(pkCol)).distinct().count()
-        if (nIns > 0) indexRows(name, w.ins)
-        IndexFollower.record(wh, name, bandsTable(name), w.now)
-        FollowReport(w.now, w.nDel, nIns)
-    }
-  }
-
-  /** Serve the index's VERIFIED near-dup pairs: banded candidates (equi-join
-    * on the stored band keys, fan-out bounded by real near-dups + LSH false
-    * positives) verified against the stored signatures — estimated Jaccard
-    * = n_match/k >= simT. Both index reads go through the MOR overlay, so
-    * pairs of retracted docs cannot resurface. Corpus text is never read:
-    * this is the q57 candidate algebra served from O(index) state.
-    */
-  def pairs(name: String): DataFrame = {
-    require(wh.exists(bandsTable(name)) && wh.exists(sigsTable(name)),
-      s"no near-dup index for table: $name (ingest or followChanges first)")
-    formatGuard(name)
-    val bands = wh.load(bandsTable(name))
-    val cand = bands.alias("a").join(bands.alias("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_key") === col("b.band_key") &&
-          col(s"a.$pkCol") < col(s"b.$pkCol"))
-      .select(col(s"a.$pkCol").as("d1"), col(s"b.$pkCol").as("d2")).distinct()
-    val sigs = wh.load(sigsTable(name))
-    cand.join(sigs.select(col(pkCol).as("d1"), col("sig").as("s1")), Seq("d1"))
-      .join(sigs.select(col(pkCol).as("d2"), col("sig").as("s2")), Seq("d2"))
-      .withColumn("n_match", sigMatches(col("s1"), col("s2")).cast("long"))
-      .filter(col("n_match") >= minMatches)
-      .select(col("d1"), col("d2"), col("n_match"))
-  }
-
-  /** Compact the index tables' ingest-granularity files
-    * ([[SearchIndexIngest.compact]]'s near-dup sibling): every per-batch
-    * append lands one band-key-range file, and after many small batches
-    * their ranges overlap — each corpus probe then opens a file per batch.
-    * Compaction rewrites the small files into few DISJOINT
-    * band_key-clustered files (sigs by pk), restoring the O(probe-keys)
-    * band lookup; results are unchanged (content-preserving rewrite,
-    * spec-pinned), and pending MOR retractions from [[followChanges]]
-    * materialize in the process (the rewrite ops apply deletes).
-    */
-  def compact(name: String, smallRows: Long = 100000L): Unit = {
-    wh.compactFiles(bandsTable(name), smallRows, clusterBy = Seq("band_key"))
-    wh.compactFiles(sigsTable(name), smallRows, clusterBy = Seq(pkCol)): Unit
-  }
-
-  /** Dedup DECISIONS from the maintained index — q71's connected-components
-    * keeper algebra applied to [[pairs]]: every clustered doc labeled with
-    * its component's MINIMUM pk (the keeper, the same deterministic rule
-    * the ingest admission uses) plus the cluster size and an `is_dup` flag.
-    * Consumers of a feed-maintained index get actionable keep/drop
-    * decisions, not edges; docs in no near-dup pair are absent (they are
-    * their own trivial keeper). Cost: [[pairs]] + the iterative min-label
-    * propagation over O(pairs) edges ([[graft.functions.Graph]]) — never
-    * corpus text.
-    */
-  def clusters(name: String): DataFrame = {
-    val p = pairs(name).select(col("d1"), col("d2"))
-    val comp = graft.functions.Graph.connectedComponents(p)
-    val sizes = comp.groupBy("comp").agg(count(lit(1)).as("cluster_size"))
-    comp.join(sizes, "comp")
-      .select(col("id").as(pkCol), col("comp").as("keeper"),
-        col("cluster_size"), (col("id") =!= col("comp")).as("is_dup"))
-  }
-
-  /** [[ingest]] with the three appends fused into ONE [[Warehouse.transact]]
-    * unit: sigs, bands and corpus land all-or-nothing, so the crash-orphan
-    * states the commit-order discipline below exists to heal (index rows
-    * whose doc never landed, reconciled on replay by the exact-hit
-    * corpus-membership check) cannot arise on this path. Same staging, same
-    * idempotent anti-joins — mixing ingest()/ingestAtomic() on one index
-    * stays safe, and a crashed transaction commits nothing.
-    */
-  def ingestAtomic(name: String, df: DataFrame): Report = {
-    formatGuard(name)
-    val preV = if (wh.exists(name)) wh.currentVersion(name) else -1L
-    val st = stage(name, df)
-    try {
-      // stamp BEFORE the transaction commits: the ledger pointer is outside
-      // the transactional manifest commit, so stamping after left a window
-      // where a crash produced a committed-but-stampless index that
-      // formatGuard permanently refused
-      ensureStamped(name, st.newSigs.schema)
-      wh.transact { tx =>
-        tx.append(sigsTable(name), st.newSigs, statsCols = Seq(pkCol))
-        tx.append(bandsTable(name), st.newBands, statsCols = Seq("band_key"))
-        tx.append(name, st.outRows, statsCols = Seq(pkCol))
-      }
-      advanceFollowerLedger(name, preV)
-      Report(wh.currentVersion(name), st.appended, st.total - st.kept,
-        st.kept - st.appended)
-    } finally st.sigs.unpersist()
-  }
-
-  /** Everything up to (but excluding) the commits: in-batch near-dup
-    * collapse, corpus probe with orphan reconciliation, and the deduped
-    * index/corpus frames ready to land under either commit discipline.
-    * `sigs` stays persisted — the frames reference it; callers unpersist.
-    */
-  private final case class Staged(sigs: DataFrame, newSigs: DataFrame,
-    newBands: DataFrame, outRows: DataFrame, total: Long, kept: Long, appended: Long)
-
-  private def stage(name: String, df: DataFrame): Staged = {
+    family.guard(name)
     val total = df.count()
     val sigs = signed(df).persist() // consumers: in-batch pairs, corpus probe, survivor joins
     try {
@@ -409,17 +195,17 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
             .withColumn("m", sigMatches(col("sig"), col("bsig")))
             .filter(col("m") >= minMatches)
             .select(col("bpk"), col("epk"), (col("m") === k).as("exact"))
-          // Orphan reconciliation (crash healing): a FULL-signature match
-          // whose index pk is absent from the corpus table is a row a
-          // crashed ingest left behind — its doc never landed. Dropping the
-          // batch doc against such a row would lose it permanently (the
-          // round-8 review's finding), so exact hits are confirmed against
-          // corpus membership (semi-join on the pk column — a pruned
-          // one-column probe, bounded like the band probe) and unconfirmed
-          // ones do not count as duplicates: the replay admits the doc and
-          // completes the crashed batch's tail. Sub-1.0 hits never
-          // reconcile — near-matching an orphan means near-matching content
-          // we intended to admit, so dropping stays correct.
+          // Exact hits confirm against corpus membership: a FULL-signature
+          // match whose index pk is absent from the corpus is a doc the
+          // corpus no longer holds — deleted by a deleteWhere/morMerge that
+          // followChanges has not consumed yet (or an orphan of a pre-
+          // transaction multi-commit ingest). Dropping the batch doc against
+          // it would lose the content permanently, so unconfirmed exact hits
+          // do not count as duplicates (semi-join on the pk column — a
+          // pruned one-column probe, bounded like the band probe). Sub-1.0
+          // hits never reconcile — near-matching such a row means
+          // near-matching content we intended to admit, so dropping stays
+          // correct.
           val exact = verified.filter(col("exact"))
           val inexact = verified.filter(!col("exact")).select(col("bpk"))
           val confirmedExact =
@@ -431,37 +217,113 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
         }
       val survivors = kept.join(dupVsCorpus, Seq(pkCol), "left_anti")
         .select(col(pkCol)).localCheckpoint()
-
       val keptCount = kept.select(pkCol).count()
       val appended = survivors.count()
 
-      // ---- three O(batch) appends (built here, committed by the caller):
-      // `ingest` lands them INDEX TABLES FIRST (sigs, then bands), corpus
-      // last. Index-first means a crash before the corpus commit leaves
-      // orphan index rows, which the reconciliation above heals on replay;
-      // corpus-first would instead leave admitted docs INVISIBLE to the
-      // index — a silent recall hole where their future near-dups sail in.
-      // Sigs before bands keeps every band row verifiable (a sig row
-      // without bands is inert — probes key on bands). Both index appends
-      // are IDEMPOTENT BY PK (anti-join against the stored pks, one pruned
-      // one-column probe each): a reconciled replay re-admits docs whose
-      // index rows partially or fully survived the crash, and the index
-      // must not accrete duplicates for them. (`ingestAtomic` makes the
-      // ordering moot — all three land in one transaction.)
-      val survSigs = sigs.join(survivors, Seq(pkCol))
-      val newSigs0 = survSigs.select(col(pkCol), col("sig"))
-      val newSigs =
-        if (!wh.exists(sigsTable(name))) newSigs0
-        else newSigs0.join(wh.load(sigsTable(name)).select(col(pkCol)),
-          Seq(pkCol), "left_anti")
-      val newBands0 = survSigs
-        .select(col(pkCol), posexplode(col("bands")).as(Seq("band_idx", "band_key")))
-      val newBands =
-        if (!wh.exists(bandsTable(name))) newBands0
-        else newBands0.join(wh.load(bandsTable(name)).select(col(pkCol)).distinct(),
-          Seq(pkCol), "left_anti")
-      val outRows = df.join(survivors, Seq(pkCol))
-      Staged(sigs, newSigs, newBands, outRows, total, keptCount, appended)
-    } catch { case t: Throwable => sigs.unpersist(); throw t }
+      // ---- the three O(batch) appends, one transaction. Both index appends
+      // stay idempotent by pk: a reconciled exact hit re-admits a doc whose
+      // index rows survived, and the index must not accrete duplicates.
+      val (newSigs, newBands) = derive(name, sigs.join(survivors, Seq(pkCol)))
+      family.ensureStamped(name, newSigs.schema)
+      val preV = wh.currentVersion(name)
+      wh.transact { tx =>
+        tx.append(sigsTable(name), newSigs, statsCols = Seq(pkCol))
+        tx.append(bandsTable(name), newBands, statsCols = Seq("band_key"))
+        tx.append(name, df.join(survivors, Seq(pkCol)), statsCols = Seq(pkCol))
+      }
+      family.advance(name, preV)
+      Report(wh.currentVersion(name), appended, total - keptCount, keptCount - appended)
+    } finally sigs.unpersist()
+  }
+
+  final case class FollowReport(corpusVersion: Long, deletedDocs: Long, indexedDocs: Long)
+
+  /** INCREMENTAL INDEX MAINTENANCE from the corpus change feed — the
+    * near-dup member of the follower family ([[SearchIndexIngest]] BM25,
+    * [[VectorIndexIngest]] ANN), one [[IndexFamily.follow]] tick: corpus
+    * deletes/update-retractions become ONE equality-delete commit per index
+    * table keyed by pk (zero band/signature rewrites), and inserted/updated
+    * rows re-sign through the idempotent-by-pk appends — an updated doc's
+    * stale signature can no longer emit phantom candidate pairs, and a
+    * deleted doc stops suppressing future near-dups of its content at the
+    * ingest probe. The consumed window rides the `idxfollow:<name>` ledger
+    * on the bands table (advanced by [[ingest]] too), so crashed/replayed
+    * calls converge.
+    *
+    * Bootstrap: a corpus that was never ingested through this class (plain
+    * appends/merges) indexes WHOLESALE on the first call; rows deleted
+    * BEFORE that first call were never indexed, so there is nothing to
+    * retract.
+    */
+  def followChanges(name: String): FollowReport = {
+    require(wh.exists(name), s"no corpus table: $name")
+    family.guard(name)
+    val (v, deleted, indexed) = family.follow(name) { ins =>
+      val n = ins.select(col(pkCol)).distinct().count()
+      if (n > 0) {
+        val s = signed(ins).persist() // consumers: sig rows + band rows
+        try {
+          val (newSigs, newBands) = derive(name, s)
+          family.ensureStamped(name, newSigs.schema)
+          wh.append(sigsTable(name), newSigs, statsCols = Seq(pkCol))
+          wh.append(bandsTable(name), newBands, statsCols = Seq("band_key"))
+        } finally s.unpersist()
+      }
+      n
+    }
+    FollowReport(v, deleted, indexed)
+  }
+
+  /** Serve the index's VERIFIED near-dup pairs: banded candidates (equi-join
+    * on the stored band keys, fan-out bounded by real near-dups + LSH false
+    * positives) verified against the stored signatures — estimated Jaccard
+    * = n_match/k >= simT. Both index reads go through the MOR overlay, so
+    * pairs of retracted docs cannot resurface. Corpus text is never read:
+    * this is the q57 candidate algebra served from O(index) state.
+    */
+  def pairs(name: String): DataFrame = {
+    require(wh.exists(bandsTable(name)) && wh.exists(sigsTable(name)),
+      s"no near-dup index for table: $name (ingest or followChanges first)")
+    family.guard(name)
+    val bands = wh.load(bandsTable(name))
+    val cand = bands.alias("a").join(bands.alias("b"),
+        col("a.band_idx") === col("b.band_idx") &&
+          col("a.band_key") === col("b.band_key") &&
+          col(s"a.$pkCol") < col(s"b.$pkCol"))
+      .select(col(s"a.$pkCol").as("d1"), col(s"b.$pkCol").as("d2")).distinct()
+    val sigs = wh.load(sigsTable(name))
+    cand.join(sigs.select(col(pkCol).as("d1"), col("sig").as("s1")), Seq("d1"))
+      .join(sigs.select(col(pkCol).as("d2"), col("sig").as("s2")), Seq("d2"))
+      .withColumn("n_match", sigMatches(col("s1"), col("s2")).cast("long"))
+      .filter(col("n_match") >= minMatches)
+      .select(col("d1"), col("d2"), col("n_match"))
+  }
+
+  /** Compact the index tables' ingest-granularity files
+    * ([[IndexFamily.compact]]): bands re-cluster on `band_key`, sigs on
+    * the pk, restoring the O(probe-keys) band lookup; results are unchanged
+    * (spec-pinned), and pending MOR retractions from [[followChanges]]
+    * materialize in the process.
+    */
+  def compact(name: String, smallRows: Long = 100000L): Unit =
+    family.compact(name, smallRows)
+
+  /** Dedup DECISIONS from the maintained index — q71's connected-components
+    * keeper algebra applied to [[pairs]]: every clustered doc labeled with
+    * its component's MINIMUM pk (the keeper, the same deterministic rule
+    * the ingest admission uses) plus the cluster size and an `is_dup` flag.
+    * Consumers of a feed-maintained index get actionable keep/drop
+    * decisions, not edges; docs in no near-dup pair are absent (they are
+    * their own trivial keeper). Cost: [[pairs]] + the iterative min-label
+    * propagation over O(pairs) edges ([[graft.functions.Graph]]) — never
+    * corpus text.
+    */
+  def clusters(name: String): DataFrame = {
+    val p = pairs(name).select(col("d1"), col("d2"))
+    val comp = graft.functions.Graph.connectedComponents(p)
+    val sizes = comp.groupBy("comp").agg(count(lit(1)).as("cluster_size"))
+    comp.join(sizes, "comp")
+      .select(col("id").as(pkCol), col("comp").as("keeper"),
+        col("cluster_size"), (col("id") =!= col("comp")).as("is_dup"))
   }
 }

@@ -28,18 +28,13 @@ import graft.functions.TextFns
   *     change feed: O(batch) per ingest, ledger-idempotent across replays,
   *     and the BM25 normalizer never rescans doclens.
   *
-  * Commit order and replay safety follow [[NearDupIngest]]'s discipline:
-  * index tables first (postings, doclens, then the ledger-guarded rollup),
-  * corpus LAST, every index append IDEMPOTENT BY PK (anti-join against the
-  * stored pks) and the corpus append deduplicated by pk
-  * ([[Warehouse.appendDeduped]]) — so replaying a batch after a crash at
-  * ANY commit boundary converges to the fully-committed state and no table
-  * accretes duplicates. An orphan posting (index committed, corpus append
-  * lost, batch never replayed) can surface a pk [[search]] scores but the
-  * corpus lacks — callers that must not see them pass
-  * `confirmed = true` to semi-join results against corpus membership (one
-  * pk-pruned column probe), the same reconciliation trade NearDupIngest
-  * makes.
+  * Commit discipline and replay safety: an [[ingest]] stages its postings,
+  * doclens and deduplicated corpus rows and lands all three as ONE
+  * [[Warehouse.transact]] unit, every append IDEMPOTENT BY PK (anti-join
+  * against the stored pks) — a crashed ingest commits nothing, and a replay
+  * lands the batch exactly once. The cstats rollup stays FEED-driven
+  * (folded after the transaction, ledger-idempotent): a derived normalizer
+  * whose one-poll lag is benign.
   *
   * BM25 scoring matches q113 bit-for-bit: same rational-idf form (no
   * `log()`), per-term parts summed left-to-right in ONE fixed-order per-row
@@ -66,131 +61,107 @@ final class SearchIndexIngest(wh: Warehouse, pkCol: String, textCol: String) {
   // change to the tokenization algebra ([[TextFns.TokenizerGeneration]])
   // makes stored postings silently mismatch query-side tokens — searches
   // under-score pre-change documents and dedup-by-terms misses them, with
-  // no error anywhere. The stamp rides the postings table's batch-id
-  // ledger; every entry point refuses loudly on mismatch. Stamped BEFORE
-  // any posting rows commit (create-then-stamp), so a committed index is
-  // never stampless; an EMPTY stampless postings table (crash between
-  // create and stamp) reads as fresh.
-  private val FmtSid = "idxformat"
+  // no error anywhere. The stamp rides the postings table (see
+  // [[IndexFamily]]); every entry point refuses loudly on mismatch.
   private[sink] val formatStamp: Long = graft.functions.TextFns.TokenizerGeneration
 
-  private def formatGuard(name: String): Unit = {
-    if (!wh.exists(postingsTable(name))) return
-    val got = wh.lastCommittedBatchId(postingsTable(name), FmtSid)
-    if (got == formatStamp) return
-    if (got < 0) {
-      val man = wh.currentManifest(postingsTable(name))
-      if (man.files.isEmpty && man.deletes.isEmpty) return // fresh, pre-stamp crash
-      throw new IllegalStateException(
-        s"search index for '$name' carries no tokenizer-format stamp — it was " +
-          "built before format stamping. If it was provably built with the " +
-          "CURRENT tokenizer generation, adopt it explicitly with " +
-          "adoptFormat(name); otherwise rebuild the index (drop the " +
-          "__postings/__doclens/__cstats tables and re-ingest).")
-    }
-    throw new IllegalStateException(
+  private def refusal(name: String, got: Long): String =
+    if (got < 0)
+      s"search index for '$name' carries no tokenizer-format stamp — it was " +
+        "built before format stamping. If it was provably built with the " +
+        "CURRENT tokenizer generation, adopt it explicitly with " +
+        "adoptFormat(name); otherwise rebuild the index (drop the " +
+        "__postings/__doclens/__cstats tables and re-ingest)."
+    else
       s"search index for '$name' was built with tokenizer generation $got; this " +
         s"build tokenizes at generation $formatStamp. Stored postings would " +
         "silently mismatch query-side tokens (under-scored or missed documents), " +
-        "so the index must be rebuilt (re-ingest), not mixed.")
-  }
+        "so the index must be rebuilt (re-ingest), not mixed."
 
-  private def ensureStamped(name: String,
-      postsSchema: org.apache.spark.sql.types.StructType): Unit = {
-    if (!wh.exists(postingsTable(name))) wh.create(postingsTable(name), postsSchema)
-    if (wh.lastCommittedBatchId(postingsTable(name), FmtSid) != formatStamp)
-      wh.recordBatchId(postingsTable(name), FmtSid, formatStamp)
-  }
+  private val family = new IndexFamily(wh, pkCol,
+    stampOn = "__postings", stampSid = "idxformat", stampValue = formatStamp, refusal,
+    ledgerOn = "__postings", retractOn = Seq("__postings", "__doclens"),
+    compactOn = Seq("__postings" -> Seq("term")))
 
   /** Operator override for a pre-stamp index KNOWN to be tokenized at the
     * current generation: records the stamp so the guard passes. Misuse
     * reintroduces the silent cross-era mixing the guard prevents.
     */
-  def adoptFormat(name: String): Unit = {
-    require(wh.exists(postingsTable(name)), s"no search index for table: $name")
-    wh.recordBatchId(postingsTable(name), FmtSid, formatStamp)
-  }
+  def adoptFormat(name: String): Unit =
+    family.adopt(name, s"no search index for table: $name")
 
-  /** Tokenize `df` and append its NEW pks' postings + doclens rows
-    * (idempotent by pk — the shared middle of [[ingest]] and
-    * [[followChanges]]). Returns the posting rows appended.
-    */
-  private def indexRows(name: String, df: DataFrame): Long = {
-    // one tokenization pass feeds postings AND doclens
-    val toks = df.select(col(pkCol), TextFns.tokens(col(textCol)).as("tk"))
+  /** (pk, tk, dl): one tokenization pass feeds postings AND doclens. */
+  private def tokenized(df: DataFrame): DataFrame =
+    df.select(col(pkCol), TextFns.tokens(col(textCol)).as("tk"))
       .select(col(pkCol), col("tk"), size(col("tk")).cast("long").as("dl"))
       .persist()
-    try {
-      val posts = toks
-        .select(col(pkCol), col("dl"), explode(col("tk")).as("term"))
-        .groupBy(col("term"), col(pkCol), col("dl"))
-        .agg(count(lit(1)).as("tf"))
-        .select(col("term"), col(pkCol), col("tf"), col("dl"))
-      // localCheckpoint: counted after the commit below, and the anti-join
-      // must not re-plan against the table AFTER its own append lands (it
-      // would then see every batch pk as already present)
-      val newPosts = (
-        if (!wh.exists(postingsTable(name))) posts
-        else posts.join(wh.load(postingsTable(name)).select(col(pkCol)).distinct(),
-          Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      // clusterBy term: postings land range-sorted on the term, so each
-      // file's [min,max] term stats are TIGHT and the search-time manifest
-      // prune touches ~query-terms/term-range files, not every batch's
-      ensureStamped(name, newPosts.schema)
-      wh.append(postingsTable(name), newPosts,
-        statsCols = Seq("term", pkCol), clusterBy = Seq("term"))
 
-      val lens = toks.select(col(pkCol), col("dl"))
-      val newLens =
-        if (!wh.exists(doclensTable(name))) lens
-        else lens.join(wh.load(doclensTable(name)).select(col(pkCol)),
-          Seq(pkCol), "left_anti")
-      wh.append(doclensTable(name), newLens, statsCols = Seq(pkCol))
-      // change-feed-driven (not the append-only file feed): doclens MUTATES
-      // once followChanges deletes from it, and the signed fold subtracts
-      // deleted docs' contributions exactly; identical folds on pure appends
-      IncrementalRollup.maintainFromChangeFeed(wh, doclensTable(name),
-        cstatsTable(name), statsSpec)
-      newPosts.count()
+  /** The NEW pks' (postings, doclens) rows of `toks` — idempotent by pk.
+    * Postings are materialized: their `term`-clustered write sizes them
+    * exactly ([[Warehouse]]'s small-batch gate), and ingest counts them
+    * after its commit.
+    */
+  private def derive(name: String, toks: DataFrame): (DataFrame, DataFrame) = {
+    val posts = toks
+      .select(col(pkCol), col("dl"), explode(col("tk")).as("term"))
+      .groupBy(col("term"), col(pkCol), col("dl"))
+      .agg(count(lit(1)).as("tf"))
+      .select(col("term"), col(pkCol), col("tf"), col("dl"))
+    (family.newByPk(postingsTable(name), posts, manyPerPk = true).localCheckpoint(),
+      family.newByPk(doclensTable(name), toks.select(col(pkCol), col("dl"))))
+  }
+
+  /** Fold the doclens change feed into cstats — change-feed-driven (not the
+    * append-only file feed): doclens MUTATES once followChanges retracts
+    * from it, and the signed fold subtracts deleted docs exactly.
+    */
+  private def foldStats(name: String): Unit =
+    IncrementalRollup.maintainFromChangeFeed(wh, doclensTable(name),
+      cstatsTable(name), statsSpec)
+
+  /** Ingest one batch: postings, doclens and the pk-deduplicated corpus
+    * rows land as ONE transaction (clusterBy term: postings land
+    * range-sorted on the term, so each file's [min,max] term stats are
+    * TIGHT and the search-time prune touches ~query-terms/term-range
+    * files); then the cstats fold and the follower ledger advance. All
+    * O(batch).
+    */
+  def ingest(name: String, df: DataFrame): Report = {
+    family.guard(name)
+    val toks = tokenized(df)
+    try {
+      val (posts, lens) = derive(name, toks)
+      val fresh = family.newByPk(name, family.keepers(df)).localCheckpoint()
+      family.ensureStamped(name, posts.schema)
+      val preV = wh.currentVersion(name)
+      wh.transact { tx =>
+        tx.append(postingsTable(name), posts,
+          statsCols = Seq("term", pkCol), clusterBy = Seq("term"))
+        tx.append(doclensTable(name), lens, statsCols = Seq(pkCol))
+        tx.append(name, fresh, statsCols = Seq(pkCol))
+      }
+      foldStats(name)
+      family.advance(name, preV)
+      Report(wh.currentVersion(name), fresh.count(), posts.count())
     } finally toks.unpersist()
   }
 
-  /** Ingest one batch: maintain postings/doclens/cstats, then append the
-    * batch rows to the corpus. All commits are O(batch).
-    */
-  def ingest(name: String, df: DataFrame): Report = {
-    formatGuard(name)
-    val preV = if (wh.exists(name)) wh.currentVersion(name) else -1L
-    val postings = indexRows(name, df)
-    val rep = wh.appendDeduped(name, df, fpCol = pkCol, pk = pkCol,
-      statsCols = Seq(pkCol))
-    advanceFollowerLedger(name, preV)
-    Report(rep.version, rep.appended, postings)
-  }
-
-  /** [[IndexFollower.advance]] on the postings table — the shared ledger
-    * discipline (head == preAppendVersion + 1, judged on the head; see the
-    * object doc for why foreign commits landing DURING an ingest stay in
-    * the next followChanges window).
-    */
-  private[graft] def advanceFollowerLedger(name: String, preAppendVersion: Long): Unit =
-    IndexFollower.advance(wh, name, postingsTable(name), preAppendVersion)
+  /** [[IndexFamily.advance]] — the ledger rule, judged on the corpus head. */
+  private[graft] def advanceFollowerLedger(name: String, preVersion: Long): Unit =
+    family.advance(name, preVersion)
 
   final case class FollowReport(corpusVersion: Long, deletedDocs: Long, indexedDocs: Long)
 
-  /** INCREMENTAL INDEX MAINTENANCE from the corpus change feed — closes the
-    * loop between a MUTATING corpus and its warehouse-resident index
-    * without a blue/green rebuild: deletes/update-retractions on the corpus
-    * (morMerge, deleteWhere, equality deletes) become equality-delete
-    * commits on postings/doclens keyed by pk (O(changed pks) metadata, zero
-    * posting rewrites — the MOR discipline), and inserted/updated rows
-    * re-index through the same idempotent path ingests use. The corpus
-    * window consumed is tracked in the warehouse batch ledger (streamId
-    * `idxfollow:<name>`, recorded by [[ingest]] too), so crashed/replayed
-    * calls converge: re-deleting deleted pks is a no-op overlay, re-indexing
-    * anti-joins to empty. The cstats rollup follows through its own signed
-    * change-feed fold.
+  /** INCREMENTAL INDEX MAINTENANCE from the corpus change feed, one
+    * [[IndexFamily.follow]] tick — closes the loop between a MUTATING
+    * corpus and its warehouse-resident index without a blue/green rebuild:
+    * deletes/update-retractions on the corpus (morMerge, deleteWhere,
+    * equality deletes) become equality-delete commits on postings/doclens
+    * keyed by pk (O(changed pks) metadata, zero posting rewrites), and
+    * inserted/updated rows re-index through the idempotent-by-pk appends.
+    * The consumed window rides the `idxfollow:<name>` ledger (advanced by
+    * [[ingest]] too), so crashed/replayed calls converge; the cstats rollup
+    * follows through its own signed change-feed fold.
     *
     * First call on an index built BEFORE this ledger existed treats the
     * whole current corpus as insertions — already-indexed pks no-op, but
@@ -200,129 +171,45 @@ final class SearchIndexIngest(wh: Warehouse, pkCol: String, textCol: String) {
   def followChanges(name: String): FollowReport = {
     require(wh.exists(postingsTable(name)),
       s"no search index for table: $name (ingest first)")
-    formatGuard(name)
-    IndexFollower.window(wh, name, postingsTable(name), pkCol) match {
-      case None => FollowReport(wh.currentVersion(name), 0L, 0L)
-      case Some(w) =>
-        if (w.nDel > 0) {
-          // order matters: retract BEFORE re-indexing, so an updated pk's new
-          // postings (seq > the delete's) are shielded by the strict-< rule
-          // and the re-index anti-join sees the pk as absent
-          wh.equalityDelete(postingsTable(name), w.delPks)
-          wh.equalityDelete(doclensTable(name), w.delPks)
-        }
-        val nIns = w.ins.select(col(pkCol)).distinct().count()
-        if (nIns > 0) indexRows(name, w.ins)
-        // a pure-delete window still folds the doclens retraction into cstats
-        else IncrementalRollup.maintainFromChangeFeed(wh, doclensTable(name),
-          cstatsTable(name), statsSpec)
-        IndexFollower.record(wh, name, postingsTable(name), w.now)
-        FollowReport(w.now, w.nDel, nIns)
-    }
-  }
-
-  /** [[ingest]] with the three membership-bearing commits — postings,
-    * doclens, corpus — fused into ONE [[Warehouse.transact]] unit. The
-    * crash-orphan window `ingest` documents (index rows whose corpus row
-    * never landed, shielded by `confirmed = true`) does not exist here: no
-    * reader can observe a posting without its corpus row, so searches never
-    * need the reconciliation semi-join. The cstats rollup stays FEED-driven
-    * (maintained after the transaction, ledger-idempotent) — it is a
-    * derived normalizer whose one-poll lag is benign, and feed discipline
-    * keeps `ingest`/`ingestAtomic` freely mixable on one index: the ledger
-    * folds each doclens commit exactly once regardless of which path made
-    * it. Replay-safe the same way: a crashed transaction commits NOTHING,
-    * and a full re-run anti-joins to empty everywhere.
-    */
-  def ingestAtomic(name: String, df: DataFrame): Report = {
-    import org.apache.spark.sql.expressions.Window
-    formatGuard(name)
-    val toks = df.select(col(pkCol), TextFns.tokens(col(textCol)).as("tk"))
-      .select(col(pkCol), col("tk"), size(col("tk")).cast("long").as("dl"))
-      .persist()
-    try {
-      val posts = toks
-        .select(col(pkCol), col("dl"), explode(col("tk")).as("term"))
-        .groupBy(col("term"), col(pkCol), col("dl"))
-        .agg(count(lit(1)).as("tf"))
-        .select(col("term"), col(pkCol), col("tf"), col("dl"))
-      val newPosts = (
-        if (!wh.exists(postingsTable(name))) posts
-        else posts.join(wh.load(postingsTable(name)).select(col(pkCol)).distinct(),
-          Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      val lens = toks.select(col(pkCol), col("dl"))
-      val newLens = (
-        if (!wh.exists(doclensTable(name))) lens
-        else lens.join(wh.load(doclensTable(name)).select(col(pkCol)),
-          Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      // appendDeduped's algebra at STAGING time (same json-minimal keeper,
-      // same fp anti-join), so the corpus append can ride the transaction
-      val w = Window.partitionBy(pkCol)
-        .orderBy(col(pkCol).asc, to_json(struct(df.columns.map(col): _*)).asc)
-      val inBatch = df.withColumn("__keeper", row_number().over(w))
-        .filter(col("__keeper") === 1).drop("__keeper")
-      val fresh = (
-        if (!wh.exists(name)) inBatch
-        else inBatch.join(wh.load(name).select(pkCol).distinct(), Seq(pkCol), "left_anti")
-        ).localCheckpoint()
-      val preV = if (wh.exists(name)) wh.currentVersion(name) else -1L
-      // stamp BEFORE the transaction commits (the ledger pointer is outside
-      // the transactional manifest commit — see NearDupIngest.ingestAtomic)
-      ensureStamped(name, newPosts.schema)
-      wh.transact { tx =>
-        tx.append(postingsTable(name), newPosts,
-          statsCols = Seq("term", pkCol), clusterBy = Seq("term"))
-        tx.append(doclensTable(name), newLens, statsCols = Seq(pkCol))
-        tx.append(name, fresh, statsCols = Seq(pkCol))
+    family.guard(name)
+    val (v, deleted, indexed) = family.follow(name) { ins =>
+      val n = ins.select(col(pkCol)).distinct().count()
+      if (n > 0) {
+        val toks = tokenized(ins)
+        try {
+          val (posts, lens) = derive(name, toks)
+          family.ensureStamped(name, posts.schema)
+          wh.append(postingsTable(name), posts,
+            statsCols = Seq("term", pkCol), clusterBy = Seq("term"))
+          wh.append(doclensTable(name), lens, statsCols = Seq(pkCol))
+        } finally toks.unpersist()
       }
-      IncrementalRollup.maintainFromChangeFeed(wh, doclensTable(name),
-        cstatsTable(name), statsSpec)
-      advanceFollowerLedger(name, preV)
-      Report(wh.currentVersion(name), fresh.count(), newPosts.count())
-    } finally toks.unpersist()
-  }
-
-  /** Compact the postings table's ingest-granularity files
-    * ([[Warehouse.compactFiles]] with `clusterBy = term`): every per-batch
-    * append lands one term-range file, and after many small batches their
-    * ranges overlap — each probe then opens a file per batch. Compaction
-    * rewrites the small files into few DISJOINT term-range files, restoring
-    * the O(query-terms) probe; search results are unchanged (spec-pinned).
-    */
-  def compact(name: String, smallRows: Long = 100000L): Long =
-    wh.compactFiles(postingsTable(name), smallRows, clusterBy = Seq("term"))
-
-  /** Postings of `terms` only: manifest-stat file pruning on the `term`
-    * column (a file is skipped when NO query term falls inside its [min,max]
-    * term range — same comparison domain as every other stat prune), then
-    * the residual `isin` filter handles row groups within kept files.
-    */
-  private[graft] def probePostings(name: String, terms: Seq[String]): DataFrame = {
-    val t = postingsTable(name)
-    val man = wh.currentManifest(t)
-    val kept = man.files.filter { f =>
-      f.stats.get("term") match {
-        case Some(ColStat("z", _, _, _)) => false
-        case Some(s) => terms.exists(q =>
-          StatsPruning.cmp(s.kind, s.min, q) <= 0 &&
-            StatsPruning.cmp(s.kind, s.max, q) >= 0)
-        case None => true // no stats recorded => cannot prune
-      }
+      foldStats(name) // a pure-delete window still folds the retraction
+      n
     }
-    // MOR overlay over the pruned subset: followChanges retracts a doc's
-    // postings as an equality delete, and a raw parquet read of the kept
-    // files would resurrect them — the overlay is exactly the corpus read
-    // path's, restricted to the files the term prune kept
-    val base = wh.morFrame(t, Manifest(man.schema, kept, man.deletes))
-    base.filter(col("term").isin(terms: _*))
+    FollowReport(v, deleted, indexed)
   }
+
+  /** Compact the postings table's ingest-granularity files clustered on
+    * `term` ([[IndexFamily.compact]]): restores the O(query-terms) probe;
+    * search results are unchanged (spec-pinned).
+    */
+  def compact(name: String, smallRows: Long = 100000L): Unit =
+    family.compact(name, smallRows)
+
+  /** Postings of `terms` only — [[IndexFamily.probe]] on the `term` stats. */
+  private[graft] def probePostings(name: String, terms: Seq[String]): DataFrame =
+    family.probe(postingsTable(name), "term", terms)
 
   /** Top-`k` BM25 over the index: cost ∝ postings of the query terms (a
     * pruned probe), one broadcast one-row stats frame, one TakeOrdered —
-    * the corpus text is never read. `confirmed = true` additionally
-    * semi-joins hits against corpus membership (crash-orphan shielding).
+    * the corpus text is never read.
+    *
+    * `confirmed = true` semi-joins hits against current corpus membership
+    * (one pk-pruned column probe) — the follower-lag shield: between a
+    * corpus deleteWhere/morMerge and the [[followChanges]] tick that
+    * consumes it, the index still scores the deleted (or pre-update) pk,
+    * and only the confirmed search hides it.
     */
   def search(name: String, terms: Seq[String], k: Int,
              k1: Double = 1.2, b: Double = 0.75,
@@ -336,7 +223,7 @@ final class SearchIndexIngest(wh: Warehouse, pkCol: String, textCol: String) {
       s"search supports at most 64 terms (got ${terms.size}); use the corpus-scan BM25 for document-shaped queries")
     require(wh.exists(postingsTable(name)) && wh.exists(cstatsTable(name)),
       s"no search index for table: $name (ingest first)")
-    formatGuard(name) // query-side tokens must match the stored postings' era
+    family.guard(name) // query-side tokens must match the stored postings' era
     // persisted: consumers = per-term df aggregate + the scoring pivot
     val probe = probePostings(name, terms).persist()
     try {

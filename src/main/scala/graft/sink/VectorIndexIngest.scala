@@ -37,32 +37,16 @@ import graft.functions.ProductQuantization.PQModel
   * move under ONE durable intent, so a reader sees the old family or the
   * new one, never a mix) — the same blue/green trade FAISS shops make.
   *
-  * Commit order and replay safety ([[SearchIndexIngest]]'s discipline):
-  * codes FIRST (idempotent by pk — anti-join against stored pks), corpus
-  * LAST ([[Warehouse.appendDeduped]]). Replaying a batch after a crash at
-  * either commit boundary converges: surviving code rows dedupe the code
-  * append to exactly the missing rows, and the corpus append admits exactly
-  * the rows the crash lost. An orphan code row (codes committed, corpus
-  * lost, never replayed) can surface a pk search scores but the corpus
-  * lacks — `confirmed = true` shields results against corpus membership
-  * (one pk-pruned column probe), the family's standard reconciliation.
+  * Commit discipline and replay safety ([[SearchIndexIngest]]'s): an
+  * [[ingest]] lands its codes (idempotent by pk — anti-join against stored
+  * pks) and its pk-deduplicated corpus rows as ONE [[Warehouse.transact]]
+  * unit, so a crashed ingest commits nothing and a replay lands the batch
+  * exactly once.
   *
   * Search algebra is EXACTLY [[IvfPq.search]] (nprobe cells by centroid
   * cosine, broadcast ADC distance table, exact-decimal lookup sums,
   * (adc_d2 ASC, pk ASC) ranking) — the spec pins index-served equals
   * directly-built, and q133 oracle-gates the same algebra end to end.
-  *
-  * Fault-tolerance trade, stated once for the ingest family's
-  * `localCheckpoint` sites (here, [[Warehouse.appendDeduped]],
-  * [[SearchIndexIngest]], [[IndexFollower]]): localCheckpoint pins a
-  * multi-consumed batch frame to executor-local blocks, so an executor
-  * loss mid-ingest fails the job instead of recomputing — the retry is a
-  * REPLAY of the whole ingest, which the family's idempotent-by-pk commit
-  * order makes safe (that replay path, not block recovery, is the crash
-  * story). The alternative — persist(MEMORY_AND_DISK) + count — keeps
-  * lineage for block re-derivation but re-plans the multi-stage pipeline
-  * per consumer and leaves the anti-join able to re-plan AFTER its own
-  * table commit, which is exactly the race the checkpoint exists to close.
   */
 final class VectorIndexIngest(wh: Warehouse, pkCol: String, vecCol: String,
                               dim: Int, m: Int, k: Int) {
@@ -82,44 +66,41 @@ final class VectorIndexIngest(wh: Warehouse, pkCol: String, vecCol: String,
   // stored codebook through ITS shape (PQModel(load(codebook), m, k,
   // subDim)) and compute ADC distances against a foreign codebook, wrong
   // results with no error anywhere; a metric change (generation) has the
-  // identical failure mode. The stamp rides the codebook table's batch-id
-  // ledger, recorded BEFORE the model tables commit (no stampless-but-
-  // frozen crash state: a stamp without tables is inert, since frozen()
-  // requires the tables). Generation 1 = cosine coarse metric + the
-  // current PQ encode algebra.
-  private val FmtSid = "vecformat"
+  // identical failure mode. The stamp rides the codebook table (see
+  // [[IndexFamily]]), recorded BEFORE the model tables commit (no
+  // stampless-but-frozen crash state: a stamp without tables is inert,
+  // since frozen() requires the tables). Generation 1 = cosine coarse
+  // metric + the current PQ encode algebra.
   private[sink] val formatStamp: Long =
     (1L << 48) | (dim.toLong << 32) | (m.toLong << 16) | k.toLong
 
-  private def formatGuard(name: String): Unit = {
-    if (!wh.exists(codebookTable(name))) return
-    val got = wh.lastCommittedBatchId(codebookTable(name), FmtSid)
-    if (got == formatStamp) return
-    if (got < 0) throw new IllegalStateException(
+  private def refusal(name: String, got: Long): String =
+    if (got < 0)
       s"vector index for '$name' carries no model-format stamp — it was frozen " +
         "before format stamping. If its model provably matches this ingester " +
         s"(generation 1, dim=$dim, m=$m, k=$k), adopt it explicitly with " +
         "adoptFormat(name); otherwise build a new index under a new name and " +
-        "swap by swapFamily.")
+        "swap by swapFamily."
     else {
       val g = got >> 48; val gd = (got >> 32) & 0xffff
       val gm = (got >> 16) & 0xffff; val gk = got & 0xffff
-      throw new IllegalStateException(
-        s"vector index for '$name' was frozen with an incompatible model format " +
-          s"(generation $g, dim=$gd, m=$gm, k=$gk; this ingester: generation 1, " +
-          s"dim=$dim, m=$m, k=$k). Codes and ADC distances are only meaningful " +
-          "against the codebook that produced them — construct VectorIndexIngest " +
-          "with the index's parameters, or build a new index and swapFamily.")
+      s"vector index for '$name' was frozen with an incompatible model format " +
+        s"(generation $g, dim=$gd, m=$gm, k=$gk; this ingester: generation 1, " +
+        s"dim=$dim, m=$m, k=$k). Codes and ADC distances are only meaningful " +
+        "against the codebook that produced them — construct VectorIndexIngest " +
+        "with the index's parameters, or build a new index and swapFamily."
     }
-  }
+
+  private val family = new IndexFamily(wh, pkCol,
+    stampOn = "__codebook", stampSid = "vecformat", stampValue = formatStamp, refusal,
+    ledgerOn = "__codes", retractOn = Seq("__codes"),
+    compactOn = Seq("__codes" -> Seq("cell")))
 
   /** Operator override for a pre-stamp index KNOWN to match this ingester's
     * model shape and metric: records the stamp so the guard passes.
     */
-  def adoptFormat(name: String): Unit = {
-    require(wh.exists(codebookTable(name)), s"no frozen model for index: $name")
-    wh.recordBatchId(codebookTable(name), FmtSid, formatStamp)
-  }
+  def adoptFormat(name: String): Unit =
+    family.adopt(name, s"no frozen model for index: $name")
 
   /** Commit the frozen model: IVF centroids (cell, cv) + PQ codebook
     * (sub_id, cell, cv). Refused once any codes are committed — codes are
@@ -132,12 +113,12 @@ final class VectorIndexIngest(wh: Warehouse, pkCol: String, vecCol: String,
     require(model.m == m && model.k == k && model.subDim == subDim,
       s"model shape (m=${model.m}, k=${model.k}, subDim=${model.subDim}) does not " +
         s"match this ingester (m=$m, k=$k, subDim=$subDim)")
-    // (no formatGuard here: the codes-exist require above already makes a
+    // (no guard here: the codes-exist require above already makes a
     // wholesale model replace safe — nothing encoded against the old model
     // survives it)
     // stamp FIRST: a stamp without tables is inert (frozen() requires the
     // tables), so no crash point leaves a frozen-but-stampless model
-    wh.recordBatchId(codebookTable(name), FmtSid, formatStamp)
+    family.stamp(name)
     // cell ids normalize to long: one comparison domain for the manifest
     // stat prune, the isin residual, and the driver-side probed-cell set
     wh.replace(cellsTable(name), centroids.select(col("cell").cast("long").as("cell"), col("cv")))
@@ -148,7 +129,7 @@ final class VectorIndexIngest(wh: Warehouse, pkCol: String, vecCol: String,
   private def frozen(name: String): (DataFrame, PQModel) = {
     require(wh.exists(cellsTable(name)) && wh.exists(codebookTable(name)),
       s"no frozen model for index $name (freeze first)")
-    formatGuard(name) // the stored codebook must match THIS shape/metric
+    family.guard(name) // the stored codebook must match THIS shape/metric
     (wh.load(cellsTable(name)),
       PQModel(wh.load(codebookTable(name)), m, k, subDim))
   }
@@ -171,81 +152,55 @@ final class VectorIndexIngest(wh: Warehouse, pkCol: String, vecCol: String,
       .agg(max(struct(col("cscore"), (-col("cell")).as("negcell"))).as("__m"))
       .select(col("vec_id"), (-col("__m.negcell")).as("cell"))
 
-  /** One row per pk BEFORE encode: a duplicate pk would flow through
-    * encode's groupBy(vec_id)/collect_list as a 2M-length codes array whose
-    * posexplode positions misalign sub_ids in the ADC join — and the corrupt
-    * row would then block a correct re-ingest via the left_anti pk guard.
-    * Keeper is the JSON-minimal row: deterministic under any partitioning,
-    * same discipline as appendDeduped's tiebreak, so a streaming replay of
-    * a duplicate-bearing batch converges on the same survivor.
+  /** Assign + encode `batch` (one row per pk) against the frozen model:
+    * its NEW pks' code rows, materialized — their `cell`-clustered write
+    * sizes them exactly ([[Warehouse]]'s small-batch gate), and ingest
+    * counts them after its commit.
     */
-  private def dedupBatch(df: DataFrame): DataFrame = {
-    val wd = Window.partitionBy(pkCol)
-      .orderBy(to_json(struct(df.columns.map(col): _*)).asc)
-    // materialized ONCE: every caller fans the deduped batch into several
-    // consumers (PQ encode + cell assignment are two join sides over it,
-    // then the corpus dedup-append reads it again) — without the
-    // checkpoint the window pipeline re-runs for each of them
-    df.withColumn("__rn", row_number().over(wd))
-      .filter(col("__rn") === 1).drop("__rn")
-      .localCheckpoint()
-  }
-
-  /** Assign + encode `batch` against the frozen model and append its NEW
-    * pks' code rows (idempotent by pk — the shared middle of [[ingest]] and
-    * [[followChanges]]). Returns code rows appended.
-    */
-  private def encodeAppend(name: String, batch: DataFrame,
-                           cents: DataFrame, model: PQModel): Long = {
+  private def encoded(name: String, batch: DataFrame,
+                      cents: DataFrame, model: PQModel): DataFrame = {
     val emb = batch.select(col(pkCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
     val codes = ProductQuantization.encode(emb, model)
       .join(assignCells(emb, cents), "vec_id")
       .select(col("vec_id").as(pkCol), col("cell"), col("codes"))
-    // localCheckpoint: counted after the commit, and the anti-join must not
-    // re-plan against the table AFTER its own append lands
-    val newCodes = (
-      if (!wh.exists(codesTable(name))) codes
-      else codes.join(wh.load(codesTable(name)).select(col(pkCol)),
-        Seq(pkCol), "left_anti")
-      ).localCheckpoint()
-    // clusterBy cell: code files land range-sorted on the cell id, so each
-    // file's [min,max] cell stats are TIGHT and a search's manifest probe
-    // touches ~nprobe/cells of the files, not every batch's
-    wh.append(codesTable(name), newCodes,
-      statsCols = Seq("cell", pkCol), clusterBy = Seq("cell"))
-    newCodes.count()
+    family.newByPk(codesTable(name), codes).localCheckpoint()
   }
 
-  /** Ingest one batch of (pk, vec) rows: assign + encode against the frozen
-    * model, append codes (idempotent by pk, clustered by cell), then the
-    * corpus rows ([[Warehouse.appendDeduped]] by pk). All commits O(batch).
+  /** Ingest one batch of (pk, vec) rows: one row per pk BEFORE encode (a
+    * duplicate pk would flow through encode's groupBy(vec_id)/collect_list
+    * as a 2M-length codes array whose posexplode positions misalign sub_ids
+    * in the ADC join, and the corrupt row would then block a correct
+    * re-ingest), assign + encode against the frozen model, then codes
+    * (clustered by cell: each file's [min,max] cell stats are TIGHT, so a
+    * search's manifest probe touches ~nprobe/cells of the files) and the
+    * pk-deduplicated corpus rows as ONE transaction. All O(batch).
     */
   def ingest(name: String, df: DataFrame): Report = {
-    val preV = if (wh.exists(name)) wh.currentVersion(name) else -1L
     val (cents, model) = frozen(name)
-    val batch = dedupBatch(df)
-    val codes = encodeAppend(name, batch, cents, model)
-    val rep = wh.appendDeduped(name, batch, fpCol = pkCol, pk = pkCol,
-      statsCols = Seq(pkCol))
-    advanceFollowerLedger(name, preV)
-    Report(rep.version, rep.appended, codes)
+    // materialized once: encode + cell assignment are two join sides over
+    // it, and the corpus anti-join reads it again
+    val batch = family.keepers(df)
+    val newCodes = encoded(name, batch, cents, model)
+    val fresh = family.newByPk(name, batch).localCheckpoint()
+    val preV = wh.currentVersion(name)
+    wh.transact { tx =>
+      tx.append(codesTable(name), newCodes,
+        statsCols = Seq("cell", pkCol), clusterBy = Seq("cell"))
+      tx.append(name, fresh, statsCols = Seq(pkCol))
+    }
+    family.advance(name, preV)
+    Report(wh.currentVersion(name), fresh.count(), newCodes.count())
   }
-
-  /** [[IndexFollower.advance]] on the codes table — the shared ledger
-    * discipline (head == preAppendVersion + 1, judged on the head).
-    */
-  private[graft] def advanceFollowerLedger(name: String, preAppendVersion: Long): Unit =
-    IndexFollower.advance(wh, name, codesTable(name), preAppendVersion)
-
 
   final case class FollowReport(corpusVersion: Long, deletedVecs: Long, indexedVecs: Long)
 
   /** INCREMENTAL INDEX MAINTENANCE from the corpus change feed — the vector
-    * sibling of [[SearchIndexIngest.followChanges]]: corpus deletes and
-    * update-retractions become ONE equality-delete commit on the codes
-    * table keyed by pk (O(changed pks) metadata, zero code-file rewrites),
-    * and inserted/updated vectors re-encode against the SAME frozen model
-    * through the idempotent ingest path — an updated embedding thereby
+    * sibling of [[SearchIndexIngest.followChanges]], one
+    * [[IndexFamily.follow]] tick: corpus deletes and update-retractions
+    * become ONE equality-delete commit on the codes table keyed by pk
+    * (O(changed pks) metadata, zero code-file rewrites), and
+    * inserted/updated vectors re-encode against the SAME frozen model
+    * through the idempotent-by-pk append — an updated embedding thereby
     * MOVES to the cell its new vector assigns to, with no blue/green
     * rebuild and no retrain. Ledger semantics and the pre-ledger bootstrap
     * caveat match the search follower.
@@ -254,69 +209,24 @@ final class VectorIndexIngest(wh: Warehouse, pkCol: String, vecCol: String,
     val (cents, model) = frozen(name)
     require(wh.exists(codesTable(name)),
       s"no vector index for table: $name (ingest first)")
-    val w = IndexFollower.window(wh, name, codesTable(name), pkCol) match {
-      case None    => return FollowReport(wh.currentVersion(name), 0L, 0L)
-      case Some(x) => x
-    }
-    val (now, delPks, nDel) = (w.now, w.delPks, w.nDel)
-    // retract BEFORE re-encoding: an updated pk's new code row (seq > the
-    // delete's) is shielded by the strict-< rule and the anti-join sees the
-    // pk as absent
-    if (nDel > 0) wh.equalityDelete(codesTable(name), delPks)
-    val ins = dedupBatch(w.ins)
-    // dedupBatch keeps exactly one row per pk, so the distinct-pk count is
-    // the (checkpointed) row count — no extra shuffle
-    val nIns = ins.count()
-    if (nIns > 0) encodeAppend(name, ins, cents, model)
-    IndexFollower.record(wh, name, codesTable(name), now)
-    FollowReport(now, nDel, nIns)
-  }
-
-  /** [[ingest]] with the codes and corpus commits fused into ONE
-    * [[Warehouse.transact]] unit: no reader can observe an indexed code
-    * without its corpus row or vice versa, so the crash-orphan
-    * reconciliation `search(confirmed = true)` exists for is structurally
-    * unnecessary on this path. Same model freeze, same duplicate-pk keeper,
-    * same idempotent anti-joins — a crashed transaction commits nothing and
-    * a full replay converges.
-    */
-  def ingestAtomic(name: String, df: DataFrame): Report = {
-    val (cents, model) = frozen(name)
-    val batch = dedupBatch(df)
-    val emb = batch.select(col(pkCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-    val codes = ProductQuantization.encode(emb, model)
-      .join(assignCells(emb, cents), "vec_id")
-      .select(col("vec_id").as(pkCol), col("cell"), col("codes"))
-    val newCodes = (
-      if (!wh.exists(codesTable(name))) codes
-      else codes.join(wh.load(codesTable(name)).select(col(pkCol)),
-        Seq(pkCol), "left_anti")
-      ).localCheckpoint()
-    val fresh = (
-      if (!wh.exists(name)) batch
-      // corpus pk is unique by this sink's own dedup contract — no
-      // distinct() on the probe side (appendDeduped's reasoning)
-      else batch.join(wh.load(name).select(pkCol), Seq(pkCol), "left_anti")
-      ).localCheckpoint()
-    val preV = if (wh.exists(name)) wh.currentVersion(name) else -1L
-    wh.transact { tx =>
-      tx.append(codesTable(name), newCodes,
+    val (v, deleted, indexed) = family.follow(name) { ins =>
+      val batch = family.keepers(ins)
+      // one row per pk, so the (materialized) row count is the distinct-pk
+      // count — no extra shuffle
+      val n = batch.count()
+      if (n > 0) wh.append(codesTable(name), encoded(name, batch, cents, model),
         statsCols = Seq("cell", pkCol), clusterBy = Seq("cell"))
-      tx.append(name, fresh, statsCols = Seq(pkCol))
+      n
     }
-    advanceFollowerLedger(name, preV)
-    Report(wh.currentVersion(name), fresh.count(), newCodes.count())
+    FollowReport(v, deleted, indexed)
   }
 
-  /** Compact the codes table's ingest-granularity files
-    * ([[Warehouse.compactFiles]] with `clusterBy = cell`): per-batch
-    * appends each span the batch's cells, and after many small batches a
-    * cell probe opens a file per batch. Compaction rewrites them into few
-    * cell-range files, restoring the ~nprobe/cells probe cost; search
-    * results are unchanged (spec-pinned).
+  /** Compact the codes table's ingest-granularity files clustered on `cell`
+    * ([[IndexFamily.compact]]): restores the ~nprobe/cells probe cost;
+    * search results are unchanged (spec-pinned).
     */
-  def compact(name: String, smallRows: Long = 100000L): Long =
-    wh.compactFiles(codesTable(name), smallRows, clusterBy = Seq("cell"))
+  def compact(name: String, smallRows: Long = 100000L): Unit =
+    family.compact(name, smallRows)
 
   /** Blue/green swap: promote the complete family built under `from`
     * (corpus + frozen model + codes) to `to` in ONE atomic intent
@@ -339,39 +249,23 @@ final class VectorIndexIngest(wh: Warehouse, pkCol: String, vecCol: String,
       parts.map(p => s"$from$p" -> s"$to$p").filter { case (f, _) => wh.exists(f) })
   }
 
-  /** Code-table files whose [min,max] cell range intersects the probed cell
-    * set — the manifest-stat prune (same comparison domain as every other
-    * stat prune); the residual `isin` handles row groups within kept files.
-    */
-  private[graft] def keptFiles(name: String, cells: Seq[Long]): Seq[DataFile] =
-    wh.currentManifest(codesTable(name)).files.filter { f =>
-      f.stats.get("cell") match {
-        case Some(ColStat("z", _, _, _)) => false
-        case Some(s) => cells.exists(c =>
-          StatsPruning.cmp(s.kind, s.min, c.toString) <= 0 &&
-            StatsPruning.cmp(s.kind, s.max, c.toString) >= 0)
-        case None => true // no stats recorded => cannot prune
-      }
-    }
-
-  private[graft] def probeCodes(name: String, cells: Seq[Long]): DataFrame = {
-    val t = codesTable(name)
-    val man = wh.currentManifest(t)
-    val kept = keptFiles(name, cells)
-    // MOR overlay over the pruned subset: followChanges retracts a vector's
-    // code row as an equality delete — a raw parquet read would resurrect it
-    val base = wh.morFrame(t, Manifest(man.schema, kept, man.deletes))
-    base.filter(col("cell").isin(cells: _*))
-  }
+  /** Code rows of `cells` only — [[IndexFamily.probe]] on the `cell` stats. */
+  private[graft] def probeCodes(name: String, cells: Seq[Long]): DataFrame =
+    family.probe(codesTable(name), "cell", cells)
 
   /** Top-`k` ADC search over the index: per-probe `nprobe` cells by frozen-
     * centroid cosine, codes read ONLY from the pruned cell files, scored by
     * [[IvfPq.search]]'s exact algebra — the float corpus is never read.
     * The probed cell set is collected driver-side to drive the manifest
     * prune: bounded by probes x nprobe (and by the cell count), metadata-
-    * scale like every other manifest decision. `confirmed = true` shields
-    * against crash-orphan codes via corpus membership (pk-pruned probe);
-    * `excludeSelf` drops each probe's own corpus row (recall-audit shape).
+    * scale like every other manifest decision. `excludeSelf` drops each
+    * probe's own corpus row (recall-audit shape).
+    *
+    * `confirmed = true` semi-joins codes against current corpus membership
+    * (one pk-pruned column probe) — the follower-lag shield: between a
+    * corpus deleteWhere/morMerge and the [[followChanges]] tick that
+    * consumes it, the index still ranks the deleted (or pre-update) pk,
+    * and only the confirmed search hides it.
     */
   def search(name: String, probes: DataFrame, nprobe: Int = 2, topK: Int = 10,
              confirmed: Boolean = false, excludeSelf: Boolean = false): DataFrame = {

@@ -79,28 +79,24 @@ object CorpusStream {
       }
 
   /** Streaming dual of [[graft.sink.SearchIndexIngest]]: each micro-batch
-    * maintains the postings/doclens/cstats index tables and then the corpus
-    * — BM25 search serves a continuously-fresh index with no rebuild. Same
-    * state architecture as the dedup streams: the index IS warehouse
-    * tables, shared with batch backfills, durable across checkpoint loss.
-    * Replay safety is the ingester's own contract (idempotent-by-pk index
-    * appends, ledger-guarded rollup, pk-deduplicated corpus), so a replayed
-    * micro-batch — same checkpoint or a rebuilt one — converges to the
-    * fully-committed state and appends nothing new.
+    * lands its postings, doclens and corpus rows as ONE transaction (then
+    * folds the cstats rollup) — BM25 search serves a continuously-fresh
+    * index with no rebuild. Same state architecture as the dedup streams:
+    * the index IS warehouse tables, shared with batch backfills, durable
+    * across checkpoint loss. Replay safety is the ingester's own contract
+    * (idempotent-by-pk appends, ledger-guarded rollup), so a replayed
+    * micro-batch — same checkpoint or a rebuilt one — appends nothing new.
     */
   def ingestIndexed(spark: SparkSession, watchDir: String,
       schema: StructType, ing: graft.sink.SearchIndexIngest, table: String,
       checkpointDir: Option[String] = None,
-      streamId: String = "searchindex",
-      atomic: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] =
+      streamId: String = "searchindex"): DataStreamWriter[org.apache.spark.sql.Row] =
     spark.readStream.schema(schema).parquet(watchDir)
       .writeStream.outputMode("append")
       .option("checkpointLocation",
         checkpointDir.getOrElse(s"${watchDir.stripSuffix("/")}/_checkpoint_$streamId"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // atomic = each micro-batch's postings/doclens/corpus land as ONE
-        // transaction (no orphan-index crash states between commits)
-        if (atomic) ing.ingestAtomic(table, batch) else ing.ingest(table, batch)
+        ing.ingest(table, batch)
         ()
       }
 
@@ -136,22 +132,22 @@ object CorpusStream {
 
   /** Streaming dual of [[graft.sink.VectorIndexIngest]]: micro-batches of
     * (pk, vector) rows assign + PQ-encode against the FROZEN model and land
-    * in the cell-clustered codes table, then the corpus — ANN search serves
-    * a continuously-fresh IVF-PQ index. Freezing must happen before the
-    * stream starts (the ingester refuses to run without a model); replay
-    * safety is again the ingester's own idempotent-by-pk contract.
+    * in the cell-clustered codes table and the corpus as ONE transaction —
+    * ANN search serves a continuously-fresh IVF-PQ index. Freezing must
+    * happen before the stream starts (the ingester refuses to run without a
+    * model); replay safety is again the ingester's own idempotent-by-pk
+    * contract.
     */
   def ingestVectorIndexed(spark: SparkSession, watchDir: String,
       schema: StructType, ing: graft.sink.VectorIndexIngest, table: String,
       checkpointDir: Option[String] = None,
-      streamId: String = "vectorindex",
-      atomic: Boolean = false): DataStreamWriter[org.apache.spark.sql.Row] =
+      streamId: String = "vectorindex"): DataStreamWriter[org.apache.spark.sql.Row] =
     spark.readStream.schema(schema).parquet(watchDir)
       .writeStream.outputMode("append")
       .option("checkpointLocation",
         checkpointDir.getOrElse(s"${watchDir.stripSuffix("/")}/_checkpoint_$streamId"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (atomic) ing.ingestAtomic(table, batch) else ing.ingest(table, batch)
+        ing.ingest(table, batch)
         ()
       }
 }

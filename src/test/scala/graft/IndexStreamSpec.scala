@@ -84,12 +84,12 @@ class IndexStreamSpec extends SparkSpec {
     val ingS = new SearchIndexIngest(whS, "doc_id", "text")
     docs(batchA: _*).write.mode("append").parquet(watch)
     drain(CorpusStream.ingestIndexed(spark, watch, docSchema, ingS, "c",
-      checkpointDir = Some(tmpDir("isa-cp1")), atomic = true))
+      checkpointDir = Some(tmpDir("isa-cp1"))))
     // index and corpus in lockstep after every micro-batch (one txn each)
     assert(whS.load("c").count() == whS.load("c__doclens").count())
     docs(batchB: _*).write.mode("append").parquet(watch)
     drain(CorpusStream.ingestIndexed(spark, watch, docSchema, ingS, "c",
-      checkpointDir = Some(tmpDir("isa-cp2")), atomic = true)) // fresh cp: A replays
+      checkpointDir = Some(tmpDir("isa-cp2")))) // fresh cp: A replays
     assert(ingS.search("c", query, k = 10).collect().toSeq == want)
     for (t <- Seq("c", "c__postings", "c__doclens"))
       assert(whS.load(t).count() == whB.load(t).count(), s"$t diverged")

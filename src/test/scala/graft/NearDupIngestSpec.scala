@@ -96,38 +96,49 @@ class NearDupIngestSpec extends SparkSpec {
     assert(wh.load("corpus").count() == 2)
   }
 
+  // `ingest` is the one-transaction path; the case keeps the name it had
+  // when a second, multi-commit path existed beside it
   test("ingestAtomic: one-transaction ingest — same collapse/dedup, mixes with ingest(), replay-inert") {
     val wh = new Warehouse(spark, tmpDir("ndi-atomic"))
     val ing = ingester(wh)
-    val r = ing.ingestAtomic("corpus", docs(1L -> baseText, 2L -> nearText, 3L -> otherText))
+    val r = ing.ingest("corpus", docs(1L -> baseText, 2L -> nearText, 3L -> otherText))
     assert(r.appended == 2 && r.dupInBatch == 1 && r.dupVsCorpus == 0, r.toString)
     assert(wh.load("corpus").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
-    // cross-discipline: a multi-commit ingest dedups against the atomic one
+    // a later ingest dedups against the committed one
     val r2 = ing.ingest("corpus", docs(4L -> nearText))
     assert(r2.appended == 0 && r2.dupVsCorpus == 1, r2.toString)
-    // index and corpus in lockstep (no torn state to reconcile)
-    assert(wh.load("corpus__sigs").count() == 2 && wh.load("corpus").count() == 2)
-    // replaying the atomic batch appends nothing anywhere
-    val r3 = ing.ingestAtomic("corpus", docs(1L -> baseText, 3L -> otherText))
+    // index and corpus in lockstep: one sig row and 4 band rows per doc
+    val tables = Seq("corpus", "corpus__sigs", "corpus__bands")
+    val counts = tables.map(t => wh.load(t).count())
+    assert(counts == Seq(2L, 2L, 8L), counts.toString)
+    // replaying the first batch appends nothing anywhere
+    val r3 = ing.ingest("corpus", docs(1L -> baseText, 3L -> otherText))
     assert(r3.appended == 0, r3.toString)
-    assert(wh.load("corpus__sigs").count() == 2 &&
-      wh.load("corpus__bands").select("doc_id").distinct().count() == 2)
+    assert(tables.map(t => wh.load(t).count()) == counts, "replay must append nothing anywhere")
+    assert(wh.load("corpus__bands").select("doc_id").distinct().count() == 2)
   }
 
-  test("crash ordering: index appends commit BEFORE the corpus append") {
-    val root = tmpDir("ndi-order")
+  test("crash atomicity: a failed ingest lands no index row; replay lands once") {
+    val root = tmpDir("ndi-crash")
     val wh = new Warehouse(spark, root)
     val ing = ingester(wh)
-    // make the CORPUS append (and only it) fail deterministically: a plain
-    // file squats on the corpus table dir, so Files.createDirectories throws
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "corpus"), "x")
+    // make the CORPUS commit fail deterministically: a plain file squats on
+    // the corpus table dir, so Files.createDirectories throws
+    val squatter = java.nio.file.Paths.get(root, "corpus")
+    java.nio.file.Files.writeString(squatter, "x")
+    val tables = Seq("corpus__sigs", "corpus__bands")
+    def rows(t: String) = if (wh.exists(t)) wh.load(t).count() else 0L
     intercept[java.nio.file.FileAlreadyExistsException](
-      ing.ingest("corpus", docs(1L -> baseText)))
-    // the crash window left index rows without corpus rows — the bounded
-    // direction (orphan probes; see the class scaladoc), never the silent
-    // recall hole of an indexed-nowhere corpus doc
-    assert(wh.load("corpus__bands").count() == 4)
-    assert(wh.load("corpus__sigs").count() == 1)
+      ing.ingest("corpus", docs(1L -> baseText, 2L -> otherText)))
+    // one transaction: no index row without its corpus row
+    assert(tables.map(rows) == Seq(0L, 0L), "a failed ingest must land no index row")
+    java.nio.file.Files.delete(squatter)
+    val rep = ing.ingest("corpus", docs(1L -> baseText, 2L -> otherText))
+    assert(rep.appended == 2, rep.toString)
+    assert(("corpus" +: tables).map(rows) == Seq(2L, 2L, 8L))
+    // exactly once: a further replay appends nothing anywhere
+    assert(ing.ingest("corpus", docs(1L -> baseText, 2L -> otherText)).appended == 0)
+    assert(("corpus" +: tables).map(rows) == Seq(2L, 2L, 8L))
   }
 
   test("crash healing: orphan index rows reconcile on replay; index never accretes") {
@@ -321,10 +332,10 @@ class NearDupIngestSpec extends SparkSpec {
   }
 
   test("signature-format stamp: committed index is never stampless (create-then-stamp order)") {
-    // REGRESSION (round-17 advice): ingest/ingestAtomic stamped AFTER their
-    // commits, so a crash in between left a committed index with no stamp —
-    // which formatGuard then permanently refused as pre-stamp-era. The
-    // entry points now create-then-stamp BEFORE any signature rows commit.
+    // REGRESSION (round-17 advice): ingest stamped AFTER its commits, so a
+    // crash in between left a committed index with no stamp — which the
+    // format guard then permanently refused as pre-stamp-era. The entry
+    // points now create-then-stamp BEFORE any signature rows commit.
     val root = tmpDir("ndi-fmt-crash")
     val wh = new Warehouse(spark, root)
     val ing = ingester(wh)
@@ -345,7 +356,7 @@ class NearDupIngestSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("sig", org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.StringType)))))
     // no stamp, zero committed rows: every entry point accepts and heals
-    val rep = ing2.ingestAtomic("corpus", docs(1L -> baseText, 2L -> otherText))
+    val rep = ing2.ingest("corpus", docs(1L -> baseText, 2L -> otherText))
     assert(rep.appended == 2, rep.toString)
     assert(ing2.pairs("corpus").collect() != null)
     // and the healed index is stamped

@@ -81,26 +81,28 @@ class SearchIndexIngestSpec extends SparkSpec {
     assert(ing1.search("c", QUERY, k = 10).collect().toSeq == want)
   }
 
+  // `ingest` is the one-transaction path; the case keeps the name it had
+  // when a second, multi-commit path existed beside it
   test("ingestAtomic: one-transaction ingest serves identically and mixes with ingest()") {
     val wh = new Warehouse(spark, tmpDir("sii-atomic"))
     val ing = ingester(wh)
-    val rA = ing.ingestAtomic("c", batchA)
+    val rA = ing.ingest("c", batchA)
     assert(rA.docs == 3 && rA.postings > 0)
-    ing.ingest("c", batchB) // mixed disciplines on ONE index
+    ing.ingest("c", batchB) // two transactions on ONE index
     val want = scanBm25(batchA.unionByName(batchB), QUERY, 10)
     assert(ing.search("c", QUERY, k = 10).collect().toSeq == want)
-    // the feed ledger folded each doclens commit exactly once across both
-    // paths: the one-row rollup matches a direct recount
+    // the feed ledger folded each doclens commit exactly once: the one-row
+    // rollup matches a direct recount
     val stats = graft.sink.IncrementalRollup.read(wh, "c__cstats",
       graft.sink.IncrementalRollup.Spec(Nil, Seq(
         graft.sink.IncrementalRollup.CountStar("n_docs"),
         graft.sink.IncrementalRollup.SumOf(col("dl").cast(
           org.apache.spark.sql.types.DataTypes.createDecimalType(28, 0)), "total_dl")))).head()
-    assert(stats.getAs[Long]("n_docs") == 5L)
-    // replaying the atomic batch appends nothing anywhere
+    assert(stats.getAs[Long]("n_docs") == 5L, stats.toString)
+    // replaying the first batch appends nothing anywhere
     val counts = Seq("c", "c__postings", "c__doclens").map(t => wh.load(t).count())
-    val rep = ing.ingestAtomic("c", batchA)
-    assert(rep.docs == 0 && rep.postings == 0)
+    val rep = ing.ingest("c", batchA)
+    assert(rep.docs == 0 && rep.postings == 0, rep.toString)
     assert(Seq("c", "c__postings", "c__doclens").map(t => wh.load(t).count()) == counts)
   }
 
@@ -114,6 +116,30 @@ class SearchIndexIngestSpec extends SparkSpec {
     assert(Seq("c", "c__postings", "c__doclens").map(t => wh.load(t).count()) == counts)
     assert(ing.search("c", QUERY, k = 10).collect().toSeq ==
       scanBm25(batchA, QUERY, 10))
+  }
+
+  test("crash atomicity: a failed ingest lands no index row; replay lands once") {
+    val root = tmpDir("sii-crash-atomic")
+    val wh = new Warehouse(spark, root)
+    val ing = ingester(wh)
+    // make the CORPUS commit fail deterministically: a plain file squats on
+    // the corpus table dir, so Files.createDirectories throws
+    val squatter = java.nio.file.Paths.get(root, "c")
+    java.nio.file.Files.writeString(squatter, "x")
+    val tables = Seq("c__postings", "c__doclens")
+    def rows(t: String) = if (wh.exists(t)) wh.load(t).count() else 0L
+    intercept[java.nio.file.FileAlreadyExistsException](ing.ingest("c", batchA))
+    // one transaction: no posting or doc length without its corpus row
+    assert(tables.map(rows) == Seq(0L, 0L), "a failed ingest must land no index row")
+    java.nio.file.Files.delete(squatter)
+    val rep = ing.ingest("c", batchA)
+    assert(rep.docs == 3 && rep.postings > 0, rep.toString)
+    val counts = ("c" +: tables).map(rows)
+    assert(counts(0) == 3L && counts(2) == 3L, counts.toString)
+    // exactly once: a further replay appends nothing anywhere
+    assert(ing.ingest("c", batchA).docs == 0)
+    assert(("c" +: tables).map(rows) == counts)
+    assert(ing.search("c", QUERY, k = 10).collect().toSeq == scanBm25(batchA, QUERY, 10))
   }
 
   test("crash healing: postings-only prefix converges on replay; orphans shieldable") {
@@ -220,20 +246,36 @@ class SearchIndexIngestSpec extends SparkSpec {
     assert(rep2.deletedDocs == 0 && rep2.indexedDocs == 0, rep2.toString)
   }
 
+  test("confirmed search hides a corpus delete the follower has not consumed") {
+    val wh = new Warehouse(spark, tmpDir("sii-lag"))
+    val ing = ingester(wh)
+    ing.ingest("c", batchA.unionByName(batchB))
+    wh.deleteWhere("c", col("doc_id") === 4L)
+    def hits(confirmed: Boolean) = ing.search("c", QUERY, k = 10, confirmed = confirmed)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    // before followChanges the index still scores doc 4: only the confirmed
+    // search shields it
+    assert(hits(confirmed = false).contains(4L), "premise: the lagging index scores doc 4")
+    assert(!hits(confirmed = true).contains(4L), "confirmed search must hide the deleted doc")
+    ing.followChanges("c")
+    assert(!hits(confirmed = false).contains(4L))
+  }
+
   test("a foreign commit landing DURING an ingest is never fast-forwarded over") {
     val wh = new Warehouse(spark, tmpDir("sii-midrace"))
     val ing = ingester(wh)
-    ing.ingest("c", batchA) // v0; ledger -> 0
+    ing.ingest("c", batchA) // v0 create + v1 rows; ledger -> 1
+    assert(wh.lastCommittedBatchId("c__postings", "idxfollow:c") == 1L)
     // Simulate the mid-ingest interleave the sequential API can't produce:
-    // a racing ingest captured preV = 0, then a foreign deleteWhere landed
-    // (v1), then the ingest's own corpus append (v2). Its post-append
-    // ledger call sees head = 2 != preV + 1 and must refuse to advance —
-    // recording the re-read head would skip v1's retraction forever.
-    wh.deleteWhere("c", col("doc_id") === 1L) // v1 (foreign)
+    // a racing ingest captured preV = 1, then a foreign deleteWhere landed
+    // (v2), then the ingest's own corpus append (v3). Its post-append
+    // ledger call sees head = 3 != preV + 1 and must refuse to advance —
+    // recording the re-read head would skip v2's retraction forever.
+    wh.deleteWhere("c", col("doc_id") === 1L) // v2 (foreign)
     wh.appendDeduped("c", batchB, fpCol = "doc_id", pk = "doc_id",
-      statsCols = Seq("doc_id")) // v2 (the racing ingest's append)
-    ing.advanceFollowerLedger("c", 0L) // the racing ingest's post-append call
-    assert(wh.lastCommittedBatchId("c__postings", "idxfollow:c") == 0L,
+      statsCols = Seq("doc_id")) // v3 (the racing ingest's append)
+    ing.advanceFollowerLedger("c", 1L) // the racing ingest's post-append call
+    assert(wh.lastCommittedBatchId("c__postings", "idxfollow:c") == 1L,
       "ledger fast-forwarded past a foreign commit that landed during the ingest")
     // the next follow drains the whole gap: the delete retracts, the
     // unindexed append's rows index
@@ -278,7 +320,7 @@ class SearchIndexIngestSpec extends SparkSpec {
     assert(ing.search("corpus", QUERY, 5).collect().nonEmpty)
     // a FOREIGN generation refuses with the mixing message
     wh.recordBatchId("corpus__postings", "idxformat", 999L)
-    val e4 = intercept[IllegalStateException](ing.ingestAtomic("corpus", docs(9L -> "x")))
+    val e4 = intercept[IllegalStateException](ing.ingest("corpus", docs(9L -> "x")))
     assert(e4.getMessage.contains("generation 999"), e4.getMessage)
     // crash window between create and stamp: an EMPTY stampless postings
     // table reads as fresh, not refused

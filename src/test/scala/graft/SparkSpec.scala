@@ -5,25 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session, lazy). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Match Verify/Bench: a col(...) that names a sibling alias in the same
-    // select fails analysis instead of silently binding to it (q75 class).
-    .config("spark.sql.lateralColumnAlias.enableImplicitResolution", "false")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    // Match Verify/Bench's session shape: the fork-free local FS + the
-    // FileSystem-based checkpoint manager (graft.hadoop scaladoc) — the
-    // whole suite then exercises the patched FS, which is the behavioral-
-    // equivalence evidence for it (plus it cuts suite wall time).
-    .config("spark.hadoop.fs.file.impl", classOf[graft.hadoop.FastLocalFileSystem].getName)
-    .config("spark.sql.streaming.checkpointFileManagerClass",
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // Verify/Bench's session shape (GraftSession): the whole suite exercises
+  // the patched FS, which is the behavioral-equivalence evidence for it
+  lazy val spark: SparkSession = GraftSession.builder(4).appName("graft-test").getOrCreate()
   spark.sparkContext.setLogLevel("WARN")
 }
 

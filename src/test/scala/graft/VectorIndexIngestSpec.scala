@@ -107,6 +107,8 @@ class VectorIndexIngestSpec extends SparkSpec {
       .select("probe_id", "rank", "vec_id", "adc_d2")) == adc)
   }
 
+  // `ingest` is the one-transaction path; the case keeps the name it had
+  // when a second, multi-commit path existed beside it
   test("ingestAtomic: one-transaction ingest serves identically, mixes with ingest(), replay-inert") {
     val all = vecs(0 until 24)
     val model = ProductQuantization.initCodebook(emb(all), DIM, M, K)
@@ -115,14 +117,14 @@ class VectorIndexIngestSpec extends SparkSpec {
     val wh = new Warehouse(spark, tmpDir("vii-atomic"))
     val ing = ingester(wh)
     ing.freeze("v", cellCents, model)
-    val rep = ing.ingestAtomic("v", vecs(0 until 12))
+    val rep = ing.ingest("v", vecs(0 until 12))
     assert(rep.appended == 12 && rep.codes == 12, rep.toString)
-    ing.ingest("v", vecs(12 until 24)) // mixed disciplines on ONE index
+    ing.ingest("v", vecs(12 until 24)) // two transactions on ONE index
     assert(wh.load("v__codes").count() == 24 && wh.load("v").count() == 24)
     assert(sorted(ing.search("v", probesOf(all, 2), nprobe = 2, topK = 5)
       .withColumnRenamed("id", "vec_id")) == want)
-    // replaying the atomic batch appends nothing anywhere
-    val rep2 = ing.ingestAtomic("v", vecs(0 until 12))
+    // replaying the first batch appends nothing anywhere
+    val rep2 = ing.ingest("v", vecs(0 until 12))
     assert(rep2.appended == 0 && rep2.codes == 0, rep2.toString)
     assert(wh.load("v__codes").count() == 24 && wh.load("v").count() == 24)
   }
@@ -214,6 +216,46 @@ class VectorIndexIngestSpec extends SparkSpec {
     val rep = ing.ingest("v", vecs(0 until 12))
     assert(rep.appended == 0 && rep.codes == 0, rep.toString)
     assert(Seq("v", "v__codes").map(t => wh.load(t).count()) == counts)
+  }
+
+  test("crash atomicity: a failed ingest lands no index row; replay lands once") {
+    val root = tmpDir("vii-crash-atomic")
+    val wh = new Warehouse(spark, root)
+    val ing = ingester(wh)
+    ing.freeze("v", cellCents,
+      ProductQuantization.initCodebook(emb(vecs(0 until 12)), DIM, M, K))
+    // make the CORPUS commit fail deterministically: a plain file squats on
+    // the corpus table dir, so Files.createDirectories throws
+    val squatter = java.nio.file.Paths.get(root, "v")
+    java.nio.file.Files.writeString(squatter, "x")
+    def rows(t: String) = if (wh.exists(t)) wh.load(t).count() else 0L
+    intercept[java.nio.file.FileAlreadyExistsException](ing.ingest("v", vecs(0 until 12)))
+    // one transaction: no code row without its corpus row
+    assert(rows("v__codes") == 0L, "a failed ingest must land no index row")
+    java.nio.file.Files.delete(squatter)
+    val rep = ing.ingest("v", vecs(0 until 12))
+    assert(rep.appended == 12 && rep.codes == 12, rep.toString)
+    // exactly once: a further replay appends nothing anywhere
+    assert(ing.ingest("v", vecs(0 until 12)).appended == 0)
+    assert(Seq("v", "v__codes").map(rows) == Seq(12L, 12L))
+  }
+
+  test("confirmed search hides a corpus delete the follower has not consumed") {
+    val wh = new Warehouse(spark, tmpDir("vii-lag"))
+    val ing = ingester(wh)
+    ing.freeze("v", cellCents,
+      ProductQuantization.initCodebook(emb(vecs(0 until 12)), DIM, M, K))
+    ing.ingest("v", vecs(0 until 12))
+    wh.deleteWhere("v", col("id") === 3L)
+    def hits(confirmed: Boolean) =
+      ing.search("v", probesOf(vecs(0 until 12), 1), nprobe = 3, topK = 12,
+        confirmed = confirmed).select("id").collect().map(_.getLong(0)).toSet
+    // before followChanges the index still ranks vector 3: only the
+    // confirmed search shields it
+    assert(hits(confirmed = false).contains(3L), "premise: the lagging index ranks vector 3")
+    assert(!hits(confirmed = true).contains(3L), "confirmed search must hide the deleted vector")
+    ing.followChanges("v")
+    assert(!hits(confirmed = false).contains(3L))
   }
 
   test("crash healing: codes-only prefix converges on replay; orphans shieldable") {
