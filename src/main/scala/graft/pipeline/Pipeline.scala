@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{ResourceDef, Resources, WriteMode}
-import graft.sink.Warehouse
+import graft.sink.{FanOut, Warehouse}
 import graft.sources.SObjectSource
 import graft.state.WatermarkStore
 
@@ -86,6 +86,14 @@ object Pipeline {
     * watermarks. Incremental resources read only rows with
     * rk > stored-watermark (strict `>`, I1) and afterwards persist the batch
     * max (A3) — a driver-side 2-value aggregate, not a collect of data.
+    *
+    * Resources load concurrently, one load job per table like the
+    * reference's dlt load workers: each is a chain of small driver-bound
+    * Spark jobs, so overlapping them fills each other's driver gaps. The
+    * summary's reports are in declaration order. Every resource runs to
+    * the end (with its retries) before the run returns or throws; if any
+    * failed, the first failure in declaration order is rethrown, and the
+    * siblings of a failed resource have still landed, watermarks included.
     */
   def run(spark: SparkSession, cfg0: Config): RunSummary = {
     val cfg = validate(cfg0).fold(err => throw new IllegalArgumentException(err), identity)
@@ -93,10 +101,10 @@ object Pipeline {
     val state = new WatermarkStore(cfg.stateDir)
     if (cfg.forceReplace) state.reset()
 
-    val reports = cfg.resources.map { res0 =>
+    val reports = FanOut(cfg.resources.map { res0 =>
       val res = if (cfg.forceReplace) res0.copy(mode = WriteMode.Replace) else res0
-      withRetry(cfg.retries, cfg.retryBackoffMs, res.name)(loadOne(spark, cfg, wh, state, res))
-    }
+      () => withRetry(cfg.retries, cfg.retryBackoffMs, res.name)(loadOne(spark, cfg, wh, state, res))
+    })
     RunSummary(reports)
   }
 
@@ -108,6 +116,12 @@ object Pipeline {
     * batch. (An append resource double-applies only if the failure landed
     * in the narrow window between snapshot commit and watermark write — the
     * same at-least-once edge the reference's Airflow retry has.)
+    *
+    * The contract is per resource: [[run]] retries each resource on its own
+    * thread, concurrently with the others, so a resource that exhausts its
+    * retries never advances its own watermark while its siblings still
+    * commit and advance theirs; the run then rethrows the first failure in
+    * declaration order.
     */
   private def withRetry[A](retries: Int, backoffMs: Long, what: String)(body: => A): A = {
     var attempt = 0

@@ -819,13 +819,14 @@ final class Warehouse(private[sink] val spark: SparkSession,
     // parquet form): Spark's default INT96 is deprecated and has NO defined
     // stat sort order, which would force every timestamp stat column back
     // onto the scan fallback — and timestamps are the watermark columns,
-    // the commonest stats of all. Scoped flip + restore: the conf is
-    // session-global and OTHER writes in the session (e.g. Verify's result
-    // dumps, user exports) must keep their own flavor. A concurrent writer
-    // racing the restore at worst lands INT96 files, whose timestamp stats
-    // simply fall back to the scan — correctness never rests on this.
+    // the commonest stats of all. The conf is session-global and OTHER
+    // writes in the session (e.g. Verify's result dumps, user exports) must
+    // keep their own flavor, so it is set inside a reference-counted scope
+    // ([[Warehouse.withWriteConfs]]): warehouse writers overlapping on one
+    // session (a fanned-out Pipeline.run, merge's two file sets) all see
+    // TIMESTAMP_MICROS, and the last one out restores the value the first
+    // one in found.
     val TsConf = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.get(TsConf)
     // the written frame must carry the table schema's field-id metadata so
     // the files record the ids scans resolve by (write conf defaults true);
     // callers' transforms may have dropped it, so re-apply in one projection
@@ -842,27 +843,14 @@ final class Warehouse(private[sink] val spark: SparkSession,
     // per write batch beside the binary fallback — the parquet variant
     // shredding spec Spark's writer implements): that is what makes the
     // stored shape queryable at column-IO cost instead of re-parsing a
-    // JSON string per row per query. Same scoped flip + restore
-    // discipline as TsConf: session-global confs, other writes in the
-    // session keep their own flavor, and a racing writer at worst lands
-    // UNSHREDDED variant files — which read back correctly (the binary
-    // fallback IS the value), just without the shredded-leaf fast path.
+    // JSON string per row per query. Same scope as TsConf.
     val hasVariant = schema.fields.exists(_.dataType.isInstanceOf[VariantType])
-    val ShredConf = "spark.sql.variant.writeShredding.enabled"
-    val InferConf = "spark.sql.variant.inferShreddingSchema"
-    val prevShred = if (hasVariant) Some(spark.conf.get(ShredConf, "false")) else None
-    val prevInfer = if (hasVariant) Some(spark.conf.get(InferConf, "false")) else None
-    try {
-      spark.conf.set(TsConf, "TIMESTAMP_MICROS")
-      if (hasVariant) {
-        spark.conf.set(ShredConf, "true")
-        spark.conf.set(InferConf, "true")
-      }
+    val variantConfs =
+      if (!hasVariant) Nil
+      else Seq("spark.sql.variant.writeShredding.enabled" -> "true",
+        "spark.sql.variant.inferShreddingSchema" -> "true")
+    Warehouse.withWriteConfs(spark, (TsConf -> "TIMESTAMP_MICROS") +: variantConfs) {
       (if (pcols.isEmpty) w else w.partitionBy(pcols: _*)).parquet(dir.toString)
-    } finally {
-      spark.conf.set(TsConf, prevTs)
-      prevShred.foreach(spark.conf.set(ShredConf, _))
-      prevInfer.foreach(spark.conf.set(InferConf, _))
     }
     val scs = statCols(schema, cols)
     val td = tableDir(name).toAbsolutePath.normalize
@@ -895,18 +883,10 @@ final class Warehouse(private[sink] val spark: SparkSession,
 
     // --- phase 1: footers (parallel, metadata-only) + hive-dir values
     val conf = spark.sparkContext.hadoopConfiguration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, files.size))
     val footer: Seq[(Path, Option[(Long, Map[String, FooterStats.Outcome])])] =
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(files.map(f =>
-            scala.concurrent.Future(f ->
-              FooterStats.read(f, conf, physTypes, vgetable, variantSrcs)))),
-          scala.concurrent.duration.Duration(600, "s"))
-      } finally pool.shutdown()
+      FanOut(files.map(f => () =>
+        f -> FooterStats.read(f, conf, physTypes, vgetable, variantSrcs)),
+        timeout = scala.concurrent.duration.Duration(600, "s"))
 
     val DefaultPart =
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
@@ -1621,6 +1601,9 @@ final class Warehouse(private[sink] val spark: SparkSession,
     * Plain (non-null-safe) equality keeps the reference's null-PK contract:
     * null-keyed rows are appended but never match/delete (SURVEY §7.6.4) —
     * which also makes all-null ("z"-stat) files provably disjoint.
+    *
+    * The victims' rewrite and the batch are written concurrently (two
+    * independent file sets); both finish before the one commit.
     */
   def merge(name: String, df: DataFrame, pks: Seq[String],
             clusterBy: Seq[String] = Nil): Long = {
@@ -1671,8 +1654,9 @@ final class Warehouse(private[sink] val spark: SparkSession,
     val next = currentVersion(name) + 1
     val spec = partitionSpec(name)
     val statsFor = pks ++ spec ++ inheritedStatsCols(name, Some(man))
-    val rewritten =
-      if (victims.isEmpty) Nil
+    // two independent file sets, written side by side before the commit
+    val rewriteVictims = () =>
+      if (victims.isEmpty) Seq.empty[DataFile]
       else {
         // lineage carry: a merge's CARRY-OVER rows (victim rows whose key is
         // not in the batch) are unchanged content — they keep their row ids
@@ -1698,8 +1682,9 @@ final class Warehouse(private[sink] val spark: SparkSession,
         writeData(name, cluster(kept, clusterBy, spec), schema, s"d${next}r", statsFor,
           seq = next, spec = spec, sortedBy = clusterBy, lineageMat = carry)
       }
-    val batchEntries = writeData(name, cluster(in, clusterBy, spec), schema, s"d${next}b",
-      statsFor, seq = next, spec = spec, sortedBy = clusterBy)
+    val writeBatchFiles = () => writeData(name, cluster(in, clusterBy, spec), schema,
+      s"d${next}b", statsFor, seq = next, spec = spec, sortedBy = clusterBy)
+    val Seq(rewritten, batchEntries) = FanOut(Seq(rewriteVictims, writeBatchFiles))
     // Rebase (Iceberg merge validation): victims must survive unchanged
     // (their keyed rows were rewritten into `rewritten`), no concurrent
     // MOR delete may have landed, and any concurrently-ADDED file must be
@@ -2560,6 +2545,45 @@ final class Warehouse(private[sink] val spark: SparkSession,
 }
 
 object Warehouse {
+  /** Open [[withWriteConfs]] scopes per session: conf key -> (writers
+    * inside, the value the first writer in found).
+    */
+  private val writeScopes =
+    new java.util.WeakHashMap[SparkSession,
+      scala.collection.mutable.Map[String, (Int, Option[String])]]()
+
+  /** Run `body` with the session confs `confs` set, for writers that may
+    * overlap on one session. Per conf key, the first writer in saves the
+    * caller's value and sets the scope's value; the last writer out
+    * restores the saved value (unsetting a conf that had none). Every
+    * writer asks for the same value of a key, so an overlapping writer
+    * never sees it flip under its write.
+    */
+  private[sink] def withWriteConfs[A](spark: SparkSession, confs: Seq[(String, String)])(
+      body: => A): A = {
+    writeScopes.synchronized {
+      val open = writeScopes.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
+      confs.foreach { case (k, v) =>
+        val (n, saved) = open.getOrElse(k, (0, spark.conf.getOption(k)))
+        if (n == 0) spark.conf.set(k, v)
+        open(k) = (n + 1, saved)
+      }
+    }
+    try body
+    finally writeScopes.synchronized {
+      val open = writeScopes.get(spark)
+      confs.foreach { case (k, _) =>
+        open(k) match {
+          case (1, saved) =>
+            open.remove(k)
+            saved.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+          case (n, saved) => open(k) = (n - 1, saved)
+        }
+      }
+      if (open.isEmpty) writeScopes.remove(spark)
+    }
+  }
+
   /** Re-entrancy guard for [[Warehouse.recoverPendingTxns]]: roll-forward
     * itself goes through warehouse access paths that call `exists`.
     */

@@ -31,13 +31,17 @@ final class WatermarkStore(dir: String) {
     * `date_format`), and since `'.' < 'Z'` a raw lexicographic compare would
     * let a seeded `...T00:00:00Z` block any same-second µs candidate forever.
     */
-  def advance(resource: String, candidate: String): Unit = {
+  def advance(resource: String, candidate: String): Unit = synchronized {
     val cur = get(resource)
     if (cur.forall(c => WatermarkStore.canonical(c) < WatermarkStore.canonical(candidate)))
       put(resource, candidate)
   }
 
-  def put(resource: String, value: String): Unit = {
+  /** Read-modify-write of the one shared file through one fixed tmp file:
+    * serialized on the store, so resources loading concurrently
+    * (`Pipeline.run`) never lose each other's updates.
+    */
+  def put(resource: String, value: String): Unit = synchronized {
     val m = all() + (resource -> WatermarkStore.canonical(value))
     Files.createDirectories(file.getParent)
     val tmp = file.resolveSibling("watermarks.tmp")
@@ -46,7 +50,7 @@ final class WatermarkStore(dir: String) {
   }
 
   /** I5 state reset (`force_replace` deletes the dlt state dir). */
-  def reset(): Unit = Files.deleteIfExists(file)
+  def reset(): Unit = synchronized { Files.deleteIfExists(file) }
 
   private implicit class JListOps[A](l: java.util.List[A]) {
     def asScala: Seq[A] = {

@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.pipeline.Pipeline
 import graft.model.{ResourceDef, Resources, WriteMode}
+import graft.sources.SObjectSource
 import graft.state.WatermarkStore
 import graft.sink.Warehouse
 
@@ -13,6 +17,10 @@ class PipelineSpec extends SparkSpec {
 
   private def cfg(wh: String, st: String, rs: Seq[ResourceDef] = Resources.testdata) =
     Pipeline.Config(sf, wh, st, resources = rs)
+
+  private type Extract = (SparkSession, ResourceDef, Option[String], Option[Int]) => DataFrame
+
+  private def sourceRows(table: String): Long = spark.read.parquet(s"$sf/$table.parquet").count()
 
   test("validate fails fast on bad config") {
     assert(Pipeline.validate(cfg("", "s")).isLeft)
@@ -135,5 +143,85 @@ class PipelineSpec extends SparkSpec {
     st.put("k", "000123")
     st.advance("k", "000124")
     assert(st.get("k").contains("000124"))
+  }
+
+  test("watermark store: concurrent advances of distinct resources lose no update") {
+    val dir = tmpDir("wm-par")
+    val store = new WatermarkStore(dir)
+    val go = new CountDownLatch(1)
+    val errors = new ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until 8).map { t =>
+      new Thread(() =>
+        try {
+          go.await()
+          (1 to 50).foreach(i => store.advance(s"r$t", f"2024-01-01T00:00:$i%02d"))
+        } catch { case e: Throwable => errors.add(e) })
+    }
+    threads.foreach(_.start())
+    go.countDown()
+    threads.foreach(_.join())
+    assert(errors.isEmpty, s"advance failed: ${errors.peek()}")
+    val lines = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(dir, "watermarks.properties"))
+    assert(lines.size == 8 && lines.stream().allMatch(_.matches("r\\d=[-0-9T:.]+")),
+      s"torn watermark file: $lines")
+    val reread = new WatermarkStore(dir)
+    (0 until 8).foreach(t =>
+      assert(reread.get(s"r$t").contains("2024-01-01T00:00:50.000000"), s"r$t lost its max"))
+  }
+
+  test("resources load concurrently: every resource's extract is in flight at once") {
+    val (wh, st) = (tmpDir("pl7-wh"), tmpDir("pl7-st"))
+    val rs = Seq("supplier", "orders", "lineitem", "events").map(Resources.byName)
+    val allIn = new CountDownLatch(rs.size)
+    val meet: Extract = { (s, r, wm, lim) =>
+      allIn.countDown()
+      if (!allIn.await(60, TimeUnit.SECONDS))
+        throw new RuntimeException(s"${r.name}: sibling extracts never started")
+      SObjectSource.extract(s, sf, r, watermark = wm, limit = lim)
+    }
+    val summary = Pipeline.run(spark, cfg(wh, st, rs).copy(extract = Some(meet), retries = 0))
+    assert(summary.reports.map(_.table) == rs.map(_.name), "reports in declaration order")
+    val counts = Pipeline.verify(spark, wh)
+    rs.foreach { r =>
+      assert(counts(r.name).rows == sourceRows(r.name), r.name)
+      assert(summary.reports.find(_.table == r.name).get.rows == sourceRows(r.name), r.name)
+    }
+  }
+
+  test("a failed resource keeps its watermark; its siblings still land; a re-run loads it once") {
+    val (wh, st) = (tmpDir("pl8-wh"), tmpDir("pl8-st"))
+    val rs = Seq("orders", "lineitem", "events").map(Resources.byName)
+    val down = new AtomicBoolean(true)
+    val lineitemDown: Extract = { (s, r, wm, lim) =>
+      if (r.name == "lineitem" && down.get()) throw new RuntimeException("lineitem API down")
+      SObjectSource.extract(s, sf, r, watermark = wm, limit = lim)
+    }
+    val c = cfg(wh, st, rs).copy(extract = Some(lineitemDown), retryBackoffMs = 0L)
+    val err = intercept[RuntimeException](Pipeline.run(spark, c))
+    assert(err.getMessage == "lineitem API down")
+
+    val store = new WatermarkStore(st)
+    val w = new Warehouse(spark, wh)
+    val siblings = Seq("orders", "events")
+    assert(!w.exists("lineitem") && store.get("lineitem").isEmpty,
+      "the failed resource landed or advanced its watermark")
+    siblings.foreach { t =>
+      assert(w.load(t).count() == sourceRows(t), s"$t did not land")
+      assert(store.get(t).nonEmpty, s"$t watermark did not advance")
+    }
+    val wmBefore = siblings.map(t => t -> store.get(t)).toMap
+
+    down.set(false)
+    val rerun = Pipeline.run(spark, c)
+    assert(rerun.reports.map(_.table) == rs.map(_.name))
+    assert(rerun.reports.find(_.table == "lineitem").get.rows == sourceRows("lineitem"))
+    assert(w.load("lineitem").count() == sourceRows("lineitem"), "lineitem not loaded exactly once")
+    assert(store.get("lineitem").nonEmpty)
+    siblings.foreach { t =>
+      assert(rerun.reports.find(_.table == t).get.rows == 0, s"$t re-extracted rows")
+      assert(w.load(t).count() == sourceRows(t), s"$t changed on the re-run")
+      assert(store.get(t) == wmBefore(t), s"$t watermark moved on the re-run")
+    }
   }
 }
