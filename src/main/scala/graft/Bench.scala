@@ -529,7 +529,7 @@ object Bench {
         rqMeta +
         s""""queries":$qs,"spread":$spread,"conditions":$conditions,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full + "\n")
+    try graft.sink.MetaIO.local.atomicWrite(java.nio.file.Paths.get(outPath), full + "\n")
     catch { case e: Throwable => System.err.println(s"bench: could not write $outPath: $e") }
     println(compact)
   }

@@ -1,5 +1,7 @@
 package graft
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
+
+import graft.sink.MetaIO
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,7 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.builder(GraftSession.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    MetaIO.local.mkdirs(Paths.get(outDir))
     // Dev aid: SPARK_GRAFT_ONLY=q25,q40 restricts the dump (driver never sets it).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries.foreach { case (name, fn) =>
@@ -32,7 +34,7 @@ object Verify {
     } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    MetaIO.local.atomicWrite(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
 }

@@ -289,7 +289,8 @@ private[catalog] final class ChangesStager(table: String, root: String,
     cdcSchema: StructType, options: CaseInsensitiveStringMap,
     byCommit: Boolean = false, lineage: Boolean = false,
     scope: Option[org.apache.spark.sql.catalyst.expressions.Expression] = None) {
-  import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+  import java.nio.file.{Files, Path, Paths}
+  import graft.sink.MetaIO
 
   private def spark = SparkSession.active
   private def wh = new Warehouse(spark, root)
@@ -320,7 +321,7 @@ private[catalog] final class ChangesStager(table: String, root: String,
   }
   private[catalog] def cdcDir: Path = {
     val d = Paths.get(root, baseName, "_cdc")
-    Files.createDirectories(d)
+    MetaIO.local.mkdirs(d)
     d
   }
 
@@ -440,13 +441,13 @@ private[catalog] final class ChangesStager(table: String, root: String,
             .write.mode("append").parquet(tmp.toString)
         }
       }
-      try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+      try MetaIO.local.move(tmp, dir)
       catch {
         case _: java.nio.file.FileAlreadyExistsException |
              _: java.nio.file.DirectoryNotEmptyException =>
           // a racing planner of the SAME window published first — identical
           // bag by snapshot immutability; drop ours
-          deleteRecursively(tmp)
+          MetaIO.local.deleteTree(tmp)
       }
     }
     val pfs = listParquet(dir).map { p =>
@@ -538,14 +539,8 @@ private[catalog] final class ChangesStager(table: String, root: String,
     }: _*)
   }
 
-  private def listParquet(dir: Path): Seq[Path] = {
-    val s = Files.list(dir)
-    try {
-      val b = Seq.newBuilder[Path]
-      s.forEach(p => if (p.getFileName.toString.endsWith(".parquet")) b += p)
-      b.result()
-    } finally s.close()
-  }
+  private def listParquet(dir: Path): Seq[Path] =
+    MetaIO.local.list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
 
   /** Plain parquet reader factory over the staged files (they physically
     * carry `_change_type`): full cdc schema, vectorized, zero pushdown —
@@ -565,13 +560,6 @@ private[catalog] final class ChangesStager(table: String, root: String,
     */
   def sweep(retentionMs: Long): Unit =
     wh.expireCdcStages(table, retentionMs): Unit
-
-  private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-  }
 }
 
 /** Micro-batch CDC stream: offsets ARE snapshot versions (the ledger is the

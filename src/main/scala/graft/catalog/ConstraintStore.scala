@@ -1,8 +1,10 @@
 package graft.catalog
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Base64
+
+import graft.sink.MetaIO
 
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.constraints.{Check, Constraint, ForeignKey, PrimaryKey, Unique}
@@ -104,13 +106,9 @@ private[graft] final class ConstraintStore(root: String) {
   }
 
   def put(table: String, constraints: Seq[Constraint]): Unit = {
-    val dir = Paths.get(root, table)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve("_constraints.tmp")
-    Files.writeString(tmp,
+    MetaIO.local.mkdirs(Paths.get(root, table))
+    MetaIO.local.atomicWrite(pathOf(table),
       (Header +: constraints.map(render)).mkString("", "\n", "\n"))
-    Files.move(tmp, pathOf(table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 
   def add(table: String, c: Constraint): Unit = {

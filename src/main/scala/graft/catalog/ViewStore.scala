@@ -1,7 +1,9 @@
 package graft.catalog
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
+
+import graft.sink.MetaIO
 import java.util.Base64
 
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -80,15 +82,11 @@ private[catalog] final class ViewStore(root: String) {
       fields.collect { case Array("prop", k, v) => unb64(k) -> unb64(v) }.toMap)
   }
 
+  private def io = MetaIO.local
+
   def list(): Seq[String] =
-    if (!Files.isDirectory(dir)) Nil
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(dir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".view")).map(_.stripSuffix(".view")).toSeq.sorted
-      finally s.close()
-    }
+    io.list(dir).map(_.getFileName.toString)
+      .filter(_.endsWith(".view")).map(_.stripSuffix(".view")).sorted
 
   def exists(name: String): Boolean = Files.exists(pathOf(name))
 
@@ -98,29 +96,22 @@ private[catalog] final class ViewStore(root: String) {
   }
 
   /** Atomic CREATE_NEW: returns false when the view already exists (a
-    * racing creator won). `createLink`, not ATOMIC_MOVE — POSIX rename
+    * racing creator won). [[MetaIO.casLink]], not a rename — POSIX rename
     * silently REPLACES an existing target, but a hard link is a true
     * create-or-fail (the warehouse commit CAS uses the same primitive).
     */
   def create(name: String, r: ViewRecord): Boolean = {
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".$name.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    Files.writeString(tmp, render(r))
-    try { Files.createLink(pathOf(name), tmp); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    finally Files.deleteIfExists(tmp)
+    io.mkdirs(dir)
+    io.casLink(pathOf(name), render(r))
   }
 
   /** Atomic overwrite (REPLACE VIEW / ALTER VIEW SET). */
   def put(name: String, r: ViewRecord): Unit = {
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".$name.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    Files.writeString(tmp, render(r))
-    Files.move(tmp, pathOf(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    io.mkdirs(dir)
+    io.atomicWrite(pathOf(name), render(r))
   }
 
-  def drop(name: String): Boolean = Files.deleteIfExists(pathOf(name))
+  def drop(name: String): Boolean = io.delete(pathOf(name))
 
   /** CREATE_NEW-at-target rename: refuses onto an existing view (link-then
     * -unlink — same POSIX-rename-overwrites caveat as [[create]]; a crash
@@ -129,11 +120,8 @@ private[catalog] final class ViewStore(root: String) {
     */
   def rename(from: String, to: String): Unit = {
     require(exists(from), s"no such view: $from")
-    try Files.createLink(pathOf(to), pathOf(from))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(s"view already exists: $to")
-    }
-    Files.deleteIfExists(pathOf(from))
+    if (!io.link(pathOf(to), pathOf(from)))
+      throw new IllegalStateException(s"view already exists: $to")
+    io.delete(pathOf(from))
   }
 }

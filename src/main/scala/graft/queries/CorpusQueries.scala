@@ -323,9 +323,7 @@ object CorpusQueries {
           .orderBy(col("bm25").desc, col("doc_id"))
           .localCheckpoint()
       } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(whDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sink.MetaIO.local.deleteTree(whDir)
       }
     },
 

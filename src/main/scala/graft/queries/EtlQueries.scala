@@ -240,9 +240,7 @@ object EtlQueries {
           .orderBy("change_type", "c_mktsegment")
           .localCheckpoint()
       } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(whDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sink.MetaIO.local.deleteTree(whDir)
       }
     },
 
@@ -292,9 +290,7 @@ object EtlQueries {
           .orderBy("c_mktsegment")
           .localCheckpoint()
       } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(whDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sink.MetaIO.local.deleteTree(whDir)
       }
     },
 
@@ -351,9 +347,7 @@ object EtlQueries {
           .orderBy("c_mktsegment")
           .localCheckpoint()
       } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(whDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sink.MetaIO.local.deleteTree(whDir)
       }
     },
 
@@ -418,9 +412,7 @@ object EtlQueries {
           .orderBy("c_mktsegment")
           .localCheckpoint()
       } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(whDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sink.MetaIO.local.deleteTree(whDir)
       }
     },
 
@@ -873,9 +865,7 @@ object EtlQueries {
           .orderBy("c_mktsegment")
           .localCheckpoint()
       } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(whDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sink.MetaIO.local.deleteTree(whDir)
       }
     },
 
@@ -917,9 +907,7 @@ object EtlQueries {
           .orderBy("bucket")
           .localCheckpoint()
       } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(whDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sink.MetaIO.local.deleteTree(whDir)
       }
     },
 
@@ -954,9 +942,7 @@ object EtlQueries {
           .orderBy(col("tier").asc) // Spark asc = NULLS FIRST; oracle matches
           .localCheckpoint()
       } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(whDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sink.MetaIO.local.deleteTree(whDir)
       }
     },
 

@@ -593,9 +593,7 @@ object EventQueries {
           .orderBy("event_type")
           .localCheckpoint()
       } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(whDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sink.MetaIO.local.deleteTree(whDir)
       }
     },
 

@@ -412,9 +412,7 @@ object SimilarityQueries {
           .orderBy("probe_id", "rank")
           .localCheckpoint()
       } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(whDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sink.MetaIO.local.deleteTree(whDir)
       }
     },
 
@@ -467,9 +465,7 @@ object SimilarityQueries {
           .orderBy("probe_id", "rank")
           .localCheckpoint()
       } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(whDir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.sink.MetaIO.local.deleteTree(whDir)
       }
     },
 

@@ -78,9 +78,5 @@ object Tables {
     * of the stable-path discipline every temp-catalog query uses.
     */
   private[queries] def wipe(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.filter(_ != p).foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    graft.sink.MetaIO.local.list(p).foreach(graft.sink.MetaIO.local.deleteTree)
 }

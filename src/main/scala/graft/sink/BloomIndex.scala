@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.util.sketch.BloomFilter
@@ -139,10 +139,11 @@ object BloomIndex {
     * pruning for that column until the next (idempotent, O(unindexed=0))
     * re-run of buildBloomIndex; answers are never affected.
     */
-  private[sink] def recordIndexedCols(tableDirAbs: String, cols: Seq[String]): Unit =
+  private[sink] def recordIndexedCols(io: MetaIO, tableDirAbs: String,
+                                      cols: Seq[String]): Unit =
     synchronized {
       indexedColsCache.remove(tableDirAbs) // re-read the marker from disk
-      writeMarker(tableDirAbs, indexedCols(tableDirAbs) ++ cols)
+      writeMarker(io, tableDirAbs, indexedCols(tableDirAbs) ++ cols)
     }
 
   /** Schema evolution hook: RENAME remaps the marker entry (the field-id
@@ -153,21 +154,17 @@ object BloomIndex {
     * (old name unqueryable, new name not in the marker) until the next
     * buildBloomIndex — never a wrong answer.
     */
-  private[sink] def remapIndexedCol(tableDirAbs: String, from: String,
+  private[sink] def remapIndexedCol(io: MetaIO, tableDirAbs: String, from: String,
                                     to: Option[String]): Unit = synchronized {
     indexedColsCache.remove(tableDirAbs)
     val cur = indexedCols(tableDirAbs)
-    if (cur.contains(from)) writeMarker(tableDirAbs, cur - from ++ to)
+    if (cur.contains(from)) writeMarker(io, tableDirAbs, cur - from ++ to)
   }
 
-  private def writeMarker(tableDirAbs: String, cols: Set[String]): Unit = {
-    val target = markerPath(tableDirAbs)
-    val tmp = target.resolveSibling("_bloom_cols.tmp")
-    Files.writeString(tmp, cols.toSeq.sorted.map(c =>
+  private def writeMarker(io: MetaIO, tableDirAbs: String, cols: Set[String]): Unit = {
+    io.atomicWrite(markerPath(tableDirAbs), cols.toSeq.sorted.map(c =>
       java.util.Base64.getUrlEncoder.withoutPadding.encodeToString(
         c.getBytes(java.nio.charset.StandardCharsets.UTF_8))).mkString("\n"))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
     indexedColsCache.remove(tableDirAbs)
   }
 
@@ -189,12 +186,7 @@ object BloomIndex {
   def exists(dataFileAbs: String, key: String): Boolean =
     Files.exists(sidecar(dataFileAbs, key))
 
-  private[sink] def writeSidecar(dataFileAbs: String, key: String,
-                                 bytes: Array[Byte]): Unit = {
-    val target = sidecar(dataFileAbs, key)
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.write(tmp, bytes)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private[sink] def writeSidecar(io: MetaIO, dataFileAbs: String, key: String,
+                                 bytes: Array[Byte]): Unit =
+    io.atomicWrite(sidecar(dataFileAbs, key), bytes)
 }

@@ -1,7 +1,7 @@
 package graft.sink
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import java.util.Base64
 
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -165,8 +165,9 @@ final case class RootHeader(schema: StructType, rowHwm: Long, deleteCount: Int)
   * Column names and stat values are base64-encoded so arbitrary key values
   * (tabs, colons, newlines) can never corrupt the framing. Data-file lines
   * written before the `seq` field existed have 3 fields and read as seq 0.
-  * Written atomically (tmp + ATOMIC_MOVE) like every other piece of
-  * warehouse metadata.
+  * Written through [[MetaIO]] like every other piece of warehouse
+  * metadata: segments and standalone manifests by its atomic write, a
+  * snapshot root by the commit's hard-link CAS.
   */
 object Manifest {
   private val Header = "graft-manifest v1"
@@ -352,23 +353,17 @@ object Manifest {
     } finally s.close()
   }
 
-  private def atomicWrite(target: Path, content: String): Unit = {
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Flat v1 write — one self-contained file listing every entry. Still the
     * right form for small standalone manifests (WAP stage manifests are
     * batch-sized); snapshot commits go through [[writeDelta]].
     */
-  def write(target: Path, m: Manifest): Unit = {
+  def write(target: Path, m: Manifest, io: MetaIO = MetaIO.local): Unit = {
     val sb = new StringBuilder
     sb.append(Header).append('\n')
     sb.append(schemaLine(m)).append('\n')
     m.files.foreach(appendDataLine(sb, _))
     m.deletes.foreach(appendDeleteLine(sb, _))
-    atomicWrite(target, sb.toString)
+    io.atomicWrite(target, sb.toString)
   }
 
   // --------------------------------------------------- v2 segments --
@@ -481,14 +476,14 @@ object Manifest {
   /** Write one immutable segment; returns the complete `S`-line payload
     * (name + summary fields) the root should carry.
     */
-  private def writeSegment(dir: Path, files: Seq[DataFile],
+  private def writeSegment(io: MetaIO, dir: Path, files: Seq[DataFile],
                            deletes: Seq[DeleteFile]): String = {
     val name = s"g${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}.seg"
     val sb = new StringBuilder
     sb.append(SegHeader).append('\n')
     files.foreach(appendDataLine(sb, _))
     deletes.foreach(appendDeleteLine(sb, _))
-    atomicWrite(dir.resolve(name), sb.toString)
+    io.atomicWrite(dir.resolve(name), sb.toString)
     s"$name\t${summaryFields(summarize(files, deletes))}"
   }
 
@@ -563,9 +558,16 @@ object Manifest {
     * manifest order (pruning, MOR overlay, change-feed diffs are all
     * path-keyed).
     */
-  def writeDelta(target: Path, next: Manifest, basePath: Option[Path]): Unit = {
-    val dir = target.getParent
-    def coalesce(): Unit = {
+  def writeDelta(target: Path, next: Manifest, basePath: Option[Path],
+                 io: MetaIO = MetaIO.local): Unit =
+    io.atomicWrite(target, deltaRoot(io, target.getParent, next, basePath))
+
+  /** [[writeDelta]]'s content: writes the fresh segment(s) into `dir` and
+    * returns the root's text, which the commit publishes by CAS.
+    */
+  private[sink] def deltaRoot(io: MetaIO, dir: Path, next: Manifest,
+                              basePath: Option[Path]): String = {
+    def coalesce(): String = {
       val sb = new StringBuilder
       sb.append(HeaderV2).append('\n').append(schemaLine(next)).append('\n')
       // CHUNKED: one segment per SegTargetEntries in manifest order, so a
@@ -579,15 +581,15 @@ object Manifest {
         chunks.zipWithIndex.foreach { case (c, i) =>
           val dels = if (i == chunks.size - 1) next.deletes else Nil
           if (c.nonEmpty || dels.nonEmpty)
-            sb.append("S\t").append(writeSegment(dir, c, dels)).append('\n')
+            sb.append("S\t").append(writeSegment(io, dir, c, dels)).append('\n')
         }
       }
-      atomicWrite(target, sb.toString)
+      sb.toString
     }
     val base = basePath.filter(Files.exists(_))
-    if (base.isEmpty) { coalesce(); return }
+    if (base.isEmpty) return coalesce()
     val baseLines = Files.readAllLines(base.get)
-    if (baseLines.isEmpty) { coalesce(); return }
+    if (baseLines.isEmpty) return coalesce()
     val bm = read(base.get)
     // v1 flat base: lift its entries into a segment once, then delta — but
     // only AFTER the budget check below decides against coalescing, so a
@@ -598,7 +600,7 @@ object Manifest {
       case HeaderV2 => (2 until baseLines.size()).iterator.map(baseLines.get)
         .filter(l => l.startsWith("S\t") || l.startsWith("X\t")).toSeq
       case Header => Nil // lifted lazily below
-      case _ => { coalesce(); return }
+      case _ => return coalesce()
     }
     val baseFiles = bm.files.iterator.map(f => f.path -> f).toMap
     val baseDels = bm.deletes.iterator.map(d => d.path -> d).toMap
@@ -617,19 +619,18 @@ object Manifest {
       (if (addedFiles.nonEmpty || addedDels.nonEmpty) 1 else 0)
     val tombCount = carried.count(_.startsWith("X\t")) + removed.size
     if (segCount > segBudget(live) || tombCount > math.max(64, live) ||
-        removed.size + addedFiles.size + addedDels.size >= math.max(1, live)) {
-      coalesce(); return
-    }
+        removed.size + addedFiles.size + addedDels.size >= math.max(1, live))
+      return coalesce()
     val carriedFinal =
       if (!isV1) carried
-      else Seq("S\t" + writeSegment(dir, bm.files, bm.deletes))
+      else Seq("S\t" + writeSegment(io, dir, bm.files, bm.deletes))
     val sb = new StringBuilder
     sb.append(HeaderV2).append('\n').append(schemaLine(next)).append('\n')
     carriedFinal.foreach(l => sb.append(l).append('\n'))
     removed.foreach(p => sb.append("X\t").append(p).append('\n'))
     if (addedFiles.nonEmpty || addedDels.nonEmpty)
-      sb.append("S\t").append(writeSegment(dir, addedFiles, addedDels)).append('\n')
-    atomicWrite(target, sb.toString)
+      sb.append("S\t").append(writeSegment(io, dir, addedFiles, addedDels)).append('\n')
+    sb.toString
   }
 
   /** Path-level changed-entry count of root `next` vs its base root, in

@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.{ResourceDef, WriteMode}
 import graft.schema.SchemaOps
+
+import scala.jdk.CollectionConverters._
 
 /** Load side of the engine: a snapshot-versioned parquet warehouse standing in
   * for the reference's Iceberg REST catalog + three write dispositions
@@ -41,6 +43,11 @@ import graft.schema.SchemaOps
   * [[java.util.ConcurrentModificationException]] and must re-read + retry,
   * which is Iceberg's catalog CAS-and-retry loop.
   *
+  * Durability: every metadata write, link, move and delete goes through
+  * `io` ([[MetaIO]]: private tmp + ATOMIC_MOVE, hard-link CAS, one step per
+  * file-system mutation), so the crash behaviour of each protocol is the
+  * behaviour of that one seam at each of its steps.
+  *
   * @param mergeBroadcastMaxKeys size gate for the merge anti-join: the
   *   distinct incoming PK set is broadcast only when it holds at most this
   *   many tuples (the count rides on the stats aggregate — no extra job).
@@ -48,10 +55,13 @@ import graft.schema.SchemaOps
   *   slower, but a backfill-sized batch (10⁸ PKs) must not OOM executors
   *   the way an unconditional `broadcast()` hint would (the hint disables
   *   Spark's own size check).
+  * @param io the metadata-IO seam; only specs pass anything but the local
+  *   implementation (the crash matrix's step-counting, crash-injecting one).
   */
 final class Warehouse(private[sink] val spark: SparkSession,
                       private[sink] val root: String,
-                      mergeBroadcastMaxKeys: Long = 4000000L)
+                      mergeBroadcastMaxKeys: Long = 4000000L,
+                      private[graft] val io: MetaIO = MetaIO.local)
     extends WarehouseTransactions with WarehouseDv with WarehouseMor
     with WarehouseStaging with WarehouseAnalyze with WarehouseRefs
     with WarehouseChangeFeed with WarehouseStreamState {
@@ -139,9 +149,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
     val p = maxFieldIdPath(name)
     val cur = if (Files.exists(p)) Files.readString(p).trim.toLong else 0L
     val base = math.max(cur, floor)
-    val tmp = p.resolveSibling("_maxfid.tmp")
-    Files.writeString(tmp, (base + n).toString)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    io.atomicWrite(p, (base + n).toString)
     base
   }
   private[sink] def manifestPath(name: String, v: Long) =
@@ -165,18 +173,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
 
   /** S12 catalog listing. */
   def listTables(): Seq[String] =
-    if (!Files.exists(Paths.get(root))) Nil
-    else {
-      val s = Files.list(Paths.get(root))
-      try s.iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-        .asScala.map(_.getFileName.toString).filter(exists).toSeq.sorted
-      finally s.close()
-    }
-  private implicit class IterOps[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext = it.hasNext; def next() = it.next()
-    }
-  }
+    io.list(Paths.get(root)).map(_.getFileName.toString).filter(exists).sorted
 
   /** Current committed version. The pointer file is a HINT, not the source
     * of truth: the commit point is the atomic appearance of `m<v>.manifest`
@@ -271,16 +268,11 @@ final class Warehouse(private[sink] val spark: SparkSession,
     require(refOf(name).isEmpty,
       s"cannot create a table at a branch name: $name (use createBranch)")
     require(!exists(name), s"table already exists: $name")
-    Files.createDirectories(tableDir(name))
+    io.mkdirs(tableDir(name))
     val widened = withFieldIds(StructType(schema.fields.map(_.copy(nullable = true))))
     reserveFieldIds(name, 0, widened.fields.flatMap(fieldIdOf).foldLeft(0L)(math.max))
-    if (partitionBy.nonEmpty) {
-      val canon = PartitionTransforms.canonical(partitionBy, widened)
-      val tmp = tableDir(name).resolve("_spec.tmp")
-      Files.writeString(tmp, canon.mkString("\n"))
-      Files.move(tmp, specPath(name), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (partitionBy.nonEmpty)
+      writeSpecFile(name, PartitionTransforms.canonical(partitionBy, widened))
     commitManifest(name, 0L, Manifest(widened, Nil))
   }
 
@@ -311,12 +303,11 @@ final class Warehouse(private[sink] val spark: SparkSession,
     */
   def updateSpec(name: String, newSpec: Seq[String]): Unit = {
     require(exists(name), s"no such table: $name")
-    val canon = PartitionTransforms.canonical(newSpec, currentManifest(name).schema)
-    val tmp = tableDir(name).resolve("_spec.tmp")
-    Files.writeString(tmp, canon.mkString("\n"))
-    Files.move(tmp, specPath(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    writeSpecFile(name, PartitionTransforms.canonical(newSpec, currentManifest(name).schema))
   }
+
+  private[sink] def writeSpecFile(name: String, canon: Seq[String]): Unit =
+    io.atomicWrite(specPath(name), canon.mkString("\n"))
 
   /** Declared partition transforms (canonical form); empty when
     * unpartitioned. Table-level metadata: survives replace/merge, moves
@@ -325,17 +316,8 @@ final class Warehouse(private[sink] val spark: SparkSession,
   def partitionSpec(name: String): Seq[String] =
     if (!Files.exists(specPath(name))) Nil
     else {
-      import scala.jdk.CollectionConverters._
       Files.readAllLines(specPath(name)).asScala.toSeq.map(_.trim).filter(_.nonEmpty)
     }
-
-  private[sink] def deleteRecursively(p: Path): Unit = {
-    val s = Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder[Path]())
-      .iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-      .foreach(Files.deleteIfExists(_))
-    finally s.close()
-  }
 
   /** Drop a table: removes data, manifests, and the pointer. Refuses a
     * branch name — that would wipe the whole table dir; [[dropBranch]]
@@ -344,7 +326,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
   def drop(name: String): Boolean = {
     require(refOf(name).isEmpty, s"use dropBranch to drop a branch: $name")
     if (!Files.exists(tableDir(name))) return false
-    deleteRecursively(tableDir(name))
+    io.deleteTree(tableDir(name))
     true
   }
 
@@ -358,7 +340,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
       s"cannot rename a branch: $from -> $to (branches move with their table)")
     require(exists(from), s"no such table: $from")
     require(!Files.exists(tableDir(to)), s"table already exists: $to")
-    Files.move(tableDir(from), tableDir(to))
+    io.move(tableDir(from), tableDir(to))
   }
 
   // ------------------------------------------------- atomic family rename --
@@ -369,7 +351,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
     * ([[VectorIndexIngest]]'s corpus + `__cells` + `__codebook` + `__codes`
     * must move together; per-table [[rename]] would let a reader see a
     * mixed family). The WAP-tombstone discipline applied to renames: ONE
-    * durable intent marker (tmp + ATOMIC_MOVE) records every pair before
+    * durable intent marker ([[MetaIO.atomicWrite]]) records every pair before
     * any directory moves, every access path ([[exists]]) rolls pending
     * intents forward before probing, and the marker is deleted only after
     * all moves hold — so an observer sees the family fully old (marker not
@@ -400,34 +382,45 @@ final class Warehouse(private[sink] val spark: SparkSession,
       require(f != t, s"self-rename: $f")
       present = present - f + t
     }
-    Files.createDirectories(intentsDir)
+    io.mkdirs(intentsDir)
     val marker = intentsDir.resolve(s"rename-${java.util.UUID.randomUUID().toString.take(8)}")
-    val tmp = marker.resolveSibling(marker.getFileName.toString + ".tmp")
-    Files.writeString(tmp, pairs.map { case (f, t) => s"$f\t$t" }.mkString("\n"))
-    Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE)
+    io.atomicWrite(marker, pairs.map { case (f, t) => s"$f\t$t" }.mkString("\n"))
     executeRenameIntent(marker)
   }
 
-  /** Roll one intent forward, pair by pair, tolerating a racing recoverer:
-    * a pair is done when `to` exists and `from` does not; a pair still
-    * pending moves; anything else cannot converge and fails loudly. The
-    * marker is deleted only after every pair holds.
+  /** Roll one intent forward, tolerating a racing recoverer. Pairs move in
+    * order, so which of the involved tables exist after k moves is known
+    * for every k; the largest k the disk matches is the progress. (A
+    * per-pair "to present, from absent" test cannot tell: a chained swap's
+    * first source reappears as the second target.) The remaining moves
+    * run, each re-checked; a disk matching no k, or a move that makes no
+    * progress, cannot converge and fails loudly. The marker is deleted
+    * only after every pair holds.
     */
   private def executeRenameIntent(marker: Path): Unit = {
     val pairs = Files.readString(marker).split('\n').toSeq.filter(_.nonEmpty).map { l =>
       val i = l.indexOf('\t'); (l.substring(0, i), l.substring(i + 1))
     }
-    pairs.foreach { case (f, t) =>
-      val fd = tableDir(f); val td = tableDir(t)
-      if (Files.exists(fd) && !Files.exists(td)) {
-        try Files.move(fd, td)
-        catch { case _: java.nio.file.FileSystemException => () } // racer won; verified below
-      }
-      if (!(Files.exists(td) && !Files.exists(fd)))
-        throw new IllegalStateException(
-          s"rename intent $f -> $t cannot converge (from=${Files.exists(fd)}, to=${Files.exists(td)})")
+    val names = pairs.flatMap { case (f, t) => Seq(f, t) }.distinct
+    // a name exists before the intent iff its first pair moves it away
+    val before = names.map(n => n -> (pairs.find(p => p._1 == n || p._2 == n).get._1 == n)).toMap
+    val afterK = pairs.scanLeft(before) { case (m, (f, t)) => m + (f -> false) + (t -> true) }
+    def progress(): Int = {
+      val now = names.map(n => n -> Files.exists(tableDir(n))).toMap
+      afterK.lastIndexWhere(_ == now)
     }
-    Files.deleteIfExists(marker)
+    var k = progress()
+    while (k >= 0 && k < pairs.size) {
+      val (f, t) = pairs(k)
+      try io.move(tableDir(f), tableDir(t))
+      catch { case _: java.nio.file.FileSystemException => () } // racer moved it; re-checked
+      val next = progress()
+      k = if (next > k) next else -1
+    }
+    if (k < 0)
+      throw new IllegalStateException(s"rename intent ${marker.getFileName} cannot converge " +
+        names.map(n => s"$n=${Files.exists(tableDir(n))}").mkString("(", ", ", ")"))
+    io.delete(marker)
   }
 
   /** Complete any pending [[renameAll]] intents (oldest first). One stat
@@ -436,14 +429,10 @@ final class Warehouse(private[sink] val spark: SparkSession,
     */
   private def recoverPendingRenames(): Unit = {
     if (!Files.exists(intentsDir)) return
-    val markers = {
-      val s = Files.list(intentsDir)
-      try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-        .filter(p => p.getFileName.toString.startsWith("rename-") &&
-          !p.getFileName.toString.endsWith(".tmp")).toSeq.sortBy(_.getFileName.toString)
-      finally s.close()
-    }
-    markers.foreach(executeRenameIntent)
+    io.list(intentsDir)
+      .filter(p => p.getFileName.toString.startsWith("rename-") &&
+        !p.getFileName.toString.endsWith(".tmp")).sortBy(_.getFileName.toString)
+      .foreach(executeRenameIntent)
   }
 
 
@@ -536,7 +525,6 @@ final class Warehouse(private[sink] val spark: SparkSession,
     * unmarked files derive purely from metadata + `_metadata.row_index`.
     */
   private[sink] def lineageFrame(name: String, m: Manifest): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val out = StructType(m.schema.fields.toSeq ++ Seq(
       StructField("_row_id", org.apache.spark.sql.types.LongType, nullable = false),
       StructField("_last_updated_version",
@@ -1046,7 +1034,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
             .toAbsolutePath.normalize.toString
           val bytes = r.getAs[Array[Byte]]("__b")
           if (bytes != null && absOf.contains(abs)) {
-            BloomIndex.writeSidecar(abs, key, bytes)
+            BloomIndex.writeSidecar(io, abs, key, bytes)
             written += 1
           }
         }
@@ -1056,24 +1044,25 @@ final class Warehouse(private[sink] val spark: SparkSession,
     // marker = the O(1) planner short-circuit: queries consult sidecars
     // only for columns recorded here (recorded even when nothing was
     // missing — the marker may post-date the sidecars after a crash)
-    BloomIndex.recordIndexedCols(tableDir(name).toString, cols)
+    BloomIndex.recordIndexedCols(io, tableDir(name).toString, cols)
     if (written > 0) BloomIndex.invalidate()
     written
   }
 
   /** Commit manifest `m` as version `next`: a true compare-and-swap.
     *
-    * The manifest's full content is first written to a per-attempt temp
-    * file, then PUBLISHED by `Files.createLink` — an atomic CREATE_NEW: of
-    * two racing committers for the same `next`, exactly one can create
-    * `m<next>.manifest`; the loser gets `FileAlreadyExistsException`
-    * (mapped to [[java.util.ConcurrentModificationException]] — re-read and
-    * retry, Iceberg's catalog CAS loop). There is NO check-then-act window:
-    * the link either appears (with complete content, since the temp was
-    * fully written first) or the commit loses. A crash before the link
-    * commits nothing (orphan temp, swept by [[expireSnapshots]]); a crash
-    * after the link IS a commit — [[currentVersion]] recovers past the
-    * stale pointer hint.
+    * The root's full content is PUBLISHED by [[MetaIO.casLink]] — a
+    * committer-private tmp, hard-linked onto `m<next>.manifest`, an atomic
+    * CREATE_NEW: of two racing committers for the same `next`, exactly one
+    * creates it; the loser is mapped to
+    * [[java.util.ConcurrentModificationException]] (re-read and retry,
+    * Iceberg's catalog CAS loop). There is NO check-then-act window: the
+    * link either appears (with complete content, since the tmp was fully
+    * written first) or the commit loses. A crash before the link commits
+    * nothing (orphan tmp and segment, swept by [[expireSnapshots]]); a
+    * crash after the link IS a commit — [[currentVersion]] recovers past
+    * the stale pointer hint. The crash matrix spec replays this at every
+    * step.
     *
     * The version pre-check stays as a fast-fail for commits whose base
     * version was overtaken while their data-file job ran (minutes) — it
@@ -1081,15 +1070,13 @@ final class Warehouse(private[sink] val spark: SparkSession,
     */
   private[sink] def commitManifest(name: String, next: Long, m: Manifest,
                                    coalesce: Boolean = false): Long = {
-    Files.createDirectories(tableDir(name))
+    io.mkdirs(tableDir(name))
     val cur = currentVersion(name)
     if (cur != next - 1)
       throw new java.util.ConcurrentModificationException(
         s"$name: expected to commit v$next over v${next - 1}, but table is at v$cur " +
           "(concurrent writer); re-read and retry")
     val target = manifestPath(name, next)
-    val attempt = target.resolveSibling(
-      s"${target.getFileName}.w${java.util.UUID.randomUUID().toString.take(8)}")
     // ROW LINEAGE (Iceberg v3 first_row_id): every data file gets a fresh,
     // never-reused id range at its first commit, assigned HERE — the one
     // chokepoint every commit (append, rewrite, WAP publish, restore,
@@ -1111,21 +1098,13 @@ final class Warehouse(private[sink] val spark: SparkSession,
     // version's segment refs forward and only this commit's added/removed
     // entries land as new lines (Manifest.writeDelta scaladoc); a baseless
     // write is the forced-coalesce path ([[rewriteManifests]])
-    Manifest.writeDelta(attempt, assigned,
+    val root = Manifest.deltaRoot(io, tableDir(name), assigned,
       if (next == 0 || coalesce) None else Some(manifestPath(name, next - 1)))
-    try Files.createLink(target, attempt)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"$name: lost the commit race for v$next (concurrent writer); re-read and retry")
-    } finally Files.deleteIfExists(attempt)
-    // best-effort hint update; readers recover via the forward scan (the
-    // tmp name is ref-suffixed: a main and a branch commit at the same
-    // version number must not collide on the staging path)
-    val tmp = tableDir(name).resolve(s"_current${refSuffix(name)}.tmp$next")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, pointer(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    if (!io.casLink(target, root))
+      throw new java.util.ConcurrentModificationException(
+        s"$name: lost the commit race for v$next (concurrent writer); re-read and retry")
+    // best-effort hint update; readers recover via the forward scan
+    io.atomicWrite(pointer(name), next.toString)
     next
   }
 
@@ -1380,7 +1359,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
     // history inside the base table's directory
     require(existing.nonEmpty || refOf(name).isEmpty,
       s"no such branch: $name (createBranch first)")
-    Files.createDirectories(tableDir(name))
+    io.mkdirs(tableDir(name))
     val schema = targetSchema(existing, df)
     // first-append auto-create must record the id high-water mark exactly
     // like create() does: without it, dropColumn + addColumns on such a
@@ -2328,17 +2307,12 @@ final class Warehouse(private[sink] val spark: SparkSession,
       case Some(pf) if pf.src == from => pf.copy(src = to).key
       case _                          => s
     })
-    if (newSpec != spec) {
-      val tmp = tableDir(name).resolve("_spec.tmp")
-      Files.writeString(tmp, newSpec.mkString("\n"))
-      Files.move(tmp, specPath(name), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (newSpec != spec) writeSpecFile(name, newSpec)
     // bloom marker rides the rename too: sidecars are field-id-keyed (still
     // valid — same id, same values), only the planner's name-keyed marker
     // entry moves. Crash before this line just disables pruning for the
     // new name until the next buildBloomIndex.
-    BloomIndex.remapIndexedCol(tableDir(name).toString, from, Some(to))
+    BloomIndex.remapIndexedCol(io, tableDir(name).toString, from, Some(to))
     v
   }
 
@@ -2378,7 +2352,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
     // of the same name gets a FRESH field id, so the orphaned sidecars can
     // never be consulted — but the name must leave the marker so probes
     // don't pay sidecar-miss IO for an index that no longer applies
-    BloomIndex.remapIndexedCol(tableDir(name).toString, colName, None)
+    BloomIndex.remapIndexedCol(io, tableDir(name).toString, colName, None)
     v
   }
 
@@ -2438,8 +2412,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
       val published = paths.nonEmpty && (versions.exists(v =>
         paths.subsetOf(manifestAt(name, v).files.map(_.path).toSet)) ||
         otherRefPathSets.exists(paths.subsetOf))
-      if (published)
-        Files.move(p, tombstoneOf(p), StandardCopyOption.ATOMIC_MOVE)
+      if (published) io.move(p, tombstoneOf(p))
     }
     val droppedRefs = drop
       .flatMap(v => refsOf(Manifest.read(manifestPath(name, v)))).toSet
@@ -2461,46 +2434,34 @@ final class Warehouse(private[sink] val spark: SparkSession,
     val keptSegs = keep.flatMap(v => Manifest.segmentRefs(manifestPath(name, v))).toSet ++
       otherRefManifests.flatMap(Manifest.segmentRefs)
     val droppedSegs = drop.flatMap(v => Manifest.segmentRefs(manifestPath(name, v))).toSet
-    drop.foreach(v => Files.deleteIfExists(manifestPath(name, v)))
-    (droppedSegs -- keptSegs).foreach(s => Files.deleteIfExists(tableDir(name).resolve(s)))
+    drop.foreach(v => io.delete(manifestPath(name, v)))
+    (droppedSegs -- keptSegs).foreach(s => io.delete(tableDir(name).resolve(s)))
     val td = tableDir(name)
     val cutoff = System.currentTimeMillis() - orphanGraceMs
-    // orphaned commit-attempt temps (`m<v>.manifest.w<id>[.tmp]`): a crashed
-    // committer's content file whose link never happened; out-age the grace
-    // first (an in-flight committer is about to link its temp)
-    locally {
-      val s = Files.list(td)
-      try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-        .filter(p => p.getFileName.toString.matches("m\\d+(@.+)?\\.manifest\\.w.*") &&
-          Files.getLastModifiedTime(p).toMillis < cutoff)
-        .foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
-    // orphaned manifest segments (`g*.seg`): a crashed or CAS-losing
-    // committer's segment whose root never linked. Grace-aged like data
-    // orphans — an in-flight committer writes its segment BEFORE its root
-    locally {
-      val s = Files.list(td)
-      try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("g") && n.endsWith(".seg") && !keptSegs.contains(n) &&
-            Files.getLastModifiedTime(p).toMillis < cutoff
-        }.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
-    val dataDirs = {
-      val s = Files.list(td)
-      try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          // d* data dirs, del* equality-delete dirs, pdel* positional-delete
-          // dirs, stg* staged dirs — everything that can hold referenced or
-          // orphaned parquet
-          Files.isDirectory(p) &&
-            (n.startsWith("d") || n.startsWith("pdel") || n.startsWith("stg"))
-        }.toSeq
-      finally s.close()
+    def aged(p: Path) = Files.getLastModifiedTime(p).toMillis < cutoff
+    // grace-aged orphans, out-aging any in-flight writer first:
+    //   - `*.tmp`: a crashed writer's staging file of ANY shape — MetaIO's
+    //     `<target>.<uuid8>.tmp` (commit attempts, segments, pointers,
+    //     markers) and older fixed names (`g<id>.seg.tmp`, `_spec.tmp`);
+    //     the warehouse's `_intents` dir rides along (its tmps are
+    //     unnamed to any table);
+    //   - `m<v>.manifest.w<id>`: an older committer's attempt file whose
+    //     link never happened;
+    //   - `g*.seg`: a crashed or CAS-losing committer's segment whose root
+    //     never linked (a committer writes its segment BEFORE its root).
+    (io.list(td) ++ io.list(intentsDir)).filter { p =>
+      val n = p.getFileName.toString
+      (n.endsWith(".tmp") || n.matches("m\\d+(@.+)?\\.manifest\\.w.*") ||
+        n.startsWith("g") && n.endsWith(".seg") && !keptSegs.contains(n)) &&
+        Files.isRegularFile(p) && aged(p)
+    }.foreach(io.delete)
+    val dataDirs = io.list(td).filter { p =>
+      val n = p.getFileName.toString
+      // d* data dirs, del* equality-delete dirs, pdel* positional-delete
+      // dirs, stg* staged dirs — everything that can hold referenced or
+      // orphaned parquet
+      Files.isDirectory(p) &&
+        (n.startsWith("d") || n.startsWith("pdel") || n.startsWith("stg"))
     }
     dataDirs.foreach { dir =>
       // walk, not list: partitioned writes hive-split data one directory
@@ -2508,31 +2469,29 @@ final class Warehouse(private[sink] val spark: SparkSession,
       // sweep would see zero parquets and wholesale-delete a LIVE dir
       val files = {
         val s = Files.walk(dir)
-        try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-          .filter(Files.isRegularFile(_)).toSeq
+        try s.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
         finally s.close()
       }
       val parquets = files.filter(_.getFileName.toString.endsWith(".parquet"))
       val (live, nonLive) = parquets.partition(p => referenced.contains(td.relativize(p).toString))
       // expired-snapshot files go immediately; never-referenced orphans only
       // after the grace period (an in-flight writer may still commit them)
-      val dead = nonLive.filter { p =>
-        droppedRefs.contains(td.relativize(p).toString) ||
-          Files.getLastModifiedTime(p).toMillis < cutoff
-      }
+      val dead = nonLive.filter(p => droppedRefs.contains(td.relativize(p).toString) || aged(p))
       dead.foreach { p =>
-        Files.deleteIfExists(p)
-        Files.deleteIfExists(p.resolveSibling("." + p.getFileName.toString + ".crc"))
+        io.delete(p)
+        io.delete(p.resolveSibling("." + p.getFileName.toString + ".crc"))
       }
       // bloom sidecars (`<file>.bloom.<colB64>`) die with their data file:
-      // sweep any whose data file is gone (incl. files this pass deleted)
+      // sweep any whose data file is gone (incl. files this pass deleted),
+      // and a crashed sidecar write's grace-aged tmp
       files.filter(_.getFileName.toString.contains(".bloom.")).foreach { sc =>
         val n = sc.getFileName.toString
         val dataName = n.substring(0, n.indexOf(".bloom."))
-        if (!Files.exists(sc.resolveSibling(dataName))) Files.deleteIfExists(sc)
+        if (!Files.exists(sc.resolveSibling(dataName)) || n.endsWith(".tmp") && aged(sc))
+          io.delete(sc)
       }
       if (live.isEmpty && dead.size == nonLive.size)
-        deleteRecursively(dir) // nothing referenced or pending: remove wholesale
+        io.deleteTree(dir) // nothing referenced or pending: remove wholesale
     }
     // staged CDC windows (`_cdc/w<s>_<e>`, crashed stagers' tmp-* —
     // ChangesTable): the streaming face sweeps them on offset commit, but a

@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -293,10 +293,7 @@ private[sink] trait WarehouseAnalyze { self: Warehouse =>
         .append('\t').append(b64s(e.minV)).append('\t').append(b64s(e.maxV))
         .append('\t').append(e.kllB64).append('\n')
     }
-    val tmp = tableDir(name).resolve("_colstats.tmp")
-    Files.writeString(tmp, sb.toString)
-    Files.move(tmp, colStatsPath(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    io.atomicWrite(colStatsPath(name), sb.toString)
   }
 
   /** Outcome of [[analyzeIncremental]]: the refreshed stats, how many data

@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -431,18 +431,13 @@ private[sink] trait WarehouseChangeFeed { self: Warehouse =>
     // regardless of the requested retention. Published windows (w*) have no
     // floor: a swept window a reader still wants re-materializes.
     val tmpCutoff = math.min(cutoff, now - TmpStageMinAgeMs)
-    var swept = 0
-    val s = Files.list(cdc)
-    try s.forEach { p =>
+    val swept = io.list(cdc).filter { p =>
       val n = p.getFileName.toString
       val cut = if (n.startsWith("tmp-")) tmpCutoff else cutoff
-      if ((n.startsWith("w") || n.startsWith("tmp-")) &&
-          Files.getLastModifiedTime(p).toMillis < cut) {
-        deleteRecursively(p)
-        swept += 1
-      }
-    } finally s.close()
-    swept
+      (n.startsWith("w") || n.startsWith("tmp-")) && Files.getLastModifiedTime(p).toMillis < cut
+    }
+    swept.foreach(io.deleteTree)
+    swept.size
   }
 
   /** Minimum age before a crashed-stager `tmp-*` dir is sweepable — longer

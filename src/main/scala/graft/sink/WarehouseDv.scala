@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -189,18 +189,13 @@ private[sink] trait WarehouseDv { self: Warehouse =>
   }
 
   /** All committed (non-expired) snapshot versions of a table, oldest first. */
-  def history(name: String): Seq[Long] =
-    if (!Files.exists(tableDir(name))) Nil
-    else {
-      // per-ref ledger: `m<v>.manifest` on main, `m<v>@<branch>.manifest`
-      // on a branch — each ledger sees only its own files
-      val pat = ("m(\\d+)" + java.util.regex.Pattern.quote(refSuffix(name)) +
-        "\\.manifest").r
-      val s = Files.list(tableDir(name))
-      try s.iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-        .asScala.map(_.getFileName.toString)
-        .collect { case pat(v) => v.toLong }.toSeq.sorted
-      finally s.close()
-    }
+  def history(name: String): Seq[Long] = {
+    // per-ref ledger: `m<v>.manifest` on main, `m<v>@<branch>.manifest`
+    // on a branch — each ledger sees only its own files
+    val pat = ("m(\\d+)" + java.util.regex.Pattern.quote(refSuffix(name)) +
+      "\\.manifest").r
+    io.list(tableDir(name)).map(_.getFileName.toString)
+      .collect { case pat(v) => v.toLong }.sorted
+  }
 
 }

@@ -1,13 +1,11 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.SchemaOps
-
-import scala.jdk.CollectionConverters._
 
 /** Named refs: snapshot TAGS (protected, expirable-on-drop pointers into
   * the main ledger) and BRANCHES (fork/commit/publish/drop — per-ref
@@ -52,28 +50,18 @@ private[sink] trait WarehouseRefs { self: Warehouse =>
     val v = if (version < 0) currentVersion(name) else version
     require(v >= 0 && Files.exists(manifestPath(name, v)),
       s"no such snapshot to tag: $name v=$v")
-    val p = tagPath(name, tag)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    io.atomicWrite(tagPath(name, tag), v.toString)
     v
   }
 
   /** All tags of a table (tag -> version). */
   def tags(name: String): Map[String, Long] =
-    if (!Files.exists(tableDir(name))) Map.empty
-    else {
-      val s = Files.list(tableDir(name))
-      try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("tag-") && n.endsWith(".ref"))
-        .map { n =>
-          n.stripPrefix("tag-").stripSuffix(".ref") ->
-            Files.readString(tableDir(name).resolve(n)).trim.toLong
-        }.toMap
-      finally s.close()
-    }
+    io.list(tableDir(name)).map(_.getFileName.toString)
+      .filter(n => n.startsWith("tag-") && n.endsWith(".ref"))
+      .map { n =>
+        n.stripPrefix("tag-").stripSuffix(".ref") ->
+          Files.readString(tableDir(name).resolve(n)).trim.toLong
+      }.toMap
 
   /** Resolve a tag to its snapshot version. Tags name MAIN-ledger
     * snapshots, so resolving one through a branch name would cross version
@@ -91,7 +79,7 @@ private[sink] trait WarehouseRefs { self: Warehouse =>
 
   /** Release a tag (its snapshot becomes expirable again). */
   def dropTag(name: String, tag: String): Boolean =
-    Files.deleteIfExists(tagPath(name, tag))
+    io.delete(tagPath(name, tag))
 
   // ------------------------------------------------------------- branches --
 
@@ -141,43 +129,27 @@ private[sink] trait WarehouseRefs { self: Warehouse =>
     // LIVE branch) the loser touches nothing, in particular not the
     // winner's fork point, which guards publishBranch's fast-forward check
     // against silently dropping main commits
-    try Files.createLink(manifestPath(bname, 0L), manifestPath(name, v))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalArgumentException(s"branch already exists: $bname")
-    }
+    if (!io.link(manifestPath(bname, 0L), manifestPath(name, v)))
+      throw new IllegalArgumentException(s"branch already exists: $bname")
     // fork point second: a crash between the link and this write is
     // repaired by [[forkVersion]] — the v0 hard link pins the fork
     // snapshot's inode, so the fork version is recoverable
     writeForkPoint(name, branch, v)
-    val ptmp = tableDir(name).resolve(s"_current@$branch.tmp")
-    Files.writeString(ptmp, "0")
-    Files.move(ptmp, pointer(bname), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    io.atomicWrite(pointer(bname), "0")
     0L
   }
 
-  private def writeForkPoint(name: String, branch: String, v: Long): Unit = {
-    val fp = forkPath(name, branch)
-    val tmp = fp.resolveSibling(fp.getFileName.toString + ".tmp")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, fp, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeForkPoint(name: String, branch: String, v: Long): Unit =
+    io.atomicWrite(forkPath(name, branch), v.toString)
 
   /** All branches of a table, detected from their ledger files (not the
     * pointer hints — a crash can lose a hint, never a committed manifest).
     */
-  def branches(name: String): Seq[String] =
-    if (!Files.exists(tableDir(name))) Nil
-    else {
-      val pat = "m\\d+@(.+)\\.manifest".r
-      val s = Files.list(tableDir(name))
-      try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-        .map(_.getFileName.toString)
-        .collect { case pat(b) => b }.toSeq.distinct.sorted
-      finally s.close()
-    }
+  def branches(name: String): Seq[String] = {
+    val pat = "m\\d+@(.+)\\.manifest".r
+    io.list(tableDir(name)).map(_.getFileName.toString)
+      .collect { case pat(b) => b }.distinct.sorted
+  }
 
   /** The MAIN-ledger version a branch last forked from / published to —
     * the base both sides share, and therefore the fast-forward guard.
@@ -253,9 +225,9 @@ private[sink] trait WarehouseRefs { self: Warehouse =>
     // crash mid-drop must never leave a publishable-looking branch whose
     // early manifests are gone — without a fork point publish refuses, and
     // a re-run of dropBranch (or the next one) finishes the tail
-    Files.deleteIfExists(forkPath(name, branch))
-    Files.deleteIfExists(pointer(bname))
-    history(bname).foreach(v => Files.deleteIfExists(manifestPath(bname, v)))
+    io.delete(forkPath(name, branch))
+    io.delete(pointer(bname))
+    history(bname).foreach(v => io.delete(manifestPath(bname, v)))
     true
   }
 

@@ -1,13 +1,11 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.SchemaOps
-
-import scala.jdk.CollectionConverters._
 
 /** Staged publication: write-audit-publish (WAP) candidates and the
   * atomic CTAS/RTAS staging protocol (invisible writes, one-commit
@@ -58,7 +56,7 @@ private[sink] trait WarehouseStaging { self: Warehouse =>
     val spec = partitionSpec(name)
     val entries = writeData(name, cluster(SchemaOps.conform(df, schema), Nil, spec),
       schema, s"stg$id", statsCols ++ spec ++ inheritedStatsCols(name, Some(man)), spec = spec)
-    Manifest.write(stagePath(name, id, mode, base), Manifest(schema, entries))
+    Manifest.write(stagePath(name, id, mode, base), Manifest(schema, entries), io)
     id
   }
 
@@ -67,13 +65,9 @@ private[sink] trait WarehouseStaging { self: Warehouse =>
 
   /** (path, mode, baseVersion) of a stage, or a loud failure. */
   private[sink] def findStage(name: String, id: String): (Path, String, Long) = {
-    val hits = {
-      val s = Files.list(tableDir(name))
-      try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-        .filter(_.getFileName.toString.startsWith(s"stage-$id."))
-        .filter(_.getFileName.toString.endsWith(".manifest")).toSeq
-      finally s.close()
-    }
+    val hits = io.list(tableDir(name))
+      .filter(_.getFileName.toString.startsWith(s"stage-$id."))
+      .filter(_.getFileName.toString.endsWith(".manifest"))
     require(hits.size == 1, s"no such stage: $name/$id")
     val parts = hits.head.getFileName.toString.split('.')
     (hits.head, parts(1), parts(2).toLong)
@@ -83,15 +77,9 @@ private[sink] trait WarehouseStaging { self: Warehouse =>
     * forgotten candidates — staged files live until publish or drop).
     */
   def listStages(name: String): Seq[String] =
-    if (!Files.exists(tableDir(name))) Nil
-    else {
-      val s = Files.list(tableDir(name))
-      try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("stage-") && n.endsWith(".manifest"))
-        .map(_.stripPrefix("stage-").split('.').head).toSeq.sorted
-      finally s.close()
-    }
+    io.list(tableDir(name)).map(_.getFileName.toString)
+      .filter(n => n.startsWith("stage-") && n.endsWith(".manifest"))
+      .map(_.stripPrefix("stage-").split('.').head).sorted
 
   /** The candidate table state the audit step reads: base + batch for an
     * append stage, the batch alone for a replace stage. The base rides
@@ -121,13 +109,10 @@ private[sink] trait WarehouseStaging { self: Warehouse =>
   private[sink] def tombstoneOf(p: Path): Path =
     p.resolveSibling(p.getFileName.toString.stripSuffix(".manifest") + ".published")
 
-  private def findTombstones(name: String, id: String): Seq[Path] = {
-    val s = Files.list(tableDir(name))
-    try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
+  private def findTombstones(name: String, id: String): Seq[Path] =
+    io.list(tableDir(name))
       .filter(_.getFileName.toString.startsWith(s"stage-$id."))
-      .filter(_.getFileName.toString.endsWith(".published")).toSeq
-    finally s.close()
-  }
+      .filter(_.getFileName.toString.endsWith(".published"))
 
   /** Commit the audited candidate. One manifest commit under the same OCC
     * guard as every write; the staged data files are adopted by path, so
@@ -139,7 +124,7 @@ private[sink] trait WarehouseStaging { self: Warehouse =>
     // snapshot inspection, no dependence on what expiry kept around.
     val stones = findTombstones(name, stageId)
     if (stones.nonEmpty) {
-      stones.foreach(Files.deleteIfExists(_))
+      stones.foreach(io.delete)
       return currentVersion(name)
     }
     val (p, mode, baseV) = findStage(name, stageId)
@@ -168,7 +153,7 @@ private[sink] trait WarehouseStaging { self: Warehouse =>
       else (cur +: history(name)).distinct.exists(v =>
         stagePaths.subsetOf(manifestAt(name, v).files.map(_.path).toSet))
     if (published) {
-      Files.deleteIfExists(p)
+      io.delete(p)
       return cur
     }
     val merged = mode match {
@@ -193,8 +178,8 @@ private[sink] trait WarehouseStaging { self: Warehouse =>
     // (from here on a replay is decided by the tombstone, never by snapshot
     // evidence), then the tombstone delete completes the happy path
     val stone = tombstoneOf(p)
-    Files.move(p, stone, StandardCopyOption.ATOMIC_MOVE)
-    Files.deleteIfExists(stone)
+    io.move(p, stone)
+    io.delete(stone)
     v
   }
 
@@ -205,14 +190,14 @@ private[sink] trait WarehouseStaging { self: Warehouse =>
     */
   def dropStage(name: String, stageId: String): Boolean = {
     val stones = findTombstones(name, stageId)
-    if (stones.nonEmpty) return stones.map(Files.deleteIfExists(_)).forall(identity)
+    if (stones.nonEmpty) return stones.map(io.delete).forall(identity)
     val (p, _, _) = findStage(name, stageId)
     val sm = Manifest.read(p)
     // a stage's files all live in its own stg* dir(s) — no snapshot ever
     // referenced them, so the dirs go wholesale
     sm.files.map(f => tableDir(name).resolve(f.path).getParent).distinct
-      .foreach(deleteRecursively)
-    Files.deleteIfExists(p)
+      .foreach(io.deleteTree)
+    io.delete(p)
   }
 
   // --------------------------------------------- atomic CTAS/RTAS staging --
@@ -266,7 +251,7 @@ private[sink] trait WarehouseStaging { self: Warehouse =>
       * dir — unreferenced by any snapshot until commit.
       */
     def write(df: DataFrame, statsCols: Seq[String] = Nil): Unit = {
-      Files.createDirectories(tableDir(name))
+      io.mkdirs(tableDir(name))
       val in = cluster(SchemaOps.conform(df, schema), Nil, canon)
       entries = entries ++ writeData(name, in, schema, s"ctas$id-${entries.size}",
         statsCols ++ canon, seq = 0L, spec = canon)
@@ -281,7 +266,7 @@ private[sink] trait WarehouseStaging { self: Warehouse =>
       * but "replace" semantics promise the definition the user saw).
       */
     def commit(): Long = {
-      Files.createDirectories(tableDir(name))
+      io.mkdirs(tableDir(name))
       val target = baseV match {
         case None => 0L
         case Some(b) =>
@@ -315,36 +300,14 @@ private[sink] trait WarehouseStaging { self: Warehouse =>
       */
     def abort(): Unit = {
       val d = tableDir(name)
-      if (Files.isDirectory(d)) {
-        val mine = {
-          val s = Files.list(d)
-          try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-            .filter(_.getFileName.toString.startsWith(s"ctas$id-")).toSeq
-          finally s.close()
-        }
-        mine.foreach(deleteRecursively)
-      }
+      io.list(d).filter(_.getFileName.toString.startsWith(s"ctas$id-")).foreach(io.deleteTree)
       entries = Vector.empty
-      if (baseV.isEmpty && !self.exists(name)) {
-        val d = tableDir(name)
-        val leftover = if (!Files.isDirectory(d)) Nil else {
-          val s = Files.list(d)
-          try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala.toSeq
-          finally s.close()
-        }
-        // only metadata this stage itself wrote can remain (id counter);
-        // anything else means a concurrent actor owns the dir — leave it
-        if (leftover.forall(p => p.getFileName.toString.startsWith("_")))
-          deleteRecursively(d)
-      }
+      // only metadata this stage itself wrote can remain (id counter);
+      // anything else means a concurrent actor owns the dir — leave it
+      if (baseV.isEmpty && !self.exists(name) &&
+          io.list(d).forall(p => p.getFileName.toString.startsWith("_")))
+        io.deleteTree(d)
     }
-  }
-
-  private def writeSpecFile(name: String, canon: Seq[String]): Unit = {
-    val tmp = tableDir(name).resolve("_spec.tmp")
-    Files.writeString(tmp, canon.mkString("\n"))
-    Files.move(tmp, specPath(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 
 }

@@ -1,14 +1,12 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.{ResourceDef, WriteMode}
 import graft.schema.SchemaOps
-
-import scala.jdk.CollectionConverters._
 
 /** Streaming-consumer state: the per-(table, stream) batch-id ledger and
   * the exactly-once FILE ledger micro-batch ingestion rides on.
@@ -40,11 +38,8 @@ private[sink] trait WarehouseStreamState { self: Warehouse =>
     * same guarantee foreachBatch itself gives).
     */
   def recordBatchId(name: String, streamId: String, batchId: Long): Unit = {
-    Files.createDirectories(tableDir(name))
-    val tmp = tableDir(name).resolve(s"_stream_$streamId.tmp")
-    Files.writeString(tmp, batchId.toString)
-    Files.move(tmp, streamStatePath(name, streamId), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    io.mkdirs(tableDir(name))
+    io.atomicWrite(streamStatePath(name, streamId), batchId.toString)
   }
 
   /** Small STRING metadata sidecar beside a table (atomic pointer swap,
@@ -55,11 +50,8 @@ private[sink] trait WarehouseStreamState { self: Warehouse =>
     * wins, single-writer by the owning discipline.
     */
   def putTableMeta(name: String, key: String, value: String): Unit = {
-    Files.createDirectories(tableDir(name))
-    val tmp = tableDir(name).resolve(s"_meta_$key.tmp")
-    Files.writeString(tmp, value)
-    Files.move(tmp, tableDir(name).resolve(s"_meta_$key"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    io.mkdirs(tableDir(name))
+    io.atomicWrite(tableDir(name).resolve(s"_meta_$key"), value)
   }
 
   /** Read a [[putTableMeta]] sidecar; None when never written. */
@@ -77,16 +69,11 @@ private[sink] trait WarehouseStreamState { self: Warehouse =>
     */
   private val LedgerCompactSegments = 64
 
-  private def ledgerSegments(name: String, streamId: String): Seq[Path] = {
-    val dir = streamFilesDir(name, streamId)
-    if (!Files.isDirectory(dir)) Nil
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-        .filter(_.getFileName.toString.startsWith("seg-")).toSeq
-      finally s.close()
+  private def ledgerSegments(name: String, streamId: String): Seq[Path] =
+    io.list(streamFilesDir(name, streamId)).filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("seg-") && !n.endsWith(".tmp")
     }
-  }
 
   /** Source files already loaded into `name` by `streamId` — the FILE-level
     * idempotence ledger for file-source streams. Unlike a batch-id
@@ -115,18 +102,14 @@ private[sink] trait WarehouseStreamState { self: Warehouse =>
     */
   def recordFiles(name: String, streamId: String, files: Seq[String]): Unit = {
     val dir = streamFilesDir(name, streamId)
-    Files.createDirectories(dir)
-    def writeSegment(lines: Seq[String]): Unit = {
-      val id = java.util.UUID.randomUUID().toString.take(12)
-      val tmp = dir.resolve(s".seg-$id.tmp")
-      Files.writeString(tmp, lines.mkString("\n"))
-      Files.move(tmp, dir.resolve(s"seg-$id"), StandardCopyOption.ATOMIC_MOVE)
-    }
+    io.mkdirs(dir)
+    def writeSegment(lines: Seq[String]): Unit = io.atomicWrite(
+      dir.resolve(s"seg-${java.util.UUID.randomUUID().toString.take(12)}"), lines.mkString("\n"))
     writeSegment(files.distinct.sorted)
     val segments = ledgerSegments(name, streamId)
     if (segments.size > LedgerCompactSegments) {
       writeSegment(loadedFiles(name, streamId).toSeq.sorted)
-      segments.foreach(Files.deleteIfExists(_))
+      segments.foreach(io.delete)
     }
   }
 

@@ -1,13 +1,11 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.SchemaOps
-
-import scala.jdk.CollectionConverters._
 
 /** Atomic multi-table transactions: stage append-shaped writes against
   * any number of tables, land them all-or-nothing through a durable
@@ -38,7 +36,7 @@ private[sink] trait WarehouseTransactions { self: Warehouse =>
     *      accumulates a per-table (data entries, delete entries) delta.
     *      Nothing is visible to readers.
     *   2. The deltas are serialized to a durable intent marker
-    *      (`_intents/txn-<id>`, tmp + ATOMIC_MOVE). THIS is the commit
+    *      (`_intents/txn-<id>`, [[MetaIO.atomicWrite]]). THIS is the commit
     *      point of the transaction as a whole: before the marker, a crash
     *      aborts cleanly (orphan files only); after it, every access path
     *      ([[exists]]) rolls the remaining per-table commits forward.
@@ -79,7 +77,7 @@ private[sink] trait WarehouseTransactions { self: Warehouse =>
     val work = txn.deltas.toSeq.filter { case (_, d) =>
       d.files.nonEmpty || d.dels.nonEmpty }
     if (work.isEmpty) return Map.empty
-    Files.createDirectories(intentsDir)
+    io.mkdirs(intentsDir)
     val marker = intentsDir.resolve(s"txn-$id")
     val sb = new StringBuilder("graft-txn v1\n")
     work.foreach { case (name, d) =>
@@ -87,9 +85,7 @@ private[sink] trait WarehouseTransactions { self: Warehouse =>
         .append(d.schema.json).append('\n')
         .append(Manifest.entriesString(d.files, d.dels))
     }
-    val tmp = marker.resolveSibling(marker.getFileName.toString + ".tmp")
-    Files.writeString(tmp, sb.toString)
-    Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE)
+    io.atomicWrite(marker, sb.toString)
     // guard re-entry: the commit work inside goes through access paths
     // whose `exists` probe would otherwise see OUR marker and execute the
     // same intent a second time, nested
@@ -135,12 +131,12 @@ private[sink] trait WarehouseTransactions { self: Warehouse =>
         val landed = fs.forall(f => cur.files.exists(_.path == f.path)) &&
           ds.forall(d => cur.deletes.exists(_.path == d.path))
         if (!landed) commitTxnDelta(name, schema, fs, ds)
-        Files.writeString(done, "")
+        io.atomicWrite(done, "")
       }
     }
     sections.indices.foreach(idx =>
-      Files.deleteIfExists(marker.resolveSibling(s"${marker.getFileName}.done$idx")))
-    Files.deleteIfExists(marker)
+      io.delete(marker.resolveSibling(s"${marker.getFileName}.done$idx")))
+    io.delete(marker)
   }
 
   /** Land one table's staged delta as a snapshot commit, rebasing onto
@@ -220,15 +216,10 @@ private[sink] trait WarehouseTransactions { self: Warehouse =>
   private[sink] def recoverPendingTxns(): Unit = {
     if (Warehouse.inTxnRecovery.get()) return
     if (!Files.exists(intentsDir)) return
-    val markers = {
-      val s = Files.list(intentsDir)
-      try s.iterator().asInstanceOf[java.util.Iterator[Path]].asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("txn-") && !n.endsWith(".tmp") && !n.contains(".done")
-        }.toSeq.sortBy(_.getFileName.toString)
-      finally s.close()
-    }
+    val markers = io.list(intentsDir).filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("txn-") && !n.endsWith(".tmp") && !n.contains(".done")
+    }.sortBy(_.getFileName.toString)
     if (markers.isEmpty) return
     Warehouse.inTxnRecovery.set(true)
     try markers.foreach(executeTxnIntent)

@@ -1,6 +1,8 @@
 package graft.state
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
+
+import graft.sink.MetaIO
 
 /** Incremental-extraction state (SURVEY.md §2.9 I1-I5).
   *
@@ -8,8 +10,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * `~/.dlt/pipelines/<name>` (dlt `incremental(...)`,
   * `salesforce/__init__.py:41-47`) and deletes the state dir on
   * `force_replace` (`salesforce_pipeline.py:183-188`). Here: one flat
-  * properties file per pipeline, written atomically (tmp + ATOMIC_MOVE) so a
-  * crashed run never leaves a torn watermark. Values are opaque strings —
+  * properties file per pipeline, written by [[graft.sink.MetaIO]]'s atomic
+  * write (a private tmp per write, then one rename) so a crashed run never
+  * leaves a torn watermark. Values are opaque strings —
   * ISO timestamps for the Salesforce model, any orderable literal generally.
   */
 final class WatermarkStore(dir: String) {
@@ -37,20 +40,18 @@ final class WatermarkStore(dir: String) {
       put(resource, candidate)
   }
 
-  /** Read-modify-write of the one shared file through one fixed tmp file:
-    * serialized on the store, so resources loading concurrently
-    * (`Pipeline.run`) never lose each other's updates.
+  /** Read-modify-write of the one shared file: serialized on the store, so
+    * resources loading concurrently (`Pipeline.run`) never lose each
+    * other's updates.
     */
   def put(resource: String, value: String): Unit = synchronized {
     val m = all() + (resource -> WatermarkStore.canonical(value))
-    Files.createDirectories(file.getParent)
-    val tmp = file.resolveSibling("watermarks.tmp")
-    Files.writeString(tmp, m.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("\n"))
-    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    MetaIO.local.mkdirs(file.getParent)
+    MetaIO.local.atomicWrite(file, m.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("\n"))
   }
 
   /** I5 state reset (`force_replace` deletes the dlt state dir). */
-  def reset(): Unit = synchronized { Files.deleteIfExists(file) }
+  def reset(): Unit = synchronized { MetaIO.local.delete(file) }
 
   private implicit class JListOps[A](l: java.util.List[A]) {
     def asScala: Seq[A] = {
