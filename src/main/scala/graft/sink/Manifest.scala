@@ -541,7 +541,7 @@ object Manifest {
   private def segBudget(live: Int): Int =
     math.max(MaxSegments, 2 * (live / SegTargetEntries + 1))
 
-  /** Commit-path write: express `next` as the BASE root's lines plus this
+  /** Write `next` at `target` as the BASE root's lines plus this
     * commit's delta — `X` tombstones for entries the commit removed or
     * changed, one fresh segment for entries it added or changed — so the
     * metadata written per commit is O(delta), not O(table). Falls back to
@@ -557,10 +557,12 @@ object Manifest {
     * order, changed entries re-land at the tail) — no reader depends on
     * manifest order (pruning, MOR overlay, change-feed diffs are all
     * path-keyed).
+    *
+    * The standalone form of [[deltaRoot]]: the commit path publishes
+    * `deltaRoot`'s text by [[MetaIO.casLink]] instead of replacing.
     */
-  def writeDelta(target: Path, next: Manifest, basePath: Option[Path],
-                 io: MetaIO = MetaIO.local): Unit =
-    io.atomicWrite(target, deltaRoot(io, target.getParent, next, basePath))
+  def writeDelta(target: Path, next: Manifest, basePath: Option[Path]): Unit =
+    MetaIO.local.atomicWrite(target, deltaRoot(MetaIO.local, target.getParent, next, basePath))
 
   /** [[writeDelta]]'s content: writes the fresh segment(s) into `dir` and
     * returns the root's text, which the commit publishes by CAS.

@@ -69,10 +69,20 @@ private[graft] class MetaIO {
   }
 
   /** Atomic rename (POSIX `rename(2)`): replaces a file target, fails on a
-    * non-empty directory target.
+    * non-empty directory target. For publishing a file over its old self
+    * (WAP tombstone, CDC window); a table directory moves by [[moveNew]].
     */
   def move(from: Path, to: Path): Unit = {
     step(); Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Move to a name that must be free: `FileAlreadyExistsException` when
+    * `to` exists, so a directory move never silently replaces an empty
+    * directory the way `rename(2)` would (e.g. a table dir a racing append
+    * has just created).
+    */
+  def moveNew(from: Path, to: Path): Unit = {
+    step(); Files.move(from, to)
   }
 
   /** Delete one file or empty directory; false when it was not there. */

@@ -340,7 +340,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
       s"cannot rename a branch: $from -> $to (branches move with their table)")
     require(exists(from), s"no such table: $from")
     require(!Files.exists(tableDir(to)), s"table already exists: $to")
-    io.move(tableDir(from), tableDir(to))
+    io.moveNew(tableDir(from), tableDir(to))
   }
 
   // ------------------------------------------------- atomic family rename --
@@ -360,10 +360,11 @@ final class Warehouse(private[sink] val spark: SparkSession,
     * converges on the next access.
     *
     * Pairs execute IN ORDER, so a chained swap
-    * `Seq(live -> retired, candidate -> live)` is one atomic trade.
-    * Validation is sequential against the simulated end state: each `from`
-    * must exist (possibly produced by an earlier pair), each `to` must be
-    * free (possibly freed by an earlier pair).
+    * `Seq(live -> retired, candidate -> live)` is one atomic trade, and a
+    * rotation through a spare name `Seq(a -> tmp, b -> a, tmp -> b)` swaps
+    * two tables. Validation is sequential against the simulated end state:
+    * each `from` must exist (possibly produced by an earlier pair), each
+    * `to` must be free (possibly freed by an earlier pair).
     */
   def renameAll(pairs: Seq[(String, String)]): Unit = {
     recoverPendingRenames()
@@ -388,51 +389,57 @@ final class Warehouse(private[sink] val spark: SparkSession,
     executeRenameIntent(marker)
   }
 
-  /** Roll one intent forward, tolerating a racing recoverer. Pairs move in
-    * order, so which of the involved tables exist after k moves is known
-    * for every k; the largest k the disk matches is the progress. (A
-    * per-pair "to present, from absent" test cannot tell: a chained swap's
-    * first source reappears as the second target.) The remaining moves
-    * run, each re-checked; a disk matching no k, or a move that makes no
-    * progress, cannot converge and fails loudly. The marker is deleted
-    * only after every pair holds.
+  /** Roll one intent forward. Progress is durable: a `.done<i>` side
+    * marker follows pair i's move, so the first pair without one is the
+    * only pair that may or may not have moved, and its own two tables tell
+    * which (before its move `from` is present and `to` free, after it the
+    * reverse). Table presence alone cannot tell progress: a rotation's
+    * tables exist after its last move exactly as before its first. Once
+    * every pair holds, the marker is deleted first and its side markers
+    * after it ([[recoverPendingRenames]] sweeps the orphans of a crash in
+    * between). Executors in one JVM serialize on `Warehouse.renameLock`,
+    * so a probe that meets a live intent waits for it instead of racing it.
     */
-  private def executeRenameIntent(marker: Path): Unit = {
-    val pairs = Files.readString(marker).split('\n').toSeq.filter(_.nonEmpty).map { l =>
-      val i = l.indexOf('\t'); (l.substring(0, i), l.substring(i + 1))
+  private def executeRenameIntent(marker: Path): Unit = Warehouse.renameLock.synchronized {
+    if (Files.exists(marker)) {
+      val pairs = Files.readString(marker).split('\n').toSeq.filter(_.nonEmpty).map { l =>
+        val i = l.indexOf('\t'); (l.substring(0, i), l.substring(i + 1))
+      }
+      def done(i: Int) = marker.resolveSibling(s"${marker.getFileName}.done$i")
+      pairs.zipWithIndex.foreach { case ((f, t), i) =>
+        if (!Files.exists(done(i))) {
+          val fd = tableDir(f); val td = tableDir(t)
+          if (Files.exists(fd) && !Files.exists(td)) {
+            try io.moveNew(fd, td)
+            catch { case _: java.nio.file.FileSystemException => () } // racer won; verified below
+          }
+          if (!(Files.exists(td) && !Files.exists(fd)))
+            throw new IllegalStateException(s"rename intent ${marker.getFileName} $f -> $t " +
+              s"cannot converge (from=${Files.exists(fd)}, to=${Files.exists(td)})")
+          io.atomicWrite(done(i), "")
+        }
+      }
+      io.delete(marker)
+      pairs.indices.foreach(i => io.delete(done(i)))
     }
-    val names = pairs.flatMap { case (f, t) => Seq(f, t) }.distinct
-    // a name exists before the intent iff its first pair moves it away
-    val before = names.map(n => n -> (pairs.find(p => p._1 == n || p._2 == n).get._1 == n)).toMap
-    val afterK = pairs.scanLeft(before) { case (m, (f, t)) => m + (f -> false) + (t -> true) }
-    def progress(): Int = {
-      val now = names.map(n => n -> Files.exists(tableDir(n))).toMap
-      afterK.lastIndexWhere(_ == now)
-    }
-    var k = progress()
-    while (k >= 0 && k < pairs.size) {
-      val (f, t) = pairs(k)
-      try io.move(tableDir(f), tableDir(t))
-      catch { case _: java.nio.file.FileSystemException => () } // racer moved it; re-checked
-      val next = progress()
-      k = if (next > k) next else -1
-    }
-    if (k < 0)
-      throw new IllegalStateException(s"rename intent ${marker.getFileName} cannot converge " +
-        names.map(n => s"$n=${Files.exists(tableDir(n))}").mkString("(", ", ", ")"))
-    io.delete(marker)
   }
 
-  /** Complete any pending [[renameAll]] intents (oldest first). One stat
-    * call when none have ever been created — the common case — so the
-    * [[exists]]-path guard is effectively free.
+  /** Complete any pending [[renameAll]] intents (oldest first), and drop
+    * the side markers of intents already complete. One stat call when none
+    * have ever been created — the common case — so the [[exists]]-path
+    * guard is effectively free.
     */
   private def recoverPendingRenames(): Unit = {
     if (!Files.exists(intentsDir)) return
-    io.list(intentsDir)
+    val (markers, sides) = io.list(intentsDir)
       .filter(p => p.getFileName.toString.startsWith("rename-") &&
-        !p.getFileName.toString.endsWith(".tmp")).sortBy(_.getFileName.toString)
-      .foreach(executeRenameIntent)
+        !p.getFileName.toString.endsWith(".tmp"))
+      .partition(p => !p.getFileName.toString.contains(".done"))
+    markers.sortBy(_.getFileName.toString).foreach(executeRenameIntent)
+    sides.filter { p =>
+      val n = p.getFileName.toString
+      !Files.exists(p.resolveSibling(n.substring(0, n.indexOf(".done"))))
+    }.foreach(io.delete)
   }
 
 
@@ -2504,6 +2511,9 @@ final class Warehouse(private[sink] val spark: SparkSession,
 }
 
 object Warehouse {
+  /** Held while a [[renameAll]] intent executes or rolls forward. */
+  private val renameLock = new Object
+
   /** Open [[withWriteConfs]] scopes per session: conf key -> (writers
     * inside, the value the first writer in found).
     */

@@ -47,6 +47,18 @@ class RenameAllSpec extends SparkSpec {
     assert(!wh.exists("candidate"))
   }
 
+  test("rotation through a spare name: a -> spare, b -> a, spare -> b swaps two tables") {
+    val (wh, root) = mk("ra-rotate")
+    wh.append("a", df(("was-a", 1)))
+    wh.append("b", df(("was-b", 2)))
+    wh.renameAll(Seq("a" -> "spare", "b" -> "a", "spare" -> "b"))
+    assert(wh.load("a").collect().head.getString(0) == "was-b")
+    assert(wh.load("b").collect().head.getString(0) == "was-a")
+    assert(!wh.exists("spare"))
+    assert(!Files.list(Paths.get(root, "_intents")).iterator().hasNext,
+      "the intent and its progress markers must clear")
+  }
+
   test("validation: missing source, occupied target, duplicates refuse") {
     val (wh, _) = mk("ra-validate")
     wh.append("a", df(("a", 1)))

@@ -90,6 +90,9 @@ class CrashMatrixSpec extends SparkSpec {
     Op("chained two-pair renameAll", Seq("live", "retired", "cand"),
       wh => { wh.append("live", rows("l", 1, 2)); wh.append("cand", rows("c", 3)) },
       _.renameAll(Seq("live" -> "retired", "cand" -> "live"))),
+    Op("three-pair rotation renameAll", Seq("a", "b", "spare"),
+      wh => { wh.append("a", rows("a", 1, 2)); wh.append("b", rows("b", 3)) },
+      _.renameAll(Seq("a" -> "spare", "b" -> "a", "spare" -> "b"))),
     Op("WAP stageAppend + publishStage", Seq("t"), _.append("t", rows("a", 1, 2)),
       wh => wh.publishStage("t", wh.stageAppend("t", rows("s", 5, 6)))),
     Op("createBranch + publishBranch", Seq("t"), _.append("t", rows("a", 1, 2)),
@@ -115,15 +118,17 @@ class CrashMatrixSpec extends SparkSpec {
     } finally s.close()
   }
 
-  /** Leftovers expiry must have removed: tmp files anywhere in the
-    * warehouse metadata, older commit-attempt files, and segments no
-    * remaining root (of any ref) lists.
+  /** Leftovers expiry must have removed: tmp files in the table dirs,
+    * older commit-attempt files, segments no remaining root (of any ref)
+    * lists, and anything at all in `_intents` (markers, progress markers,
+    * their tmps).
     */
   private def leftovers(root: String, tables: Seq[String]): Seq[String] = {
     val r = Paths.get(root)
-    val tmps = (tables.map(r.resolve) :+ r.resolve("_intents")).flatMap(d =>
-      MetaIO.local.list(d)).map(_.getFileName.toString)
-      .filter(n => n.endsWith(".tmp") || n.matches("m\\d+(@.+)?\\.manifest\\.w.*"))
+    val tmps = tables.map(r.resolve).flatMap(d => MetaIO.local.list(d))
+      .map(_.getFileName.toString)
+      .filter(n => n.endsWith(".tmp") || n.matches("m\\d+(@.+)?\\.manifest\\.w.*")) ++
+      MetaIO.local.list(r.resolve("_intents")).map(p => s"_intents/${p.getFileName}")
     val unrefSegs = tables.map(r.resolve).flatMap { td =>
       val names = MetaIO.local.list(td).map(_.getFileName.toString)
       val referenced = names.filter(_.matches("m\\d+(@.+)?\\.manifest"))

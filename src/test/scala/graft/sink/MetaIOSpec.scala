@@ -80,8 +80,22 @@ class MetaIOSpec extends SparkSpec {
     io.atomicWrite(dir.resolve("a/b/f"), "x") // tmp write + rename
     assert(io.casLink(dir.resolve("a/g"), "y")) // tmp write + link + tmp delete
     io.move(dir.resolve("a/g"), dir.resolve("a/h"))
-    io.deleteTree(dir.resolve("a")) // a, a/b, a/b/f, a/h
-    assert(io.steps == 1 + 2 + 3 + 1 + 4)
+    io.moveNew(dir.resolve("a/h"), dir.resolve("a/i"))
+    io.deleteTree(dir.resolve("a")) // a, a/b, a/b/f, a/i
+    assert(io.steps == 1 + 2 + 3 + 1 + 1 + 4)
     assert(!Files.exists(dir.resolve("a")))
+  }
+
+  test("moveNew refuses an existing target, even an empty directory") {
+    val dir = Paths.get(tmpDir("mio-movenew"))
+    val io = MetaIO.local
+    io.mkdirs(dir.resolve("src"))
+    io.atomicWrite(dir.resolve("src/f"), "x")
+    io.mkdirs(dir.resolve("empty"))
+    intercept[java.nio.file.FileAlreadyExistsException](
+      io.moveNew(dir.resolve("src"), dir.resolve("empty")))
+    assert(Files.readString(dir.resolve("src/f")) == "x")
+    io.moveNew(dir.resolve("src"), dir.resolve("dst"))
+    assert(Files.readString(dir.resolve("dst/f")) == "x" && !Files.exists(dir.resolve("src")))
   }
 }
