@@ -143,33 +143,37 @@ object Pipeline {
       val t0 = System.nanoTime()
       val stored = state.get(res.name)
       // cache(): the merge disposition executes the batch more than once
-      // (key-range stats, victim join, write); an uncached nondeterministic
-      // plan (orderBy+limit with ties) could write different rows than the
-      // pass the observed watermark came from — silently losing rows to the
-      // strict `>` filter forever.
+      // (key-bounds aggregate, victim anti-join, batch write) and the
+      // aggregate below is one more pass. One cached evaluation keeps all
+      // of them on the same rows: an uncached nondeterministic plan (a
+      // limited extract with ties on rk) could write different rows than
+      // the pass the observed watermark came from — silently losing rows to
+      // the strict `>` filter forever. Released in the finally, so a failed
+      // attempt (retries included) leaves no cached batch behind.
       val batch = cfg.extract match {
         case Some(f) => f(spark, res, stored, cfg.testLimit).cache()
         case None => SObjectSource.extract(spark, cfg.sfDir, res,
           watermark = stored, limit = cfg.testLimit).cache()
       }
-      // One aggregate job computes both the row count and the new watermark
-      // off the cached batch. (Deliberately NOT observe()/CollectMetrics
-      // riding the write: Warehouse.write range-clusters the batch, and the
-      // RangePartitioner's bounds-sampling pass executes the subtree BELOW
-      // the exchange a second time — a CollectMetrics there double-counts
-      // every metric. Measured: exactly 2× row counts under every
-      // disposition with non-empty cluster keys.)
-      val (rows, newWm) = res.replicationKey match {
-        case Some(rk) =>
-          // µs-precision render: truncating to seconds would re-extract
-          // boundary rows with sub-second timestamps on the next run.
-          val agg = batch.agg(count(lit(1)).as("n"),
-            date_format(max(col(rk)), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("wm")).head()
-          (agg.getLong(0), Option(agg.getString(1)))
-        case None => (batch.count(), None)
-      }
-      val version = wh.write(res, batch)
-      batch.unpersist()
+      val (rows, version, newWm) = try {
+        // One aggregate job computes both the row count and the new watermark
+        // off the cached batch. (Deliberately NOT observe()/CollectMetrics
+        // riding the write: Warehouse.write range-clusters the batch, and the
+        // RangePartitioner's bounds-sampling pass executes the subtree BELOW
+        // the exchange a second time — a CollectMetrics there double-counts
+        // every metric. Measured: exactly 2× row counts under every
+        // disposition with non-empty cluster keys.)
+        val (rows, newWm) = res.replicationKey match {
+          case Some(rk) =>
+            // µs-precision render: truncating to seconds would re-extract
+            // boundary rows with sub-second timestamps on the next run.
+            val agg = batch.agg(count(lit(1)).as("n"),
+              date_format(max(col(rk)), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("wm")).head()
+            (agg.getLong(0), Option(agg.getString(1)))
+          case None => (batch.count(), None)
+        }
+        (rows, wh.write(res, batch), newWm)
+      } finally batch.unpersist()
       newWm.foreach(w => state.advance(res.name, w))
       LoadReport(res.name, res.mode, rows, version, newWm,
         (System.nanoTime() - t0) / 1000000)

@@ -49,8 +49,9 @@ import scala.jdk.CollectionConverters._
   * behaviour of that one seam at each of its steps.
   *
   * @param mergeBroadcastMaxKeys size gate for the merge anti-join: the
-  *   distinct incoming PK set is broadcast only when it holds at most this
-  *   many tuples (the count rides on the stats aggregate — no extra job).
+  *   incoming PK tuples (one per batch row, duplicates included — exactly
+  *   what is broadcast) are broadcast only when there are at most this many
+  *   (the count rides on the bounds aggregate — no extra job).
   *   Larger delete sets fall back to a shuffled sort-merge anti-join —
   *   slower, but a backfill-sized batch (10⁸ PKs) must not OOM executors
   *   the way an unconditional `broadcast()` hint would (the hint disables
@@ -570,6 +571,35 @@ final class Warehouse(private[sink] val spark: SparkSession,
     Seq((matF, true), (virtF, false)).filter(_._1.nonEmpty)
       .map { case (fs, isMat) => part(fs, isMat) }
       .reduce(_ unionByName _)
+  }
+
+  /** The victims of a rewrite, read back for rewriting ([[victimScan]]):
+    * `frame` carries the lineage columns physically when `carry`, and
+    * `scanBytes` sizes the rewrite for [[cluster]]'s small-batch gate.
+    */
+  private[sink] final case class VictimScan(frame: DataFrame, carry: Boolean, scanBytes: BigInt)
+
+  /** The one read every content-preserving rewrite starts from. When every
+    * victim has a row-id base, the rows ride their lineage as the physical
+    * [[RowLineage]] columns ([[lineageFrame]]), so survivors keep their ids;
+    * victims predating lineage fall back to the plain delete-applied scan.
+    * `scanBytes` is the size of the files the frame scans, as Spark's file
+    * index already listed it (no extra stat call). The plan's own estimate
+    * is useless here: Spark sizes an inner join as the product of its
+    * children, so the lineage lookup joins inflate it thousands of times.
+    */
+  private[sink] def victimScan(name: String, m: Manifest): VictimScan = {
+    val carry = m.files.forall(_.firstRowId >= 0)
+    val frame =
+      if (carry) lineageFrame(name, m)
+        .withColumnRenamed("_row_id", RowLineage.PhysCol)
+        .withColumnRenamed("_last_updated_version", RowLineage.VerCol)
+      else morFrame(name, m)
+    val scanBytes = frame.queryExecution.analyzed.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        BigInt(l.relation.sizeInBytes)
+    }.sum
+    VictimScan(frame, carry, scanBytes)
   }
 
   /** Scan `m`'s data files with its pending equality deletes applied
@@ -1236,9 +1266,14 @@ final class Warehouse(private[sink] val spark: SparkSession,
     *     cluster-key range).
     * Without clustering, every file of a shuffled batch spans the whole key
     * range and no stat-based pruning can ever drop one.
+    *
+    * A batch that fits one file skips all three and lands as one sorted task
+    * ([[smallBatch]]). Rewrites pass `scanBytes` from their [[victimScan]],
+    * so a rewrite is sized from its victim scan rather than from a plan
+    * estimate that the lineage joins inflate.
     */
   private[sink] def cluster(in: DataFrame, clusterBy: Seq[String],
-                      spec: Seq[String] = Nil): DataFrame = {
+                      spec: Seq[String] = Nil, scanBytes: Option[BigInt] = None): DataFrame = {
     // declared partition transforms cluster FIRST (files align with
     // partition values, so the transform bounds are tight — one or few
     // values per file), then any explicit clusterBy within them.
@@ -1263,7 +1298,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
     val withP = specCols.foldLeft(in) { case (d, (n, e)) => d.withColumn(n, e) }
     val all = specCols.map(p => col(p._1)) ++ clusterBy.map(col)
     if (all.isEmpty) in
-    else if (smallBatch(in)) {
+    else if (smallBatch(in, scanBytes)) {
       // SIZE-GATED single-file arm (guide §2.4/§6): a batch small enough to
       // land in one target-size file gains nothing from a distribution
       // exchange — range partitioning would pay its hidden RangePartitioner
@@ -1310,31 +1345,34 @@ final class Warehouse(private[sink] val spark: SparkSession,
     * is provably (or estimated) at most `spark.graft.write.smallBatchBytes`
     * of IN-MEMORY row bytes (default 64 MB ≈ a 16-32 MB parquet file —
     * inside guide §6's file-size goal as a single file). Sizing sources, in
-    * trust order: when every leaf of the optimized plan is a materialized
-    * localCheckpoint RDD (the ingest-path shape — appendDeduped keepers,
-    * index code/posting batches), the EXACT block-manager byte count of
-    * those blocks (deserialized block bytes run 2-4x the eventual parquet
-    * bytes, so the error is in the safe direction); otherwise the plan's
-    * sizeInBytes estimate, whose failure mode (filters and joins
-    * over-estimate) also keeps big batches on the distribution arms. The
-    * threshold is a conf so a deployment can set it to its target file
-    * size; 0 disables the arm outright.
+    * trust order: a rewrite's `scanBytes`, the size of the victim files it
+    * reads ([[victimScan]]; merge, delete and compaction rewrites write at
+    * most what they scan, an UPDATE about as much); when every leaf of the
+    * optimized plan is a materialized localCheckpoint RDD (the ingest-path
+    * shape — appendDeduped keepers, index code/posting batches), the EXACT
+    * block-manager byte count of those blocks (deserialized block bytes
+    * run 2-4x the eventual parquet bytes, so the error is in the safe
+    * direction); otherwise the plan's sizeInBytes estimate, whose failure
+    * mode (filters and joins over-estimate) also keeps big batches on the
+    * distribution arms. The threshold is a conf so a deployment can set it
+    * to its target file size; 0 disables the arm outright, whatever the
+    * sizing source.
     */
-  private def smallBatch(in: DataFrame): Boolean = {
+  private def smallBatch(in: DataFrame, scanBytes: Option[BigInt]): Boolean = {
     val threshold = spark.conf.get("spark.graft.write.smallBatchBytes",
       (64L * 1024 * 1024).toString).toLong
     if (threshold <= 0) return false
-    val plan = in.queryExecution.optimizedPlan
-    val leaves = plan.collectLeaves()
-    val exact: Seq[Option[BigInt]] = leaves.map {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        spark.sparkContext.getRDDStorageInfo.find(_.id == l.rdd.id)
-          .map(i => BigInt(i.memSize + i.diskSize))
-      case _ => None
-    }
-    val est: BigInt =
+    val est: BigInt = scanBytes.getOrElse {
+      val plan = in.queryExecution.optimizedPlan
+      val exact: Seq[Option[BigInt]] = plan.collectLeaves().map {
+        case l: org.apache.spark.sql.execution.LogicalRDD =>
+          spark.sparkContext.getRDDStorageInfo.find(_.id == l.rdd.id)
+            .map(i => BigInt(i.memSize + i.diskSize))
+        case _ => None
+      }
       if (exact.nonEmpty && exact.forall(_.isDefined)) exact.flatten.sum
       else plan.stats.sizeInBytes
+    }
     est <= threshold
   }
 
@@ -1512,10 +1550,10 @@ final class Warehouse(private[sink] val spark: SparkSession,
     // A declared partition spec re-clusters by its transform values first
     // (sortBy within them) so transform bounds come out tight again —
     // unless z-order was asked for, which IS the layout choice.
-    rewriteSmallFiles(name, man, smalls.map(_._1), sortBy ++ zCols, src =>
+    rewriteSmallFiles(name, man, smalls.map(_._1), sortBy ++ zCols, (src, scanBytes) =>
       zOrderBy match {
         case Some((a, b)) => graft.functions.ZOrder.layout(src, a, b, nOut)
-        case None if spec.nonEmpty => cluster(src, sortBy, spec)
+        case None if spec.nonEmpty => cluster(src, sortBy, spec, Some(scanBytes))
         case None if sortBy.nonEmpty =>
           src.repartitionByRange(nOut, sortBy.map(col): _*)
             .sortWithinPartitions(sortBy.map(col): _*)
@@ -1528,31 +1566,26 @@ final class Warehouse(private[sink] val spark: SparkSession,
 
   /** Shared rewrite core of [[compact]] (byte grain, layout options) and
     * [[compactFiles]] (manifest row grain, key clustering): read the
-    * victims, lay them out, write with inherited + extra stats at the new
-    * commit's seq, carry everything else forward untouched.
+    * victims, lay them out (`layout` gets the victim frame and its scan
+    * bytes), write with inherited + extra stats at the new commit's seq,
+    * carry everything else forward untouched.
     */
   private[sink] def rewriteSmallFiles(name: String, man: Manifest, victims: Seq[DataFile],
-                                extraStats: Seq[String], layout: DataFrame => DataFrame,
+                                extraStats: Seq[String],
+                                layout: (DataFrame, BigInt) => DataFrame,
                                 sortedBy: Seq[String] = Nil): Long = {
     val next = currentVersion(name) + 1
     // lineage carry (Iceberg v3 rule): compaction is content-preserving,
-    // so rows keep their ids by riding them as a physical column; victims
-    // predating lineage fall back to the plain rewrite
-    val carry = victims.forall(_.firstRowId >= 0)
-    val src =
-      if (carry) lineageFrame(name, Manifest(man.schema, victims, Nil))
-        .withColumnRenamed("_row_id", RowLineage.PhysCol)
-        .withColumnRenamed("_last_updated_version", RowLineage.VerCol)
-      else spark.read.schema(man.schema)
-        .parquet(victims.map(f => tableDir(name).resolve(f.path).toString): _*)
+    // so rows keep their ids across it
+    val src = victimScan(name, Manifest(man.schema, victims, Nil))
     // current spec transforms requested EXPLICITLY: after a spec evolution
     // the victims may predate the current spec entirely, so inheritance
     // alone would leave the re-clustered files without the bounds the new
     // layout prunes (and SPJ qualifies) by
-    val rewritten = writeData(name, layout(src), man.schema, s"d${next}c",
+    val rewritten = writeData(name, layout(src.frame, src.scanBytes), man.schema, s"d${next}c",
       extraStats ++ partitionSpec(name) ++ inheritedStatsCols(name, Some(man)),
       seq = next, spec = partitionSpec(name), sortedBy = sortedBy,
-      lineageMat = carry)
+      lineageMat = src.carry)
     val victimSet = victims.map(_.path).toSet
     // Rebase: compaction is content-preserving, so concurrently-ADDED files
     // simply carry through; but the victims must survive unchanged (their
@@ -1582,8 +1615,12 @@ final class Warehouse(private[sink] val spark: SparkSession,
     *      provably disjoint files carry into the new manifest untouched,
     *      so a merge touching one region of a sorted 100 TB table rewrites
     *      only that region's files;
-    *   2. surviving files are anti-joined against the BROADCAST distinct
-    *      incoming PK tuples — no predicate tree, no driver materialization.
+    *   2. surviving files are anti-joined against the BROADCAST raw
+    *      incoming PK tuples (no distinct: LEFT ANTI is the same against
+    *      duplicates; the gate counts batch rows, which is what is
+    *      broadcast) — no predicate tree, no driver materialization.
+    * The victims' rewrite is sized from its victim scan ([[victimScan]]),
+    * so a small rewrite lands as one sorted file.
     * Plain (non-null-safe) equality keeps the reference's null-PK contract:
     * null-keyed rows are appended but never match/delete (SURVEY §7.6.4) —
     * which also makes all-null ("z"-stat) files provably disjoint.
@@ -1602,19 +1639,23 @@ final class Warehouse(private[sink] val spark: SparkSession,
     val man = currentManifest(name)
     val schema = man.schema
     val in = SchemaOps.conform(df, schema)
-    // persisted: feeds the stats aggregate AND the anti-join below
-    // (released in the finally — a commit conflict must not leak blocks)
-    val keys = in.select(pks.map(col): _*).distinct().persist()
+    // persisted: the bounds aggregate and the anti-join below read ONE
+    // evaluation of the batch's key tuples (released in the finally — a
+    // commit conflict must not leak blocks). No distinct: LEFT ANTI gives
+    // the same result against duplicate keys, and a distinct costs its own
+    // shuffle and jobs on every merge.
+    val keys = in.select(pks.map(col): _*).persist()
     try {
 
-    // One tiny aggregate over the distinct keys → per-column batch bounds
-    // PLUS the key count that gates the broadcast (no extra job).
+    // One aggregate over the raw key tuples → per-column batch bounds PLUS
+    // the row count that gates the broadcast — exactly the rows a
+    // broadcast would ship (no extra job).
     val scs = statCols(schema, pks)
     val aggs = count(lit(1)).as("__n") +: scs.zipWithIndex.flatMap { case (sc, i) =>
       Seq(sc.minExpr.as(s"__mn$i"), sc.maxExpr.as(s"__mx$i"))
     }
     val aggRow = keys.agg(aggs.head, aggs.tail: _*).head()
-    val keyCount = aggRow.getLong(aggRow.fieldIndex("__n"))
+    val keyRows = aggRow.getLong(aggRow.fieldIndex("__n"))
     val batchStats: Map[String, ColStat] = statsOfRow(aggRow, scs)
 
     // A PK column with NO non-null batch value ⇒ every incoming tuple has a
@@ -1648,13 +1689,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
         // not in the batch) are unchanged content — they keep their row ids
         // across the rewrite; the batch's rows are new row versions and draw
         // fresh ids from their own files' ranges
-        val carry = victims.forall(_.firstRowId >= 0)
-        val target =
-          if (carry) lineageFrame(name, Manifest(schema, victims, man.deletes))
-            .withColumnRenamed("_row_id", RowLineage.PhysCol)
-        .withColumnRenamed("_last_updated_version", RowLineage.VerCol)
-          else spark.read.schema(schema)
-            .parquet(victims.map(f => tableDir(name).resolve(f.path).toString): _*)
+        val target = victimScan(name, Manifest(schema, victims, man.deletes))
         // Size-gated broadcast: typical incremental batches (10³-10⁴ PKs)
         // broadcast — every executor filters its files with a local hash
         // lookup, zero shuffle of the (huge) target side. A backfill-sized
@@ -1662,11 +1697,12 @@ final class Warehouse(private[sink] val spark: SparkSession,
         // shuffled sort-merge anti-join instead (both sides exchange on the
         // PK — linear, spill-safe, just not shuffle-free).
         val keysSide =
-          if (keyCount <= mergeBroadcastMaxKeys) broadcast(keys)
+          if (keyRows <= mergeBroadcastMaxKeys) broadcast(keys)
           else keys.hint("merge")
-        val kept = target.join(keysSide, pks, "left_anti")
-        writeData(name, cluster(kept, clusterBy, spec), schema, s"d${next}r", statsFor,
-          seq = next, spec = spec, sortedBy = clusterBy, lineageMat = carry)
+        val kept = target.frame.join(keysSide, pks, "left_anti")
+        writeData(name, cluster(kept, clusterBy, spec, Some(target.scanBytes)), schema,
+          s"d${next}r", statsFor, seq = next, spec = spec, sortedBy = clusterBy,
+          lineageMat = target.carry)
       }
     val writeBatchFiles = () => writeData(name, cluster(in, clusterBy, spec), schema,
       s"d${next}b", statsFor, seq = next, spec = spec, sortedBy = clusterBy)
@@ -1954,20 +1990,15 @@ final class Warehouse(private[sink] val spark: SparkSession,
     val next = currentVersion(name) + 1
     // lineage carry: a delete's SURVIVORS are unchanged rows — they keep
     // their ids across the rewrite (victims predating lineage fall back)
-    val carry = victims.forall(_.firstRowId >= 0)
-    val target =
-      if (carry) lineageFrame(name, Manifest(man.schema, victims, Nil))
-        .withColumnRenamed("_row_id", RowLineage.PhysCol)
-        .withColumnRenamed("_last_updated_version", RowLineage.VerCol)
-      else spark.read.schema(man.schema)
-        .parquet(victims.map(f => tableDir(name).resolve(f.path).toString): _*)
+    val target = victimScan(name, Manifest(man.schema, victims, Nil))
     // re-cluster survivors on the partition spec (compactDeletes discipline):
     // without it, rewritten files of a partitioned table span all transform
     // values, their bounds go loose, and transform pruning degrades
-    val kept = cluster(target.filter(!coalesce(cond, lit(false))), Nil, partitionSpec(name))
+    val kept = cluster(target.frame.filter(!coalesce(cond, lit(false))), Nil,
+      partitionSpec(name), Some(target.scanBytes))
     val rewritten = writeData(name, kept, man.schema, s"d${next}r",
       inheritedStatsCols(name, Some(man)), seq = next, spec = partitionSpec(name),
-      lineageMat = carry)
+      lineageMat = target.carry)
     val deleted = victims.map(_.rows).sum - rewritten.map(_.rows).sum
     if (deleted == 0L) // predicate overlapped bounds but matched no rows
       return DeleteReport(currentVersion(name), 0L, untouched.size)
@@ -2023,13 +2054,8 @@ final class Warehouse(private[sink] val spark: SparkSession,
     // lineage carry — the Iceberg v3 UPDATE rule: an in-place update keeps
     // the row's IDENTITY (its id), only the values change; unmatched rows
     // in the victim files are plain carry-over
-    val carry = victims.forall(_.firstRowId >= 0)
-    val target =
-      if (carry) lineageFrame(name, Manifest(man.schema, victims, Nil))
-        .withColumnRenamed("_row_id", RowLineage.PhysCol)
-        .withColumnRenamed("_last_updated_version", RowLineage.VerCol)
-      else spark.read.schema(man.schema)
-        .parquet(victims.map(f => tableDir(name).resolve(f.path).toString): _*)
+    val scan = victimScan(name, Manifest(man.schema, victims, Nil))
+    val (target, carry) = (scan.frame, scan.carry)
     val hit = coalesce(cond, lit(false))
     val updated = target.filter(hit).count()
     if (updated == 0L)
@@ -2051,7 +2077,8 @@ final class Warehouse(private[sink] val spark: SparkSession,
       }
     } ++ keepCols: _*)
     // same re-clustering as deleteWhere: keep transform bounds tight on rewrite
-    val rewritten = writeData(name, cluster(rewrittenFrame, Nil, partitionSpec(name)),
+    val rewritten = writeData(name,
+      cluster(rewrittenFrame, Nil, partitionSpec(name), Some(scan.scanBytes)),
       man.schema, s"d${next}u", inheritedStatsCols(name, Some(man)), seq = next,
       spec = partitionSpec(name), lineageMat = carry)
     // Rebase: same validation as deleteWhere — a concurrently-added file

@@ -166,17 +166,11 @@ private[sink] trait WarehouseMor { self: Warehouse =>
       if (victims.isEmpty) Nil
       else {
         // lineage carry (Iceberg v3 rule): surviving rows keep their row
-        // ids across the rewrite by riding them as a physical column;
-        // victims predating lineage fall back to the plain rewrite
-        val carry = victims.forall(_.firstRowId >= 0)
-        val frame =
-          if (carry) lineageFrame(name, Manifest(man.schema, victims, man.deletes))
-            .withColumnRenamed("_row_id", RowLineage.PhysCol)
-            .withColumnRenamed("_last_updated_version", RowLineage.VerCol)
-          else morFrame(name, Manifest(man.schema, victims, man.deletes))
-        writeData(name, cluster(frame, Nil, partitionSpec(name)), man.schema,
-          s"d${next}x", inheritedStatsCols(name, Some(man)), seq = next,
-          spec = partitionSpec(name), lineageMat = carry)
+        // ids across the rewrite by riding them as a physical column
+        val src = victimScan(name, Manifest(man.schema, victims, man.deletes))
+        writeData(name, cluster(src.frame, Nil, partitionSpec(name), Some(src.scanBytes)),
+          man.schema, s"d${next}x", inheritedStatsCols(name, Some(man)), seq = next,
+          spec = partitionSpec(name), lineageMat = src.carry)
       }
     // Rebase: clears the delete list it materialized, so the winner must
     // not have changed it; victims intact; concurrently-added files carry
@@ -216,7 +210,8 @@ private[sink] trait WarehouseMor { self: Warehouse =>
     val (small, _) = man.files.partition(_.rows < smallRows)
     if (small.size < 2) return currentVersion(name)
     rewriteSmallFiles(name, man, small, clusterBy,
-      src => cluster(src, clusterBy, partitionSpec(name)), sortedBy = clusterBy)
+      (src, scanBytes) => cluster(src, clusterBy, partitionSpec(name), Some(scanBytes)),
+      sortedBy = clusterBy)
   }
 
   /** Thresholds for [[maintain]] — each maps one manifest-resident signal

@@ -10,7 +10,11 @@ import graft.schema.SchemaOps
   * The reference extracts one sObject at a time through a synthesized SOQL
   * query — projection (compound fields pruned, `attributes` dropped), an
   * optional strict-`>` watermark predicate, `ORDER BY rk ASC`, and a test
-  * LIMIT (`salesforce/helpers/records.py:69-94`). In this zero-egress repo
+  * LIMIT (`salesforce/helpers/records.py:69-94`). Here the ORDER BY applies
+  * only under a LIMIT: it decides which rows the LIMIT keeps, and without
+  * one no disposition can observe row order (the batch is cached, the
+  * watermark is `max(rk)`, every disposition lands the whole batch and the
+  * write re-clusters by key). In this zero-egress repo
   * the "sObject" is a parquet file under the scale-factor dir; in production
   * the same trait would sit on a DSv2 `TableProvider` with
   * `SupportsPushDownRequiredColumns` / `SupportsPushDownFilters`.
@@ -55,6 +59,10 @@ object SObjectSource {
     * shared by the parquet stand-in path and the DSv2 connector path, where
     * Catalyst pushes the watermark predicate into the source (parquet
     * `PushedFilters` / connector SOQL `WHERE`).
+    *
+    * `ORDER BY rk ASC` is kept only when `limit` is set, where it picks the
+    * n earliest rows (the reference's test-limit semantics). Without a
+    * limit the sort would only cost a range-sampling job and a shuffle.
     */
   def queryShape(
       df0: DataFrame,
@@ -68,7 +76,7 @@ object SObjectSource {
         // Optional fractional seconds: watermarks persist at µs precision.
         df = df.filter(col(rk) >
             to_timestamp(lit(w.stripSuffix("Z")), "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]"))
-          .orderBy(col(rk).asc)
+        if (limit.isDefined) df = df.orderBy(col(rk).asc)
       case _ => ()
     }
     limit.foreach(n => df = df.limit(n))

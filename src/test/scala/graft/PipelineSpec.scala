@@ -106,6 +106,46 @@ class PipelineSpec extends SparkSpec {
     assert(summary.reports.head.rows == 100)
   }
 
+  test("extract sorts only under a LIMIT: no sort without one, the n earliest rows with one") {
+    val res = Resources.byName("lineitem")
+    val wm = "1995-01-01T00:00:00Z"
+    val open = SObjectSource.extract(spark, sf, res, watermark = Some(wm))
+    val plan = open.queryExecution.executedPlan.toString
+    assert(!plan.linesIterator.exists(_.matches("""^\W*Sort \[.*""")), s"sorted extract:\n$plan")
+    assert(!plan.contains("rangepartitioning"), s"range exchange in extract:\n$plan")
+    val after = spark.read.parquet(s"$sf/lineitem.parquet")
+      .filter("l_shipdate > timestamp'1995-01-01 00:00:00'")
+    assert(open.count() == after.count())
+    // with a limit: the n earliest rows by rk (ties on rk may pick any of
+    // the tied rows, so compare the rk values)
+    val n = 25
+    def rks(d: DataFrame) = d.selectExpr("cast(l_shipdate AS string)").collect().map(_.getString(0))
+    val limited = rks(SObjectSource.extract(spark, sf, res, watermark = Some(wm), limit = Some(n)))
+    val earliest = rks(after.orderBy("l_shipdate").limit(n))
+    assert(limited.length == n && limited.sorted.toSeq == earliest.toSeq)
+  }
+
+  test("a load whose write throws leaves no cached batch behind, retries included") {
+    val (wh, st) = (tmpDir("pl9-wh"), tmpDir("pl9-st"))
+    val res = Resources.byName("orders")
+    Pipeline.run(spark, cfg(wh, st, Seq(res)))
+    // o_custkey is BIGINT in the table: the ANSI cast of this text throws in
+    // the write, after the batch was cached and aggregated
+    val batches = new ConcurrentLinkedQueue[DataFrame]()
+    val uncastable: Extract = { (s, r, _, _) =>
+      val b = s.read.parquet(s"$sf/${r.name}.parquet")
+        .withColumn("o_custkey", org.apache.spark.sql.functions.lit("not a number"))
+      batches.add(b)
+      b
+    }
+    intercept[Exception](Pipeline.run(spark, cfg(wh, st, Seq(res))
+      .copy(extract = Some(uncastable), retries = 1, retryBackoffMs = 0L)))
+    assert(batches.size == 2, "initial attempt + 1 retry")
+    batches.forEach(b => assert(b.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "a failed attempt left its batch cached"))
+    assert(new Warehouse(spark, wh).load("orders").count() == sourceRows("orders"))
+  }
+
   test("describe dumps every config knob and auth strategy (dump_env_vars parity)") {
     val out = Pipeline.describe(cfg("whdir", "stdir").copy(testLimit = Some(7)))
     // every Config field present with its effective value

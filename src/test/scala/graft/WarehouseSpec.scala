@@ -256,7 +256,53 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("merge above the broadcast gate degrades to sort-merge anti-join, same results") {
-    // capture the executed plans of every job the merges run
+    val batch = df(("a", 10, "2024-02-01"), ("b", 20, "2024-02-01"), ("c", 30, "2024-02-01"))
+    val dirB = tmpDir("wh-gate-b")
+    val dirS = tmpDir("wh-gate-s")
+    val whB = new Warehouse(spark, dirB)                          // broadcast path
+    val whS = new Warehouse(spark, dirS, mergeBroadcastMaxKeys = 1) // SMJ path
+    Seq(whB, whS).foreach(_.replace("t", df(("a", 1, "2024-01-01"), ("x", 2, "2024-01-01"))))
+    val broadcastPlans = mergePlans(whB, dirB, batch)
+    val smjPlans = mergePlans(whS, dirS, batch)
+    assert(broadcastPlans.exists(antiJoinLine(_, "BroadcastHashJoin")))
+    assert(smjPlans.exists(antiJoinLine(_, "SortMergeJoin")),
+      s"expected an SMJ anti-join above the gate; got:\n${smjPlans.mkString("\n---\n")}")
+    assert(!smjPlans.exists(antiJoinLine(_, "BroadcastHashJoin")))
+    // both paths produce identical tables
+    assert(whB.load("t").orderBy("Id").collect().toSeq ==
+      whS.load("t").orderBy("Id").collect().toSeq)
+    assert(whS.load("t").orderBy("Id").collect().map(_.getString(0)).toSeq ==
+      Seq("a", "b", "c", "x"))
+  }
+
+  test("merge gate counts batch rows: duplicate PKs above the gate take the sort-merge path") {
+    // 2 distinct keys in 3 rows; the gate sits between them, so the raw key
+    // tuples (what a broadcast would ship) are over it
+    val batch = df(("a", 10, "2024-02-01"), ("a", 11, "2024-02-02"), ("b", 20, "2024-02-01"))
+    val dirB = tmpDir("wh-dupgate-b")
+    val dirS = tmpDir("wh-dupgate-s")
+    val whB = new Warehouse(spark, dirB)
+    val whS = new Warehouse(spark, dirS, mergeBroadcastMaxKeys = 2)
+    Seq(whB, whS).foreach(_.replace("t", df(("a", 1, "2024-01-01"), ("x", 2, "2024-01-01"))))
+    val broadcastPlans = mergePlans(whB, dirB, batch)
+    val smjPlans = mergePlans(whS, dirS, batch)
+    assert(broadcastPlans.exists(antiJoinLine(_, "BroadcastHashJoin")))
+    assert(smjPlans.exists(antiJoinLine(_, "SortMergeJoin")),
+      s"expected an SMJ anti-join above the gate; got:\n${smjPlans.mkString("\n---\n")}")
+    assert(!smjPlans.exists(antiJoinLine(_, "BroadcastHashJoin")))
+    val rows = whS.load("t").orderBy("Id", "Amount").collect().toSeq
+    assert(whB.load("t").orderBy("Id", "Amount").collect().toSeq == rows)
+    assert(rows.map(r => (r.getString(0), r.getLong(1))) ==
+      Seq(("a", 10L), ("a", 11L), ("b", 20L), ("x", 2L)))
+  }
+
+  /** Runs `wh.merge` of `batch` on `Id` and returns the executed plans of
+    * the jobs it ran. AQE is off: at toy scale it would rightly re-broadcast
+    * the tiny key set at runtime, and the static plan choice is what the
+    * gate controls.
+    */
+  private def mergePlans(wh: Warehouse, dir: String,
+                         batch: org.apache.spark.sql.DataFrame): Seq[String] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -265,42 +311,59 @@ class WarehouseSpec extends SparkSpec {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     }
-    val batch = df(("a", 10, "2024-02-01"), ("b", 20, "2024-02-01"), ("c", 30, "2024-02-01"))
-    val dirB = tmpDir("wh-gate-b")
-    val dirS = tmpDir("wh-gate-s")
-    val whB = new Warehouse(spark, dirB)                          // broadcast path
-    val whS = new Warehouse(spark, dirS, mergeBroadcastMaxKeys = 1) // SMJ path
-    Seq(whB, whS).foreach(_.replace("t", df(("a", 1, "2024-01-01"), ("x", 2, "2024-01-01"))))
-    // AQE off: at toy scale it would rightly re-broadcast the tiny key set at
-    // runtime; the static plan choice is what the gate controls
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.listenerManager.register(listener)
     try {
-      // suites share one session and may run concurrently, so assertions
-      // filter the captured plans to THIS test's warehouse dirs (the merge
-      // anti-join plan scans files under them)
-      whB.merge("t", batch, Seq("Id"))
-      val broadcastPlans = drainPlans(plans, dirB)
-      whS.merge("t", batch, Seq("Id"))
-      val smjPlans = drainPlans(plans, dirS)
-      // node-level check: the lineage-carry rewrite legitimately contains a
-      // broadcast INNER join (the per-file id bases) in the same plan, so
-      // the anti-join's strategy must be read off its own operator line
-      def antiJoinLine(p: String, op: String): Boolean =
-        p.linesIterator.exists(l => l.contains(op) && l.contains("LeftAnti"))
-      assert(broadcastPlans.exists(antiJoinLine(_, "BroadcastHashJoin")))
-      assert(smjPlans.exists(antiJoinLine(_, "SortMergeJoin")),
-        s"expected an SMJ anti-join above the gate; got:\n${smjPlans.mkString("\n---\n")}")
-      assert(!smjPlans.exists(antiJoinLine(_, "BroadcastHashJoin")))
+      // suites share one session and may run concurrently, so the captured
+      // plans are filtered to THIS warehouse dir (the merge anti-join plan
+      // scans files under it)
+      wh.merge("t", batch, Seq("Id"))
+      drainPlans(plans, dir)
     } finally {
       spark.listenerManager.unregister(listener)
       spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
-    // both paths produce identical tables
-    assert(whB.load("t").orderBy("Id").collect().toSeq ==
-      whS.load("t").orderBy("Id").collect().toSeq)
-    assert(whS.load("t").orderBy("Id").collect().map(_.getString(0)).toSeq ==
-      Seq("a", "b", "c", "x"))
+  }
+
+  /** Node-level check: the lineage-carry rewrite legitimately contains a
+    * broadcast INNER join (the per-file id bases) in the same plan, so the
+    * anti-join's strategy must be read off its own operator line.
+    */
+  private def antiJoinLine(p: String, op: String): Boolean =
+    p.linesIterator.exists(l => l.contains(op) && l.contains("LeftAnti"))
+
+  /** A lineage-carrying merge over a table of `rows` wide rows (each with a
+    * 128-char hex payload), keyed and clustered on `k`, whose batch bounds
+    * span every file. Returns the victims' parquet bytes and the number of
+    * files the victim rewrite wrote.
+    */
+  private def wideMergeRewrite(dir: String, rows: Int): (Long, Int) = {
+    import java.nio.file.{Files, Paths}
+    val wh = new Warehouse(spark, dir)
+    def wide(ids: org.apache.spark.sql.Dataset[_]) = ids.selectExpr("id AS k",
+      "concat(sha2(cast(id AS string), 256), sha2(cast(id * 7 AS string), 256)) AS payload")
+    wh.replace("t", wide(spark.range(rows)), clusterBy = Seq("k"))
+    val victims = wh.dataFiles("t")
+    assert(victims.forall(_.firstRowId >= 0), "expected a lineage-carrying table")
+    val victimBytes = victims.map(f => Files.size(Paths.get(dir, "t", f.path))).sum
+    val v = wh.merge("t", wide(spark.range(0, rows, rows / 4)), Seq("k"), clusterBy = Seq("k"))
+    assert(wh.load("t").count() == rows)
+    (victimBytes, wh.dataFiles("t").count(_.path.startsWith(s"d${v}r-")))
+  }
+
+  test("a lineage-carrying merge rewrite over 2 MB of victims is sized from its scan: one file") {
+    val (victimBytes, rewriteFiles) = wideMergeRewrite(tmpDir("wh-wide1"), 40000)
+    assert(victimBytes >= (2L << 20), s"victims hold only $victimBytes bytes")
+    assert(rewriteFiles == 1, s"rewrite wrote $rewriteFiles files")
+  }
+
+  test("smallBatchBytes=0 still distributes a lineage-carrying merge rewrite") {
+    spark.conf.set("spark.graft.write.smallBatchBytes", "0")
+    val (victimBytes, rewriteFiles) =
+      try wideMergeRewrite(tmpDir("wh-wide0"), 40000)
+      finally spark.conf.unset("spark.graft.write.smallBatchBytes")
+    assert(victimBytes >= (2L << 20), s"victims hold only $victimBytes bytes")
+    assert(rewriteFiles > 1, s"rewrite wrote $rewriteFiles file(s) with the gate off")
   }
 
   /** QueryExecutionListener delivery is async (listener bus): wait for THIS
