@@ -556,13 +556,16 @@ private[catalog] class StagedGraftTable(displayName: String, schema0: StructType
 
 /** One warehouse table (optionally pinned to a snapshot version for time
   * travel). Scans are Spark's own parquet DSv2 over the manifest's file
-  * list; writes are a V1 shim into the Warehouse commit protocol.
+  * list; writes are a V1 shim into the Warehouse commit protocol. It serves
+  * programmatic reads too: [[graft.sink.Warehouse.loadVersion]] (and so
+  * `load`/`loadTag`) wraps a relation over it pinned to the caller's
+  * version, so SQL and API scans plan through the same rules.
   *
   * `prunedManifest` is set by [[ManifestPruneRule]] after predicate-driven
   * file skipping — the scan then covers only the files whose stat bounds may
   * satisfy the query's filters (Iceberg scan-planning analog).
   */
-private[catalog] class GraftTable(displayName: String, val table: String, val root: String,
+private[graft] class GraftTable(displayName: String, val table: String, val root: String,
                                   version: Option[Long],
                                   val prunedManifest: Option[graft.sink.Manifest] = None)
     extends Table with SupportsRead with SupportsWrite with SupportsDeleteV2 {
@@ -640,10 +643,14 @@ private[catalog] class GraftTable(displayName: String, val table: String, val ro
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // MOR safety net: correct reads of a snapshot with pending equality
     // deletes depend on MorReadRule swapping this relation for the MOR frame
-    // BEFORE any scan is built. That rule rides spark.sql.extensions — a
+    // BEFORE any scan executes. That rule rides spark.sql.extensions — a
     // session that registered only the catalog would reach this builder and
-    // silently serve deleted rows. Fail loudly instead of lying.
-    require(manifest.deletes.isEmpty,
+    // silently serve deleted rows. Fail loudly instead of lying. The one
+    // build let through is the relation's size ESTIMATE: semi/anti-join
+    // pushdown sizes its sides in the same optimizer fixed point, before
+    // the splice, through `DataSourceV2Relation.computeStats`; that scan
+    // never executes, and its plain-file size is an upper bound.
+    require(manifest.deletes.isEmpty || GraftTable.sizingOnly,
       s"$displayName has ${manifest.deletes.size} pending equality-delete file(s); " +
         "plain scans would resurrect deleted rows. Register GraftExtensions " +
         "(spark.sql.extensions) so MorReadRule serves the MOR frame, or run " +
@@ -760,6 +767,16 @@ private[catalog] class GraftTable(displayName: String, val table: String, val ro
         s"spark.graft.delete.mode must be cow or positional, got: $other")
     }
   }
+}
+
+private[graft] object GraftTable {
+  /** Is the running scan build Spark's pre-pushdown size estimate
+    * (`DataSourceV2Relation.computeStats`)?
+    */
+  private def sizingOnly: Boolean = StackWalker.getInstance().walk(frames =>
+    frames.anyMatch(f => f.getMethodName == "computeStats" &&
+      f.getClassName.startsWith(
+        "org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation")))
 }
 
 /** Disposition-aware write shim: `INSERT INTO` / `writeTo(...).append()` is

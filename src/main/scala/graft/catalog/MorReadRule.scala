@@ -8,8 +8,10 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 import graft.sink.Warehouse
 
-/** SQL-face reads of tables with PENDING merge-on-read deletes
-  * ([[Warehouse.equalityDelete]]): a graft relation whose snapshot manifest
+/** Snapshot reads of tables with PENDING merge-on-read deletes
+  * ([[Warehouse.equalityDelete]]) — SQL scans and the programmatic
+  * [[Warehouse.load]] / `loadVersion` / `loadTag` frames alike, which plan
+  * the same [[GraftTable]] relation: a graft relation whose snapshot manifest
   * carries equality-delete files cannot be served by the plain file scan —
   * the deletes live beside the data, not in it. This rule replaces such a
   * relation with the engine's MOR frame ([[Warehouse.morFrame]]): the
@@ -115,8 +117,11 @@ object MorReadRule extends Rule[LogicalPlan] {
     val wh = new Warehouse(SparkSession.active, gt.root)
     val mor = wh.morFrame(gt.table, man).queryExecution.optimizedPlan
     // re-key the MOR plan's output onto the relation's attribute ids so
-    // references above the substitution keep resolving
-    Project(r.output.zip(mor.output).map { case (o, n) =>
-      Alias(n, o.name)(exprId = o.exprId, qualifier = o.qualifier) }, mor)
+    // references above the substitution keep resolving — by NAME: a USING
+    // anti-join moves its key columns first, so the overlay's column order
+    // differs from the relation's whenever a delete key is not column one
+    val byName = mor.output.map(a => a.name -> a).toMap
+    Project(r.output.map(o =>
+      Alias(byName(o.name), o.name)(exprId = o.exprId, qualifier = o.qualifier)), mor)
   }
 }

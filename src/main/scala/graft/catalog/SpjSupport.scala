@@ -267,10 +267,12 @@ sealed class GraftParquetScan(base: ParquetScan,
     */
   @volatile private var allowed: Option[Set[String]] = None
 
-  /** Columns a runtime filter can prune on: any schema column with recorded
+  /** Columns a runtime filter can prune on: any READ column with recorded
     * per-file bounds, plus the SOURCE columns of partition transforms
     * (bucket/days/... projection gives them pruning power beyond raw
-    * bounds).
+    * bounds). Limited to the read schema, as Spark's own `FileScan` does:
+    * dynamic pruning resolves every reported name against the
+    * column-pruned relation's output and fails on one it cannot find.
     */
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     // a limit/top-k-pruned scan must not compose with runtime filters: the
@@ -280,7 +282,7 @@ sealed class GraftParquetScan(base: ParquetScan,
     if (keepPaths.isDefined) return Array.empty
     val statKeys = filesByPath.valuesIterator.flatMap(_.stats.keysIterator).toSet
     val cols = statKeys.map(k => PartitionTransforms.parseKey(k).map(_.src).getOrElse(k))
-    val schemaCols = dataSchema.fieldNames.toSet
+    val schemaCols = readSchema().fieldNames.toSet
     cols.intersect(schemaCols).toArray.sorted.map(Expressions.column)
   }
 

@@ -180,28 +180,6 @@ private[sink] final class IndexFamily(wh: Warehouse, pkCol: String,
 
   // ---- serving / maintenance --------------------------------------------
 
-  /** Rows of `table` whose `column` is one of `values`: a manifest-stat file
-    * prune first (a file is skipped when no value falls inside its
-    * [min,max] — the comparison domain of every other stat prune), then the
-    * MOR overlay over the kept files (a follower retraction is an equality
-    * delete a raw read would resurrect), then the residual `isin` for the
-    * row groups within them.
-    */
-  def probe(table: String, column: String, values: Seq[Any]): DataFrame = {
-    val man = wh.currentManifest(table)
-    val kept = man.files.filter { f =>
-      f.stats.get(column) match {
-        case Some(ColStat("z", _, _, _)) => false
-        case Some(s) => values.exists { v =>
-          StatsPruning.cmp(s.kind, s.min, v.toString) <= 0 &&
-            StatsPruning.cmp(s.kind, s.max, v.toString) >= 0 }
-        case None => true // no stats recorded => cannot prune
-      }
-    }
-    wh.morFrame(table, Manifest(man.schema, kept, man.deletes))
-      .filter(col(column).isin(values: _*))
-  }
-
   /** Compact each `compactOn` table's ingest-granularity files clustered on
     * its probe key ([[Warehouse.compactFiles]]): after many small batches
     * their key ranges overlap and a probe opens a file per batch; the

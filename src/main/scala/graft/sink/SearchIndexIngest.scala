@@ -197,9 +197,12 @@ final class SearchIndexIngest(wh: Warehouse, pkCol: String, textCol: String) {
   def compact(name: String, smallRows: Long = 100000L): Unit =
     family.compact(name, smallRows)
 
-  /** Postings of `terms` only — [[IndexFamily.probe]] on the `term` stats. */
+  /** Postings of `terms` only: a filter on the postings snapshot
+    * ([[Warehouse.load]]), so the catalog rules skip every file whose
+    * `term` bounds hold none of them and splice pending retractions.
+    */
   private[graft] def probePostings(name: String, terms: Seq[String]): DataFrame =
-    family.probe(postingsTable(name), "term", terms)
+    wh.load(postingsTable(name)).filter(col("term").isin(terms: _*))
 
   /** Top-`k` BM25 over the index: cost ∝ postings of the query terms (a
     * pruned probe), one broadcast one-row stats frame, one TakeOrdered —

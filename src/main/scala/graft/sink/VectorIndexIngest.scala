@@ -249,9 +249,12 @@ final class VectorIndexIngest(wh: Warehouse, pkCol: String, vecCol: String,
       parts.map(p => s"$from$p" -> s"$to$p").filter { case (f, _) => wh.exists(f) })
   }
 
-  /** Code rows of `cells` only — [[IndexFamily.probe]] on the `cell` stats. */
+  /** Code rows of `cells` only: a filter on the codes snapshot
+    * ([[Warehouse.load]]), so the catalog rules skip every file whose
+    * `cell` bounds hold none of them and splice pending retractions.
+    */
   private[graft] def probeCodes(name: String, cells: Seq[Long]): DataFrame =
-    family.probe(codesTable(name), "cell", cells)
+    wh.load(codesTable(name)).filter(col("cell").isin(cells: _*))
 
   /** Top-`k` ADC search over the index: per-probe `nprobe` cells by frozen-
     * centroid cosine, codes read ONLY from the pruned cell files, scored by

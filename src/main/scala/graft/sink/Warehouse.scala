@@ -485,17 +485,31 @@ final class Warehouse(private[sink] val spark: SparkSession,
     */
   def dataFiles(name: String): Seq[DataFile] = currentManifest(name).files
 
-  /** S11 full-table scan of the current snapshot. */
+  /** S11 full-table scan of the current snapshot, pinned when called: a
+    * commit after `load` is invisible to every later action on the frame.
+    * Served like [[loadVersion]].
+    */
   def load(name: String): DataFrame = loadVersion(name, currentVersion(name))
 
   /** Time travel: scan a specific committed snapshot (data files are
     * immutable, so any non-expired version stays readable — the Iceberg
     * `VERSION AS OF` analog).
+    *
+    * The ONE read path: the frame is a relation over the catalog's
+    * [[graft.catalog.GraftTable]] pinned to `version`, so a programmatic
+    * filter prunes segments, files and bloom sidecars
+    * ([[graft.catalog.ManifestPruneRule]]) and pending MOR deletes are
+    * spliced ([[graft.catalog.MorReadRule]]) exactly as for
+    * `SELECT ... VERSION AS OF`. Those rules ride `GraftExtensions`: a
+    * session without it refuses to scan a snapshot with pending deletes
+    * (`GraftTable.newScanBuilder`) rather than resurrect deleted rows.
     */
   def loadVersion(name: String, version: Long): DataFrame = {
     require(version >= 0 && Files.exists(manifestPath(name, version)),
       s"no such snapshot: $name v=$version")
-    morFrame(name, Manifest.read(manifestPath(name, version)))
+    org.apache.spark.sql.graft.ColumnBridge.dataFrame(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new graft.catalog.GraftTable(name, name, root, Some(version)), None, None))
   }
 
   /** Scan a snapshot with ROW LINEAGE: every surviving row carries

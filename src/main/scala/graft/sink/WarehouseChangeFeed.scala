@@ -53,8 +53,12 @@ private[sink] trait WarehouseChangeFeed { self: Warehouse =>
     * over-reports; reserve it for when exactness matters.
     */
   def diffRows(name: String, fromVersion: Long, toVersion: Long): (DataFrame, DataFrame) = {
-    val from = loadVersion(name, fromVersion)
-    val to = loadVersion(name, toVersion)
+    // direct manifest reads, like readChanges: the variant proxy below is
+    // `to_json(<variant column>)`, which Spark 4.1.2's DSv2 variant
+    // pushdown cannot plan over a GraftTable scan (an unresolved attribute
+    // reaches column pruning); the v1 parquet scan plans it
+    val from = morFrame(name, manifestAt(name, fromVersion))
+    val to = morFrame(name, manifestAt(name, toVersion))
     // per-side variant column names: a variant column RENAMED in the window
     // is the same field id at the same position under a new label, and
     // exceptAll resolves positionally — proxying the from side with the

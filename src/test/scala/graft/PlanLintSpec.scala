@@ -64,9 +64,18 @@ class PlanLintSpec extends SparkSpec {
     finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  /** Every declared query's static plan, built ONCE in name order and
+    * shared by every lint and pin below — building 165 query plans is most
+    * of this spec's cost, and each sweep used to build them all again.
+    */
+  private lazy val staticPlans: Seq[(String, SparkPlan)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) => name -> staticPlan(fn) }
+  private def planOf(name: String): SparkPlan =
+    staticPlans.collectFirst { case (`name`, p) => p }.get
+
   test("no unintended cartesian products; codegen present") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = staticPlan(fn).toString
+    val offenders = staticPlans.flatMap { case (name, p) =>
+      val plan = p.toString
       val cartesian = (plan.contains("CartesianProduct") ||
         plan.contains("BroadcastNestedLoopJoin")) && !allowedCartesian(name)
       val noCodegen = !plan.contains("*(") && !allowedNoCodegen(name)
@@ -118,8 +127,8 @@ class PlanLintSpec extends SparkSpec {
   }
 
   test("no HOF-bearing Filter below a spread() round-robin exchange") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      hofFiltersBelowSpread(staticPlan(fn)).map(msg => s"$name: $msg")
+    val offenders = staticPlans.flatMap { case (name, plan) =>
+      hofFiltersBelowSpread(plan).map(msg => s"$name: $msg")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
@@ -163,7 +172,7 @@ class PlanLintSpec extends SparkSpec {
     // gram join fell back to SMJ while some OTHER join kept the string
     // present — assert a BroadcastHashJoinExec node whose join key is the
     // gram column `g` itself.
-    val plan = staticPlan(SparkEntry.queries("q72_decontamination"))
+    val plan = planOf("q72_decontamination")
     val gramJoins = subtrees(plan).collect {
       case j: BroadcastHashJoinExec
           if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "g")) => j
@@ -178,7 +187,7 @@ class PlanLintSpec extends SparkSpec {
     * corpus-sized gram frame — pin the strategy like q72's.
     */
   test("q76 DF-head join is a broadcast hash join on the gram key") {
-    val plan = staticPlan(SparkEntry.queries("q76_gram_df_stats"))
+    val plan = planOf("q76_gram_df_stats")
     val gramJoins = subtrees(plan).collect {
       case j: BroadcastHashJoinExec
           if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "g")) => j
@@ -192,16 +201,16 @@ class PlanLintSpec extends SparkSpec {
     * (e.g. set-ops falling back to joins) fails here, not in a 100 TB run.
     */
   test("round-7 plan pins: native sessions, set-op replay, unpivot, outlier broadcast") {
-    val p110 = staticPlan(SparkEntry.queries("q110_native_sessions")).toString
+    val p110 = planOf("q110_native_sessions").toString
     assert(p110.contains("MergingSessions"),
       "q110 lost Spark's native session-window operator")
-    val p102 = staticPlan(SparkEntry.queries("q102_setops_all")).toString
+    val p102 = planOf("q102_setops_all").toString
     assert(p102.contains("replicaterows") && !p102.contains("Join"),
       "q102 must stay counted-aggregate + Generate multiplicity replay — no join")
-    val p101 = staticPlan(SparkEntry.queries("q101_unpivot")).toString
+    val p101 = planOf("q101_unpivot").toString
     assert(p101.contains("Expand") && !p101.contains("Join"),
       "q101's unpivot must be a zero-join Expand projection")
-    val p94 = staticPlan(SparkEntry.queries("q94_outlier_docs")).toString
+    val p94 = planOf("q94_outlier_docs").toString
     assert(p94.contains("BroadcastHashJoin"),
       "q94's per-source stats must broadcast back onto the scan")
   }

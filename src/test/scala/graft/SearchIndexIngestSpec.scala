@@ -177,12 +177,13 @@ class SearchIndexIngestSpec extends SparkSpec {
     ing.ingest("c", docs(3L -> "mango melon mint", 4L -> "nectarine nutmeg noodle"))
     ing.ingest("c", docs(5L -> "yam yuzu zucchini", 6L -> "walnut wasabi wheat"))
     val all = wh.dataFiles("c__postings").size
+    assert(filesScanned(wh.load("c__postings")).size == all, "an unfiltered read sees every file")
     val probe = ing.probePostings("c", Seq("mango", "mint"))
-    assert(probe.inputFiles.length < all,
-      s"probe read ${probe.inputFiles.length} of $all files — no pruning")
+    assert(filesScanned(probe).size < all,
+      s"probe read ${filesScanned(probe).size} of $all files — no pruning")
     assert(probe.select("doc_id").distinct().collect().map(_.getLong(0)).toSet == Set(3L))
     // a term outside every file's range reads nothing
-    assert(ing.probePostings("c", Seq("qqq")).inputFiles.isEmpty)
+    assert(filesScanned(ing.probePostings("c", Seq("qqq"))).isEmpty)
   }
 
   test("followChanges: corpus deletes/updates retract + re-index at O(changes); no posting rewrites") {

@@ -28,4 +28,24 @@ trait SparkSpec extends AnyFunSuite {
     val s = q.queryExecution.executedPlan.toString
     "\\[(\\d+) files\\]".r.findFirstMatchIn(s).map(_.group(1).toInt).getOrElse(total)
   }
+
+  /** Paths of the data files `q`'s executed plan scans, through adaptive
+    * stages and subqueries: the `FilePartition`s of every DSv2 batch scan
+    * (catalog and `Warehouse.load` reads) plus the file index of every v1
+    * file-source scan. `Dataset.inputFiles` sees only v2 scans over a
+    * `FileTable`, so it reports no file at all for a warehouse relation.
+    */
+  def filesScanned(q: org.apache.spark.sql.DataFrame): Set[String] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    helper.collectWithSubqueries(q.queryExecution.executedPlan) {
+      case b: BatchScanExec => b.inputPartitions.flatMap {
+        case fp: FilePartition => fp.files.map(_.filePath.toString).toSeq
+        case _ => Nil
+      }
+      case f: FileSourceScanExec => f.relation.location.inputFiles.toSeq
+    }.flatten.toSet
+  }
 }

@@ -307,13 +307,14 @@ class VectorIndexIngestSpec extends SparkSpec {
     Seq(0 until 24 by 3, 1 until 24 by 3, 2 until 24 by 3)
       .foreach(r => ing.ingest("v", vecs(r)))
     val all = wh.dataFiles("v__codes").size
+    assert(filesScanned(wh.load("v__codes")).size == all, "an unfiltered read sees every file")
     val probe = ing.probeCodes("v", Seq(1L))
-    assert(probe.inputFiles.length < all,
-      s"probe read ${probe.inputFiles.length} of $all files — no pruning")
+    assert(filesScanned(probe).size < all,
+      s"probe read ${filesScanned(probe).size} of $all files — no pruning")
     // every kept row really is the probed cell's
     assert(probe.select("cell").distinct().collect().map(_.getLong(0)).toSeq == Seq(1L))
     // a cell outside every file's range reads nothing
-    assert(ing.probeCodes("v", Seq(99L)).inputFiles.isEmpty)
+    assert(filesScanned(ing.probeCodes("v", Seq(99L))).isEmpty)
   }
 
   test("codes compaction: search unchanged, fewer files") {

@@ -35,11 +35,12 @@ class WapSpec extends SparkSpec {
     val audit = wh.loadStage("t", id)
     assert(audit.count() == 3, "audit reads the candidate state: base + batch")
 
-    val staged = wh.loadStage("t", id).inputFiles.toSet
+    val staged = filesScanned(wh.loadStage("t", id))
+    assert(staged.nonEmpty, "the audit read sees the staged files")
     val v1 = wh.publishStage("t", id)
     assert(wh.load("t").count() == 3 && v1 == v0 + 1)
     // zero-copy adoption: published scan reads the very files the audit read
-    assert(wh.load("t").inputFiles.toSet == staged)
+    assert(filesScanned(wh.load("t")) == staged)
     assert(wh.listStages("t").isEmpty, "publish consumes the stage")
     intercept[IllegalArgumentException](wh.loadStage("t", id))
   }
@@ -72,7 +73,7 @@ class WapSpec extends SparkSpec {
     wh.replace("t", df("a" -> 1))
     wh.append("t", df("b" -> 2)) // history to expire
     val id = wh.stageAppend("t", df("c" -> 3))
-    val stagedFiles = wh.loadStage("t", id).inputFiles
+    val stagedFiles = filesScanned(wh.loadStage("t", id)).toSeq
       .filter(_.contains("stg")).map(u => Paths.get(java.net.URI.create(u)))
     assert(stagedFiles.nonEmpty)
 
@@ -92,7 +93,7 @@ class WapSpec extends SparkSpec {
     val wh = new Warehouse(spark, tmpDir("wap-sweep"))
     wh.replace("t", df("a" -> 1))
     val id = wh.stageAppend("t", df("b" -> 2))
-    val staged = wh.loadStage("t", id).inputFiles
+    val staged = filesScanned(wh.loadStage("t", id)).toSeq
       .filter(_.contains("stg")).map(u => Paths.get(java.net.URI.create(u)))
     assert(staged.nonEmpty)
     wh.publishStage("t", id)
