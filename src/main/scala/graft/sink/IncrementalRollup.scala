@@ -41,8 +41,8 @@ object IncrementalRollup {
     * feed (a frame carrying `_change_type`): `-D` rows fold with inverted
     * sign, so an update/delete on the fact subtracts exactly what its
     * insert added. Defined only for count/sum — min/max are not invertible
-    * under deletes (None ⇒ [[maintainFromChangeFeed]] maintains them by
-    * targeted group rescan instead).
+    * under deletes (None ⇒ the change-feed paths maintain them by the tie
+    * gate and a recompute from the fact, see [[affectedGroups]]).
     */
   sealed trait Measure {
     def name: String
@@ -208,20 +208,73 @@ object IncrementalRollup {
     now
   }
 
-  /** Affected-group ceiling for the targeted rescan: above it a window
-    * switches to the consolidation replace (see [[maintainFromChangeFeed]]).
+  // ---- change-feed maintenance ---------------------------------------------
+  // One algebra over a row-level change feed (`_change_type` `+I`/`-D`),
+  // shared by the batch fold ([[maintainFromChangeFeed]]) and the streaming
+  // tick and drain ([[graft.streaming.ChangeFeedStream]]): the window
+  // partial, the tie gate and the one recompute below. Count/sum fold
+  // signed; min/max are not delete-invertible (Gupta & Mumick 1995), so a
+  // `-D` that ties a stored extreme marks its group for a recompute from
+  // the fact.
+
+  /** Schema column of a stream-maintained rollup carrying the fact version
+    * each partial row covers; [[recompute]] stamps its rows with it.
+    */
+  private[graft] val MarkerCol = "__cfs_v"
+
+  /** Affected-group ceiling for the targeted recompute: above it the
+    * recompute consolidates with one replace (see [[recompute]]).
     */
   private[graft] val MaxRescanGroups = 256
+
+  /** Window partial of one change-feed window: count/sum fold signed
+    * ([[Measure.signedPartial]]); min/max take the window's `+I` values as
+    * candidates, and the `-D` side goes through [[affectedGroups]].
+    */
+  private[graft] def windowPartials(changes: DataFrame, spec: Spec): DataFrame = {
+    def windowPartial(m: Measure): Column = m match {
+      case MinOf(e, n) => min(when(!isDelete, e)).as(n)
+      case MaxOf(e, n) => max(when(!isDelete, e)).as(n)
+      case invertible  => invertible.signedPartial.get
+    }
+    changes.groupBy(spec.keys.map(col): _*)
+      .agg(windowPartial(spec.measures.head), spec.measures.tail.map(windowPartial): _*)
+  }
+
+  /** Tie gate: the keys of the groups where some `-D` value of `changes`
+    * null-safe-ties the extreme `table` stores (a delete strictly inside the
+    * bounds cannot move them, and a `-D` value outside them is impossible:
+    * the row existed at the covered version). Read BEFORE the window's
+    * partials land. Materialized; None when no group is affected, at once
+    * (no Spark job) for a spec without min/max.
+    */
+  private[graft] def affectedGroups(wh: Warehouse, table: String, spec: Spec,
+                                    changes: DataFrame): Option[DataFrame] = {
+    val ex = spec.measures.collect {
+      case MinOf(e, n) => n -> min(e)
+      case MaxOf(e, n) => n -> max(e)
+    }
+    if (ex.isEmpty) return None
+    val keys = spec.keys
+    val delExt = ex.map { case (n, c) => c.as(s"__d_$n") }
+    val stored = read(wh, table, spec).alias("st")
+    val dx = changes.filter(isDelete).groupBy(keys.map(col): _*)
+      .agg(delExt.head, delExt.tail: _*).alias("dx")
+    val keyCond =
+      if (keys.isEmpty) lit(true)
+      else keys.map(k => col(s"dx.$k") <=> col(s"st.$k")).reduce(_ && _)
+    val tie = ex.map { case (n, _) => col(s"__d_$n") <=> col(s"st.$n") }.reduce(_ || _)
+    val affected = dx.join(stored, keyCond).filter(tie)
+      .select(keys.map(k => col(s"dx.$k")): _*).localCheckpoint()
+    if (affected.isEmpty) None else Some(affected)
+  }
 
   /** Scan predicates of a bounded affected-group set (all keys NON-NULL):
     * `(groupPred, perCol)` — the exact null-safe group disjunction, and the
     * per-column IN conjunction that pushes into the parquet scan so a
-    * key-clustered fact rescans O(affected-group files). Shared by the
-    * batch rescan and the streaming drain
-    * ([[graft.streaming.ChangeFeedStream.drainPendingExtremes]]).
+    * key-clustered fact rescans O(affected-group files).
     */
-  private[graft] def groupPredicates(keys: Seq[String],
-                                     rows: Seq[Row]): (Column, Column) = {
+  private def groupPredicates(keys: Seq[String], rows: Seq[Row]): (Column, Column) = {
     val groupPred = rows.map(r =>
       keys.map(k => col(k) <=> lit(r.getAs[Any](k))).reduce(_ && _)).reduce(_ || _)
     val perCol = keys.map(k =>
@@ -229,155 +282,103 @@ object IncrementalRollup {
     (groupPred, perCol)
   }
 
+  /** The one recompute: the affected `groups` (keys of `spec`) forget their
+    * fold history in `table` (min-of-mins over stale partials would
+    * resurrect a dead extremum) and land their rows recomputed from `fact`
+    * at `version`, stamped with it in [[MarkerCol]] when the rollup has that
+    * column. `carry` holds partial rows that land in the same commit, and
+    * `clear` tables whose rows of `groups` retract with it; both lose their
+    * rows of `groups` first. Groups with no fact rows left vanish, matching
+    * the direct aggregate.
+    *
+    * A keyed set of at most [[MaxRescanGroups]] non-null groups is TARGETED:
+    * per-column IN predicates reach the parquet scan, so a fact clustered by
+    * the group key rescans O(affected-group files), and the retraction, the
+    * landing and the clears are ONE [[Warehouse.transact]] commit — two
+    * commits left a crash window in which the retracted history was gone but
+    * its replacement absent, and a replay then found no tie and dropped the
+    * groups' history. The staged equality deletes apply to pre-transaction
+    * rows only, so they cannot touch the rows the same transaction lands.
+    * Every other set CONSOLIDATES with one `replace` of `table` (kept
+    * history + carried rows + semi-join-scoped recomputes), then one
+    * `replace` per cleared table: the keyless rollup (its one group is the
+    * whole table), a null key (staged equality deletes are plain-equality
+    * and would not retract it) and a mass delete (the targeted predicates
+    * would dwarf the plan). The consolidation is O(rollup rows + affected
+    * fact scan), never an unscoped fact rescan; a crash before the clears
+    * leaves the groups marked, and a rerun recomputes them to the same rows.
+    */
+  private[graft] def recompute(wh: Warehouse, table: String, spec: Spec, fact: String,
+                               version: Long, groups: DataFrame,
+                               carry: Option[DataFrame], clear: Seq[String]): Unit = {
+    val keys = spec.keys
+    val stamped = wh.currentManifest(table).schema.fieldNames.contains(MarkerCol)
+    val statsCols = if (stamped) keys :+ MarkerCol else keys
+    def recomputed(df: DataFrame): DataFrame =
+      if (stamped) partial(df, spec).withColumn(MarkerCol, lit(version))
+      else partial(df, spec)
+    val factAt = wh.loadVersion(fact, version)
+    // one past the gate: enough to choose, never an unbounded collect
+    lazy val rows = groups.limit(MaxRescanGroups + 1).collect()
+    if (keys.isEmpty) {
+      wh.replace(table, recomputed(factAt), statsCols = statsCols)
+      clear.foreach(t => wh.replace(t, wh.load(t).limit(0)))
+    } else if (rows.length <= MaxRescanGroups &&
+               !rows.exists(r => keys.exists(r.getAs[Any](_) == null))) {
+      // plain col() refs: each filter resolves against its own frame
+      val (groupPred, perCol) = groupPredicates(keys, rows.toSeq)
+      val landed = recomputed(factAt.filter(perCol && groupPred))
+      wh.transact { tx =>
+        tx.equalityDelete(table, groups)
+        tx.append(table, carry.fold(landed)(_.filter(!groupPred).unionByName(landed)),
+          statsCols = statsCols)
+        clear.foreach(tx.equalityDelete(_, groups))
+      }
+    } else {
+      def on(df: DataFrame): Column = keys.map(k => df(k) <=> groups(k)).reduce(_ && _)
+      def without(df: DataFrame): DataFrame = df.join(groups, on(df), "left_anti")
+      val landed = recomputed(factAt.join(groups, on(factAt), "left_semi"))
+      val hist = wh.load(table)
+      wh.replace(table, (without(hist) +: carry.map(without).toSeq :+ landed)
+        .reduce(_ unionByName _), statsCols = statsCols)
+      clear.foreach(t => wh.replace(t, without(wh.load(t))))
+    }
+  }
+
   /** [[maintainFromFeed]] for facts that MUTATE: folds the exact row-level
-    * change feed ([[Warehouse.readChanges]]) with SIGNED partials — `+I`
-    * rows add, `-D` rows subtract — so deletes and update retractions on
+    * change feed ([[Warehouse.readChanges]]) with the [[windowPartials]] —
+    * `+I` rows add, `-D` rows subtract — so deletes and update retractions on
     * the fact keep the rollup exact where the append-only file feed would
     * silently miss the subtraction. Same ledger (streamId `rollup:<fact>`,
     * same idempotence), and over append-only windows the two forms fold
     * identical values, so a fact can switch to this path mid-life.
     *
-    * Count/sum measures fold signed — always O(window). Min/max are NOT
-    * delete-invertible (a deleted extremum cannot be un-folded without the
-    * raw distribution), so they maintain by TARGETED RESCAN instead of
-    * refusing: a window's `-D` rows mark a group AFFECTED only when some
-    * deleted value TIES the group's stored extreme (a delete strictly
-    * inside the bounds can't move them, and a `-D` value outside them is
-    * impossible — the row existed at the covered version). Affected groups
-    * are recomputed from the fact's CURRENT snapshot scoped to exactly
-    * those groups — per-column IN predicates reach the parquet scan, so a
-    * fact clustered by the group key rescans O(affected-group files), never
-    * the table — and their rollup history is retracted-and-replaced in the
-    * same maintenance (fold history must FORGET the dead extremum: min-of-
-    * mins over stale partials would resurrect it). Unaffected groups append
-    * one partial row exactly as before, with the window's `+I` rows as
-    * min/max candidates. Groups whose rows are all deleted vanish from the
-    * rollup, matching the direct aggregate.
-    *
-    * Above [[MaxRescanGroups]] affected groups (a mass delete), the
-    * targeted predicates would dwarf the plan: the maintenance switches to
-    * one consolidation REPLACE (unaffected history + window partials +
-    * semi-join-scoped recomputes) — O(rollup rows + affected fact scan),
-    * still never an unscoped fact rescan.
+    * Count/sum measures fold signed — always O(window). Min/max maintain by
+    * the [[affectedGroups]] tie gate and the one [[recompute]] at the fact
+    * head: unaffected groups append one partial row with the window's `+I`
+    * rows as min/max candidates; affected groups are recomputed, carrying
+    * the window partials of the unaffected ones in the same commit.
     */
   def maintainFromChangeFeed(wh: Warehouse, fact: String, table: String, spec: Spec): Long = {
     val sid = s"rollup:$fact"
     val last = wh.lastCommittedBatchId(table, sid)
     val now = wh.currentVersion(fact)
     if (now <= last) return now
-    val feed0 = if (last < 0)
-      wh.loadVersion(fact, now).withColumn("_change_type", lit("+I"))
-    else wh.readChanges(fact, last, now)
-    val extremal = spec.measures.filter(_.signedPartial.isEmpty)
-    extremal.foreach {
-      case _: MinOf | _: MaxOf => ()
-      case m => throw new IllegalArgumentException(
-        s"maintainFromChangeFeed: measure ${m.name} is neither delete-invertible " +
-          "nor an extremal (min/max) — no maintenance strategy exists for it")
-    }
-    val keys = spec.keys
-
-    def ensureTable(p: DataFrame): Unit =
-      if (!wh.exists(table))
-        wh.create(table, org.apache.spark.sql.types.StructType(
-          p.schema.fields.map(_.copy(nullable = true))))
-
-    if (extremal.isEmpty) {
-      // the pure count/sum path — byte-identical to the pre-rescan form
-      val p = feed0.groupBy(keys.map(col): _*)
-        .agg(spec.measures.head.signedPartial.get,
-          spec.measures.tail.map(_.signedPartial.get): _*)
-      ensureTable(p)
-      wh.append(table, p, statsCols = keys)
-      wh.recordBatchId(table, sid, now)
-      return now
-    }
-
-    // bootstrap (whole snapshot as +I) has no deletes by construction — no
-    // checkpoint, no affected groups, one pass
+    // bootstrap (whole snapshot as +I) has no deletes by construction: no
+    // checkpoint, no tie gate, one pass
     val bootstrap = last < 0
-    val feed = if (bootstrap) feed0
-               else feed0.localCheckpoint() // consumers: window partial, -D extremes
-    // window partial: signed where invertible, +I-candidates-only for min/max
-    def windowPartial(m: Measure): Column = m.signedPartial.getOrElse(m match {
-      case MinOf(e, n) => min(when(!isDelete, e)).as(n)
-      case MaxOf(e, n) => max(when(!isDelete, e)).as(n)
-      case other       => throw new IllegalStateException(other.name) // unreachable
-    })
-    val part = feed.groupBy(keys.map(col): _*)
-      .agg(windowPartial(spec.measures.head), spec.measures.tail.map(windowPartial): _*)
-    ensureTable(part)
-
-    // affected groups: a -D value null-safe-ties the stored extreme
-    val delRows = if (bootstrap) feed.limit(0).filter(isDelete)
-                  else feed.filter(isDelete)
-    val exCols = extremal.map {
-      case MinOf(e, n) => min(e).as(s"__d_$n")
-      case MaxOf(e, n) => max(e).as(s"__d_$n")
-      case m           => throw new IllegalStateException(m.name) // unreachable
-    }
-    val stored = read(wh, table, spec).alias("st")
-    val delExt = delRows.groupBy(keys.map(col): _*)
-      .agg(exCols.head, exCols.tail: _*).alias("dx")
-    val keyCond =
-      if (keys.isEmpty) lit(true)
-      else keys.map(k => col(s"dx.$k") <=> col(s"st.$k")).reduce(_ && _)
-    val tie = extremal.map(m => col(s"__d_${m.name}") <=> col(s"st.${m.name}"))
-      .reduce(_ || _)
-    val affected = delExt.join(stored, keyCond).filter(tie)
-      .select(keys.map(k => col(s"dx.$k")): _*).localCheckpoint()
-    val nAffected = affected.count()
-
-    if (nAffected == 0) {
-      wh.append(table, part, statsCols = keys)
-      wh.recordBatchId(table, sid, now)
-      return now
-    }
-
-    val factNow = wh.loadVersion(fact, now)
-    val plainAgg = (df: DataFrame) => df.groupBy(keys.map(col): _*)
-      .agg(spec.measures.head.partial, spec.measures.tail.map(_.partial): _*)
-    var rescanRows: Array[Row] = Array.empty
-    if (keys.isEmpty) {
-      // global rollup: the one group is affected — consolidate by replace
-      wh.replace(table, plainAgg(factNow), statsCols = keys)
-    } else if (nAffected <= MaxRescanGroups && {
-               rescanRows = affected.collect() // bounded by the gate — metadata-scale
-               !rescanRows.exists(r => keys.exists(r.getAs[Any](_) == null)) }) {
-      val rows = rescanRows
-      // per-column IN predicates push into the parquet scan (the real
-      // prune); the null-safe group disjunction is the exact residual.
-      // Plain col() refs: each filter resolves against its own frame
-      val (groupPred, perCol) = groupPredicates(keys, rows.toSeq)
-      val recomputed = plainAgg(factNow.filter(perCol && groupPred))
-      val unaff = part.filter(!groupPred)
-      // retraction of the affected groups' fold history and the landing of
-      // the replacement (unaffected window partials + consolidated rows)
-      // must be ONE commit: two commits left a crash window in which the
-      // retracted history was gone but its replacement absent — replay then
-      // found no tie (nAffected == 0) and silently dropped the groups'
-      // pre-window history. The staged equality delete applies to
-      // pre-transaction rows only ([[Warehouse.transact]] snapshot-at-start
-      // semantics), so it cannot touch the same transaction's appended
-      // replacement rows. Null group keys never reach this branch (staged
-      // equality deletes are plain-equality — a null key tuple would not
-      // retract); those windows take the consolidation replace below,
-      // which is a single commit by construction.
-      wh.transact { tx =>
-        tx.equalityDelete(table, affected)
-        tx.append(table, unaff.unionByName(recomputed), statsCols = keys)
-      }
-    } else {
-      // mass-delete window: one consolidation replace
-      def nullSafe(l: DataFrame, r: DataFrame): Column =
-        keys.map(k => l(k) <=> r(k)).reduce(_ && _)
-      val recomputed = plainAgg(
-        factNow.join(affected, nullSafe(factNow, affected), "left_semi"))
-      val hist = wh.load(table)
-      val unaffHist = hist.join(affected, nullSafe(hist, affected), "left_anti")
-      val unaffPart = part.join(affected, nullSafe(part, affected), "left_anti")
-      wh.replace(table, unaffHist.unionByName(unaffPart).unionByName(recomputed),
-        statsCols = keys)
+    val feed =
+      if (bootstrap) wh.loadVersion(fact, now).withColumn("_change_type", lit("+I"))
+      else if (spec.measures.forall(_.signedPartial.isDefined)) wh.readChanges(fact, last, now)
+      else wh.readChanges(fact, last, now).localCheckpoint() // consumers: partial, tie gate
+    val part = windowPartials(feed, spec)
+    if (!wh.exists(table))
+      wh.create(table, org.apache.spark.sql.types.StructType(
+        part.schema.fields.map(_.copy(nullable = true))))
+    (if (bootstrap) None else affectedGroups(wh, table, spec, feed)) match {
+      case None              => wh.append(table, part, statsCols = spec.keys)
+      case Some(groups) =>
+        recompute(wh, table, spec, fact, now, groups, carry = Some(part), clear = Nil)
     }
     wh.recordBatchId(table, sid, now)
     now

@@ -12,10 +12,10 @@ import org.apache.spark.sql.types.StructType
   * table carries the format stamp (`stampOn`, under ledger id `stampSid`
   * with value `stampValue`, refusing with the sink's `refusal(name, got)`
   * text), which table carries the `idxfollow:` ledger (`ledgerOn`), which
-  * tables a deleted corpus pk retracts from (`retractOn`, in order), and
-  * which tables compact clustered on which keys (`compactOn`). Table
+  * tables a deleted corpus pk retracts from (`retractOn`, in order). Table
   * arguments are suffixes of the corpus name (`"__sigs"`). Nothing here
-  * branches on which family it serves.
+  * branches on which family it serves; which tables compact on which keys
+  * is one declaration for every family ([[IndexFamily.CompactOn]]).
   *
   * '''Format stamp.''' A change to the derivation algebra or its parameters
   * makes stored index rows silently mismatch fresh ones (no error
@@ -62,8 +62,7 @@ import org.apache.spark.sql.types.StructType
 private[sink] final class IndexFamily(wh: Warehouse, pkCol: String,
     stampOn: String, stampSid: String, stampValue: Long,
     refusal: (String, Long) => String,
-    ledgerOn: String, retractOn: Seq[String],
-    compactOn: Seq[(String, Seq[String])]) {
+    ledgerOn: String, retractOn: Seq[String]) {
 
   // ---- format stamp -----------------------------------------------------
 
@@ -177,15 +176,52 @@ private[sink] final class IndexFamily(wh: Warehouse, pkCol: String,
       .filter(col("__rn") === 1).drop("__rn")
       .localCheckpoint()
   }
+}
 
-  // ---- serving / maintenance --------------------------------------------
+private[sink] object IndexFamily {
 
-  /** Compact each `compactOn` table's ingest-granularity files clustered on
-    * its probe key ([[Warehouse.compactFiles]]): after many small batches
-    * their key ranges overlap and a probe opens a file per batch; the
-    * rewrite restores few DISJOINT ranges. Content-preserving; pending
-    * retractions materialize in the process.
+  /** Every followed-index table that compacts clustered on a probe key, by
+    * corpus-name suffix; Nil = the table's pk, its first column. Per-batch
+    * ingest appends fragment their key ranges, degrading probes to a file
+    * open per batch, and a plain compact would destroy the disjoint ranges
+    * the O(probe-keys) lookup depends on. Each sink's `compact` and
+    * [[Warehouse.maintain]] rewrite the tables [[beside]] a name (maintain
+    * under its small-file policy), and maintain keeps the key on a family
+    * table it is pointed at directly ([[clusterKeys]]).
     */
-  def compact(name: String, smallRows: Long): Unit =
-    compactOn.foreach { case (t, by) => wh.compactFiles(name + t, smallRows, clusterBy = by) }
+  val CompactOn: Seq[(String, Seq[String])] = Seq(
+    "__bands" -> Seq("band_key"),     // near-dup LSH probe index
+    "__sigs" -> Nil,                  // near-dup signatures (pk)
+    "__postings" -> Seq("term"),      // BM25 inverted index
+    "__doclens" -> Nil,               // BM25 doc lengths (pk)
+    "__codes" -> Seq("cell"))         // IVF-PQ codes
+
+  private def clusterOn(cols: Seq[String], schema: StructType): Seq[String] =
+    cols.filter(schema.fieldNames.contains) match {
+      case Nil => schema.fieldNames.headOption.toSeq
+      case cs  => cs
+    }
+
+  /** The columns family table `table` compacts clustered on; None when the
+    * name carries no [[CompactOn]] suffix.
+    */
+  def clusterKeys(table: String, schema: StructType): Option[Seq[String]] =
+    CompactOn.collectFirst { case (sfx, cols) if table.endsWith(sfx) => clusterOn(cols, schema) }
+
+  /** The [[CompactOn]] tables that exist beside `name`, each with the
+    * columns it compacts clustered on.
+    */
+  def beside(wh: Warehouse, name: String): Seq[(String, Seq[String])] =
+    CompactOn.collect { case (sfx, cols) if wh.exists(name + sfx) =>
+      (name + sfx) -> clusterOn(cols, wh.currentManifest(name + sfx).schema)
+    }
+
+  /** Compact each index table beside `name` ([[beside]]) clustered on its
+    * probe key ([[Warehouse.compactFiles]]): after many small batches the
+    * key ranges overlap and a probe opens a file per batch; the rewrite
+    * restores few DISJOINT ranges. Content-preserving; pending retractions
+    * materialize in the process.
+    */
+  def compact(wh: Warehouse, name: String, smallRows: Long): Unit =
+    beside(wh, name).foreach { case (t, by) => wh.compactFiles(t, smallRows, clusterBy = by) }
 }

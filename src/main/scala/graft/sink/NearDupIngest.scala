@@ -94,8 +94,7 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
   // probe hit that cannot verify; the reverse is inert (probes key on bands)
   private val family = new IndexFamily(wh, pkCol,
     stampOn = "__sigs", stampSid = "sigformat", stampValue = formatStamp, refusal,
-    ledgerOn = "__bands", retractOn = Seq("__bands", "__sigs"),
-    compactOn = Seq("__bands" -> Seq("band_key"), "__sigs" -> Seq(pkCol)))
+    ledgerOn = "__bands", retractOn = Seq("__bands", "__sigs"))
 
   /** Operator override for a pre-stamp index KNOWN to be in this instance's
     * exact format and parameters: records the stamp so the guard passes.
@@ -306,7 +305,7 @@ final class NearDupIngest(wh: Warehouse, pkCol: String, textCol: String,
     * materialize in the process.
     */
   def compact(name: String, smallRows: Long = 100000L): Unit =
-    family.compact(name, smallRows)
+    IndexFamily.compact(wh, name, smallRows)
 
   /** Dedup DECISIONS from the maintained index — q71's connected-components
     * keeper algebra applied to [[pairs]]: every clustered doc labeled with

@@ -24,8 +24,8 @@ import graft.functions.TextFns
   *   `<name>__doclens` (pk, dl) — the append-only fact feeding the corpus
   *     stats rollup;
   *   `<name>__cstats` — ONE-ROW additive rollup (n_docs, total_dl)
-  *     maintained by [[IncrementalRollup.maintainFromFeed]] off the doclens
-  *     change feed: O(batch) per ingest, ledger-idempotent across replays,
+  *     maintained by [[IncrementalRollup.maintainFromChangeFeed]] off the
+  *     doclens change feed: O(batch) per ingest, ledger-idempotent across replays,
   *     and the BM25 normalizer never rescans doclens.
   *
   * Commit discipline and replay safety: an [[ingest]] stages its postings,
@@ -80,8 +80,7 @@ final class SearchIndexIngest(wh: Warehouse, pkCol: String, textCol: String) {
 
   private val family = new IndexFamily(wh, pkCol,
     stampOn = "__postings", stampSid = "idxformat", stampValue = formatStamp, refusal,
-    ledgerOn = "__postings", retractOn = Seq("__postings", "__doclens"),
-    compactOn = Seq("__postings" -> Seq("term")))
+    ledgerOn = "__postings", retractOn = Seq("__postings", "__doclens"))
 
   /** Operator override for a pre-stamp index KNOWN to be tokenized at the
     * current generation: records the stamp so the guard passes. Misuse
@@ -190,12 +189,16 @@ final class SearchIndexIngest(wh: Warehouse, pkCol: String, textCol: String) {
     FollowReport(v, deleted, indexed)
   }
 
-  /** Compact the postings table's ingest-granularity files clustered on
-    * `term` ([[IndexFamily.compact]]): restores the O(query-terms) probe;
-    * search results are unchanged (spec-pinned).
+  /** Compact the postings and doclens tables' ingest-granularity files
+    * ([[IndexFamily.compact]], the tables [[Warehouse.maintain]] compacts
+    * too): postings re-cluster on `term`, restoring the O(query-terms)
+    * probe, and doclens on the pk, so every ingest's idempotence anti-join
+    * opens few files; search results are unchanged (spec-pinned). The doclens rewrite is
+    * content-preserving, so the next [[followChanges]] reads its files on
+    * both sides of the `__cstats` change-feed window once, and they cancel.
     */
   def compact(name: String, smallRows: Long = 100000L): Unit =
-    family.compact(name, smallRows)
+    IndexFamily.compact(wh, name, smallRows)
 
   /** Postings of `terms` only: a filter on the postings snapshot
     * ([[Warehouse.load]]), so the catalog rules skip every file whose

@@ -93,8 +93,7 @@ final class VectorIndexIngest(wh: Warehouse, pkCol: String, vecCol: String,
 
   private val family = new IndexFamily(wh, pkCol,
     stampOn = "__codebook", stampSid = "vecformat", stampValue = formatStamp, refusal,
-    ledgerOn = "__codes", retractOn = Seq("__codes"),
-    compactOn = Seq("__codes" -> Seq("cell")))
+    ledgerOn = "__codes", retractOn = Seq("__codes"))
 
   /** Operator override for a pre-stamp index KNOWN to match this ingester's
     * model shape and metric: records the stamp so the guard passes.
@@ -226,7 +225,7 @@ final class VectorIndexIngest(wh: Warehouse, pkCol: String, vecCol: String,
     * search results are unchanged (spec-pinned).
     */
   def compact(name: String, smallRows: Long = 100000L): Unit =
-    family.compact(name, smallRows)
+    IndexFamily.compact(wh, name, smallRows)
 
   /** Blue/green swap: promote the complete family built under `from`
     * (corpus + frozen model + codes) to `to` in ONE atomic intent

@@ -177,19 +177,26 @@ private[sink] trait WarehouseChangeFeed { self: Warehouse =>
                          pairUpdates: Boolean = false): DataFrame = {
     val base = readChangesImpl(name, fromVersion, toVersion, lineage = true)
     if (!pairUpdates) base
-    else {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("_row_id"))
-      Seq("__cdc_d", "__cdc_i").foreach(r => require(!base.columns.contains(r),
-        s"$name: column name $r is reserved by the change feed"))
-      base
-        .withColumn("__cdc_d", sum(when(col("_change_type") === "-D", 1).otherwise(0)).over(w))
-        .withColumn("__cdc_i", sum(when(col("_change_type") === "+I", 1).otherwise(0)).over(w))
-        .withColumn("_change_type",
-          when(col("__cdc_d") === 1 && col("__cdc_i") === 1,
-            when(col("_change_type") === "-D", lit("-U")).otherwise(lit("+U")))
-            .otherwise(col("_change_type")))
-        .drop("__cdc_d", "__cdc_i")
-    }
+    else pairImages(name, base, Seq("_row_id"))
+  }
+
+  /** Relabel update images: rows of `base` whose non-null `ids` net exactly
+    * one `-D` and one `+I` become `-U` / `+U`; every other row keeps its
+    * label. One keyed window over the changed rows.
+    */
+  private def pairImages(name: String, base: DataFrame, ids: Seq[String]): DataFrame = {
+    Seq("__cdc_d", "__cdc_i").foreach(r => require(!base.columns.contains(r),
+      s"$name: column name $r is reserved by the change feed"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(ids.map(col): _*)
+    val nonNull = ids.map(col(_).isNotNull).reduce(_ && _)
+    base
+      .withColumn("__cdc_d", sum(when(col("_change_type") === "-D", 1).otherwise(0)).over(w))
+      .withColumn("__cdc_i", sum(when(col("_change_type") === "+I", 1).otherwise(0)).over(w))
+      .withColumn("_change_type",
+        when(nonNull && col("__cdc_d") === 1 && col("__cdc_i") === 1,
+          when(col("_change_type") === "-D", lit("-U")).otherwise(lit("+U")))
+          .otherwise(col("_change_type")))
+      .drop("__cdc_d", "__cdc_i")
   }
 
   private def readChangesImpl(name: String, fromVersion: Long, toVersion: Long,
@@ -357,18 +364,7 @@ private[sink] trait WarehouseChangeFeed { self: Warehouse =>
             "identifier columns explicitly")
         sets.head
       }
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    val nonNull = keys.map(col(_).isNotNull).reduce(_ && _)
-    Seq("__cdc_d", "__cdc_i").foreach(r => require(!base.columns.contains(r),
-      s"$name: column name $r is reserved by the change feed"))
-    base
-      .withColumn("__cdc_d", sum(when(col("_change_type") === "-D", 1).otherwise(0)).over(w))
-      .withColumn("__cdc_i", sum(when(col("_change_type") === "+I", 1).otherwise(0)).over(w))
-      .withColumn("_change_type",
-        when(nonNull && col("__cdc_d") === 1 && col("__cdc_i") === 1,
-          when(col("_change_type") === "-D", lit("-U")).otherwise(lit("+U")))
-          .otherwise(col("_change_type")))
-      .drop("__cdc_d", "__cdc_i")
+    pairImages(name, base, keys)
   }
 
   /** Files commit `v` CHANGED — data paths added or removed plus delete

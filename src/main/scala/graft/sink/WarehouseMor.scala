@@ -249,21 +249,6 @@ private[sink] trait WarehouseMor { self: Warehouse =>
       statsRefreshed: Boolean = false, pendingDrained: Long = 0L,
       indexCompacted: Seq[String] = Nil)
 
-  /** Followed-index family tables maintained BESIDE a base table (`<name>`
-    * + suffix) and the probe key each must stay clustered on: per-batch
-    * ingest appends fragment their key ranges, degrading probes to a file
-    * open per batch; [[maintain]] re-compacts them under the small-file
-    * policy with the RIGHT clusterBy (a plain compact would destroy the
-    * disjoint probe ranges the O(probe-keys) lookup depends on). Empty =
-    * cluster on the table's first column (the pk of sigs/doclens).
-    */
-  private val IndexFamilies: Seq[(String, Seq[String])] = Seq(
-    "__bands" -> Seq("band_key"),     // near-dup LSH probe index
-    "__sigs" -> Nil,                  // near-dup signatures (pk)
-    "__postings" -> Seq("term"),      // BM25 inverted index
-    "__doclens" -> Nil,               // BM25 doc lengths (pk)
-    "__codes" -> Seq("cell"))         // IVF-PQ codes
-
   /** Policy-driven auto-maintenance: read the manifest signals and run
     * exactly the actions they justify — the Iceberg maintenance-procedures
     * analog, driven by the same metadata the `$files`/`$deletes`/
@@ -305,13 +290,7 @@ private[sink] trait WarehouseMor { self: Warehouse =>
     // the maintainAll sweep naming "corpus__bands" directly) must keep the
     // probe-key clustering — a plain compact would merge files spanning
     // every key range and degrade probes to a file open per batch
-    val selfCluster: Seq[String] = IndexFamilies.collectFirst {
-      case (sfx, cols) if name.endsWith(sfx) =>
-        cols.filter(man2.schema.fieldNames.contains) match {
-          case Nil => man2.schema.fieldNames.headOption.toSeq
-          case cs  => cs
-        }
-    }.getOrElse(Nil)
+    val selfCluster = IndexFamily.clusterKeys(name, man2.schema).getOrElse(Nil)
     if (doFiles) compactFiles(name, policy.smallFileRows, clusterBy = selfCluster)
     val doExpire = history(name).size > policy.keepSnapshots
     if (doExpire) expireSnapshots(name, policy.keepSnapshots)
@@ -330,26 +309,14 @@ private[sink] trait WarehouseMor { self: Warehouse =>
     staleCols.foreach(cols => analyzeIncremental(name, cols))
     // followed-index families beside this table: compact fragmented probe
     // tables under the same small-file thresholds, clustered on their
-    // probe keys (see [[IndexFamilies]]) — a followed index otherwise
+    // probe keys (see [[IndexFamily.CompactOn]]) — a followed index otherwise
     // degrades to O(batches) file opens per probe with no policy hook
-    val idxCompacted = IndexFamilies.flatMap { case (sfx, clusterCols) =>
-      val t = s"$name$sfx"
-      if (!exists(t)) None
-      else {
-        val m = currentManifest(t)
-        if (m.files.count(_.rows < policy.smallFileRows) < policy.smallFileCount) None
-        else {
-          val cb = clusterCols.filter(m.schema.fieldNames.contains) match {
-            case Nil => m.schema.fieldNames.headOption.toSeq
-            case cs  => cs
-          }
-          compactFiles(t, policy.smallFileRows, clusterBy = cb)
-          Some(t)
-        }
-      }
+    val idxCompacted = IndexFamily.beside(self, name).filter { case (t, _) =>
+      currentManifest(t).files.count(_.rows < policy.smallFileRows) >= policy.smallFileCount
     }
+    idxCompacted.foreach { case (t, by) => compactFiles(t, policy.smallFileRows, clusterBy = by) }
     MaintenanceReport(currentVersion(name), doDeletes, doFiles, doExpire,
-      staleCols.isDefined, drained, idxCompacted)
+      staleCols.isDefined, drained, idxCompacted.map(_._1))
   }
 
   /** Policy sweep over EVERY table in the warehouse — the scheduler entry

@@ -206,30 +206,16 @@ object ChangeFeedStream {
     wh.addMissingColumns(copy, toSchema)
   }
 
-  /** Per-window partial of one measure under CDC signs. Count and sum are
-    * subtractable (`-D` retracts exactly). Min/max are NOT — a tick's
-    * partial folds the window's `+I` candidates only, and deletions that
-    * TIE a stored extreme mark the group into the PENDING side table for
-    * [[drainPendingExtremes]]'s targeted rescan (a tick itself never
-    * rescans — foreachBatch must stay O(window)).
-    */
-  private def signedPartial(m: IncrementalRollup.Measure, sign: org.apache.spark.sql.Column) =
-    m match {
-      case IncrementalRollup.CountStar(name)   => sum(sign).as(name)
-      case IncrementalRollup.SumOf(expr, name) => sum(expr * sign).as(name)
-      case IncrementalRollup.MinOf(expr, name) => min(when(sign === 1, expr)).as(name)
-      case IncrementalRollup.MaxOf(expr, name) => max(when(sign === 1, expr)).as(name)
-      case other => throw new IllegalArgumentException(
-        s"change-feed rollup maintenance has no strategy for measure '${other.name}'")
-    }
-
   /** Maintain an ADDITIVE rollup from the feed — the CDC generalization of
     * [[graft.sink.IncrementalRollup.maintainFromFeed]], which requires an
     * append-only fact: here merges, MOR upserts, row deletes and
     * compactions all maintain EXACTLY, because `+I` rows add their
-    * contribution and `-D` rows subtract theirs (count → ±1, sum → ±value;
-    * min/max refuse loudly — not subtractable). The rollup table holds
-    * signed partials, folded by [[IncrementalRollup.read]]'s merge
+    * contribution and `-D` rows subtract theirs (count → ±1, sum → ±value,
+    * [[IncrementalRollup.windowPartials]]). Min/max are not subtractable:
+    * a tick folds the window's `+I` candidates, and the groups where a `-D`
+    * ties the stored extreme ([[IncrementalRollup.affectedGroups]]) land in
+    * the pending side table for [[drainPendingExtremes]]. The rollup table
+    * holds these partials, folded by [[IncrementalRollup.read]]'s merge
     * exactly as batch partials are.
     *
     * Exactly-once STRUCTURALLY: each partials batch carries the covered
@@ -252,10 +238,8 @@ object ChangeFeedStream {
     */
   def maintainRollup(wh: Warehouse, fact: String, rollup: String,
                      spec: IncrementalRollup.Spec, consumerId: String,
-                     drainEvery: Int = 0): Long = {
-    var delivered = false
-    val cur = poll(wh, fact, consumerId) { (changes0, from, to) =>
-      delivered = true
+                     drainEvery: Int = 0): Long =
+    poll(wh, fact, consumerId) { (changes0, from, to) =>
       val recorded = math.max(
         math.max(
           wh.lastCommittedBatchId(rollup, sid(consumerId)), // legacy file ledger
@@ -265,11 +249,7 @@ object ChangeFeedStream {
         val changes = (
           if (recorded > from) wh.readChanges(fact, recorded, to) else changes0
           ).localCheckpoint() // consumers: window partials + -D extreme gate
-        val sign = when(col("_change_type") === "+I", lit(1)).otherwise(lit(-1))
-        val partials = changes.groupBy(spec.keys.map(col): _*)
-          .agg(signedPartial(spec.measures.head, sign),
-            spec.measures.tail.map(signedPartial(_, sign)): _*)
-          .withColumn(VCol, lit(to))
+        val partials = IncrementalRollup.windowPartials(changes, spec).withColumn(VCol, lit(to))
         if (!wh.exists(rollup))
           wh.create(rollup, org.apache.spark.sql.types.StructType(
             partials.schema.fields.map(_.copy(nullable = true))))
@@ -285,63 +265,40 @@ object ChangeFeedStream {
           wh.putTableMeta(rollup, CfsSpecKey, specStr)
         if (!wh.getTableMeta(rollup, CfsFactKey).contains(fact))
           wh.putTableMeta(rollup, CfsFactKey, fact)
-        // EXTREMAL measures (q170's algebra, split across the stream/drain
-        // boundary): the tick computes the TIE-GATED affected-group set —
-        // a window `-D` value null-safe-tying the group's stored extreme
-        // (deletes strictly inside the bounds can't move it) — and lands
-        // it in the pending side table IN THE SAME transaction as the
-        // window partials, so no crash point separates "partials applied"
-        // from "damage recorded". The tick itself NEVER rescans the fact;
+        // EXTREMAL measures: the tie-gated affected groups land in the
+        // pending side table IN THE SAME transaction as the window partials,
+        // so no crash point separates "partials applied" from "damage
+        // recorded". The tick itself NEVER rescans the fact;
         // [[drainPendingExtremes]] does, targeted, at its own cadence.
-        val extremal = spec.measures.filter(_.signedPartial.isEmpty)
-        val affected: Option[org.apache.spark.sql.DataFrame] =
-          if (extremal.isEmpty) None
-          else {
-            val isDel = col("_change_type") === "-D"
-            val delRows = changes.filter(isDel)
-            val exCols = extremal.map {
-              case IncrementalRollup.MinOf(e, n) => min(e).as(s"__d_$n")
-              case IncrementalRollup.MaxOf(e, n) => max(e).as(s"__d_$n")
-              case m => throw new IllegalStateException(m.name) // unreachable
-            }
-            val stored = IncrementalRollup.read(wh, rollup, spec).alias("st")
-            val delExt = delRows.groupBy(spec.keys.map(col): _*)
-              .agg(exCols.head, exCols.tail: _*).alias("dx")
-            val keyCond =
-              if (spec.keys.isEmpty) lit(true)
-              else spec.keys.map(k => col(s"dx.$k") <=> col(s"st.$k")).reduce(_ && _)
-            val tie = extremal.map(m => col(s"__d_${m.name}") <=> col(s"st.${m.name}"))
-              .reduce(_ || _)
-            val aff = delExt.join(stored, keyCond).filter(tie)
-              .select(spec.keys.map(k => col(s"dx.$k")) :+ lit(to).as(VCol): _*)
-              .localCheckpoint()
-            if (aff.isEmpty) None else Some(aff)
-          }
-        affected match {
+        IncrementalRollup.affectedGroups(wh, rollup, spec, changes) match {
           case None => wh.append(rollup, partials, statsCols = spec.keys :+ VCol)
-          case Some(aff) =>
+          case Some(groups) =>
             wh.transact { tx =>
               tx.append(rollup, partials, statsCols = spec.keys :+ VCol)
-              tx.append(pendingTable(rollup), aff, statsCols = spec.keys)
+              tx.append(pendingTable(rollup), groups.withColumn(VCol, lit(to)),
+                statsCols = spec.keys)
             }
         }
       }
+      // Self-serve drain cadence (opt-in): every `drainEvery` DELIVERING
+      // ticks, drain the pending side table — a long-running maintainer no
+      // longer relies on an external caller remembering the drain. The
+      // drain and then the counter land BEFORE `poll` records the cursor, so
+      // a crash anywhere up to the counter re-delivers this window and
+      // re-runs the drain it owes (`CrashMatrixSpec`); a crash between the
+      // counter and the cursor counts the window twice, which shifts an
+      // N > 1 cadence one tick early. The pending gate is metadata-only
+      // (manifest row counts), and a call that delivers nothing never gets
+      // here, so idle calls run no Spark job; the "one maintainer per
+      // rollup" discipline already makes the tick the safe place to drain
+      // from.
+      if (drainEvery > 0) {
+        val t = math.max(0L, wh.lastCommittedBatchId(rollup, TickSid)) + 1
+        if (t % drainEvery == 0 && hasPending(wh, rollup))
+          drainPendingExtremes(wh, fact, rollup, spec)
+        wh.recordBatchId(rollup, TickSid, t)
+      }
     }
-    // Self-serve drain cadence (opt-in): every `drainEvery` DELIVERING
-    // ticks, drain the pending side table — a long-running maintainer no
-    // longer relies on an external caller remembering the drain. The gate
-    // is metadata-only when there is nothing pending (manifest row
-    // counts, zero Spark jobs), so idle ticks pay nothing; the "one
-    // maintainer per rollup" discipline already makes the tick the safe
-    // place to drain from.
-    if (drainEvery > 0 && delivered) {
-      val t = math.max(0L, wh.lastCommittedBatchId(rollup, TickSid)) + 1
-      wh.recordBatchId(rollup, TickSid, t)
-      if (t % drainEvery == 0 && hasPending(wh, rollup))
-        drainPendingExtremes(wh, fact, rollup, spec)
-    }
-    cur
-  }
 
   /** Metadata-only probe: does the pending side table carry any live rows?
     * Conservative (MOR retractions may cover every data row, in which case
@@ -351,7 +308,7 @@ object ChangeFeedStream {
     wh.exists(pendingTable(rollup)) &&
       wh.currentManifest(pendingTable(rollup)).files.exists(_.rows > 0)
 
-  private val VCol = "__cfs_v"
+  private val VCol = IncrementalRollup.MarkerCol
   /** Drain-preserved watermark ledger (fixed streamId — the one-maintainer
     * discipline makes it single-writer): records the covered version
     * independently of the rollup's `__cfs_v` stat bounds, so a drain that
@@ -389,16 +346,14 @@ object ChangeFeedStream {
     * pending group recomputes from the fact snapshot AT THE ROLLUP'S
     * COVERED VERSION (the `__cfs_v` marker — recomputing at the head would
     * pre-fold windows the stream has not delivered and double-count them
-    * on delivery) with the same targeted scan as
-    * [[IncrementalRollup.maintainFromChangeFeed]]: per-column IN
-    * predicates push into the parquet scan, O(affected-group files) on a
-    * key-clustered fact, never an unscoped rescan. The group's fold
-    * history retracts and the recomputed row (stamped with the marker, so
-    * the replay watermark survives any later compaction of the original
-    * marker files) lands — with the pending-key clear — as ONE transaction
-    * commit. Null-keyed or over-gate sets take the single-commit
-    * consolidation replace; a crash between it and the pending clear
-    * re-drains idempotently (same marker, same recompute).
+    * on delivery) through [[IncrementalRollup.recompute]], the recompute
+    * [[IncrementalRollup.maintainFromChangeFeed]] runs at the head: a
+    * bounded non-null key set retracts the groups' fold history, lands the
+    * recomputed rows (stamped with the marker, so the replay watermark
+    * survives any later compaction of the original marker files) and clears
+    * their pending keys in ONE transaction commit; a keyless, null-keyed or
+    * over-gate set consolidates by replace, and a crash before its pending
+    * clear re-drains idempotently (same marker, same recompute).
     *
     * One maintainer per rollup (the [[maintainRollup]] discipline): the
     * drain must not race a tick. Returns the number of groups drained.
@@ -407,8 +362,7 @@ object ChangeFeedStream {
                            spec: IncrementalRollup.Spec): Long = {
     val pend = pendingTable(rollup)
     if (!wh.exists(pend) || !wh.exists(rollup)) return 0L
-    val keys = spec.keys
-    val pKeys = wh.load(pend).select(keys.map(col): _*).distinct().localCheckpoint()
+    val pKeys = wh.load(pend).select(spec.keys.map(col): _*).distinct().localCheckpoint()
     val n = pKeys.count()
     if (n == 0L) return 0L
     val marker = math.max(statMarker(wh, rollup, VCol),
@@ -424,51 +378,8 @@ object ChangeFeedStream {
     // Recording the CURRENT covered version is always safe (it is already
     // covered), and a crash at any later point leaves it durable.
     wh.recordBatchId(rollup, MarkSid, marker)
-    val factAt = wh.loadVersion(fact, marker)
-    def recomputeOf(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy(keys.map(col): _*)
-        .agg(spec.measures.head.partial, spec.measures.tail.map(_.partial): _*)
-        .withColumn(VCol, lit(marker))
-    def nullSafe(l: org.apache.spark.sql.DataFrame,
-                 r: org.apache.spark.sql.DataFrame) =
-      keys.map(k => l(k) <=> r(k)).reduce(_ && _)
-    // consolidation: recompute every pending group against the snapshot and
-    // replace — used for the keyless rollup, over-gate sets, and null keys
-    def consolidate(): Unit = {
-      val hist = wh.load(rollup)
-      val unaff = hist.join(pKeys, nullSafe(hist, pKeys), "left_anti")
-      val recomputed = recomputeOf(
-        factAt.join(pKeys, nullSafe(factAt, pKeys), "left_semi"))
-      wh.replace(rollup, unaff.unionByName(recomputed), statsCols = keys :+ VCol)
-      val pendDf = wh.load(pend)
-      wh.replace(pend, pendDf.join(pKeys, nullSafe(pendDf, pKeys), "left_anti"))
-    }
-    if (keys.isEmpty) {
-      // global rollup: the one group is the whole table — consolidate
-      wh.replace(rollup, recomputeOf(factAt), statsCols = Seq(VCol))
-      wh.replace(pend, wh.load(pend).limit(0))
-    } else if (n > IncrementalRollup.MaxRescanGroups) {
-      // over-gate: consolidate WITHOUT collecting the key set to the driver
-      // (at 100 TB with a neglected drain cadence and a wide-key rollup the
-      // unconditional collect was the one driver-side materialization in an
-      // otherwise O(changes) path)
-      consolidate()
-    } else {
-      // bounded collect (n <= MaxRescanGroups): the targeted path needs the
-      // literal key values for its pushed-down IN predicates anyway
-      val rows = pKeys.collect()
-      val nullKey = rows.exists(r => keys.exists(r.getAs[Any](_) == null))
-      if (nullKey) consolidate()
-      else {
-        val (groupPred, perCol) = IncrementalRollup.groupPredicates(keys, rows.toSeq)
-        val recomputed = recomputeOf(factAt.filter(perCol && groupPred))
-        wh.transact { tx =>
-          tx.equalityDelete(rollup, pKeys)
-          tx.append(rollup, recomputed, statsCols = keys :+ VCol)
-          tx.equalityDelete(pend, pKeys)
-        }
-      }
-    }
+    IncrementalRollup.recompute(wh, rollup, spec, fact, marker, pKeys,
+      carry = None, clear = Seq(pend))
     n
   }
 }

@@ -356,6 +356,25 @@ class ChangeFeedStreamSpec extends SparkSpec {
     assert(folded() == direct())
   }
 
+  test("maintainRollup(drainEvery=1): a call that delivers nothing after a drain runs no Spark job") {
+    val wh = new Warehouse(spark, tmpDir("cfs-idle"))
+    val spec = IncrementalRollup.Spec(Seq("g"), Seq(
+      IncrementalRollup.CountStar("n"), IncrementalRollup.MaxOf(col("v"), "hi")))
+    val pend = ChangeFeedStream.pendingTable("roll")
+    wh.create("fact", schema)
+    wh.append("fact", kv((1L, "a", "5.00"), (2L, "a", "1.00")), statsCols = Seq("k"))
+    ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "idle", drainEvery = 1)
+    wh.deleteWhere("fact", col("k") === 1L)
+    ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "idle", drainEvery = 1)
+    assert(wh.load(pend).count() == 0L, "the cadence tick drains")
+    // the drain retracts its keys with delete files, so the pending table's
+    // data files still count rows: only the delivery gate keeps this free
+    val jobs = sparkJobs {
+      ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "idle", drainEvery = 1): Unit
+    }
+    assert(jobs == 0, s"an idle call ran $jobs Spark jobs")
+  }
+
   test("rollup compaction between drain and next tick: marker survives, no window double-counts") {
     // the statMarker durability property: the drain stamps recomputed rows
     // with the covered version and the ledger preserves it independently —
@@ -438,5 +457,48 @@ class ChangeFeedStreamSpec extends SparkSpec {
     ChangeFeedStream.mirror(wh, "fact", "copy", Seq("k"), "m")
     assert(bag(wh.load("copy")) == bag(wh.load("fact")),
       "ABA revert across the crash gap must replay exactly")
+  }
+
+  // DECIMAL(38,10) sums: a signed partial must keep the operand's exact type
+  // (a `v * ±1` product types as DECIMAL(38,6) and rounds the fold). The same
+  // upsert and delete run through the streaming tick and the batch fold.
+  private val wide = StructType(Seq(
+    StructField("k", LongType), StructField("g", StringType),
+    StructField("v", DecimalType(38, 10))))
+
+  private def wideHistory(wh: Warehouse, fold: () => Unit): Unit = {
+    def rows(rs: (Long, String, String)*) = spark.createDataFrame(
+      rs.map(r => Row(r._1, r._2, new java.math.BigDecimal(r._3))).asJava, wide)
+    wh.create("fact", wide)
+    wh.append("fact", rows((1L, "a", "1.0123456789"), (2L, "a", "0.5000000003"),
+      (3L, "b", "3.0000000007")), statsCols = Seq("k"))
+    fold()
+    wh.morMerge("fact", rows((2L, "a", "2.0000000001")), Seq("k"))
+    fold()
+    wh.deleteWhere("fact", col("k") === 1L)
+    fold()
+  }
+
+  private def assertExactWideSums(wh: Warehouse, spec: IncrementalRollup.Spec): Unit = {
+    val got = bag(IncrementalRollup.read(wh, "roll", spec).filter(col("n") =!= 0L))
+    val want = bag(wh.load("fact").groupBy("g")
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("sv")))
+    assert(want.contains(Seq("a", 1L, new java.math.BigDecimal("2.0000000001"))), want.toString)
+    assert(got == want, s"DECIMAL(38,10) rollup:\n  got:  $got\n  want: $want")
+  }
+
+  private val wideSpec = IncrementalRollup.Spec(Seq("g"), Seq(
+    IncrementalRollup.CountStar("n"), IncrementalRollup.SumOf(col("v"), "sv")))
+
+  test("CDC rollup: a DECIMAL(38,10) sum keeps its scale across an upsert and a delete") {
+    val wh = new Warehouse(spark, tmpDir("cfs-dec"))
+    wideHistory(wh, () => ChangeFeedStream.maintainRollup(wh, "fact", "roll", wideSpec, "dec"))
+    assertExactWideSums(wh, wideSpec)
+  }
+
+  test("batch change-feed fold: the same DECIMAL(38,10) history reads the direct aggregate") {
+    val wh = new Warehouse(spark, tmpDir("cfs-dec-batch"))
+    wideHistory(wh, () => IncrementalRollup.maintainFromChangeFeed(wh, "fact", "roll", wideSpec))
+    assertExactWideSums(wh, wideSpec)
   }
 }

@@ -48,4 +48,28 @@ trait SparkSpec extends AnyFunSuite {
       case f: FileSourceScanExec => f.relation.location.inputFiles.toSeq
     }.flatten.toSet
   }
+
+  /** Spark jobs `body` starts on this thread (its own job group), counted
+    * once the listener bus has delivered every event.
+    */
+  def sparkJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"count-jobs-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
 }

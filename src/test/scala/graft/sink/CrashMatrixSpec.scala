@@ -4,8 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import graft.{SparkSpec, TestSpark}
+import graft.streaming.ChangeFeedStream
 
 /** A process crash, as the metadata-IO seam sees it. An `Error`, not an
   * `Exception`: nothing in the engine should recover from its own death.
@@ -190,5 +192,61 @@ class CrashMatrixSpec extends SparkSpec {
       info(f"N = $n durable steps; $preSeen crash points read pre, $postSeen post; " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
+  }
+
+  // A stream-maintained min/max rollup is several commits, so a crash may
+  // leave any prefix of them: the window partials plus its pending keys (one
+  // transaction), the drain's watermark, the drain's retract-and-land
+  // transaction, the drain cadence counter, then the consumer cursor. The
+  // contract is convergence: reopened and re-run, the folded rollup and the
+  // pending keys equal what the uncrashed tick leaves.
+  test("crash matrix: a maintainRollup tick and its drain converge at every durable step") {
+    val t0 = System.nanoTime()
+    val factSchema = StructType(Seq(StructField("k", LongType),
+      StructField("g", StringType), StructField("x", LongType)))
+    def facts(rs: (Long, String, Long)*): DataFrame = spark.createDataFrame(
+      rs.map(r => Row(r._1, r._2, r._3)).asJava, factSchema)
+    val spec = IncrementalRollup.Spec(Seq("g"), Seq(
+      IncrementalRollup.CountStar("n"), IncrementalRollup.MaxOf(col("x"), "hi")))
+    def tick(wh: Warehouse): Unit = {
+      ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "cm", drainEvery = 1): Unit
+    }
+    def sorted(df: DataFrame): Seq[String] = df.collect().map(_.mkString("|")).toSeq.sorted
+    def result(root: String): (Seq[String], Seq[String]) = {
+      val wh = new Warehouse(spark, root)
+      (sorted(IncrementalRollup.read(wh, "roll", spec)),
+        sorted(wh.load(ChangeFeedStream.pendingTable("roll")).select("g")))
+    }
+
+    val template = tmpDir("cm-roll-template")
+    locally {
+      val wh = new Warehouse(spark, template)
+      wh.create("fact", factSchema)
+      wh.append("fact", facts((1L, "a", 5L), (2L, "a", 9L), (3L, "b", 4L), (4L, "c", 7L)),
+        Seq("k"))
+      tick(wh)
+      // a window with an upsert and the deletion of group a's max: the next
+      // tick marks a pending and its drain recomputes a
+      wh.morMerge("fact", facts((3L, "b", 6L)), Seq("k"))
+      wh.deleteWhere("fact", col("k") === 2L)
+    }
+
+    val dryDir = tmpDir("cm-roll-dry")
+    copyTree(Paths.get(template), Paths.get(dryDir))
+    val counter = new CrashingMetaIO(Int.MaxValue)
+    tick(new Warehouse(spark, dryDir, io = counter))
+    val n = counter.steps
+    val want = result(dryDir)
+    assert(want == ((Seq("a|1|5", "b|1|6", "c|1|7"), Nil)), s"uncrashed tick: $want")
+
+    (1 to n).foreach { k =>
+      val dir = tmpDir(s"cm-roll-k$k")
+      copyTree(Paths.get(template), Paths.get(dir))
+      intercept[SimulatedCrash](tick(new Warehouse(spark, dir, io = new CrashingMetaIO(k))))
+      tick(new Warehouse(spark, dir))
+      assert(result(dir) == want,
+        s"crash at step $k of $n, then a re-run: ${result(dir)} (uncrashed: $want)")
+    }
+    info(f"N = $n durable steps; ${(System.nanoTime() - t0) / 1e9}%.1f s")
   }
 }
