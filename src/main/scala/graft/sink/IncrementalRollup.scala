@@ -152,8 +152,8 @@ object IncrementalRollup {
       .agg(spec.measures.head.merge, spec.measures.tail.map(_.merge): _*)
 
   /** Maintain `table` with one ingest batch: aggregate and append the
-    * partial rows. O(batch) work + an O(manifest) commit; the fact table is
-    * never read. Returns the committed rollup version.
+    * partial rows (with `marks`). O(batch) work + an O(manifest) commit; the
+    * fact table is never read. Returns the committed rollup version.
     *
     * The table is created EXPLICITLY with the partial frame's exact schema:
     * auto-create would push it through the widening lattice
@@ -161,13 +161,17 @@ object IncrementalRollup {
     * fine for ingested source data, fatal here (the whole invariant rests
     * on association-free DECIMAL folds).
     */
-  def maintain(wh: Warehouse, table: String, batch: DataFrame, spec: Spec): Long = {
+  def maintain(wh: Warehouse, table: String, batch: DataFrame, spec: Spec,
+               marks: Map[String, String] = Map.empty): Long = {
     val p = partial(batch, spec)
+    createFor(wh, table, p)
+    wh.append(table, p, statsCols = spec.keys, marks = marks)
+  }
+
+  private def createFor(wh: Warehouse, table: String, partials: DataFrame): Unit =
     if (!wh.exists(table))
       wh.create(table, org.apache.spark.sql.types.StructType(
-        p.schema.fields.map(_.copy(nullable = true))))
-    wh.append(table, p, statsCols = spec.keys)
-  }
+        partials.schema.fields.map(_.copy(nullable = true))))
 
   /** Current rollup values: fold all partial rows committed so far. The
     * frame scanned is O(batches × keys-per-batch), not O(fact rows).
@@ -184,8 +188,8 @@ object IncrementalRollup {
 
   /** Self-driving maintenance off an APPEND-ONLY fact table's change feed:
     * reads the files committed to `fact` since the last call (the
-    * [[Warehouse.readAdded]] feed), folds them in, and records the fact
-    * version in the warehouse batch ledger (streamId `rollup:<fact>`) so a
+    * [[Warehouse.readAdded]] feed) and folds them in, committing the fact
+    * version as the batch mark of streamId `rollup:<fact>`, so a
     * crashed/retried call is a no-op — the caller never tracks batches.
     *
     * Append-only is a REQUIREMENT, not a hint: across merge/compact commits
@@ -202,8 +206,7 @@ object IncrementalRollup {
       // WITH data, so the feed must be the whole snapshot, not a version diff
       val feed = if (last < 0) wh.loadVersion(fact, now)
         else wh.readAdded(fact, last, now)
-      maintain(wh, table, feed, spec)
-      wh.recordBatchId(table, sid, now)
+      maintain(wh, table, feed, spec, wh.batchIdMark(sid, now))
     }
     now
   }
@@ -216,11 +219,6 @@ object IncrementalRollup {
   // signed; min/max are not delete-invertible (Gupta & Mumick 1995), so a
   // `-D` that ties a stored extreme marks its group for a recompute from
   // the fact.
-
-  /** Schema column of a stream-maintained rollup carrying the fact version
-    * each partial row covers; [[recompute]] stamps its rows with it.
-    */
-  private[graft] val MarkerCol = "__cfs_v"
 
   /** Affected-group ceiling for the targeted recompute: above it the
     * recompute consolidates with one replace (see [[recompute]]).
@@ -285,19 +283,19 @@ object IncrementalRollup {
   /** The one recompute: the affected `groups` (keys of `spec`) forget their
     * fold history in `table` (min-of-mins over stale partials would
     * resurrect a dead extremum) and land their rows recomputed from `fact`
-    * at `version`, stamped with it in [[MarkerCol]] when the rollup has that
-    * column. `carry` holds partial rows that land in the same commit, and
-    * `clear` tables whose rows of `groups` retract with it; both lose their
-    * rows of `groups` first. Groups with no fact rows left vanish, matching
-    * the direct aggregate.
+    * at `version`. `carry` holds partial rows that land in the same commit,
+    * and `clear` tables whose rows of `groups` retract with it; both lose
+    * their rows of `groups` first. `marks` ride the commit of the table they
+    * are keyed by. Groups with no fact rows left vanish, matching the direct
+    * aggregate.
     *
     * A keyed set of at most [[MaxRescanGroups]] non-null groups is TARGETED:
     * per-column IN predicates reach the parquet scan, so a fact clustered by
     * the group key rescans O(affected-group files), and the retraction, the
-    * landing and the clears are ONE [[Warehouse.transact]] commit — two
-    * commits left a crash window in which the retracted history was gone but
-    * its replacement absent, and a replay then found no tie and dropped the
-    * groups' history. The staged equality deletes apply to pre-transaction
+    * landing, the clears and the marks are ONE [[Warehouse.transact]] commit —
+    * two commits left a crash window in which the retracted history was gone
+    * but its replacement absent, and a replay then found no tie and dropped
+    * the groups' history. The staged equality deletes apply to pre-transaction
     * rows only, so they cannot touch the rows the same transaction lands.
     * Every other set CONSOLIDATES with one `replace` of `table` (kept
     * history + carried rows + semi-join-scoped recomputes), then one
@@ -310,38 +308,36 @@ object IncrementalRollup {
     */
   private[graft] def recompute(wh: Warehouse, table: String, spec: Spec, fact: String,
                                version: Long, groups: DataFrame,
-                               carry: Option[DataFrame], clear: Seq[String]): Unit = {
+                               carry: Option[DataFrame], clear: Seq[String],
+                               marks: Map[String, Map[String, String]]): Unit = {
     val keys = spec.keys
-    val stamped = wh.currentManifest(table).schema.fieldNames.contains(MarkerCol)
-    val statsCols = if (stamped) keys :+ MarkerCol else keys
-    def recomputed(df: DataFrame): DataFrame =
-      if (stamped) partial(df, spec).withColumn(MarkerCol, lit(version))
-      else partial(df, spec)
+    def marksOf(t: String) = marks.getOrElse(t, Map.empty[String, String])
     val factAt = wh.loadVersion(fact, version)
     // one past the gate: enough to choose, never an unbounded collect
     lazy val rows = groups.limit(MaxRescanGroups + 1).collect()
     if (keys.isEmpty) {
-      wh.replace(table, recomputed(factAt), statsCols = statsCols)
-      clear.foreach(t => wh.replace(t, wh.load(t).limit(0)))
+      wh.replace(table, partial(factAt, spec), statsCols = keys, marks = marksOf(table))
+      clear.foreach(t => wh.replace(t, wh.load(t).limit(0), marks = marksOf(t)))
     } else if (rows.length <= MaxRescanGroups &&
                !rows.exists(r => keys.exists(r.getAs[Any](_) == null))) {
       // plain col() refs: each filter resolves against its own frame
       val (groupPred, perCol) = groupPredicates(keys, rows.toSeq)
-      val landed = recomputed(factAt.filter(perCol && groupPred))
+      val landed = partial(factAt.filter(perCol && groupPred), spec)
       wh.transact { tx =>
         tx.equalityDelete(table, groups)
         tx.append(table, carry.fold(landed)(_.filter(!groupPred).unionByName(landed)),
-          statsCols = statsCols)
+          statsCols = keys)
         clear.foreach(tx.equalityDelete(_, groups))
+        for ((t, ms) <- marks; (k, v) <- ms) tx.mark(t, k, v)
       }
     } else {
       def on(df: DataFrame): Column = keys.map(k => df(k) <=> groups(k)).reduce(_ && _)
       def without(df: DataFrame): DataFrame = df.join(groups, on(df), "left_anti")
-      val landed = recomputed(factAt.join(groups, on(factAt), "left_semi"))
+      val landed = partial(factAt.join(groups, on(factAt), "left_semi"), spec)
       val hist = wh.load(table)
       wh.replace(table, (without(hist) +: carry.map(without).toSeq :+ landed)
-        .reduce(_ unionByName _), statsCols = statsCols)
-      clear.foreach(t => wh.replace(t, without(wh.load(t))))
+        .reduce(_ unionByName _), statsCols = keys, marks = marksOf(table))
+      clear.foreach(t => wh.replace(t, without(wh.load(t)), marks = marksOf(t)))
     }
   }
 
@@ -349,9 +345,10 @@ object IncrementalRollup {
     * change feed ([[Warehouse.readChanges]]) with the [[windowPartials]] —
     * `+I` rows add, `-D` rows subtract — so deletes and update retractions on
     * the fact keep the rollup exact where the append-only file feed would
-    * silently miss the subtraction. Same ledger (streamId `rollup:<fact>`,
-    * same idempotence), and over append-only windows the two forms fold
-    * identical values, so a fact can switch to this path mid-life.
+    * silently miss the subtraction. Same batch mark, in the fold's own commit
+    * (a re-run after any crash never double-counts), and over append-only
+    * windows the two forms fold identical values, so a fact can switch to
+    * this path mid-life.
     *
     * Count/sum measures fold signed — always O(window). Min/max maintain by
     * the [[affectedGroups]] tie gate and the one [[recompute]] at the fact
@@ -372,15 +369,13 @@ object IncrementalRollup {
       else if (spec.measures.forall(_.signedPartial.isDefined)) wh.readChanges(fact, last, now)
       else wh.readChanges(fact, last, now).localCheckpoint() // consumers: partial, tie gate
     val part = windowPartials(feed, spec)
-    if (!wh.exists(table))
-      wh.create(table, org.apache.spark.sql.types.StructType(
-        part.schema.fields.map(_.copy(nullable = true))))
+    createFor(wh, table, part)
+    val mark = wh.batchIdMark(sid, now)
     (if (bootstrap) None else affectedGroups(wh, table, spec, feed)) match {
-      case None              => wh.append(table, part, statsCols = spec.keys)
-      case Some(groups) =>
-        recompute(wh, table, spec, fact, now, groups, carry = Some(part), clear = Nil)
+      case None         => wh.append(table, part, statsCols = spec.keys, marks = mark)
+      case Some(groups) => recompute(wh, table, spec, fact, now, groups,
+        carry = Some(part), clear = Nil, marks = Map(table -> mark))
     }
-    wh.recordBatchId(table, sid, now)
     now
   }
 }

@@ -72,7 +72,7 @@ private[sink] final class IndexFamily(wh: Warehouse, pkCol: String,
   def guard(name: String): Unit = {
     val t = name + stampOn
     if (!wh.exists(t)) return
-    val got = wh.lastCommittedBatchId(t, stampSid)
+    val got = wh.recordedBatchId(t, stampSid)
     if (got == stampValue) return
     if (got < 0) {
       val man = wh.currentManifest(t)
@@ -85,7 +85,7 @@ private[sink] final class IndexFamily(wh: Warehouse, pkCol: String,
     * stamp without tables is inert.
     */
   def stamp(name: String): Unit =
-    if (wh.lastCommittedBatchId(name + stampOn, stampSid) != stampValue)
+    if (wh.recordedBatchId(name + stampOn, stampSid) != stampValue)
       wh.recordBatchId(name + stampOn, stampSid, stampValue)
 
   /** Create-then-stamp, before any index rows commit. */
@@ -109,7 +109,7 @@ private[sink] final class IndexFamily(wh: Warehouse, pkCol: String,
 
   /** Highest corpus version the index has consumed (−1 = never). */
   private def covered(name: String): Long =
-    if (wh.exists(name + ledgerOn)) wh.lastCommittedBatchId(name + ledgerOn, sid(name))
+    if (wh.exists(name + ledgerOn)) wh.recordedBatchId(name + ledgerOn, sid(name))
     else -1L
 
   /** Advance past an ingest's own corpus commit (see the class doc).

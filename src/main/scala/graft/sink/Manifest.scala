@@ -78,7 +78,8 @@ final case class DeleteFile(path: String, rows: Long, seq: Long,
   */
 final case class Manifest(schema: StructType, files: Seq[DataFile],
                           deletes: Seq[DeleteFile] = Nil,
-                          rowHwm: Long = -1L)
+                          rowHwm: Long = -1L,
+                          marks: Map[String, String] = Map.empty)
 
 /** Per-SEGMENT summary riding the root's `S` line — the Iceberg
   * manifest-list analog (per-manifest `partitions` ranges): planning can
@@ -127,11 +128,12 @@ final case class SegSummary(entries: Int, rows: Long, hasDeletes: Boolean,
 
 /** Header facts of a manifest root, readable without replaying any entry
   * lines: the snapshot schema plus the table-level extras on line 2 —
-  * `rowHwm` (row-lineage high-water; −1 pre-lineage) and `deleteCount`
+  * `rowHwm` (row-lineage high-water; −1 pre-lineage), `deleteCount`
   * (pending delete-entry count; −1 when written before the field existed,
-  * meaning "unknown — load the manifest to find out").
+  * meaning "unknown — load the manifest to find out") and `marks`.
   */
-final case class RootHeader(schema: StructType, rowHwm: Long, deleteCount: Int)
+final case class RootHeader(schema: StructType, rowHwm: Long, deleteCount: Int,
+                            marks: Map[String, String] = Map.empty)
 
 /** Text serialization of a [[Manifest]]. Two on-disk forms:
   *
@@ -263,40 +265,47 @@ object Manifest {
 
   /** Line 2 of every manifest/root: the schema json, optionally followed by
     * TAB-separated table-level extras — `R<hwm>`, the ROW-ID high-water
-    * mark, and `E<n>`, the pending DELETE-ENTRY count. JSON never contains
-    * a raw tab (control characters are escaped), so the split is
-    * unambiguous; pre-extras manifests have no tab and read as hwm −1 /
-    * count −1 (unknown). Riding the root makes the high-water ATOMIC with
-    * the commit, and lets every read path answer "any pending MOR
+    * mark, `E<n>`, the pending DELETE-ENTRY count, and `M<marks>`, the
+    * consumer marks ([[Warehouse.marks]]). JSON never contains a raw tab, so
+    * the split is unambiguous; pre-extras manifests have no tab and read as
+    * hwm −1 / count −1 (unknown). Riding the root makes the extras ATOMIC
+    * with the commit, and lets every read path answer "any pending MOR
     * deletes?" from the header without replaying a single entry —
     * [[readHeader]] is what keeps planning O(relevant metadata) at
     * millions of files. Unknown extras are ignored (forward compatible).
     */
   private def schemaLine(m: Manifest): String =
     m.schema.json + (if (m.rowHwm >= 0) "\tR" + m.rowHwm else "") +
-      "\tE" + m.deletes.size
+      "\tE" + m.deletes.size + (if (m.marks.isEmpty) "" else "\tM" + marksString(m.marks))
 
-  private def parseSchemaLine(l: String): (StructType, Long) = {
-    val h = parseHeaderLine(l)
-    (h.schema, h.rowHwm)
-  }
+  /** Marks as comma-separated `<b64 key>:<b64 value>` pairs (also in txn intents). */
+  private[sink] def marksString(marks: Map[String, String]): String =
+    marks.toSeq.sortBy(_._1).map { case (k, v) => b64(k) + ":" + b64(v) }.mkString(",")
+
+  private[sink] def parseMarks(s: String): Map[String, String] =
+    if (s.isEmpty) Map.empty
+    else s.split(',').iterator.map { e =>
+      val i = e.indexOf(':')
+      unb64(e.substring(0, i)) -> unb64(e.substring(i + 1))
+    }.toMap
 
   private def parseHeaderLine(l: String): RootHeader = {
     val i = l.indexOf('\t')
     if (i < 0) RootHeader(DataType.fromJson(l).asInstanceOf[StructType], -1L, -1)
     else {
       val extras = l.substring(i + 1).split('\t')
-      val hwm = extras.collectFirst {
-        case e if e.startsWith("R") => e.substring(1).toLong }.getOrElse(-1L)
-      val dels = extras.collectFirst {
-        case e if e.startsWith("E") => e.substring(1).toInt }.getOrElse(-1)
-      RootHeader(DataType.fromJson(l.substring(0, i)).asInstanceOf[StructType], hwm, dels)
+      def extra(tag: Char): Option[String] =
+        extras.collectFirst { case e if e.nonEmpty && e.charAt(0) == tag => e.substring(1) }
+      RootHeader(DataType.fromJson(l.substring(0, i)).asInstanceOf[StructType],
+        extra('R').fold(-1L)(_.toLong), extra('E').fold(-1)(_.toInt),
+        extra('M').fold(Map.empty[String, String])(parseMarks))
     }
   }
 
   /** Header-only read — O(2 lines), no entry replay: schema, row-id
-    * high-water, pending-delete count. The planner's fast path for
-    * `schema()` and the "no pending MOR deletes" gate.
+    * high-water, pending-delete count, marks. The planner's fast path for
+    * `schema()` and the "no pending MOR deletes" gate, and every commit's
+    * read of its base.
     */
   def readHeader(root: Path): RootHeader = {
     val s = Files.lines(root)
@@ -329,28 +338,7 @@ object Manifest {
         f.copy(firstRowId = id)
       }
     }
-    Manifest(m.schema, files, m.deletes, rowHwm = next)
-  }
-
-  /** The row-id high-water of a root from its HEADER LINES only — O(1),
-    * no entry replay: the commit path consults the previous root's hwm on
-    * every commit, and a full `read` there would double the per-commit
-    * manifest cost at millions of files.
-    */
-  def rowHwmOf(root: Path): Long = {
-    val s = Files.lines(root)
-    try {
-      val it = s.iterator()
-      if (!it.hasNext) return -1L
-      it.next()
-      if (!it.hasNext) return -1L
-      val l = it.next()
-      val i = l.indexOf('\t')
-      if (i < 0) -1L
-      else l.substring(i + 1).split('\t')
-        .collectFirst { case e if e.startsWith("R") => e.substring(1).toLong }
-        .getOrElse(-1L)
-    } finally s.close()
+    m.copy(files = files, rowHwm = next)
   }
 
   /** Flat v1 write — one self-contained file listing every entry. Still the
@@ -683,11 +671,12 @@ object Manifest {
     require(lines.size() >= 2 &&
       (lines.get(0) == Header || lines.get(0) == HeaderV2),
       s"not a graft manifest: $source")
-    val (schema, rowHwm) = parseSchemaLine(lines.get(1))
+    val h = parseHeaderLine(lines.get(1))
     val entries = (2 until lines.size()).iterator.map(lines.get).filter(_.nonEmpty).toSeq
     if (lines.get(0) == Header) {
       val (delLines, dataLines) = entries.partition(_.startsWith("D\t"))
-      Manifest(schema, dataLines.map(parseDataLine), delLines.map(parseDeleteLine), rowHwm)
+      Manifest(h.schema, dataLines.map(parseDataLine), delLines.map(parseDeleteLine),
+        h.rowHwm, h.marks)
     } else {
       val dir = source.getParent
       val files = new java.util.LinkedHashMap[String, DataFile]()
@@ -704,7 +693,8 @@ object Manifest {
           s"unknown v2 root line in $source: ${l.take(40)}")
       }
       import scala.jdk.CollectionConverters._
-      Manifest(schema, files.values.asScala.toSeq, dels.values.asScala.toSeq, rowHwm)
+      Manifest(h.schema, files.values.asScala.toSeq, dels.values.asScala.toSeq,
+        h.rowHwm, h.marks)
     }
   }
 
@@ -740,7 +730,7 @@ object Manifest {
     val lines = Files.readAllLines(source)
     if (lines.isEmpty || lines.get(0) != HeaderV2) return None
     require(lines.size() >= 2, s"truncated manifest: $source")
-    val (schema, rowHwm) = parseSchemaLine(lines.get(1))
+    val h = parseHeaderLine(lines.get(1))
     val dir = source.getParent
     val files = new java.util.LinkedHashMap[String, DataFile]()
     val dels = new java.util.LinkedHashMap[String, DeleteFile]()
@@ -780,7 +770,7 @@ object Manifest {
         s"unknown v2 root line in $source: ${l.take(40)}")
     }
     import scala.jdk.CollectionConverters._
-    Some((Manifest(schema, files.values.asScala.toSeq, dels.values.asScala.toSeq, rowHwm),
-      skipped))
+    Some((Manifest(h.schema, files.values.asScala.toSeq, dels.values.asScala.toSeq,
+      h.rowHwm, h.marks), skipped))
   }
 }

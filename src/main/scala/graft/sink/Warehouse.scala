@@ -1118,9 +1118,16 @@ final class Warehouse(private[sink] val spark: SparkSession,
     * The version pre-check stays as a fast-fail for commits whose base
     * version was overtaken while their data-file job ran (minutes) — it
     * saves the manifest write, but correctness never rests on it.
+    *
+    * Consumer marks ([[marks]]) ride the root too: the commit carries its
+    * base root's marks overlaid with `marks`, and a rebase retry lands here
+    * again over the winner's, so every commit keeps the marks it does not
+    * set. `adoptMarks` commits `m.marks` instead (restore, branch publish).
     */
   private[sink] def commitManifest(name: String, next: Long, m: Manifest,
-                                   coalesce: Boolean = false): Long = {
+                                   coalesce: Boolean = false,
+                                   marks: Map[String, String] = Map.empty,
+                                   adoptMarks: Boolean = false): Long = {
     io.mkdirs(tableDir(name))
     val cur = currentVersion(name)
     if (cur != next - 1)
@@ -1136,15 +1143,16 @@ final class Warehouse(private[sink] val spark: SparkSession,
     // (atomic with the commit), so removing the highest-id files can never
     // recycle their ids. Pre-lineage tables adopt ids wholesale on their
     // next commit (a one-time coalesce-sized metadata write).
-    val prevHwm =
-      if (next == 0) -1L
+    val base =
+      if (next == 0) None
       else {
         val p = manifestPath(name, next - 1)
         // header-lines read, O(1): a full replay here would double every
         // commit's manifest cost at millions of files
-        if (Files.exists(p)) Manifest.rowHwmOf(p) else -1L
+        if (Files.exists(p)) Some(Manifest.readHeader(p)) else None
       }
-    val assigned = Manifest.assignRowIds(m, prevHwm)
+    val assigned = Manifest.assignRowIds(m, base.fold(-1L)(_.rowHwm)).copy(marks =
+      if (adoptMarks) m.marks else base.fold(Map.empty[String, String])(_.marks) ++ marks)
     // segmented write: O(delta) metadata — the root carries the base
     // version's segment refs forward and only this commit's added/removed
     // entries land as new lines (Manifest.writeDelta scaladoc); a baseless
@@ -1159,16 +1167,6 @@ final class Warehouse(private[sink] val spark: SparkSession,
     next
   }
 
-  /** Delta-style RESTORE: commit a NEW snapshot whose manifest is an older
-    * snapshot's — rolling back bad writes without rewriting a byte of data
-    * or erasing history (the bad versions stay time-travelable until
-    * [[expireSnapshots]]). O(1): one manifest commit, zero data IO, and it
-    * rides the same OCC guard as every write, so a concurrent writer can't
-    * interleave between read-old-manifest and publish. The missing-file
-    * check is defensive: [[expireSnapshots]] retains every kept manifest's
-    * files, so it only fires on out-of-band deletion — better a loud
-    * failure here than a restored table whose scans die file-not-found.
-    */
   /** Test seam: invoked once at the head of every [[commitOrRebase]], BEFORE
     * the first CAS attempt — specs install a one-shot interfering commit
     * here to deterministically land a competing writer inside the race
@@ -1198,9 +1196,10 @@ final class Warehouse(private[sink] val spark: SparkSession,
     * on a base it did not read.
     */
   private[sink] def commitOrRebase(name: String, next: Long, first: Manifest,
-      rebase: (Manifest, Long) => Option[Manifest], maxRetries: Int = 5): Long = {
+      rebase: (Manifest, Long) => Option[Manifest], maxRetries: Int = 5,
+      marks: Map[String, String] = Map.empty): Long = {
     preCommitHook(name, next)
-    try return commitManifest(name, next, first)
+    try return commitManifest(name, next, first, marks = marks)
     catch { case _: java.util.ConcurrentModificationException => }
     var tries = 0
     while (tries < maxRetries) {
@@ -1212,7 +1211,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
           s"$name: lost the commit race for v$next and the winning commit conflicts " +
             "with what this operation read; redo the operation")
         case Some(m) =>
-          try return commitManifest(name, curV + 1, m)
+          try return commitManifest(name, curV + 1, m, marks = marks)
           catch { case _: java.util.ConcurrentModificationException => }
       }
     }
@@ -1229,6 +1228,17 @@ final class Warehouse(private[sink] val spark: SparkSession,
     needed.forall(f => byPath.get(f.path).exists(b => b.seq == f.seq && b.rows == f.rows))
   }
 
+  /** Delta-style RESTORE: commit a NEW snapshot whose manifest is an older
+    * snapshot's — rolling back bad writes without rewriting a byte of data
+    * or erasing history (the bad versions stay time-travelable until
+    * [[expireSnapshots]]). O(1): one manifest commit, zero data IO, and it
+    * rides the same OCC guard as every write, so a concurrent writer can't
+    * interleave between read-old-manifest and publish. The missing-file
+    * check is defensive: [[expireSnapshots]] retains every kept manifest's
+    * files, so it only fires on out-of-band deletion — better a loud
+    * failure here than a restored table whose scans die file-not-found.
+    * The restored snapshot's [[marks]] come back with it.
+    */
   def restore(name: String, version: Long): Long = {
     val m = manifestAt(name, version)
     val missing = (m.files.map(_.path) ++ m.deletes.map(_.path))
@@ -1236,7 +1246,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
     require(missing.isEmpty,
       s"cannot restore $name to v$version: ${missing.size} referenced data files " +
         s"are gone (e.g. ${missing.take(3).mkString(", ")})")
-    commitManifest(name, currentVersion(name) + 1, m)
+    commitManifest(name, currentVersion(name) + 1, m, adoptMarks = true)
   }
 
   /** Stats columns already tracked by the table's current files — new writes
@@ -1411,7 +1421,8 @@ final class Warehouse(private[sink] val spark: SparkSession,
     * lists only the batch (replace).
     */
   private def writeBatch(name: String, df: DataFrame, statsCols: Seq[String],
-                         clusterBy: Seq[String], keepPrior: Boolean): Long = {
+                         clusterBy: Seq[String], keepPrior: Boolean,
+                         marks: Map[String, String]): Long = {
     val existing = if (exists(name)) Some(currentManifest(name)) else None
     // a branch ledger is only ever born by forking ([[createBranch]]):
     // auto-creating one here would silently start an empty, unrelated
@@ -1444,18 +1455,20 @@ final class Warehouse(private[sink] val spark: SparkSession,
       (base, n2) =>
         if (base.schema != schema) None
         else if (keepPrior) Some(Manifest(schema, base.files ++ entries.map(_.copy(seq = n2)), base.deletes))
-        else Some(Manifest(schema, entries.map(_.copy(seq = n2)), Nil)))
+        else Some(Manifest(schema, entries.map(_.copy(seq = n2)), Nil)),
+      marks = marks)
   }
 
   /** S8 append disposition: O(batch) — writes only the incoming files; the
     * new manifest carries every prior file forward untouched.
     * `statsCols` asks for per-file min/max on those columns (collected for
     * future merge pruning / data skipping); `clusterBy` range-partitions the
-    * batch so those bounds are tight (see [[cluster]]).
+    * batch so those bounds are tight (see [[cluster]]). `marks` are set in
+    * the same commit ([[marks]]), as on morMerge, appendDeduped and replace.
     */
   def append(name: String, df: DataFrame, statsCols: Seq[String] = Nil,
-             clusterBy: Seq[String] = Nil): Long =
-    writeBatch(name, df, statsCols, clusterBy, keepPrior = true)
+             clusterBy: Seq[String] = Nil, marks: Map[String, String] = Map.empty): Long =
+    writeBatch(name, df, statsCols, clusterBy, keepPrior = true, marks)
 
   /** Per-batch outcome of [[appendDeduped]]: rows written, rows dropped as
     * in-batch duplicates, rows dropped because their fingerprint already
@@ -1480,7 +1493,8 @@ final class Warehouse(private[sink] val spark: SparkSession,
     * maintain, one pruned scan per ingest.
     */
   def appendDeduped(name: String, df: DataFrame, fpCol: String, pk: String,
-      statsCols: Seq[String] = Nil, clusterBy: Seq[String] = Nil): DedupAppendReport = {
+      statsCols: Seq[String] = Nil, clusterBy: Seq[String] = Nil,
+      marks: Map[String, String] = Map.empty): DedupAppendReport = {
     // row_number (not min-pk equality): when fpCol == pk every row in a
     // duplicate group shares the min pk, so an equality keeper is vacuous
     // and duplicate-pk batches would land whole. The JSON render of the full
@@ -1524,7 +1538,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
           .localCheckpoint()
         (fresh, fresh.count())
       }
-    val version = append(name, materialized, statsCols, clusterBy)
+    val version = append(name, materialized, statsCols, clusterBy, marks)
     DedupAppendReport(version, appended, total - afterBatch, afterBatch - appended)
   }
 
@@ -1533,8 +1547,8 @@ final class Warehouse(private[sink] val spark: SparkSession,
     * ONLY the incoming batch's files.
     */
   def replace(name: String, df: DataFrame, statsCols: Seq[String] = Nil,
-              clusterBy: Seq[String] = Nil): Long =
-    writeBatch(name, df, statsCols, clusterBy, keepPrior = false)
+              clusterBy: Seq[String] = Nil, marks: Map[String, String] = Map.empty): Long =
+    writeBatch(name, df, statsCols, clusterBy, keepPrior = false, marks)
 
   /** Bin-pack small data files into ~`targetBytes` files (the Iceberg
     * `rewriteDataFiles` maintenance action): O(batch) incremental appends
@@ -1766,10 +1780,10 @@ final class Warehouse(private[sink] val spark: SparkSession,
     * same PK-presence guard as merge falls back to append.
     */
   def morMerge(name: String, df: DataFrame, pks: Seq[String],
-               clusterBy: Seq[String] = Nil): Long = {
+               clusterBy: Seq[String] = Nil, marks: Map[String, String] = Map.empty): Long = {
     if (pks.isEmpty || !pks.forall(df.columns.contains) || !exists(name))
       return append(name, df, pks.filter(df.columns.contains),
-        clusterBy.filter(df.columns.contains))
+        clusterBy.filter(df.columns.contains), marks)
     val man = currentManifest(name)
     val schema = man.schema
     val in = SchemaOps.conform(df, schema)
@@ -1783,7 +1797,7 @@ final class Warehouse(private[sink] val spark: SparkSession,
       keySchema, s"del$next", pks, seq = next)
     val dels = delEntries.filter(_.rows > 0)
       .map(e => DeleteFile(e.path, e.rows, next, pks, e.stats))
-    if (dataEntries.isEmpty && dels.isEmpty) return currentVersion(name) // empty batch
+    if (dataEntries.isEmpty && dels.isEmpty && marks.isEmpty) return currentVersion(name) // empty batch
     // Rebase: a pure row-delta — restamp data + delete entries to the new
     // version and re-list over the winner's state. The delete's new seq
     // correctly covers concurrently-added files too (serial order: their
@@ -1793,7 +1807,8 @@ final class Warehouse(private[sink] val spark: SparkSession,
       (base, n2) =>
         if (base.schema != schema) None
         else Some(Manifest(schema, base.files ++ dataEntries.map(_.copy(seq = n2)),
-          base.deletes ++ dels.map(_.copy(seq = n2)))))
+          base.deletes ++ dels.map(_.copy(seq = n2)))),
+      marks = marks)
   }
 
   /** Engine variant of merge: when one batch carries several versions of a PK,

@@ -266,15 +266,11 @@ private[sink] trait WarehouseMor { self: Warehouse =>
     // stream-maintained extremal rollup: drain the pending-extremes side
     // table FIRST (it is the correctness-freshness repair, and its
     // retraction commits feed the delete-compaction signal below). The
-    // fact + measure spec come from the maintainer's recorded sidecars, so
-    // a SQL-only operator can repair a rollup they did not build. Same
+    // fact + measure spec come from the maintainer's marks on the rollup,
+    // so a SQL-only operator can repair a rollup they did not build. Same
     // one-maintainer discipline as the manual drain: schedule maintain
     // where it cannot race a live tick.
-    val pendName = graft.streaming.ChangeFeedStream.pendingTable(name)
-    val drained =
-      if (exists(pendName) && currentManifest(pendName).files.exists(_.rows > 0))
-        graft.streaming.ChangeFeedStream.drainPendingFromMeta(self, name)
-      else 0L
+    val drained = graft.streaming.ChangeFeedStream.drainPendingFromMeta(self, name)
     val man = currentManifest(name)
     val tableRows = math.max(man.files.map(_.rows).sum, 1L)
     val deleteKeys = man.deletes.map(_.rows).sum

@@ -180,7 +180,10 @@ private[sink] trait WarehouseRefs { self: Warehouse =>
     * semantics). The committed manifest is the branch head's — a delta
     * write against main's current (= the fork snapshot), so the publish
     * costs O(branch changes) metadata and ZERO data IO; the branch's data
-    * files are already in the table directory. On success the fork point
+    * files are already in the table directory. Main adopts the branch
+    * head's consumer marks with its content (the branch forked from main's
+    * marks, so they are main's plus what the branch's commits set). On
+    * success the fork point
     * advances to the published version, so a long-lived branch can keep
     * cycling build→publish indefinitely.
     */
@@ -207,7 +210,7 @@ private[sink] trait WarehouseRefs { self: Warehouse =>
         s"$name advanced since $bname forked (v$forkV -> v$cur): not a fast-forward; " +
           "re-branch from the new head and replay, or reconcile manually")
     }
-    val v = commitManifest(name, cur + 1, head)
+    val v = commitManifest(name, cur + 1, head, adoptMarks = true)
     writeForkPoint(name, branch, v)
     v
   }

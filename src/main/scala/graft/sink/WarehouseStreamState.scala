@@ -8,8 +8,9 @@ import org.apache.spark.sql.types._
 import graft.model.{ResourceDef, WriteMode}
 import graft.schema.SchemaOps
 
-/** Streaming-consumer state: the per-(table, stream) batch-id ledger and
-  * the exactly-once FILE ledger micro-batch ingestion rides on.
+/** Streaming-consumer state: the commit-carried consumer marks, the
+  * batch-id sidecar and the exactly-once FILE ledger micro-batch ingestion
+  * rides on.
   *
   * One of [[Warehouse]]'s section traits — a pure textual split of the
   * original single file (unchanged public face, same `private[sink]`
@@ -20,44 +21,63 @@ private[sink] trait WarehouseStreamState { self: Warehouse =>
 
   // ------------------------------------------------------- streaming state --
 
+  /** The consumer marks of `name`'s current snapshot (empty when absent): a
+    * string map on the root, set only by a commit (the `marks` argument of
+    * the write verbs, or [[WarehouseTxn.mark]]) and carried by every later
+    * one, so a consumer's progress lands atomically with the output it
+    * certifies. Header read: O(2 lines), zero Spark jobs.
+    */
+  def marks(name: String): Map[String, String] = {
+    val v = currentVersion(name)
+    if (v < 0) Map.empty else manifestHeader(name, Some(v)).marks
+  }
+
+  /** The `marks` argument certifying micro-batch `batchId` of `streamId`. */
+  def batchIdMark(streamId: String, batchId: Long): Map[String, String] =
+    Map(s"batch:$streamId" -> batchId.toString)
+
+  /** Highest micro-batch id of `streamId` committed into `name` (-1 if
+    * none), from its [[batchIdMark]] — the replay guard of the stream sink,
+    * `RollupStream`, `CorpusStream`'s upserts and the rollup folds. A target
+    * still holding the `_stream_<id>` sidecar of an older build is refused.
+    */
+  def lastCommittedBatchId(name: String, streamId: String): Long =
+    marks(name).get(s"batch:$streamId") match {
+      case Some(v) => v.toLong
+      case None =>
+        if (Files.exists(streamStatePath(name, streamId)))
+          refuseUnmarked(name, streamId, s"a _stream_$streamId sidecar")
+        -1L
+    }
+
+  /** Refuse consumer `consumer` on a target with no mark of it but with
+    * `legacy` progress from an older build: resuming would re-apply from 0.
+    */
+  private[graft] def refuseUnmarked(name: String, consumer: String, legacy: String): Nothing =
+    throw new IllegalStateException(
+      s"$name: consumer '$consumer' has no commit-carried mark, but the table holds " +
+        s"$legacy from an older build; resuming would re-apply its history from " +
+        "version 0. Rebuild the target, or attach a fresh consumer id to a fresh target.")
+
   private def streamStatePath(name: String, streamId: String) =
     tableDir(name).resolve(s"_stream_$streamId")
 
-  /** Highest micro-batch id already committed for `streamId` into `name`
-    * (-1 if none) — the replay guard for foreachBatch sinks.
-    */
-  def lastCommittedBatchId(name: String, streamId: String): Long = {
+  /** The batch id [[recordBatchId]] last wrote (-1 if none). */
+  def recordedBatchId(name: String, streamId: String): Long = {
     val p = streamStatePath(name, streamId)
     if (Files.exists(p)) Files.readString(p).trim.toLong else -1L
   }
 
-  /** Record `batchId` as committed (atomic pointer swap, same protocol as the
-    * snapshot pointer). Written AFTER the data commit: a crash inside the
-    * two-write window re-applies at most one batch — harmless for the
-    * idempotent merge/replace dispositions, at-least-once for append (the
-    * same guarantee foreachBatch itself gives).
+  /** Record `batchId` in a `_stream_<id>` sidecar beside `name` (atomic
+    * pointer swap), apart from any commit — so only for progress that
+    * certifies no commit of `name`: `ChangeFeedStream.poll`'s source-side
+    * cursor (at-least-once by contract) and [[IndexFamily]]'s stamp and
+    * `idxfollow:` ledger (multi-commit, converging by idempotent
+    * re-derivation). Progress that certifies a commit is one of its [[marks]].
     */
   def recordBatchId(name: String, streamId: String, batchId: Long): Unit = {
     io.mkdirs(tableDir(name))
     io.atomicWrite(streamStatePath(name, streamId), batchId.toString)
-  }
-
-  /** Small STRING metadata sidecar beside a table (atomic pointer swap,
-    * same protocol as [[recordBatchId]]): durable discovery state for
-    * maintenance — e.g. a stream-maintained rollup records its fact table
-    * and measure spec so [[Warehouse.maintain]] can repair it without the
-    * maintainer process. Not part of any snapshot commit; overwrite-last-
-    * wins, single-writer by the owning discipline.
-    */
-  def putTableMeta(name: String, key: String, value: String): Unit = {
-    io.mkdirs(tableDir(name))
-    io.atomicWrite(tableDir(name).resolve(s"_meta_$key"), value)
-  }
-
-  /** Read a [[putTableMeta]] sidecar; None when never written. */
-  def getTableMeta(name: String, key: String): Option[String] = {
-    val p = tableDir(name).resolve(s"_meta_$key")
-    if (Files.exists(p)) Some(Files.readString(p)) else None
   }
 
   private def streamFilesDir(name: String, streamId: String) =
@@ -141,6 +161,7 @@ private[sink] trait WarehouseStreamState { self: Warehouse =>
     private[sink] final class TxnDelta(val schema: StructType) {
       var files: Vector[DataFile] = Vector.empty
       var dels: Vector[DeleteFile] = Vector.empty
+      var marks: Map[String, String] = Map.empty
     }
     private[sink] val deltas =
       scala.collection.mutable.LinkedHashMap.empty[String, TxnDelta]
@@ -194,6 +215,14 @@ private[sink] trait WarehouseStreamState { self: Warehouse =>
       d.files ++= dataEntries
       d.dels ++= delEntries.filter(_.rows > 0)
         .map(e => DeleteFile(e.path, e.rows, 0L, pks, e.stats))
+    }
+
+    /** Set mark `key` on `name` in this transaction's commit of `name` (a
+      * metadata-only one when nothing else is staged there).
+      */
+    def mark(name: String, key: String, value: String): Unit = {
+      require(self.exists(name), s"no such table: $name")
+      deltas.getOrElseUpdate(name, new TxnDelta(manifestHeader(name).schema)).marks += key -> value
     }
 
     /** Staged [[Warehouse.equalityDelete]]. */

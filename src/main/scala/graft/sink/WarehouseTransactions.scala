@@ -7,6 +7,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.SchemaOps
 
+/** One table's section of a transaction intent. Its txn-unique paths in a
+  * snapshot prove it landed; a marks-only section, its marks there.
+  */
+private[sink] final case class TxnSection(name: String, schema: StructType,
+    files: Seq[DataFile], dels: Seq[DeleteFile], marks: Map[String, String]) {
+  def landedIn(m: Manifest): Boolean =
+    if (files.isEmpty && dels.isEmpty) marks.forall { case (k, v) => m.marks.get(k).contains(v) }
+    else files.forall(f => m.files.exists(_.path == f.path)) &&
+      dels.forall(d => m.deletes.exists(_.path == d.path))
+}
+
 /** Atomic multi-table transactions: stage append-shaped writes against
   * any number of tables, land them all-or-nothing through a durable
   * intent marker with crash roll-forward.
@@ -26,7 +37,7 @@ private[sink] trait WarehouseTransactions { self: Warehouse =>
     * the index-beside-corpus ingest ([[VectorIndexIngest]] /
     * [[SearchIndexIngest]] shapes): fact rows + index postings + a
     * watermark upsert become ONE transaction, so no reader can observe the
-    * fact without its index entries.
+    * fact without its index entries. `tx.mark` sets a mark in its table's commit.
     *
     * Protocol (durable intent + roll-forward — same discipline as
     * `renameAll`):
@@ -75,7 +86,7 @@ private[sink] trait WarehouseTransactions { self: Warehouse =>
     val txn = new WarehouseTxn(id)
     body(txn)
     val work = txn.deltas.toSeq.filter { case (_, d) =>
-      d.files.nonEmpty || d.dels.nonEmpty }
+      d.files.nonEmpty || d.dels.nonEmpty || d.marks.nonEmpty }
     if (work.isEmpty) return Map.empty
     io.mkdirs(intentsDir)
     val marker = intentsDir.resolve(s"txn-$id")
@@ -83,7 +94,8 @@ private[sink] trait WarehouseTransactions { self: Warehouse =>
     work.foreach { case (name, d) =>
       sb.append("== ").append(name).append('\n')
         .append(d.schema.json).append('\n')
-        .append(Manifest.entriesString(d.files, d.dels))
+      if (d.marks.nonEmpty) sb.append("M\t").append(Manifest.marksString(d.marks)).append('\n')
+      sb.append(Manifest.entriesString(d.files, d.dels))
     }
     io.atomicWrite(marker, sb.toString)
     // guard re-entry: the commit work inside goes through access paths
@@ -106,9 +118,8 @@ private[sink] trait WarehouseTransactions { self: Warehouse =>
     val lines = Files.readAllLines(marker)
     require(lines.size() >= 1 && lines.get(0) == "graft-txn v1",
       s"not a txn intent: $marker")
-    // parse sections: "== name" / schema json / entry lines
-    val sections = scala.collection.mutable.ArrayBuffer
-      .empty[(String, StructType, Seq[DataFile], Seq[DeleteFile])]
+    // parse sections: "== name" / schema json / optional marks / entry lines
+    val sections = scala.collection.mutable.ArrayBuffer.empty[TxnSection]
     var i = 1
     while (i < lines.size()) {
       val head = lines.get(i)
@@ -116,21 +127,22 @@ private[sink] trait WarehouseTransactions { self: Warehouse =>
       val name = head.substring(3)
       val schema = DataType.fromJson(lines.get(i + 1)).asInstanceOf[StructType]
       var j = i + 2
+      val marks =
+        if (j < lines.size() && lines.get(j).startsWith("M\t")) {
+          j += 1; Manifest.parseMarks(lines.get(j - 1).substring(2))
+        } else Map.empty[String, String]
       val entry = scala.collection.mutable.ArrayBuffer.empty[String]
       while (j < lines.size() && !lines.get(j).startsWith("== ")) {
         if (lines.get(j).nonEmpty) entry += lines.get(j); j += 1
       }
       val (fs, ds) = Manifest.parseEntries(entry.toSeq)
-      sections += ((name, schema, fs, ds))
+      sections += TxnSection(name, schema, fs, ds, marks)
       i = j
     }
-    sections.zipWithIndex.foreach { case ((name, schema, fs, ds), idx) =>
+    sections.zipWithIndex.foreach { case (sec, idx) =>
       val done = marker.resolveSibling(s"${marker.getFileName}.done$idx")
       if (!Files.exists(done)) {
-        val cur = currentManifest(name)
-        val landed = fs.forall(f => cur.files.exists(_.path == f.path)) &&
-          ds.forall(d => cur.deletes.exists(_.path == d.path))
-        if (!landed) commitTxnDelta(name, schema, fs, ds)
+        if (!sec.landedIn(currentManifest(sec.name))) commitTxnDelta(sec)
         io.atomicWrite(done, "")
       }
     }
@@ -153,22 +165,20 @@ private[sink] trait WarehouseTransactions { self: Warehouse =>
     * recognize the delta already present — delta paths are txn-unique, so
     * presence in the base IS proof of landing — instead of re-appending it.
     */
-  private def commitTxnDelta(name: String, staged: StructType,
-      fs: Seq[DataFile], ds: Seq[DeleteFile]): Long = {
+  private def commitTxnDelta(sec: TxnSection): Long = {
+    val name = sec.name
     preCommitHook(name, currentVersion(name) + 1)
     var tries = 0
     while (tries < 50) {
       tries += 1
       val curV = currentVersion(name)
       val base = manifestAt(name, curV)
-      val landed = fs.forall(f => base.files.exists(_.path == f.path)) &&
-        ds.forall(d => base.deletes.exists(_.path == d.path))
-      if (landed) return curV
-      val (rfs, rds) = remapTxnDelta(staged, base.schema, fs, ds)
+      if (sec.landedIn(base)) return curV
+      val (rfs, rds) = remapTxnDelta(sec.schema, base.schema, sec.files, sec.dels)
       val next = curV + 1
       try return commitManifest(name, next, Manifest(base.schema,
         base.files ++ rfs.map(_.copy(seq = next)),
-        base.deletes ++ rds.map(_.copy(seq = next))))
+        base.deletes ++ rds.map(_.copy(seq = next))), marks = sec.marks)
       catch { case _: java.util.ConcurrentModificationException => }
     }
     throw new java.util.ConcurrentModificationException(

@@ -13,11 +13,13 @@ import graft.sink.{IncrementalRollup, Warehouse}
   *
   * This is [[EventStream]]`.incrementalLoad`'s ledger discipline applied to
   * SNAPSHOT VERSIONS instead of files: the cursor (last source version
-  * delivered) lives in the warehouse batch ledger (streamId
-  * `cdc:<consumer>` on the SOURCE table), not in any streaming checkpoint,
-  * so it is durable, content-derived, and immune to checkpoint
-  * loss/rebuild — a rebuilt caller re-reads the cursor and re-delivers
-  * NOTHING already recorded.
+  * delivered) lives in a warehouse batch-id sidecar (streamId
+  * `cdc:<consumer>` on the SOURCE table, [[Warehouse.recordBatchId]]), not
+  * in any streaming checkpoint, so it is durable, content-derived, and
+  * immune to checkpoint loss/rebuild — a rebuilt caller re-reads the cursor
+  * and re-delivers NOTHING already recorded. The cursor is at-least-once;
+  * [[mirror]] and [[maintainRollup]] are exactly-once by a mark on their
+  * TARGET set by the commit that applies the window ([[Warehouse.marks]]).
   *
   * Delivery contract (the foreachBatch contract, made precise):
   *   - windows are CONTIGUOUS, NON-OVERLAPPING and gapless: (c₀,v₁],
@@ -26,7 +28,7 @@ import graft.sink.{IncrementalRollup, Warehouse}
   *   - a window is re-delivered (same bounds, same rows — snapshots are
   *     immutable) only if `apply` did not complete AND the cursor was not
   *     recorded; `apply` should therefore be idempotent per window (the
-  *     warehouse write verbs and the ledger-guarded rollup below are);
+  *     warehouse write verbs and the mark-guarded consumers below are);
   *   - consumers are independent: each `consumerId` has its own cursor.
   */
 object ChangeFeedStream {
@@ -37,7 +39,7 @@ object ChangeFeedStream {
     * ledger's -1 sentinel means "never consumed").
     */
   def cursor(wh: Warehouse, fact: String, consumerId: String): Long =
-    wh.lastCommittedBatchId(fact, sid(consumerId))
+    wh.recordedBatchId(fact, sid(consumerId))
 
   /** Point a NEW consumer at `fromVersion` without delivering anything —
     * e.g. 0 to stream history from the first snapshot, or `currentVersion`
@@ -71,19 +73,18 @@ object ChangeFeedStream {
     * after every poll (spec-pinned), so a downstream system can follow a
     * 100 TB table at O(changes) cost per poll with no full-table sync.
     *
-    * Exactly-once STRUCTURALLY: the window's delta and the applied-version
-    * marker (`<copy>__ledger`, consumer → fact version) land as ONE
-    * [[Warehouse.transact]] commit, so there is no crash point at which
-    * the data applied but the marker did not. A re-delivered window —
-    * including one WIDENED by commits that landed between the crash and
-    * the restart — narrows to the uncovered suffix
-    * `readChanges(applied, to)` before applying; without the marker a
-    * widened window is NOT generally replay-safe (a key changed in the
-    * applied prefix and reverted in the suffix nets out of the wide diff
-    * and would strand the copy on the pre-revert value — spec-pinned).
-    * The marker read is manifest-stat bounds on `v` — zero Spark jobs.
-    * One maintainer per copy table, which the single-consumer marker
-    * already implies.
+    * Exactly-once STRUCTURALLY: the window's delta and the applied fact
+    * version (the copy's `mirror:<consumer>` mark) land as ONE
+    * [[Warehouse.transact]] commit, so there is no crash point at which the
+    * data applied but the mark did not. A re-delivered window — including
+    * one WIDENED by commits that landed between the crash and the restart —
+    * narrows to the uncovered suffix `readChanges(applied, to)` before
+    * applying; without the mark a widened window is NOT generally
+    * replay-safe (a key changed in the applied prefix and reverted in the
+    * suffix nets out of the wide diff and would strand the copy on the
+    * pre-revert value — spec-pinned). The mark read is the copy's root
+    * header — zero Spark jobs. One maintainer per copy table; a copy still
+    * holding an older build's `<copy>__ledger` table is refused.
     *
     * Schema evolution FOLLOWS the feed: the window's from→to schema diff
     * on the fact (matched by the fact's own field ids) replays onto the
@@ -91,14 +92,15 @@ object ChangeFeedStream {
     * values instead of silently nulling a "new" column), adds add, drops
     * drop — before the window's rows apply in the to-schema. The
     * evolution steps are separate crash-resumable commits (see
-    * [[replayEvolution]]); only the data delta + marker need the
+    * [[replayEvolution]]); only the data delta + mark need the
     * transaction.
     */
   def mirror(wh: Warehouse, fact: String, copy: String, pks: Seq[String],
              consumerId: String): Long =
     poll(wh, fact, consumerId) { (changes0, from0, to) =>
-      val ledger = s"${copy}__ledger"
-      val applied = statMarker(wh, ledger, "v")
+      val key = s"mirror:$consumerId"
+      val applied = markedVersion(wh, wh.marks(copy), copy, key, consumerId)(
+        Some(s"a ${copy}__ledger table").filter(_ => wh.exists(s"${copy}__ledger")))
       if (to > applied) {
         val from = math.max(from0, applied)
         val changes = if (from > from0) wh.readChanges(fact, from, to) else changes0
@@ -111,40 +113,21 @@ object ChangeFeedStream {
         // delete files (the -D keys and morMerge's pk keys) apply to
         // PRE-transaction rows only, so a key updated in the window has its
         // old row killed and its new row shielded
-        val delKeys = deletes.select(pks.map(col): _*)
-        val spark = changes.sparkSession
-        val row = spark.createDataFrame(
-          java.util.List.of(org.apache.spark.sql.Row(consumerId, to)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("consumer",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("v",
-              org.apache.spark.sql.types.LongType))))
         wh.transact { tx =>
-          tx.equalityDelete(copy, delKeys)
+          tx.equalityDelete(copy, deletes.select(pks.map(col): _*))
           tx.morMerge(copy, inserts, pks)
-          if (wh.exists(ledger)) tx.morMerge(ledger, row, Seq("consumer"))
-          else tx.append(ledger, row, statsCols = Seq("consumer", "v"))
+          tx.mark(copy, key, to.toString)
         }
       }
     }
 
-  /** Highest manifest-stat upper bound of numeric column `col` across a
-    * table's files, -1 when absent — the zero-Spark-job read of a
-    * monotone high-water marker committed WITH the data it covers
-    * (morMerge leaves superseded marker rows in older files, but a
-    * monotone marker's max is the live one).
-    */
-  private def statMarker(wh: Warehouse, table: String, col: String): Long =
-    if (!wh.exists(table)) -1L
-    else {
-      val m = wh.currentManifest(table)
-      if (!m.schema.fieldNames.contains(col)) -1L
-      else m.files.flatMap(_.stats.get(col))
-        .collect { case graft.sink.ColStat("n", _, mx, _) if mx.nonEmpty =>
-          new java.math.BigDecimal(mx).longValue() }
-        .foldLeft(-1L)(math.max)
-    }
+  /** Version mark `key` of `target` (-1 if unset); refuses `legacy` state. */
+  private def markedVersion(wh: Warehouse, marks: Map[String, String], target: String,
+                            key: String, consumerId: String)(legacy: => Option[String]): Long =
+    marks.get(key).fold {
+      legacy.foreach(wh.refuseUnmarked(target, consumerId, _))
+      -1L
+    }(_.toLong)
 
   /** Replay the fact's from→to schema diff onto the copy, by name. Fields
     * pair across the window by the FACT's field ids (the copy's own ids
@@ -218,168 +201,139 @@ object ChangeFeedStream {
     * holds these partials, folded by [[IncrementalRollup.read]]'s merge
     * exactly as batch partials are.
     *
-    * Exactly-once STRUCTURALLY: each partials batch carries the covered
-    * source version as a `__cfs_v` column, so the delta and its own
-    * watermark are THE SAME COMMIT — there is no crash point at which one
-    * landed without the other (the window the original append-then-record
-    * design had). The replay guard reads the high-water mark from the
-    * rollup manifest's `__cfs_v` stat bounds — zero Spark jobs, O(files)
-    * metadata — and a re-delivered window WIDENED by commits that landed
-    * between the crash and the restart narrows to the uncovered suffix
-    * `readChanges(marker, to)`, so the covered prefix never double-applies
-    * (spec-pinned). [[IncrementalRollup.read]]'s keyed fold ignores the
-    * extra column. Legacy rollups (pre-marker) upgrade in place with a
-    * metadata-only ADD COLUMN and keep their file-ledger guard for history
-    * already covered. One maintainer per rollup table (two would
-    * double-count by construction — same as the ledger it replaces);
-    * compact a CDC-maintained rollup with `compactFiles` (content-
-    * preserving), not [[IncrementalRollup.compact]], whose keyed re-fold
-    * would drop the marker column.
+    * Exactly-once STRUCTURALLY: each tick's partials commit carries the
+    * rollup's marks — covered fact version, delivering-tick count, fact and
+    * spec — and every later commit (a drain, a compaction) carries them on,
+    * so no crash point separates the delta from its progress. The replay
+    * guard reads the covered version from the root header (zero Spark jobs),
+    * and a re-delivered window WIDENED by commits that landed between the
+    * crash and the restart narrows to `readChanges(covered, to)` (spec-
+    * pinned). A rollup still holding an older build's `__cfs_v` column or
+    * `_stream_cfsmark` sidecar is refused. One maintainer per rollup table
+    * (two would double-count by construction).
+    *
+    * Self-serve drain cadence (opt-in): every `drainEvery`-th delivering tick
+    * by the committed count drains the pending side table. A crash before
+    * the cursor re-delivers the window uncounted, and the re-run runs the
+    * drain the count owes ([[hasPending]] is exact); a call that delivers
+    * nothing runs no Spark job.
     */
   def maintainRollup(wh: Warehouse, fact: String, rollup: String,
                      spec: IncrementalRollup.Spec, consumerId: String,
                      drainEvery: Int = 0): Long =
     poll(wh, fact, consumerId) { (changes0, from, to) =>
-      val recorded = math.max(
-        math.max(
-          wh.lastCommittedBatchId(rollup, sid(consumerId)), // legacy file ledger
-          wh.lastCommittedBatchId(rollup, MarkSid)), // drain-preserved watermark
-        statMarker(wh, rollup, VCol))
-      if (to > recorded) {
+      val marks = wh.marks(rollup)
+      val covered = markedVersion(wh, marks, rollup, Covered, consumerId)(legacyRollup(wh, rollup))
+      var ticks = marks.get(Ticks).fold(0L)(_.toLong)
+      if (to > covered) {
         val changes = (
-          if (recorded > from) wh.readChanges(fact, recorded, to) else changes0
+          if (covered > from) wh.readChanges(fact, covered, to) else changes0
           ).localCheckpoint() // consumers: window partials + -D extreme gate
-        val partials = IncrementalRollup.windowPartials(changes, spec).withColumn(VCol, lit(to))
+        val partials = IncrementalRollup.windowPartials(changes, spec)
         if (!wh.exists(rollup))
           wh.create(rollup, org.apache.spark.sql.types.StructType(
             partials.schema.fields.map(_.copy(nullable = true))))
-        else if (!wh.currentManifest(rollup).schema.fieldNames.contains(VCol))
-          wh.addColumns(rollup, Seq(org.apache.spark.sql.types.StructField(
-            VCol, org.apache.spark.sql.types.LongType))) // legacy upgrade, metadata-only
-        // durable discovery state: record the fact + spec beside the rollup
-        // so policy maintenance ([[Warehouse.maintain]]) can drain the
-        // pending side table without this maintainer process (one tiny
-        // sidecar read per tick; rewritten only when stale)
-        val specStr = IncrementalRollup.specToString(spec)
-        if (!wh.getTableMeta(rollup, CfsSpecKey).contains(specStr))
-          wh.putTableMeta(rollup, CfsSpecKey, specStr)
-        if (!wh.getTableMeta(rollup, CfsFactKey).contains(fact))
-          wh.putTableMeta(rollup, CfsFactKey, fact)
+        ticks += 1
+        // fact + spec let policy maintenance drain without this process
+        val progress = Map(Covered -> to.toString, Ticks -> ticks.toString,
+          FactMark -> fact, SpecMark -> IncrementalRollup.specToString(spec))
         // EXTREMAL measures: the tie-gated affected groups land in the
         // pending side table IN THE SAME transaction as the window partials,
         // so no crash point separates "partials applied" from "damage
         // recorded". The tick itself NEVER rescans the fact;
         // [[drainPendingExtremes]] does, targeted, at its own cadence.
         IncrementalRollup.affectedGroups(wh, rollup, spec, changes) match {
-          case None => wh.append(rollup, partials, statsCols = spec.keys :+ VCol)
+          case None => wh.append(rollup, partials, statsCols = spec.keys, marks = progress)
           case Some(groups) =>
             wh.transact { tx =>
-              tx.append(rollup, partials, statsCols = spec.keys :+ VCol)
-              tx.append(pendingTable(rollup), groups.withColumn(VCol, lit(to)),
+              tx.append(rollup, partials, statsCols = spec.keys)
+              progress.foreach { case (k, v) => tx.mark(rollup, k, v) }
+              // the marking version keeps a keyless pending row non-empty
+              tx.append(pendingTable(rollup), groups.withColumn("__marked_at", lit(to)),
                 statsCols = spec.keys)
             }
         }
       }
-      // Self-serve drain cadence (opt-in): every `drainEvery` DELIVERING
-      // ticks, drain the pending side table — a long-running maintainer no
-      // longer relies on an external caller remembering the drain. The
-      // drain and then the counter land BEFORE `poll` records the cursor, so
-      // a crash anywhere up to the counter re-delivers this window and
-      // re-runs the drain it owes (`CrashMatrixSpec`); a crash between the
-      // counter and the cursor counts the window twice, which shifts an
-      // N > 1 cadence one tick early. The pending gate is metadata-only
-      // (manifest row counts), and a call that delivers nothing never gets
-      // here, so idle calls run no Spark job; the "one maintainer per
-      // rollup" discipline already makes the tick the safe place to drain
-      // from.
-      if (drainEvery > 0) {
-        val t = math.max(0L, wh.lastCommittedBatchId(rollup, TickSid)) + 1
-        if (t % drainEvery == 0 && hasPending(wh, rollup))
-          drainPendingExtremes(wh, fact, rollup, spec)
-        wh.recordBatchId(rollup, TickSid, t)
-      }
+      if (drainEvery > 0 && ticks % drainEvery == 0)
+        drainPendingExtremes(wh, fact, rollup, spec)
     }
 
-  /** Metadata-only probe: does the pending side table carry any live rows?
-    * Conservative (MOR retractions may cover every data row, in which case
-    * the drain itself counts zero and returns) but zero Spark jobs.
-    */
-  private def hasPending(wh: Warehouse, rollup: String): Boolean =
-    wh.exists(pendingTable(rollup)) &&
-      wh.currentManifest(pendingTable(rollup)).files.exists(_.rows > 0)
+  /** Pre-mark progress state on a stream-maintained rollup, if any. */
+  private def legacyRollup(wh: Warehouse, rollup: String): Option[String] =
+    if (!wh.exists(rollup)) None
+    else if (wh.manifestHeader(rollup).schema.fieldNames.contains("__cfs_v"))
+      Some("a __cfs_v column")
+    else Some("a _stream_cfsmark sidecar").filter(_ => wh.recordedBatchId(rollup, "cfsmark") >= 0)
 
-  private val VCol = IncrementalRollup.MarkerCol
-  /** Drain-preserved watermark ledger (fixed streamId — the one-maintainer
-    * discipline makes it single-writer): records the covered version
-    * independently of the rollup's `__cfs_v` stat bounds, so a drain that
-    * retracts a group with NO surviving fact rows (removing the rows that
-    * uniquely carried the max marker stat) can never regress the replay
-    * watermark and let a crash-replayed tick double-apply a window.
+  /** Does the pending side table hold keys no drain has read? Exact and
+    * metadata-only: a drain's clear marks the pending version it read.
     */
-  private val MarkSid = "cfsmark"
-  /** Auto-drain tick counter ledger for [[maintainRollup]]'s `drainEvery`. */
-  private val TickSid = "cfstick"
-  /** Table-meta keys recording the rollup's fact + serialized spec (read by
-    * [[Warehouse.maintain]] to drain the pending side table policy-side).
-    */
-  private[graft] val CfsSpecKey = "cfs_spec"
-  private[graft] val CfsFactKey = "cfs_fact"
+  private def hasPending(wh: Warehouse, rollup: String): Boolean = {
+    val pend = pendingTable(rollup)
+    wh.exists(pend) && {
+      val drained = wh.marks(pend).get(Drained).fold(-1L)(_.toLong)
+      wh.currentManifest(pend).files.exists(f => f.rows > 0 && f.seq > drained)
+    }
+  }
+
+  // the rollup's marks, and the pending table's
+  private val Covered = "cfs.covered"
+  private val Ticks = "cfs.ticks"
+  private val FactMark = "cfs.fact"
+  private val SpecMark = "cfs.spec"
+  private val Drained = "cfs.drained"
 
   /** [[Warehouse.maintain]]'s entry: drain `rollup`'s pending-extremes side
-    * table from its RECORDED fact + spec (the [[maintainRollup]] sidecars) —
+    * table from its RECORDED fact + spec (the [[maintainRollup]] marks) —
     * a SQL-only operator can repair a stream-maintained rollup they did not
-    * build. Returns groups drained; 0 when the rollup is not
-    * stream-maintained (no sidecars) or nothing pends. Same one-maintainer
-    * caveat as [[drainPendingExtremes]]: do not race a live tick.
+    * build. Returns groups drained; 0 when the rollup is not stream-
+    * maintained or nothing pends. Do not race a live tick.
     */
-  private[graft] def drainPendingFromMeta(wh: Warehouse, rollup: String): Long =
-    (wh.getTableMeta(rollup, CfsFactKey), wh.getTableMeta(rollup, CfsSpecKey)) match {
+  private[graft] def drainPendingFromMeta(wh: Warehouse, rollup: String): Long = {
+    val marks = wh.marks(rollup)
+    (marks.get(FactMark), marks.get(SpecMark)) match {
       case (Some(fact), Some(specStr)) if wh.exists(fact) =>
         drainPendingExtremes(wh, fact, rollup, IncrementalRollup.specFromString(specStr))
       case _ => 0L
     }
+  }
+
   /** Side table of affected-group keys awaiting [[drainPendingExtremes]]. */
   def pendingTable(rollup: String): String = s"${rollup}__pending"
 
   /** Drain the PENDING affected-group set a stream-maintained extremal
     * rollup accumulated ([[maintainRollup]]'s tie-gated side table): each
     * pending group recomputes from the fact snapshot AT THE ROLLUP'S
-    * COVERED VERSION (the `__cfs_v` marker — recomputing at the head would
-    * pre-fold windows the stream has not delivered and double-count them
-    * on delivery) through [[IncrementalRollup.recompute]], the recompute
+    * COVERED VERSION (its mark — recomputing at the head would pre-fold
+    * windows the stream has not delivered and double-count them on
+    * delivery) through [[IncrementalRollup.recompute]], the recompute
     * [[IncrementalRollup.maintainFromChangeFeed]] runs at the head: a
     * bounded non-null key set retracts the groups' fold history, lands the
-    * recomputed rows (stamped with the marker, so the replay watermark
-    * survives any later compaction of the original marker files) and clears
-    * their pending keys in ONE transaction commit; a keyless, null-keyed or
-    * over-gate set consolidates by replace, and a crash before its pending
-    * clear re-drains idempotently (same marker, same recompute).
+    * recomputed rows and clears their pending keys in ONE transaction
+    * commit; a keyless, null-keyed or over-gate set consolidates by
+    * replace, and a crash before its pending clear re-drains idempotently
+    * (same covered version, same recompute). The clear marks the pending
+    * version the drain read ([[hasPending]]).
     *
     * One maintainer per rollup (the [[maintainRollup]] discipline): the
-    * drain must not race a tick. Returns the number of groups drained.
+    * drain must not race a tick. Returns the number of groups drained; a
+    * call with nothing pending runs no Spark job.
     */
   def drainPendingExtremes(wh: Warehouse, fact: String, rollup: String,
                            spec: IncrementalRollup.Spec): Long = {
+    if (!wh.exists(rollup) || !hasPending(wh, rollup)) return 0L
     val pend = pendingTable(rollup)
-    if (!wh.exists(pend) || !wh.exists(rollup)) return 0L
-    val pKeys = wh.load(pend).select(spec.keys.map(col): _*).distinct().localCheckpoint()
+    val read = wh.currentVersion(pend)
+    val pKeys = wh.loadVersion(pend, read).select(spec.keys.map(col): _*).distinct()
+      .localCheckpoint()
     val n = pKeys.count()
     if (n == 0L) return 0L
-    val marker = math.max(statMarker(wh, rollup, VCol),
-      wh.lastCommittedBatchId(rollup, MarkSid))
-    require(marker >= 0,
-      s"$rollup: no $VCol marker — drainPendingExtremes applies to " +
+    val covered = wh.marks(rollup).get(Covered).fold(-1L)(_.toLong)
+    require(covered >= 0,
+      s"$rollup: no $Covered mark — drainPendingExtremes applies to " +
         "stream-maintained rollups (maintainRollup)")
-    // Preserve the replay watermark INDEPENDENTLY of group rows, BEFORE any
-    // retraction commits: a drained group with no surviving fact rows gets
-    // retracted with no replacement, and if its rows uniquely carried the
-    // max __cfs_v stat the marker would regress — a crash-replayed tick
-    // (to > recorded) could then re-apply already-applied signed partials.
-    // Recording the CURRENT covered version is always safe (it is already
-    // covered), and a crash at any later point leaves it durable.
-    wh.recordBatchId(rollup, MarkSid, marker)
-    IncrementalRollup.recompute(wh, rollup, spec, fact, marker, pKeys,
-      carry = None, clear = Seq(pend))
+    IncrementalRollup.recompute(wh, rollup, spec, fact, covered, pKeys,
+      carry = None, clear = Seq(pend), marks = Map(pend -> Map(Drained -> read.toString)))
     n
   }
 }

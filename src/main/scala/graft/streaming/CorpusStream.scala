@@ -108,11 +108,12 @@ object CorpusStream {
     * (schedule it via [[Warehouse.maintain]], off the ingest path). This is
     * the Flink/Iceberg streaming "upsert mode" shape at 100 TB.
     *
-    * Exactly-once rides the batch-id ledger (the `RollupStream` guard):
-    * morMerge replays CONVERGE by value (the replay's delete kills the
-    * prior copy), but a skipped replay also avoids accreting duplicate
-    * delete/data files — so the ledger is an IO optimization AND the
-    * no-churn guarantee, while correctness never rests on it.
+    * Exactly-once rides the batch-id mark (the `RollupStream` guard: each
+    * morMerge commit carries its batch id): morMerge replays CONVERGE by
+    * value (the replay's delete kills the prior copy), but a skipped replay
+    * also avoids accreting duplicate delete/data files — so the mark is an
+    * IO optimization AND the no-churn guarantee, while correctness never
+    * rests on it.
     */
   def ingestUpserts(spark: SparkSession, watchDir: String,
       schema: StructType, wh: Warehouse, table: String, pks: Seq[String],
@@ -123,10 +124,8 @@ object CorpusStream {
       .option("checkpointLocation",
         checkpointDir.getOrElse(s"${watchDir.stripSuffix("/")}/_checkpoint_$streamId"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > wh.lastCommittedBatchId(table, streamId)) {
-          wh.morMerge(table, batch, pks)
-          wh.recordBatchId(table, streamId, batchId)
-        }
+        if (batchId > wh.lastCommittedBatchId(table, streamId))
+          wh.morMerge(table, batch, pks, marks = wh.batchIdMark(streamId, batchId))
         ()
       }
 

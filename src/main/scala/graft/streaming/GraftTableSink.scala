@@ -47,18 +47,15 @@ import graft.sink.Warehouse
   *                      small streaming aggregates; each batch IS the
   *                      table).
   *
-  * Exactly-once: the warehouse batch-id ledger
-  * ([[Warehouse.lastCommittedBatchId]]) skips a micro-batch the table
-  * already committed, so checkpoint-replayed batches (the normal crash
-  * recovery path) never double-land. A crash INSIDE the two-write window
-  * (data commit done, ledger not yet recorded) re-applies at most one
-  * batch: `upsert`/`dedup`/`replace` converge by value, `append` degrades
-  * to at-least-once for that one batch — exactly foreachBatch's contract,
-  * stated here once instead of in every closure. A REBUILT checkpoint
-  * restarts batch numbering at 0 below the recorded high-water mark; the
-  * sink fails loudly rather than silently dropping the fresh stream's
-  * batches (set a new `stream-id` — a new consumer identity — to re-attach,
-  * with `dedup`/`upsert` replays converging by value).
+  * Exactly-once for every disposition: each batch's commit carries its
+  * batch id as a mark on the table ([[Warehouse.batchIdMark]]; an empty
+  * `upsert` batch commits the mark alone), and a batch the table already
+  * marked is skipped, so checkpoint-replayed batches (the normal crash
+  * recovery path) never double-land. A REBUILT checkpoint restarts batch
+  * numbering at 0 below the marked high-water mark; the sink fails loudly
+  * rather than silently dropping the fresh stream's batches (set a new
+  * `stream-id` — a new consumer identity — to re-attach, with
+  * `dedup`/`upsert` replays converging by value).
   *
   * Schema drift (`merge-schema=true`): a micro-batch carrying columns the
   * table lacks evolves the table first ([[Warehouse.addMissingColumns]] —
@@ -97,11 +94,15 @@ final class GraftTableSink(root: String, table: String, disposition: String,
 
   override def addBatch(batchId: Long, rawBatch: Dataset[Row]): Unit = {
     val data = asBatch(rawBatch)
-    val wh = new Warehouse(data.sparkSession, root)
+    commitBatch(new Warehouse(data.sparkSession, root), batchId, data)
+  }
+
+  /** Skip a batch `table` already marked, else land it with its mark. */
+  private[graft] def commitBatch(wh: Warehouse, batchId: Long, data: DataFrame): Unit = {
     val last = wh.lastCommittedBatchId(table, streamId)
     if (batchId <= last) {
       // An intact checkpoint re-delivers at most the LAST committed batch
-      // (its epoch-commit marker may postdate our ledger write), so
+      // (its epoch-commit marker may postdate our commit), so
       // batchId == last is the normal replay — skip. Anything BELOW it
       // means batch numbering restarted: a rebuilt checkpoint, whose fresh
       // batches would otherwise be silently dropped. Refuse loudly.
@@ -117,13 +118,13 @@ final class GraftTableSink(root: String, table: String, disposition: String,
     }
     if (mergeSchema && wh.exists(table)) wh.addMissingColumns(table, data.schema)
     validateChecks(data)
+    val mark = wh.batchIdMark(streamId, batchId)
     disposition match {
-      case "append"  => wh.append(table, data, statsCols, clusterBy)
-      case "upsert"  => wh.morMerge(table, data, keys, clusterBy)
-      case "dedup"   => wh.appendDeduped(table, data, fpCol, pk, statsCols, clusterBy)
-      case "replace" => wh.replace(table, data, statsCols, clusterBy)
+      case "append"  => wh.append(table, data, statsCols, clusterBy, mark)
+      case "upsert"  => wh.morMerge(table, data, keys, clusterBy, mark)
+      case "dedup"   => wh.appendDeduped(table, data, fpCol, pk, statsCols, clusterBy, mark)
+      case "replace" => wh.replace(table, data, statsCols, clusterBy, mark)
     }
-    wh.recordBatchId(table, streamId, batchId)
   }
 
   /** Enforced CHECK constraints apply to streams too: Spark's own

@@ -11,12 +11,12 @@ import graft.sink.{IncrementalRollup, Warehouse}
   * Exactly-once across replays: foreachBatch can re-deliver a batch after a
   * crash between the warehouse commit and the checkpoint commit, and an
   * additive rollup DOUBLE-COUNTS on re-application (unlike an idempotent
-  * merge). [[applyBatch]] therefore guards on the warehouse-side batch-id
-  * high-watermark (the same ledger protocol the ingest path uses) — commit
-  * then record, so a replayed id is skipped. Checkpoint LOSS needs the
-  * file-ledger variant (see EventStream.incrementalLoad); a batch-id
-  * watermark is the right guard while the checkpoint lives, which is the
-  * foreachBatch contract.
+  * merge). [[applyBatch]] therefore lands each batch's partials with its
+  * batch id as a consumer mark in the same commit (the stream sink's
+  * protocol) and skips an id the rollup already marked. Checkpoint LOSS
+  * needs the file-ledger variant (see EventStream.incrementalLoad); a
+  * batch-id watermark is the right guard while the checkpoint lives, which
+  * is the foreachBatch contract.
   */
 object RollupStream {
 
@@ -26,10 +26,8 @@ object RollupStream {
     */
   def applyBatch(wh: Warehouse, table: String, spec: IncrementalRollup.Spec,
       streamId: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (batchId > wh.lastCommittedBatchId(table, streamId)) {
-      IncrementalRollup.maintain(wh, table, batch, spec)
-      wh.recordBatchId(table, streamId, batchId)
-    }
+    if (batchId > wh.lastCommittedBatchId(table, streamId))
+      IncrementalRollup.maintain(wh, table, batch, spec, wh.batchIdMark(streamId, batchId))
   }
 
   /** Wire a stream to the rollup table. Caller starts/stops the query. */

@@ -289,11 +289,11 @@ class ChangeFeedStreamSpec extends SparkSpec {
 
   test("drain of a fully-deleted group never regresses the replay watermark") {
     // REGRESSION (round-17 advice): a pending group with NO surviving fact
-    // rows retracts its fold history with no replacement row; when those
-    // rows uniquely carried the max __cfs_v, the stat-bound marker
-    // regressed and a crash-replayed tick re-applied the covered window's
-    // signed partials. The drain now records the covered version on a
-    // durable ledger BEFORE retracting.
+    // rows retracts its fold history with no replacement row; when the
+    // covered version rode those rows (a stat-bound marker), it regressed
+    // and a crash-replayed tick re-applied the covered window's signed
+    // partials. The covered version is a mark on the rollup's root now,
+    // which the drain's commits carry forward.
     val wh = new Warehouse(spark, tmpDir("cfs-wm"))
     val spec = IncrementalRollup.Spec(Seq("g"), Seq(
       IncrementalRollup.CountStar("n"), IncrementalRollup.MaxOf(col("v"), "hi")))
@@ -304,15 +304,14 @@ class ChangeFeedStreamSpec extends SparkSpec {
     wh.append("fact", kv((1L, "a", "5.00"), (2L, "b", "1.00")), statsCols = Seq("k"))
     ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "wm")
     // delete group a's ONLY row (it IS the extreme → tie-gated pending);
-    // this window's partials are group a's alone, so they uniquely carry
-    // the new max __cfs_v — and the drain will retract every one of them
+    // this window's partials are group a's alone, and the drain will
+    // retract every one of them
     wh.deleteWhere("fact", col("k") === 1L)
     ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "wm")
     assert(ChangeFeedStream.drainPendingExtremes(wh, "fact", "roll", spec) == 1L)
     assert(folded() == direct(), "drained state exact")
-    // crash replay: cursor lost → wide re-delivery (0, head]; without the
-    // preserved watermark the window narrows only to the REGRESSED stat
-    // marker and re-applies group a's -1 partial (folded a = -1)
+    // crash replay: cursor lost → wide re-delivery (0, head]; a regressed
+    // covered version would re-apply group a's -1 partial (folded a = -1)
     ChangeFeedStream.seek(wh, "fact", "wm", 0L)
     ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "wm")
     assert(folded() == direct(),
@@ -367,8 +366,7 @@ class ChangeFeedStreamSpec extends SparkSpec {
     wh.deleteWhere("fact", col("k") === 1L)
     ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "idle", drainEvery = 1)
     assert(wh.load(pend).count() == 0L, "the cadence tick drains")
-    // the drain retracts its keys with delete files, so the pending table's
-    // data files still count rows: only the delivery gate keeps this free
+    // nothing delivered: poll never calls the tick, so no job runs
     val jobs = sparkJobs {
       ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "idle", drainEvery = 1): Unit
     }
@@ -376,11 +374,10 @@ class ChangeFeedStreamSpec extends SparkSpec {
   }
 
   test("rollup compaction between drain and next tick: marker survives, no window double-counts") {
-    // the statMarker durability property: the drain stamps recomputed rows
-    // with the covered version and the ledger preserves it independently —
-    // compacting the rollup's files (content-preserving rewrite) between a
-    // drain and the next tick must neither lose the watermark nor let a
-    // replayed window double-apply
+    // the covered mark's durability: compacting the rollup's files
+    // (content-preserving rewrite) between a drain and the next tick must
+    // neither lose the covered version nor let a replayed window
+    // double-apply
     val wh = new Warehouse(spark, tmpDir("cfs-compact"))
     val spec = IncrementalRollup.Spec(Seq("g"), Seq(
       IncrementalRollup.CountStar("n"), IncrementalRollup.MinOf(col("v"), "lo")))
@@ -395,8 +392,7 @@ class ChangeFeedStreamSpec extends SparkSpec {
     ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "cp")
     ChangeFeedStream.drainPendingExtremes(wh, "fact", "roll", spec)
     assert(folded() == direct())
-    // compact the rollup (the scaladoc-prescribed compactFiles path) —
-    // rewrites the marker-carrying files
+    // compact the rollup (compactFiles rewrites every partial file)
     wh.compactFiles("roll", smallRows = 1000000L)
     assert(folded() == direct(), "compaction must be content-preserving")
     // crash replay across the compaction: wide re-delivery must still
@@ -418,8 +414,9 @@ class ChangeFeedStreamSpec extends SparkSpec {
     wh.create("fact", schema)
     wh.append("fact", kv((1L, "a", "1.00"), (2L, "b", "2.00")), statsCols = Seq("k"))
     ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "c")
-    // same-bounds re-delivery (cursor lost, no new commits): the in-commit
-    // __cfs_v marker covers the window — zero new rollup commits
+    // same-bounds re-delivery (cursor lost, no new commits): the covered
+    // mark committed with the partials covers the window — zero new rollup
+    // commits
     ChangeFeedStream.seek(wh, "fact", "c", 0L)
     val rv = wh.currentVersion("roll")
     ChangeFeedStream.maintainRollup(wh, "fact", "roll", spec, "c")
@@ -444,19 +441,92 @@ class ChangeFeedStreamSpec extends SparkSpec {
     val v1 = wh.currentVersion("fact")
     wh.morMerge("fact", kv((1L, "a", "9.00")), Seq("k"))
     ChangeFeedStream.mirror(wh, "fact", "copy", Seq("k"), "m") // (v1, v2] applied
-    // same-bounds re-delivery: the txn-committed marker covers it
+    // same-bounds re-delivery: the mark committed with the txn covers it
     ChangeFeedStream.seek(wh, "fact", "m", v1)
     val cv = wh.currentVersion("copy")
     ChangeFeedStream.mirror(wh, "fact", "copy", Seq("k"), "m")
     assert(wh.currentVersion("copy") == cv, "covered window must not re-apply")
     // widened re-delivery with an ABA revert: k=1 returns to its v1 value
     // before the restart, so the WIDE diff (v1, v3] nets the key out — only
-    // the marker-narrowed suffix (v2, v3] sees the revert
+    // the mark-narrowed suffix (v2, v3] sees the revert
     ChangeFeedStream.seek(wh, "fact", "m", v1)
     wh.morMerge("fact", kv((1L, "a", "1.00")), Seq("k"))
     ChangeFeedStream.mirror(wh, "fact", "copy", Seq("k"), "m")
     assert(bag(wh.load("copy")) == bag(wh.load("fact")),
       "ABA revert across the crash gap must replay exactly")
+  }
+
+  test("drain gate is exact: right after a drain, a tick with no new ties runs the jobs of drainEvery = 0") {
+    val wh = new Warehouse(spark, tmpDir("cfs-exact"))
+    val spec = IncrementalRollup.Spec(Seq("g"), Seq(
+      IncrementalRollup.CountStar("n"), IncrementalRollup.MaxOf(col("v"), "hi")))
+    def folded(r: String) = bag(IncrementalRollup.read(wh, r, spec).filter(col("n") =!= 0L))
+    def direct() = bag(wh.load("fact").groupBy("g")
+      .agg(count(lit(1)).as("n"), max(col("v")).as("hi")))
+    def tick(r: String, every: Int): Unit = {
+      ChangeFeedStream.maintainRollup(wh, "fact", r, spec, r, drainEvery = every): Unit
+    }
+    wh.create("fact", schema)
+    wh.append("fact", kv((1L, "a", "5.00"), (2L, "a", "1.00"), (3L, "b", "2.00")),
+      statsCols = Seq("k"))
+    tick("r0", 0); tick("r1", 1)
+    wh.deleteWhere("fact", col("k") === 1L) // a's max: both rollups mark a pending
+    tick("r1", 1) // drains on its cadence
+    tick("r0", 0)
+    assert(ChangeFeedStream.drainPendingExtremes(wh, "fact", "r0", spec) == 1L)
+    // a delivering tick that ties no extreme: nothing pends on either side
+    wh.append("fact", kv((4L, "b", "1.50")), statsCols = Seq("k"))
+    val j0 = sparkJobs(tick("r0", 0))
+    val j1 = sparkJobs(tick("r1", 1))
+    assert(j1 == j0, s"drainEvery = 1 ran $j1 Spark jobs, drainEvery = 0 ran $j0")
+    assert(folded("r0") == direct() && folded("r1") == direct())
+  }
+
+  test("cadence counter is exactly-once: a crash after the partials commit neither recounts nor loses a drain") {
+    import graft.sink.{MetaIO, SimulatedCrash}
+    /** Dies at the `nth` durable write to a file whose name `hit` accepts. */
+    final class DieAt(hit: String => Boolean, nth: Int) extends MetaIO {
+      private var seen = 0
+      override def atomicWrite(target: java.nio.file.Path, bytes: Array[Byte]): Unit = {
+        if (hit(target.getFileName.toString)) {
+          seen += 1
+          if (seen == nth) throw new SimulatedCrash(s"crash before writing $target")
+        }
+        super.atomicWrite(target, bytes)
+      }
+    }
+    val root = tmpDir("cfs-ticks")
+    val wh = new Warehouse(spark, root)
+    val spec = IncrementalRollup.Spec(Seq("g"), Seq(
+      IncrementalRollup.CountStar("n"), IncrementalRollup.MaxOf(col("v"), "hi")))
+    def tick(w: Warehouse): Unit = {
+      ChangeFeedStream.maintainRollup(w, "fact", "roll", spec, "tk", drainEvery = 2): Unit
+    }
+    def ticks() = wh.marks("roll").get("cfs.ticks")
+    val pend = ChangeFeedStream.pendingTable("roll")
+    wh.create("fact", schema)
+    wh.append("fact", kv((1L, "a", "5.00"), (2L, "a", "1.00")), statsCols = Seq("k"))
+    // tick 1 dies right after its partials commit, before the cursor lands;
+    // the re-run re-delivers the same window, which the covered mark skips
+    intercept[SimulatedCrash](tick(new Warehouse(spark, root,
+      io = new DieAt(_.startsWith("_stream_cdc:"), 1))))
+    tick(wh)
+    assert(ticks().contains("1"), s"a re-delivered window counted again: ${ticks()}")
+    // tick 2 marks a pending and owes the cadence's drain; it dies after its
+    // partials transaction, before the drain's own
+    wh.deleteWhere("fact", col("k") === 1L)
+    intercept[SimulatedCrash](tick(new Warehouse(spark, root,
+      io = new DieAt(n => n.startsWith("txn-") && !n.contains(".done"), 2))))
+    assert(ticks().contains("2") && wh.load(pend).count() == 1L,
+      "premise: tick 2's partials and pending key landed, its drain did not")
+    // the re-run delivers nothing new and still runs the drain tick 2 owes
+    tick(wh)
+    assert(wh.load(pend).count() == 0L, "the owed drain did not run")
+    assert(ticks().contains("2"))
+    assert(bag(IncrementalRollup.read(wh, "roll", spec).filter(col("n") =!= 0L)) ==
+      bag(wh.load("fact").groupBy("g").agg(count(lit(1)).as("n"), max(col("v")).as("hi"))))
+    val jobs = sparkJobs(tick(wh))
+    assert(jobs == 0, s"an idle call after the drain ran $jobs Spark jobs")
   }
 
   // DECIMAL(38,10) sums: a signed partial must keep the operand's exact type

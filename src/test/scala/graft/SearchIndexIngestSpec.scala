@@ -266,7 +266,7 @@ class SearchIndexIngestSpec extends SparkSpec {
     val wh = new Warehouse(spark, tmpDir("sii-midrace"))
     val ing = ingester(wh)
     ing.ingest("c", batchA) // v0 create + v1 rows; ledger -> 1
-    assert(wh.lastCommittedBatchId("c__postings", "idxfollow:c") == 1L)
+    assert(wh.recordedBatchId("c__postings", "idxfollow:c") == 1L)
     // Simulate the mid-ingest interleave the sequential API can't produce:
     // a racing ingest captured preV = 1, then a foreign deleteWhere landed
     // (v2), then the ingest's own corpus append (v3). Its post-append
@@ -276,7 +276,7 @@ class SearchIndexIngestSpec extends SparkSpec {
     wh.appendDeduped("c", batchB, fpCol = "doc_id", pk = "doc_id",
       statsCols = Seq("doc_id")) // v3 (the racing ingest's append)
     ing.advanceFollowerLedger("c", 1L) // the racing ingest's post-append call
-    assert(wh.lastCommittedBatchId("c__postings", "idxfollow:c") == 1L,
+    assert(wh.recordedBatchId("c__postings", "idxfollow:c") == 1L,
       "ledger fast-forwarded past a foreign commit that landed during the ingest")
     // the next follow drains the whole gap: the delete retracts, the
     // unindexed append's rows index

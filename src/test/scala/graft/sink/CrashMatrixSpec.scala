@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import graft.{SparkSpec, TestSpark}
-import graft.streaming.ChangeFeedStream
+import graft.streaming.{ChangeFeedStream, GraftTableSink}
 
 /** A process crash, as the metadata-IO seam sees it. An `Error`, not an
   * `Exception`: nothing in the engine should recover from its own death.
@@ -35,6 +35,19 @@ final class CrashingMetaIO(crashAt: Int) extends MetaIO {
   override def list(dir: Path): Seq[Path] = {
     if (dead) throw new SimulatedCrash("process already crashed")
     super.list(dir)
+  }
+}
+
+object CrashingMetaIO {
+  import scala.jdk.CollectionConverters._
+
+  /** Copy a warehouse tree: the pre-state each crash point starts from. */
+  def copyTree(from: Path, to: Path): Unit = {
+    val s = Files.walk(from)
+    try s.iterator().asScala.foreach { p =>
+      val dst = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
+    } finally s.close()
   }
 }
 
@@ -69,10 +82,31 @@ class CrashMatrixSpec extends SparkSpec {
   /** One operation under test. `tables`: every table it touches (pre or
     * post); `retry`: how a caller re-runs it after a crash that left the
     * pre-state (the operation itself unless it refuses a leftover).
+    * `replay`: the caller re-runs it after EVERY crash, the post-state
+    * included (a stream re-delivers its uncommitted batch, a fold is simply
+    * called again), so that re-run must land the post-state too. `probe`:
+    * the one-row frame the follow-up append adds to each live table.
     */
   private case class Op(name: String, tables: Seq[String],
                         setup: Warehouse => Unit, run: Warehouse => Unit,
-                        retry: Option[Warehouse => Unit] = None)
+                        retry: Option[Warehouse => Unit] = None,
+                        replay: Boolean = false,
+                        probe: Int => DataFrame = k => rows("z", 100 + k))
+
+  private val factSchema = StructType(Seq(StructField("k", LongType),
+    StructField("g", StringType), StructField("x", LongType)))
+  private def facts(rs: (Long, String, Long)*): DataFrame = TestSpark.spark.createDataFrame(
+    rs.map(r => Row(r._1, r._2, r._3)).asJava, factSchema)
+
+  /** The stream sink's append disposition over the warehouse it is handed. */
+  private def appendSink(wh: Warehouse) = new GraftTableSink(wh.root, "t", "append",
+    Nil, "", "", Seq("k"), Nil, "s", mergeSchema = false)
+
+  private val sumSpec = IncrementalRollup.Spec(Seq("g"), Seq(
+    IncrementalRollup.CountStar("n"), IncrementalRollup.SumOf(col("x"), "s")))
+  private def fold(wh: Warehouse): Unit = {
+    IncrementalRollup.maintainFromChangeFeed(wh, "fact", "roll", sumSpec): Unit
+  }
 
   private val ops: Seq[Op] = Seq(
     Op("first-commit create", Seq("t"), _ => (),
@@ -109,16 +143,30 @@ class CrashMatrixSpec extends SparkSpec {
         wh.createBranch("t", "b")
         wh.append("t@b", rows("br", 8))
         wh.publishBranch("t", "b")
-      }))
+      })),
+    // the stream-sink batch protocol: skip a batch the table already marked,
+    // else the disposition's commit carrying the batch id
+    Op("stream-sink append batch", Seq("t"),
+      wh => appendSink(wh).commitBatch(wh, 0L, rows("a", 1, 2)),
+      wh => appendSink(wh).commitBatch(wh, 1L, rows("b", 3, 4)),
+      replay = true),
+    // the batch change-feed fold with count/sum measures: the window's
+    // signed partials and the fact version they cover
+    Op("maintainFromChangeFeed count/sum fold", Seq("roll"),
+      wh => {
+        wh.create("fact", factSchema)
+        wh.append("fact", facts((1L, "a", 5L), (2L, "a", 9L), (3L, "b", 4L)), Seq("k"))
+        fold(wh)
+        wh.morMerge("fact", facts((3L, "b", 6L), (4L, "c", 7L)), Seq("k"))
+        wh.deleteWhere("fact", col("k") === 2L)
+      },
+      fold, replay = true,
+      probe = k => TestSpark.spark.createDataFrame(List(Row("z", 1L, 100L + k)).asJava,
+        StructType(Seq(StructField("g", StringType), StructField("n", LongType),
+          StructField("s", LongType)))))
   )
 
-  private def copyTree(from: Path, to: Path): Unit = {
-    val s = Files.walk(from)
-    try s.iterator().asScala.foreach { p =>
-      val dst = to.resolve(from.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
-    } finally s.close()
-  }
+  import CrashingMetaIO.copyTree
 
   /** Leftovers expiry must have removed: tmp files in the table dirs,
     * older commit-attempt files, segments no remaining root (of any ref)
@@ -168,21 +216,23 @@ class CrashMatrixSpec extends SparkSpec {
         assert(after == pre || after == post,
           s"${op.name}, crash at step $k of $n: neither pre- nor post-state: $after " +
             s"(pre $pre, post $post)")
-        if (after == pre) {
-          preSeen += 1
+        if (after == pre) preSeen += 1 else postSeen += 1
+        if (after == pre || op.replay) {
           op.retry.getOrElse(op.run)(reopened)
           assert(state(dir, op.tables) == post,
             s"${op.name}, crash at step $k of $n: the re-run did not land the post-state once")
-        } else postSeen += 1
+        }
         val live = op.tables.filter(t => post(t).nonEmpty)
+        val probe = op.probe(k)
         live.foreach { t =>
-          reopened.append(t, rows("z", 100 + k)) // no CME: the ledger is not wedged
+          reopened.append(t, probe) // no CME: the ledger is not wedged
           reopened.expireSnapshots(t, 1, orphanGraceMs = 0)
         }
         assert(leftovers(dir, op.tables).isEmpty,
           s"${op.name}, crash at step $k of $n: leftovers after expiry: ${leftovers(dir, op.tables)}")
+        val probed = probe.collect().head.mkString("|")
         live.foreach { t =>
-          assert(state(dir, Seq(t))(t).get == (post(t).get :+ s"${100 + k}|z${100 + k}").sorted,
+          assert(state(dir, Seq(t))(t).get == (post(t).get :+ probed).sorted,
             s"${op.name}, crash at step $k of $n: $t lost rows after the follow-up append")
         }
       }
@@ -195,17 +245,13 @@ class CrashMatrixSpec extends SparkSpec {
   }
 
   // A stream-maintained min/max rollup is several commits, so a crash may
-  // leave any prefix of them: the window partials plus its pending keys (one
-  // transaction), the drain's watermark, the drain's retract-and-land
-  // transaction, the drain cadence counter, then the consumer cursor. The
+  // leave any prefix of them: the window partials plus its pending keys and
+  // the rollup's marks (one transaction), the drain's retract-and-land
+  // transaction with its drained mark, then the consumer cursor. The
   // contract is convergence: reopened and re-run, the folded rollup and the
   // pending keys equal what the uncrashed tick leaves.
   test("crash matrix: a maintainRollup tick and its drain converge at every durable step") {
     val t0 = System.nanoTime()
-    val factSchema = StructType(Seq(StructField("k", LongType),
-      StructField("g", StringType), StructField("x", LongType)))
-    def facts(rs: (Long, String, Long)*): DataFrame = spark.createDataFrame(
-      rs.map(r => Row(r._1, r._2, r._3)).asJava, factSchema)
     val spec = IncrementalRollup.Spec(Seq("g"), Seq(
       IncrementalRollup.CountStar("n"), IncrementalRollup.MaxOf(col("x"), "hi")))
     def tick(wh: Warehouse): Unit = {

@@ -18,21 +18,21 @@ class MetaIOSpec extends SparkSpec {
   private def df(xs: Long*) = TestSpark.spark.createDataFrame(
     xs.map(Row(_)).asJava, schema)
 
-  test("same-target writers: eight threads putTableMeta one key, none fails") {
+  test("same-target writers: eight threads recordBatchId one key, none fails") {
     val wh = new Warehouse(spark, tmpDir("mio-meta"))
     wh.create("t", schema)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    val written = (0 until 8).flatMap(w => (0 until 50).map(i => s"w$w-$i"))
+    val written = (0 until 8).flatMap(w => (0 until 50).map(i => w * 1000L + i))
     try {
       val futures = (0 until 8).map { w =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = (0 until 50).foreach(i => wh.putTableMeta("t", "k", s"w$w-$i"))
+          def call(): Unit = (0 until 50).foreach(i => wh.recordBatchId("t", "k", w * 1000L + i))
         })
       }
       futures.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
     } finally pool.shutdownNow()
-    val last = wh.getTableMeta("t", "k")
-    assert(last.exists(written.contains), s"final value $last was never written")
+    val last = wh.recordedBatchId("t", "k")
+    assert(written.contains(last), s"final value $last was never written")
   }
 
   test("expireSnapshots sweeps grace-aged orphan .tmp files; a fresh one survives") {
